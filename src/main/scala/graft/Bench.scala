@@ -74,6 +74,32 @@ object Bench {
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Untimed staging: the same rows of every table under `sfDir`,
+    * rewritten as a `cpus`-file layout under /tmp so scans run parallel
+    * tasks. Returns the staged directory. */
+  def stageTables(spark: SparkSession, sfDir: String, cpus: Int): String = {
+    val stageDir = s"/tmp/graft_bench_staged_${new java.io.File(sfDir).getName}"
+    tables.foreach { t =>
+      val src = s"$sfDir/$t.parquet"
+      if (new java.io.File(src).exists())
+        spark.read.parquet(src).repartition(cpus)
+          .write.mode("overwrite").parquet(s"$stageDir/$t.parquet")
+    }
+    stageDir
+  }
+
+  // sf0.1 tables are sub-MB: the default 4 MiB file-open cost would
+  // bin-pack the 32 staged files straight back into one scan partition
+  // (serializing the compute again AND paying 32 opens). One task per
+  // file is the cluster shape being modeled, so staged runs use small
+  // split sizes — on real 100 TB inputs the default coalescing is
+  // correct and these knobs stay untouched. Single-file runs keep the
+  // defaults (continuity with earlier rounds).
+  def smallSplits(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
+    spark.conf.set("spark.sql.files.openCostInBytes", "4m")
+  }
+
   // ---- EXTERNAL-CPU accounting (object-level so BenchGateSpec can pin
   // the trip-wire). loadavg cannot distinguish co-tenant load from the
   // bench's own 32-thread bursts (a busy query drives load1 past any
@@ -360,16 +386,8 @@ object Bench {
     // staging pass (round-10 ADVICE).
     val headlineNames: Seq[String] = headline
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
 
     // untimed warmup: JIT the scan/codegen/noop-write paths once so the
     // first timed query measures the query, not JVM cold start
@@ -535,29 +553,8 @@ object Bench {
           ",\"resampled\":" + rr + ",\"suspect\":" + suspectOf(s) + "}"
       }.mkString("{", ",", "}")
 
-    val staged = if (sys.env.getOrElse("SPARK_GRAFT_STAGE", "1") != "0") {
-      // untimed staging: same rows, 32-file layout -> parallel scan tasks
-      val stageDir = s"/tmp/graft_bench_staged_${new java.io.File(sfDir).getName}"
-      tables.foreach { t =>
-        val src = s"$sfDir/$t.parquet"
-        if (new java.io.File(src).exists())
-          spark.read.parquet(src).repartition(cpus.toInt)
-            .write.mode("overwrite").parquet(s"$stageDir/$t.parquet")
-      }
-      Some(stageDir)
-    } else None
-
-    // sf0.1 tables are sub-MB: the default 4 MiB file-open cost would
-    // bin-pack the 32 staged files straight back into one scan partition
-    // (serializing the compute again AND paying 32 opens). One task per
-    // file is the cluster shape being modeled, so staged runs use small
-    // split sizes — on real 100 TB inputs the default coalescing is
-    // correct and these knobs stay untouched. Single-file runs keep the
-    // defaults (continuity with earlier rounds).
-    def smallSplits(): Unit = {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
-      spark.conf.set("spark.sql.files.openCostInBytes", "4m")
-    }
+    val staged = if (sys.env.getOrElse("SPARK_GRAFT_STAGE", "1") != "0")
+      Some(stageTables(spark, sfDir, cpus)) else None
     def defaultSplits(): Unit = {
       spark.conf.set("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
       spark.conf.set("spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
@@ -568,13 +565,13 @@ object Bench {
     // cold-vs-warm ordering would bias whichever layout runs second.
     val loadWarm = loadAvg()
     run(sfDir)
-    staged.foreach { d => smallSplits(); run(d); defaultSplits() }
+    staged.foreach { d => smallSplits(spark); run(d); defaultSplits() }
 
     // host-speed calibration (after warmup so the probe itself is JITed):
     // single-thread turbo and all-core throughput in fixed-loop ops/sec
     cpuProbe(1, 10000000L) // JIT warm, untimed
     val probeSt = cpuProbe(1)
-    val probeMt = cpuProbe(cpus.toInt)
+    val probeMt = cpuProbe(cpus)
 
     val loadBefore = loadAvg()
     val single = runMedianOf3(sfDir)
@@ -589,7 +586,7 @@ object Bench {
     // 2-3s) — a layout diagnostic that can only fire false alarms is
     // worse than none
     val stagedTimes = staged.map { d =>
-      smallSplits(); val r = runMedianOf3(d); defaultSplits(); r
+      smallSplits(spark); val r = runMedianOf3(d); defaultSplits(); r
     }
     val loadAfter = loadAvg()
 
@@ -623,7 +620,7 @@ object Bench {
     // host-capacity divergence rides the same suspect machinery as the
     // per-query ext/iowait gates: value_norm is only meaningful when the
     // host's parallel capacity matches the pinned reference ratio
-    val parallelSuspect = probeParallelSuspect(probeSt, probeMt, cpus.toInt)
+    val parallelSuspect = probeParallelSuspect(probeSt, probeMt, cpus)
     val suspects = single.collect { case (k, s) if suspectOf(s) => k } ++
       (if (parallelSuspect) Seq("cpu_probe_parallel") else Nil)
     val gatedClean = !gateTimedOut && suspects.isEmpty && failed.isEmpty
@@ -667,7 +664,7 @@ object Bench {
       f""","probe_mt_st_ratio":${if (probeSt > 0) probeMt / probeSt else -1.0}%.2f""" +
       f""","probe_ref_mt_st_ratio":${ProbeRefMtMops / ProbeRefStMops}%.2f""" +
       s""","probe_parallel_suspect":$parallelSuspect""" +
-      s""",${normFields(total, probeSt, probeMt, gatedClean, cpus.toInt)}""" +
+      s""",${normFields(total, probeSt, probeMt, gatedClean, cpus)}""" +
       s""","load_gate_wait_sec":$gateWaitSec""" +
       s""","load_gate_timed_out":$gateTimedOut""" +
       s""","suspect":${jsNames(suspects)},"failed":${jsNames(failed)}""" +
@@ -697,7 +694,7 @@ object Bench {
       f""""probe_ref_st_mops":$ProbeRefStMops%.1f,""" +
       f""""probe_mt_st_ratio":${if (probeSt > 0) probeMt / probeSt else -1.0}%.2f,""" +
       s""""probe_parallel_suspect":$parallelSuspect,""" +
-      s"""${normFields(total, probeSt, probeMt, gatedClean, cpus.toInt)},""" +
+      s"""${normFields(total, probeSt, probeMt, gatedClean, cpus)},""" +
       s""""suspect":${jsNames(suspects)},"failed":${jsNames(failed)},""" +
       s"""$moverJson,""" +
       s""""queries":$qCompact,"sf":"$sfDir"$onlyTag,"diag":"$diagPath"}""")

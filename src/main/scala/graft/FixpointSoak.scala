@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.FkRef
 import graft.subset.SubsetPlanner
@@ -35,15 +35,8 @@ object FixpointSoak {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val baseRows = args.drop(1).headOption.map(_.toLong).getOrElse(400000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
 
     val ChainDepth = 12 // constant at both scales — see scaladoc
 
@@ -58,8 +51,8 @@ object FixpointSoak {
       val b = spark.range(n).select(col("id"),
         when(col("id").between(1, ChainDepth), col("id") - 1)
           .otherwise(col("id")).as("a_ref"))
-      a.repartition(cpus.toInt).write.mode("overwrite").parquet(outA)
-      b.repartition(cpus.toInt).write.mode("overwrite").parquet(outB)
+      a.repartition(cpus).write.mode("overwrite").parquet(outA)
+      b.repartition(cpus).write.mode("overwrite").parquet(outB)
       (outA, outB)
     }
     def stageEntity(n: Long): (String, String) = {
@@ -74,8 +67,8 @@ object FixpointSoak {
       val stars = spark.range(n).filter(col("id") % 10 =!= 0 && col("id") >= 100)
         .select(col("id").as("id_a"), (col("id") - col("id") % 10).as("id_b"))
       val path = spark.range(24).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-      recs.repartition(cpus.toInt).write.mode("overwrite").parquet(outR)
-      stars.unionByName(path).repartition(cpus.toInt)
+      recs.repartition(cpus).write.mode("overwrite").parquet(outR)
+      stars.unionByName(path).repartition(cpus)
         .write.mode("overwrite").parquet(outE)
       (outR, outE)
     }

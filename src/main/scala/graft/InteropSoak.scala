@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-order-of-magnitude interop soak: the full dump → directory
@@ -22,14 +21,8 @@ object InteropSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
 
     // ---- untimed staging: materialize the mult× table once as a
     // 32-file parquet source (the shape a real lake table has)
@@ -42,7 +35,7 @@ object InteropSoak {
     base.withColumn("rep", explode(sequence(lit(0), lit(mult - 1))))
       .withColumn("l_orderkey", col("l_orderkey") * mult + col("rep"))
       .drop("rep")
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(stage)
     val src = spark.read.parquet(stage)
     val expectRows = rows0 * mult

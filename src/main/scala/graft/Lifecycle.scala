@@ -16,19 +16,6 @@ import java.nio.file.{Files, Paths}
   */
 object Lifecycle {
 
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Total on-disk bytes behind a DataFrame's input files (any Hadoop FS
     * scheme). One `listStatus` RPC per parent DIRECTORY rather than one
     * `getFileStatus` per file — a many-small-files table (the exact case
@@ -756,7 +743,7 @@ object Lifecycle {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = LocalSession()
     args.toList match {
       case "dump" :: cfgPath :: sfDir :: outDir :: Nil =>
         dump(spark, Files.readString(Paths.get(cfgPath)), sfDir, outDir)

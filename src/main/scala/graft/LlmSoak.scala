@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Wall-clock scaling soak for the heaviest LLM-pipeline operator
@@ -24,15 +24,8 @@ object LlmSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
 
     // ---- staging (untimed): 1x and mult× copies as 32-file parquet
     def stageDocs(m: Int): String = {
@@ -41,7 +34,7 @@ object LlmSoak {
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       base.withColumn("rep", explode(sequence(lit(0), lit(m - 1))))
         .withColumn("doc_id", col("doc_id") * m + col("rep")).drop("rep")
-        .repartition(cpus.toInt).write.mode("overwrite").parquet(out)
+        .repartition(cpus).write.mode("overwrite").parquet(out)
       out
     }
     def stageEmb(m: Int): String = {
@@ -50,7 +43,7 @@ object LlmSoak {
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       base.withColumn("rep", explode(sequence(lit(0), lit(m - 1))))
         .withColumn("vec_id", col("vec_id") * m + col("rep")).drop("rep")
-        .repartition(cpus.toInt).write.mode("overwrite").parquet(out)
+        .repartition(cpus).write.mode("overwrite").parquet(out)
       out
     }
     val docs1 = stageDocs(1); val docsN = stageDocs(mult)

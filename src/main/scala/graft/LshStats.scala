@@ -193,15 +193,7 @@ object LshStats {
         "usage: graft.LshStats <sfDir> [label] [--planted=<srcSfDir>] [--collapsed]")
     require(pos.nonEmpty,
       "usage: graft.LshStats <sfDir> [label] [--planted=<srcSfDir>] [--collapsed]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     println(statsJson(spark, pos(0), pos.drop(1).headOption.getOrElse(""),
       planted, collapsed))
     spark.stop()

@@ -189,15 +189,7 @@ object ScaleFixture {
       case f if f.startsWith("--tables=") =>
         f.stripPrefix("--tables=").split(",").map(_.trim).filter(_.nonEmpty).toSet
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     replicate(spark, pos(0), pos(1), replicas, perturb = perturb, tables = tables)
     spark.stop()
   }

@@ -208,20 +208,25 @@ object RecordLinkage {
       // job-group/scheduler-pool local properties carry into both actions
       // (ExecutionContext.global threads may predate the caller and carry
       // someone else's), and nested capped calls can't starve a shared
-      // pool. Await BOTH futures before rethrowing: if one side fails
-      // while the sibling is mid-action, returning early would leak the
-      // sibling's census checkpoint past the per-call release hook.
+      // pool. Both actions quiesce before the call returns or throws —
+      // also when the await itself is interrupted: returning early would
+      // leave the sibling's census job running past the call and leak its
+      // checkpoint past the per-call release hook.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
       try {
         val fa = Future(side(aSel, "a"))
         val fb = Future(side(bSel, "b"))
-        Await.ready(fa, Duration.Inf)
-        Await.ready(fb, Duration.Inf)
-        // surface the FIRST side's failure first (deterministic), after
-        // both actions have quiesced
+        // surface the FIRST side's failure first (deterministic)
         (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-      } finally pool.shutdown()
+      } finally {
+        pool.shutdown()
+        var interrupted = false
+        while (!pool.isTerminated)
+          try pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+          catch { case _: InterruptedException => interrupted = true }
+        if (interrupted) Thread.currentThread().interrupt()
+      }
     }
     // COMPUTE-DENSE EXCHANGE PIN (r17, conditional): the block join
     // costs O(Σ |block_a|×|block_b|) Levenshtein DP cells but shuffles
@@ -240,14 +245,9 @@ object RecordLinkage {
     // coalesced), trading skew-splitting for not running the quadratic
     // stage on a byte-count's worth of cores. Blocks are atomic under
     // any partitioning — the cap stays the skew dial either way.
-    // SPARK_GRAFT_LINKAGE_PIN=1/0 forces the pin on/off (the A/B
-    // lever); unset routes by the session's coalescing policy.
-    val pinOn = sys.env.get("SPARK_GRAFT_LINKAGE_PIN") match {
-      case Some(v) => v != "0"
-      case None => !java.lang.Boolean.parseBoolean(
-        a.sparkSession.sessionState.conf.getConfString(
-          "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"))
-    }
+    val pinOn = !java.lang.Boolean.parseBoolean(
+      a.sparkSession.sessionState.conf.getConfString(
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"))
     val pinned = math.max(a.sparkSession.sparkContext.defaultParallelism,
       a.sparkSession.sessionState.conf.numShufflePartitions)
     def pin(df: DataFrame): DataFrame =

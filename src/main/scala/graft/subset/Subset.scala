@@ -250,11 +250,8 @@ object SubsetPlanner {
         // base minus all accumulated deletions equals the rewritten
         // table by induction. Requires a declared PK on every component
         // table (the subtraction key); falls back to rewrite mode
-        // otherwise. Toggle: SPARK_GRAFT_SUBSET_TOMBSTONE=0 forces
-        // rewrite mode (the A/B lever FixpointSoak measures).
-        val tombstoneMode =
-          !sys.env.get("SPARK_GRAFT_SUBSET_TOMBSTONE").contains("0") &&
-            comp.forall(t => pks.get(t).exists(_.nonEmpty))
+        // otherwise.
+        val tombstoneMode = comp.forall(t => pks.get(t).exists(_.nonEmpty))
         def runFixPoint(): Unit = {
           import graft.plans.Checkpoints.unpersistCheckpoint
           // round 1 below is a full Jacobi pass, so a zero budget must

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Write `.explain("formatted")` for a set of registered queries to
   * per-query files — the plan evidence the optimization rounds commit
@@ -9,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.tools.DumpPlans plans/r18 before [sfDir] [q1,q2,...]"
   *
-  * Emits `<outDir>/<query>_<tag>.txt`. Uses the bench's session shape
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, UTC) so the
-  * dumped plans are the ones the bench actually runs.
+  * Emits `<outDir>/<query>_<tag>.txt`. Uses the bench's session
+  * ([[graft.LocalSession]]) so the dumped plans are the ones the bench
+  * actually runs.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -19,16 +18,7 @@ object DumpPlans {
     val tag = if (args.length > 1) args(1) else "before"
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val names = if (args.length > 3) args(3).split(",").toSeq else graft.Bench.headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = graft.LocalSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       // a typo'd name must not produce a silently-thinner evidence set

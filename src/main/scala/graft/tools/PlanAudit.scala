@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Executed-plan audit sweep: for each registered query (default: the
@@ -73,14 +72,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args(1).split(",").toSeq else graft.Bench.headline
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = graft.LocalSession()
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         try {

@@ -10,6 +10,11 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Block until the listener bus has delivered every event posted so
+    * far (`LiveListenerBus` is private[spark]). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Eager local checkpoint with EXACT, freshly-counted statistics —
     * the fix-point-safe alternative to `Dataset.localCheckpoint`.
     *

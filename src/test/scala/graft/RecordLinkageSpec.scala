@@ -4,6 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.RecordLinkage
 
+/** Counts blocking-key evaluations across tasks (a top-level object, so
+  * UDF closures reference it instead of capturing a copy). */
+private object BlockKeyEvals extends java.util.concurrent.atomic.AtomicLong
+
 /** Blocked fuzzy join: recall against a perturbed twin, bounded blocks,
   * no cartesian anywhere. */
 class RecordLinkageSpec extends SparkSpec {
@@ -224,7 +228,7 @@ class RecordLinkageSpec extends SparkSpec {
     // user-specified repartition in the plan); parallelismFirst=false
     // (the prod-recommended setting) coalesces toward the 64 MB
     // advisory target — a compute-dense ~MB shuffle would land on ~1
-    // task — so the pin fires. The lever env is unset in test runs.
+    // task — so the pin fires.
     val a = Seq((1L, "abc"), (2L, "abd")).toDF("id", "t")
     def repartitions: Int = {
       val df = RecordLinkage.fuzzyJoin(a, "id", "t", lit("k"),
@@ -299,5 +303,49 @@ class RecordLinkageSpec extends SparkSpec {
     un.pairs.collect()
     assert(un.report.isEmpty)
     un.releaseCensus()
+  }
+
+  test("fuzzyJoinReleasable: an interrupted capped call leaves no census job running") {
+    import spark.implicits._
+    // a range, not a local Seq: over a local relation the optimizer
+    // evaluates the key while planning, outside the census jobs
+    val df = spark.range(1, 65).select(col("id"), concat(lit("name_"), col("id")).as("nm"))
+    // every key evaluation sleeps, so both census jobs run long enough
+    // to interrupt the caller while it awaits them
+    val slowKey = udf { (s: String) =>
+      BlockKeyEvals.incrementAndGet(); Thread.sleep(25); s.take(2)
+    }
+    val group = "linkage-interrupt"
+    @volatile var thrown: Option[Throwable] = None
+    @volatile var activeAtThrow: Seq[Int] = Nil
+    val caller = new Thread(() => {
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, "interrupted capped linkage")
+      try RecordLinkage.fuzzyJoinReleasable(
+        df, "id", "nm", slowKey(col("nm")), df, "id", "nm", slowKey(col("nm")),
+        maxDist = 1, maxBlockSize = Some(100))
+      catch {
+        case t: Throwable =>
+          Thread.interrupted()
+          // job ends are posted before an action returns: once the bus is
+          // drained, a job still RUNNING outlived the call
+          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+          activeAtThrow = sc.statusTracker.getJobIdsForGroup(group).toSeq
+            .filter(id => sc.statusTracker.getJobInfo(id)
+              .exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+          thrown = Some(t)
+      } finally sc.clearJobGroup()
+    })
+    BlockKeyEvals.set(0L)
+    caller.start()
+    val deadline = System.nanoTime() + 60_000_000_000L
+    while (BlockKeyEvals.get == 0L && System.nanoTime() < deadline) Thread.sleep(5)
+    caller.interrupt()
+    caller.join(120000)
+    assert(!caller.isAlive, "the interrupted call must return")
+    assert(thrown.isDefined, "an interrupted await must surface as a throw")
+    assert(activeAtThrow.isEmpty,
+      s"census job(s) ${activeAtThrow.mkString(",")} still running after the call threw")
+    graft.plans.Checkpoints.releaseAll()
   }
 }
