@@ -201,20 +201,24 @@ object Pipe {
         }
 
         // Bounded hand-off between feeder and output iterator: puts block
-        // when the consumer lags (backpressure), and a blocked put flushes
-        // stdin first so lines the consumer is about to await are never
-        // stuck in the writer buffer (no feeder<->consumer deadlock).
+        // when the consumer lags (backpressure). A line the consumer is
+        // about to await must never sit in the writer buffer, so the
+        // feeder flushes stdin when the consumer asks (it is about to
+        // block on stdout), before a put that would block, and every 50 ms
+        // while a put stays blocked. Only the feeder writes to the child:
+        // the consumer never blocks on stdin, so it always drains stdout
+        // (no feeder<->consumer deadlock). Flush failure (process died)
+        // is surfaced by the next write or read, not here.
         val pending = new ArrayBlockingQueue[AnyRef](opts.queueCapacity)
         @volatile var feederError: Throwable = null
+        @volatile var flushWanted = false
+        def flushStdin(): Unit = {
+          flushWanted = false
+          try stdin.flush() catch { case _: java.io.IOException => () }
+        }
         def put(e: AnyRef): Unit = {
-          var done = false
-          while (!done) {
-            done = pending.offer(e, 50, TimeUnit.MILLISECONDS) // throws if interrupted
-            // a blocked put flushes so lines the consumer awaits are never
-            // stuck in the writer buffer; flush failure (process died) is
-            // surfaced by the next write, not here
-            if (!done) try stdin.flush() catch { case _: java.io.IOException => () }
-          }
+          if (flushWanted || pending.remainingCapacity() == 0) flushStdin()
+          while (!pending.offer(e, 50, TimeUnit.MILLISECONDS)) flushStdin() // throws if interrupted
         }
 
         val feeder = new Thread(() => {
@@ -282,6 +286,7 @@ object Pipe {
                 case Entry(fields, skip) =>
                   if (skip) nextRow = Row.fromSeq(fields.toIndexedSeq)
                   else {
+                    if (!stdout.ready()) flushWanted = true
                     val line = stdout.readLine()
                     lastActivity.set(System.nanoTime())
                     if (line == null) {

@@ -210,22 +210,29 @@ object RecordLinkage {
       // someone else's), and nested capped calls can't starve a shared
       // pool. Both actions quiesce before the call returns or throws —
       // also when the await itself is interrupted: returning early would
-      // leave the sibling's census job running past the call and leak its
-      // checkpoint past the per-call release hook.
+      // leave the sibling's census job running past the call. A call that
+      // throws never hands out its release hook, so it releases the
+      // censuses both sides materialized itself before rethrowing.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
       try {
-        val fa = Future(side(aSel, "a"))
-        val fb = Future(side(bSel, "b"))
-        // surface the FIRST side's failure first (deterministic)
-        (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-      } finally {
-        pool.shutdown()
-        var interrupted = false
-        while (!pool.isTerminated)
-          try pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
-          catch { case _: InterruptedException => interrupted = true }
-        if (interrupted) Thread.currentThread().interrupt()
+        try {
+          val fa = Future(side(aSel, "a"))
+          val fb = Future(side(bSel, "b"))
+          // surface the FIRST side's failure first (deterministic)
+          (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+        } finally {
+          pool.shutdown()
+          var interrupted = false
+          while (!pool.isTerminated)
+            try pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+            catch { case _: InterruptedException => interrupted = true }
+          if (interrupted) Thread.currentThread().interrupt()
+        }
+      } catch {
+        case t: Throwable =>
+          censuses.foreach(graft.plans.Checkpoints.unpersistCheckpoint)
+          throw t
       }
     }
     // COMPUTE-DENSE EXCHANGE PIN (r17, conditional): the block join

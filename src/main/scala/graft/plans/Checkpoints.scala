@@ -46,12 +46,15 @@ object Checkpoints {
   /** Number of registered-but-unreleased checkpoints (spec hook). */
   def trackedCount: Int = tracked.size()
 
-  /** Release the storage blocks behind a localCheckpoint'd DataFrame.
+  /** Release the storage blocks behind a localCheckpoint'd DataFrame and
+    * drop it from the [[materialize]] registry if it was registered there.
     * No-op (falls back to cache-manager unpersist) when the plan is not a
     * checkpoint leaf. Non-blocking: callers checkpoint the NEXT iteration
     * eagerly before releasing the previous one, so nothing recomputes. */
   def unpersistCheckpoint(ds: DataFrame): Unit = ds.queryExecution.logical match {
-    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case l: LogicalRDD =>
+      tracked.remove(l.rdd)
+      l.rdd.unpersist(blocking = false)
     case _ => ds.unpersist(blocking = false)
   }
 

@@ -380,9 +380,18 @@ object SubsetPlanner {
     * State per row: `(__id, __anc, __bad)` where `__anc` is the 2^k-th
     * ancestor after k rounds and `__bad` accumulates "some ancestor within
     * the covered window fails". Each round doubles the window with ONE
-    * equi-join of the state against itself; the cap ceil(log2(n))+1
-    * guarantees the window spans any chain or cycle, so an all-good cycle
-    * (never "live"-exhausted) still terminates with complete coverage. */
+    * equi-join of the state against itself.
+    *
+    * The loop stops at the first round in which no `__bad` flips (the
+    * semi-naive empty-delta stop the reference's recursive CTE makes).
+    * Let D(r) be the distance from row r to its nearest failing position
+    * (a failing row, a dangling ref, or a non-nullable NULL). Row r flips
+    * in round i exactly when 2^(i-1) ≤ D(r) ≤ 2^i − 1. If some row r flips
+    * after round i, the row s on r's chain at distance D(r) − 2^(i-1) has
+    * D(s) = 2^(i-1), so s flips in round i. A round without flips thus
+    * proves the fixed point, on chains and cycles alike, after at most
+    * ⌈log2(max D + 1)⌉ + 1 rounds. The no-live-row stop and the
+    * ceil(log2(n))+1 cap stay as backstops. */
   private def selfFkClosure(base: DataFrame, seeded: DataFrame, e: FkRef): DataFrame = {
     import graft.plans.Checkpoints
     val pk = e.parentCols.head
@@ -397,11 +406,21 @@ object SubsetPlanner {
       .join(okMark, col("__id") === col("__p"), "left_outer")
       .select(col("__id"), col("__anc"), bad0.as("__bad"))
       .localCheckpoint(true)
-    val n = state.count()
+    // one aggregate job per round over the fresh checkpoint: rows, bad
+    // rows (`__bad` only goes false -> true, so flips = the bad delta)
+    // and live rows (an unresolved ancestor, not yet bad)
+    def census(): (Long, Long, Long) = {
+      val r = state.agg(count(lit(1)), count_if(col("__bad")),
+        count_if(col("__anc").isNotNull && !col("__bad"))).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+    val (n, initialBad, initialLive) = census()
     val cap = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n)).toInt + 1
     var iter = 0
-    def live() = state.filter(col("__anc").isNotNull && !col("__bad")).limit(1).count() > 0
-    while (iter < cap && live()) {
+    var bad = initialBad
+    var live = initialLive
+    var flips = 1L // no round has run yet
+    while (iter < cap && live > 0L && flips > 0L) {
       val anc = state.select(col("__id").as("__aid"), col("__anc").as("__anc2"),
         col("__bad").as("__abad"))
       val next = state.join(anc, col("__anc") === col("__aid"), "left_outer")
@@ -417,6 +436,10 @@ object SubsetPlanner {
       Checkpoints.unpersistCheckpoint(state)
       state = next
       iter += 1
+      val (_, badNow, liveNow) = census()
+      flips = badNow - bad
+      bad = badNow
+      live = liveNow
     }
     graft.plans.FixpointStats.record("selfFkClosure", iter)
     val good = state.filter(!col("__bad")).select(col("__id").as("__gid"))

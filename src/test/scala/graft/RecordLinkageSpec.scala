@@ -336,6 +336,9 @@ class RecordLinkageSpec extends SparkSpec {
           thrown = Some(t)
       } finally sc.clearJobGroup()
     })
+    def blocks = spark.sparkContext.getRDDStorageInfo.length
+    val trackedBefore = graft.plans.Checkpoints.trackedCount
+    val blocksBefore = blocks
     BlockKeyEvals.set(0L)
     caller.start()
     val deadline = System.nanoTime() + 60_000_000_000L
@@ -346,6 +349,13 @@ class RecordLinkageSpec extends SparkSpec {
     assert(thrown.isDefined, "an interrupted await must surface as a throw")
     assert(activeAtThrow.isEmpty,
       s"census job(s) ${activeAtThrow.mkString(",")} still running after the call threw")
+    // a throwing call hands out no release hook, so it must release its
+    // own census checkpoints (unpersist is async; poll briefly)
+    assert(graft.plans.Checkpoints.trackedCount == trackedBefore,
+      s"census checkpoints still registered: $trackedBefore -> ${graft.plans.Checkpoints.trackedCount}")
+    val releaseDeadline = System.nanoTime() + 10_000_000_000L
+    while (blocks > blocksBefore && System.nanoTime() < releaseDeadline) Thread.sleep(100)
+    assert(blocks <= blocksBefore, s"census blocks still held: $blocksBefore -> $blocks")
     graft.plans.Checkpoints.releaseAll()
   }
 }

@@ -64,6 +64,26 @@ class ScaleSoakSpec extends SparkSpec {
     assert(b10 <= b1 + 2, s"storage blocks accumulated: $b1 -> $b10")
   }
 
+  test("self-FK path doubling stops at its first zero-flip round") {
+    // the product path's shape: c_parent = id / 2 with row 0 its own
+    // parent (an all-good cycle, so some row stays live every round),
+    // every row above depth 4 kept and id 16 always dropped. The nearest
+    // failing ancestor is at most 4 hops away, so the flips end in round
+    // 3 and round 4 flips nothing; the log2(n)+1 cap would allow 10
+    val chain = spark.range(0, 300).select(
+      col("id").as("c_custkey"), (col("id") / 2).cast("long").as("c_parent"))
+    val surviving = SubsetPlanner.plan(Map("customer" -> chain),
+      Map("customer" -> Seq("c_custkey")),
+      Seq(FkRef("customer", Seq("c_parent"), "customer", Seq("c_custkey"))),
+      Map("customer" -> Seq(
+        "c_custkey <> 16 AND (c_custkey < 16 OR pmod(xxhash64(c_custkey, 7L), 10) <> 0)")))
+    val kept = surviving("customer").count()
+    val rounds = FixpointStats.last("selfFkClosure").get
+    Checkpoints.releaseAll()
+    assert(kept > 16 && kept < 300 - 16) // the closure dropped rows and kept rows
+    assert(rounds <= 4, s"closure ran $rounds rounds past its zero-flip round")
+  }
+
   test("cyclic subset fix-point: 10x rows (more blocks, same cycle length) keeps iterations flat") {
     import spark.implicits._
     // one 8-cycle per block across two mutually-referencing tables; the

@@ -72,6 +72,74 @@ class SubsetPropertySpec extends SparkSpec {
     assert(out2("t").select("id").as[Int].collect().toSet == (0 until n / 2).toSet)
   }
 
+  test("self-FK closure matches brute force on random trees, chains and cycles within its round bound") {
+    // one self-referencing table per trial: id / k trees and linear chains
+    // (rooted by a NULL or a self-loop), all-good cycles with chains
+    // hanging off them, dangling and NULL FKs, and killed rows at random
+    // depths, so the farthest failing ancestor ranges from 0 hops to the
+    // full depth
+    val rnd = new Random(20261017L)
+    for (trial <- 1 to 16) {
+      val n = 50 + rnd.nextInt(351)
+      val nullable = rnd.nextBoolean()
+      val selfLoopRoot = rnd.nextBoolean()
+      val cycleLen = 2 + rnd.nextInt(7)
+      val parent: Int => Option[Int] = trial % 4 match {
+        case 0 =>
+          val k = 2 + rnd.nextInt(3)
+          (i: Int) => if (i == 0) Option.when(selfLoopRoot)(0) else Some(i / k)
+        case 1 => (i: Int) => if (i == 0) Option.when(selfLoopRoot)(0) else Some(i - 1)
+        case 2 =>
+          // one cycle, the rest hangs off it as deep chains and bushes
+          val hang = (cycleLen until n).map(i =>
+            i -> (if (rnd.nextBoolean()) i - 1 else rnd.nextInt(i))).toMap
+          (i: Int) => Some(if (i < cycleLen) (i + 1) % cycleLen else hang(i))
+        case _ =>
+          // back-to-back cycles, every other one feeding the previous
+          (i: Int) => {
+            val start = i - i % cycleLen
+            if (i == start && start > 0 && (start / cycleLen) % 2 == 1) Some(start - 1)
+            else Some(start + (i - start + 1) % math.min(cycleLen, n - start))
+          }
+      }
+      val dangling = Seq.fill(rnd.nextInt(3))(rnd.nextInt(n)).toSet
+      val nulled = Seq.fill(rnd.nextInt(3))(1 + rnd.nextInt(n - 1)).toSet -- dangling
+      val rows = (0 until n).map { i =>
+        i -> (if (dangling(i)) Some(n + rnd.nextInt(100)) else if (nulled(i)) None else parent(i))
+      }
+      val killed = Seq.fill(rnd.nextInt(4))(rnd.nextInt(n)).toSet ++
+        (if (rnd.nextInt(4) == 0) Set(0) else Set.empty[Int])
+
+      val fkOf = rows.toMap
+      // hops from r to its nearest failing position; None = r survives
+      @annotation.tailrec
+      def failDist(r: Int, d: Int, seen: Set[Int]): Option[Int] =
+        if (killed(r)) Some(d)
+        else fkOf(r) match {
+          case None => if (nullable) None else Some(d)
+          case Some(p) if !fkOf.contains(p) => Some(d + 1)
+          case Some(_) if seen(r) => None
+          case Some(p) => failDist(p, d + 1, seen + r)
+        }
+      val dists = rows.map { case (id, _) => id -> failDist(id, 0, Set.empty) }
+      val expected = bruteForce(Seq(Tbl("t", rows, Some("t"), nullable)), Map("t" -> killed))("t")
+      assert(expected == dists.collect { case (id, None) => id }.toSet,
+        s"trial $trial: the failing-distance model disagrees with the brute force")
+
+      val cond = if (killed.isEmpty) "id >= 0" else s"id NOT IN (${killed.mkString(",")})"
+      val planned = SubsetPlanner.plan(Map("t" -> rows.toDF("id", "fk")), Map("t" -> Seq("id")),
+        Seq(FkRef("t", Seq("fk"), "t", Seq("id"), nullable = nullable)), Map("t" -> Seq(cond)))
+      val actual = planned("t").select("id").as[Int].collect().toSet
+      assert(actual == expected, s"trial $trial (n=$n, shape ${trial % 4}, nullable=$nullable): " +
+        s"planner=${actual.size} rows brute=${expected.size} rows killed=$killed " +
+        s"dangling=$dangling nulled=$nulled")
+      val maxD = dists.flatMap(_._2).foldLeft(0)(math.max)
+      val bound = (32 - Integer.numberOfLeadingZeros(maxD)) + 1 // ceil(log2(maxD + 1)) + 1
+      val rounds = graft.plans.FixpointStats.last("selfFkClosure").get
+      assert(rounds <= bound, s"trial $trial: $rounds rounds, max failing distance $maxD")
+    }
+  }
+
   private def runTrials(seed: Long, trials: Int, mixedNullability: Boolean,
                         withholdPks: Boolean = false): Unit = {
     val rnd = new Random(seed)
