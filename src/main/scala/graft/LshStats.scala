@@ -16,6 +16,11 @@ import org.apache.spark.sql.functions._
   * q_fuzzy_link_multi failure mode and gets the same block-cap
   * treatment.
   *
+  * Every census keys its buckets exactly as the operators do: MinHash
+  * bands through `TextOps.minhashBands`, SimHash bands through
+  * `Dedup.simhashBand`, the one band-key function of both SimHash
+  * paths.
+  *
   * With `--planted=<srcSfDir>` (a ScaleFixture --perturb output whose
   * SOURCE dir is given) it additionally measures PLANTED-PAIR RECALL:
   * every odd-replica document is a deliberate near-duplicate of its
@@ -80,7 +85,7 @@ object LshStats {
   def statsJson(spark: SparkSession, sfDir: String, label: String,
                 plantedSrc: Option[String] = None,
                 collapsed: Boolean = false): String = {
-    import graft.llm.TextOps
+    import graft.llm.{Dedup, TextOps}
     val raw = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     // --collapsed: census over DISTINCT contents (rep = min doc_id per
@@ -98,14 +103,10 @@ object LshStats {
 
     // MinHash-LSH band census (Dedup.minhashLsh's exact banding)
     val (bands, rowsPerBand) = (4, 2)
-    val nStreams = bands * rowsPerBand
-    val nDigests = (nStreams + 1) / 2
-    val withMh = docs.select(col("doc_id"),
-      TextOps.minhashSignatureFromText(col("text"), 3, nDigests).as("__mh"))
-    val mh = (0 until nStreams).map(i => element_at(col("__mh"), i + 1))
+    val withMh = docs.select(col("doc_id"), TextOps.minhashSignatureFromText(col("text"), 3,
+      TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
     val mhEdges = withMh.select(col("doc_id"),
-      posexplode(array((0 until bands).map(b =>
-        TextOps.bandHashFrom(mh, b * rowsPerBand, rowsPerBand)): _*))
+      posexplode(TextOps.minhashBands(col("__mh"), bands, rowsPerBand))
         .as(Seq("band_idx", "band")))
       .filter(col("band").isNotNull)
       // census + (optionally) two recall joins read this — materialize so
@@ -117,7 +118,7 @@ object LshStats {
     val shEdges = docs
       .select(col("doc_id"), TextOps.simhash60(col("text")).as("sh"))
       .select(col("doc_id"), posexplode(array((0 until 4).map(b =>
-        shiftright(col("sh"), b * 15).bitwiseAND(lit((1L << 15) - 1))): _*))
+        Dedup.simhashBand(col, Seq("sh"), 4, b)): _*))
         .as(Seq("band_idx", "band")))
       .localCheckpoint(true)
     val shCensus = bandCensus(shEdges)
@@ -133,16 +134,11 @@ object LshStats {
     val wideSigs = graft.plans.Checkpoints.materialize(docs
       .select(col("doc_id"), TextOps.simhash60(col("text")).as("sh1"),
         TextOps.simhash60b(col("text")).as("sh2")))
-    def wideCensus(nBands: Int): Seq[(Int, Long, Long, Long)] = {
-      val half = nBands / 2
-      val width = 120 / nBands
-      val mask = (1L << width) - 1
+    def wideCensus(nBands: Int): Seq[(Int, Long, Long, Long)] =
       bandCensus(wideSigs
         .select(col("doc_id"), posexplode(array((0 until nBands).map(b =>
-          if (b < half) shiftright(col("sh1"), b * width).bitwiseAND(lit(mask))
-          else shiftright(col("sh2"), (b - half) * width).bitwiseAND(lit(mask))): _*))
+          Dedup.simhashBand(col, Seq("sh1", "sh2"), nBands, b)): _*))
           .as(Seq("band_idx", "band"))))
-    }
     val shwCensus = wideCensus(8)
     val shw20Census = wideCensus(6)
     val shw30Census = wideCensus(4)

@@ -169,8 +169,6 @@ object Dedup {
     * corpus makes one bucket huge). */
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 2): DataFrame = {
-    val nStreams = bands * rowsPerBand
-    val nDigests = (nStreams + 1) / 2
     // ONE native pass from text to the whole signature (MinHashShingle60),
     // then cheap band hashing. Byte-FLOORED widen (r19): unlike the
     // shingle-EXPLODE kernels (dedupSpansAcross, bigram — widen stays
@@ -182,10 +180,10 @@ object Dedup {
     // (floored). A large narrow scan still widens.
     val withMh = graft.plans.Parallelism.widenIfAtLeast(df.select(col(idCol), col(textCol)))
       .select(col(idCol),
-        TextOps.minhashSignatureFromText(col(textCol), shingleN, nDigests).as("__mh"))
-    val mh = (0 until nStreams).map(i => element_at(col("__mh"), i + 1))
-    val bandCols = (0 until bands).map(b => TextOps.bandHashFrom(mh, b * rowsPerBand, rowsPerBand))
-    val withBands = withMh.select(col(idCol), array(bandCols: _*).as("bands"))
+        TextOps.minhashSignatureFromText(col(textCol), shingleN,
+          TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
+    val withBands = withMh.select(col(idCol),
+      TextOps.minhashBands(col("__mh"), bands, rowsPerBand).as("bands"))
     // explode_outer, NOT explode: plain explode makes Catalyst infer a
     // size(bands)>0 filter below the projections, duplicating the whole
     // minhash expression tree into a pre-filter (2x the md5 work).
@@ -224,8 +222,6 @@ object Dedup {
   def minhashLshClusters(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
                          maxIter: Int = 20): DataFrame = {
-    val nStreams = bands * rowsPerBand
-    val nDigests = (nStreams + 1) / 2
     // byte-floored like [[minhashLsh]]'s identical leaf (r19): measured
     // neutral here at sf0.1 (min 1.994 floored vs 1.975 unconditional —
     // the iteration barriers dominate, see below), floored for the same
@@ -233,10 +229,10 @@ object Dedup {
     val withMh = graft.plans.Parallelism
       .widenIfAtLeast(df.select(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"),
-        TextOps.minhashSignatureFromText(col("__text"), shingleN, nDigests).as("__mh"))
-    val mh = (0 until nStreams).map(i => element_at(col("__mh"), i + 1))
-    val bandCols = (0 until bands).map(b => TextOps.bandHashFrom(mh, b * rowsPerBand, rowsPerBand))
-    val allEdges = withMh.select(col("id"), explode_outer(array(bandCols: _*)).as("band"))
+        TextOps.minhashSignatureFromText(col("__text"), shingleN,
+          TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
+    val allEdges = withMh.select(col("id"),
+        explode_outer(TextOps.minhashBands(col("__mh"), bands, rowsPerBand)).as("band"))
       .filter(col("band").isNotNull)
       .localCheckpoint(true)
     // Prune to the ACTIVE subgraph and seed iteration 0 in ONE aggregate:
@@ -369,34 +365,100 @@ object Dedup {
   private def shouldCollapse(stat: org.apache.spark.sql.Row): Boolean =
     stat.getLong(1) < (stat.getLong(0) * 95L) / 100L
 
-  /** The duplicate-free fast path shared by the simhash verifiers: band
-    * every (id, sig…) row directly — no collapse distinct, no expansion
-    * joins — with the same first-matching-band pair dedup and popcount
-    * verify as the collapsed path (the two plans are expansion-exact
-    * rewrites of each other). `bandOf(resolve, b)` renders band `b` of
-    * the signature columns `resolve` looks up. */
-  private def directBandPairs(sims: DataFrame, sigCols: Seq[String],
-                              nBands: Int, maxHamming: Int,
-                              bandOf: (String => Column, Int) => Column): DataFrame = {
-    val banded = sims.select(col("id") +: sigCols.map(col) :+
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band_no"),
-          bandOf(c => col(c), b).as("band_val"))): _*)).as("band"): _*)
-      .select(col("id") +: sigCols.map(col) :+
-        col("band.band_no") :+ col("band.band_val"): _*)
-    val a = banded.as("a")
-    val b = banded.as("b")
-    def sideBand(p: String, k: Int): Column = bandOf(c => col(s"$p.$c"), k)
-    val earlierBandMatches = (0 until nBands).map(k =>
-      col("a.band_no") > k && sideBand("a", k) === sideBand("b", k)).reduce(_ || _)
+  /** THE SimHash band key: band `b` of an `nBands`-band plan over the
+    * 60-bit signature streams `sigCols` (looked up through `resolve`).
+    * The bands split evenly across the streams, k = nBands / streams per
+    * stream, each w = 60 / k bits wide: band b is bits
+    * [(b mod k)·w, (b mod k)·w + w) of stream ⌊b/k⌋. Every SimHash band
+    * join and band census keys its buckets here. */
+  private[graft] def simhashBand(resolve: String => Column, sigCols: Seq[String],
+                                 nBands: Int, b: Int): Column = {
+    val perStream = nBands / sigCols.size
+    val width = 60 / perStream
+    shiftright(resolve(sigCols(b / perStream)), (b % perStream) * width)
+      .bitwiseAND(lit((1L << width) - 1))
+  }
+
+  /** Hamming-k pairs over a materialized (id, sigCols…) signature leaf,
+    * banded `nBands` ways by [[simhashBand]] — the one kernel behind the
+    * 60-bit (`sh`) and 120-bit (`sh1`, `sh2`) paths. Hamming is the sum
+    * of the per-stream popcounts. `stat` is the (count, approx distinct)
+    * probe row over `sims`, computed once by the caller and shared with
+    * [[simhashPairs]]'s width routing.
+    *
+    * ADAPTIVE COLLAPSE GATE (r15 verdict "what's wrong #3"): on a
+    * duplicate-free corpus the collapse's distinct + two expansion joins
+    * are pure overhead (~2x at bench sf0.1), so there the (id, sig…)
+    * rows band DIRECTLY. Both plans are expansion-exact rewrites of each
+    * other, so the gate is a plan choice, not a contract change; HLL's
+    * ~5% rsd can only misroute near the boundary where both plans cost
+    * the same. */
+  private def bandPairs(sims: DataFrame, sigCols: Seq[String], nBands: Int,
+                        maxHamming: Int, stat: org.apache.spark.sql.Row): DataFrame = {
+    def side(p: String): String => Column = c => col(s"$p.$c")
     val hamming = sigCols.map(c =>
       bit_count(col(s"a.$c").bitwiseXOR(col(s"b.$c")))).reduce(_ + _)
-    a.join(b, col("a.band_no") === col("b.band_no") &&
-        col("a.band_val") === col("b.band_val") && col("a.id") < col("b.id"))
-      .filter(!earlierBandMatches)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        hamming.as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    // Band self-join of `rows` (columns `keys`) under the pair order
+    // `less`. A pair can collide in several bands; instead of a
+    // distinct() shuffle over the duplicated candidates, emit each pair
+    // ONLY in its FIRST matching band — both sides' full signature rides
+    // the join, so "some earlier band also matches" is a pure
+    // projection-time filter and the pair set is unique by construction
+    // (the band self-join is the only shuffle). The popcount bound
+    // filters in the same projection.
+    def verified(rows: DataFrame, keys: Seq[String], less: Column,
+                 out: Seq[Column]): DataFrame = {
+      val banded = rows.select(keys.map(col) :+
+        explode(array((0 until nBands).map(b =>
+          struct(lit(b).as("band_no"),
+            simhashBand(col, sigCols, nBands, b).as("band_val"))): _*)).as("band"): _*)
+        .select(keys.map(col) :+ col("band.band_no") :+ col("band.band_val"): _*)
+      val earlierBandMatches = (0 until nBands).map(k => col("a.band_no") > k &&
+          simhashBand(side("a"), sigCols, nBands, k) === simhashBand(side("b"), sigCols, nBands, k))
+        .reduce(_ || _)
+      banded.as("a").join(banded.as("b"), col("a.band_no") === col("b.band_no") &&
+          col("a.band_val") === col("b.band_val") && less)
+        .filter(!earlierBandMatches)
+        .select(out :+ hamming.as("hamming"): _*)
+        .filter(col("hamming") <= maxHamming)
+    }
+    if (!shouldCollapse(stat))
+      return verified(sims, "id" +: sigCols, col("a.id") < col("b.id"),
+        Seq(col("a.id").as("id_a"), col("b.id").as("id_b")))
+    // COLLAPSE IDENTICAL SIGNATURES before the band self-join. A corpus's
+    // duplicate mass lands in same-signature groups, and a band bucket
+    // holding g copies of one signature does g²/2 of the join work for
+    // information one row carries — the r14 sf1 rehearsal measured the
+    // blowup at 25.4M candidate pairs for 50k docs (10 exact copies each)
+    // vs 245k for the 5k-doc original: quadratic in duplicate
+    // multiplicity, the q_fuzzy_link_multi failure mode. Banding DISTINCT
+    // signatures makes the join's work independent of multiplicity; the
+    // same-signature pairs (hamming 0) and the distinct-pair expansion are
+    // joins whose size IS the output. No checkpoint: sims is already a
+    // materialized leaf, so the distinct is one cheap aggregate and the
+    // band self-join's two sides share it via AQE exchange reuse.
+    // Signature pairs order lexicographically over sigCols (each
+    // unordered signature pair stays unique); the id-level orientation
+    // is re-established by least/greatest in the expansion.
+    val sigLess = sigCols.init.foldRight(col(s"a.${sigCols.last}") < col(s"b.${sigCols.last}")) {
+      (c, rest) => col(s"a.$c") < col(s"b.$c") || (col(s"a.$c") === col(s"b.$c") && rest)
+    }
+    val sigPairs = verified(sims.select(sigCols.map(col): _*).distinct(), sigCols, sigLess,
+      sigCols.map(c => col(s"a.$c").as(s"${c}_a")) ++ sigCols.map(c => col(s"b.$c").as(s"${c}_b")))
+    val within = sims.as("x").join(sims.as("y"),
+        sigCols.map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _) && col("x.id") < col("y.id"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
+        bit_count(lit(0L)).as("hamming"))
+    // every member combination of a verified distinct pair is a true
+    // hamming<=k pair (members share their group's signature exactly)
+    def members(s: String): DataFrame =
+      sims.select(sigCols.map(c => col(c).as(s"${c}_$s")) :+ col("id").as(s"__i$s"): _*)
+    val cross = sigPairs
+      .join(members("a"), sigCols.map(c => s"${c}_a"))
+      .join(members("b"), sigCols.map(c => s"${c}_b"))
+      .select(least(col("__ia"), col("__ib")).as("id_a"),
+        greatest(col("__ia"), col("__ib")).as("id_b"), col("hamming"))
+    within.unionByName(cross)
   }
 
   /** Hamming-k SimHash candidate pairs: split the 60-bit simhash into 4
@@ -417,7 +479,7 @@ object Dedup {
                           maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3, "simhashHammingPairs: 4 bands cover hamming <= 3")
     val sims = narrowSignatureLeaf(df, idCol, textCol)
-    narrowPairsFromSigs(sims, maxHamming,
+    bandPairs(sims, Seq("sh"), 4, maxHamming,
       sims.agg(count(lit(1)), approx_count_distinct("sh")).head())
   }
 
@@ -441,88 +503,6 @@ object Dedup {
       graft.plans.Parallelism
         .widenIfAtLeast(df.select(col(idCol).as("id"), col(textCol).as("__text")))
         .select(col("id"), TextOps.simhash60(col("__text")).as("sh")))
-
-  /** 60-bit pair generation over an already-materialized signature leaf.
-    * `stat` is the (count, approx distinct) probe row over `sims` —
-    * computed once by the caller and shared between the collapse gate
-    * here and [[simhashPairs]]'s width routing. */
-  private def narrowPairsFromSigs(sims: DataFrame, maxHamming: Int,
-                                  stat: org.apache.spark.sql.Row): DataFrame = {
-    // ADAPTIVE COLLAPSE GATE (r15 verdict "what's wrong #3"): on a
-    // duplicate-free corpus the collapse's distinct + two expansion
-    // joins are pure overhead (~2x at bench sf0.1) — probe the
-    // materialized signature leaf with one approx_count_distinct scan
-    // (16-byte rows, partial-agg'd; negligible next to the band join at
-    // any scale) and band (id, sh) DIRECTLY when distinct contents
-    // ≈ rows. Both paths are semantically identical by construction
-    // (the collapse is an expansion-exact rewrite), so the gate is a
-    // plan choice, not a contract change; HLL's ~5% rsd can only
-    // misroute near the boundary where both plans cost the same.
-    if (!shouldCollapse(stat)) {
-      return directBandPairs(sims, Seq("sh"), nBands = 4, maxHamming,
-        (r, b) => shiftright(r("sh"), b * 15).bitwiseAND(lit(0x7FFFL)))
-    }
-    // COLLAPSE IDENTICAL SIGNATURES before the band self-join. A corpus's
-    // duplicate mass lands in same-sh groups, and a band bucket holding g
-    // copies of the same signature does g²/2 of the join work for
-    // information one row carries — the r14 sf1 rehearsal measured the
-    // blowup at 25.4M candidate pairs for 50k docs (10 exact copies each)
-    // vs 245k for the 5k-doc original: quadratic in duplicate
-    // multiplicity, the q_fuzzy_link_multi failure mode. Banding DISTINCT
-    // signatures makes the join's work independent of multiplicity;
-    // same-sh pairs (hamming 0 by definition) and the distinct-pair
-    // expansion below are generated by joins whose size IS the output —
-    // output-bound by construction, no wasted candidates.
-    // no checkpoint here: sims is already a materialized leaf, so the
-    // distinct is one cheap aggregate over a long column and the band
-    // self-join's two sides share it via AQE exchange reuse
-    val sigs = sims.select("sh").distinct()
-    val banded = sigs.select(col("sh"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band_no"),
-          shiftright(col("sh"), b * 15).bitwiseAND(lit(0x7FFFL)).as("band_val"))): _*)).as("band"))
-      .select(col("sh"), col("band.band_no"), col("band.band_val"))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    // A signature pair can collide in up to 4 bands; instead of a
-    // distinct() shuffle over the duplicated candidates, emit each pair
-    // ONLY in its FIRST matching band — both sides' full simhash rides
-    // the join, so "some earlier band also matches" is a pure
-    // projection-time filter. The pair set is then unique by
-    // construction: candidate generation runs with NO pair exchange at
-    // all (the band self-join is the only shuffle). The popcount bound
-    // filters in the same projection. Ordering by sh (not id) keeps each
-    // unordered signature pair unique; the id-level orientation is
-    // re-established by least/greatest in the expansion.
-    def bandMatch(k: Int): Column =
-      shiftright(col("a.sh"), k * 15).bitwiseAND(lit(0x7FFFL)) ===
-        shiftright(col("b.sh"), k * 15).bitwiseAND(lit(0x7FFFL))
-    val earlierBandMatches = (0 until 4).map(k =>
-      col("a.band_no") > k && bandMatch(k)).reduce(_ || _)
-    val sigPairs = a.join(b,
-        col("a.band_no") === col("b.band_no") && col("a.band_val") === col("b.band_val") &&
-          col("a.sh") < col("b.sh"))
-      .filter(!earlierBandMatches)
-      .select(col("a.sh").as("sh_a"), col("b.sh").as("sh_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    // Expansion 1 — same-signature pairs (hamming 0): an equi-join on sh
-    // whose result size equals its output contribution.
-    val within = sims.as("x").join(sims.as("y"),
-        col("x.sh") === col("y.sh") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        bit_count(lit(0L)).as("hamming"))
-    // Expansion 2 — cross-signature pairs: every member combination of a
-    // verified distinct pair is a true hamming<=k pair (members share
-    // their group's signature exactly), so this join also only produces
-    // output rows.
-    val cross = sigPairs
-      .join(sims.select(col("sh").as("sh_a"), col("id").as("__ia")), Seq("sh_a"))
-      .join(sims.select(col("sh").as("sh_b"), col("id").as("__ib")), Seq("sh_b"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("hamming"))
-    within.unionByName(cross)
-  }
 
   /** Band plan of the 120-bit signature for a requested hamming radius:
     * the SMALLEST aligned band count whose pigeonhole covers the radius
@@ -554,62 +534,14 @@ object Dedup {
     * on (sh1, sh2). */
   def simhashHammingPairsWide(df: DataFrame, idCol: String, textCol: String,
                               maxHamming: Int = 7): DataFrame = {
-    val (nBands, width) = wideBandPlan(maxHamming)
-    val half = nBands / 2
-    val mask = (1L << width) - 1
+    val (nBands, _) = wideBandPlan(maxHamming)
     val sims = graft.plans.Checkpoints.materialize(
       graft.plans.Parallelism
         .widen(df.select(col(idCol).as("id"), col(textCol).as("__text")))
         .select(col("id"), TextOps.simhash60(col("__text")).as("sh1"),
           TextOps.simhash60b(col("__text")).as("sh2")))
-    // same adaptive collapse gate as [[simhashHammingPairs]]: band the
-    // (id, sh1, sh2) rows directly when the corpus is duplicate-free
-    val wideBand: (String => Column, Int) => Column = (r, b) =>
-      if (b < half) shiftright(r("sh1"), b * width).bitwiseAND(lit(mask))
-      else shiftright(r("sh2"), (b - half) * width).bitwiseAND(lit(mask))
-    if (!shouldCollapse(sims.agg(count(lit(1)),
-        approx_count_distinct(struct(col("sh1"), col("sh2")))).head())) {
-      return directBandPairs(sims, Seq("sh1", "sh2"), nBands, maxHamming, wideBand)
-    }
-    val sigs = sims.select("sh1", "sh2").distinct()
-    def bandOf(sh1: Column, sh2: Column, b: Int): Column =
-      if (b < half) shiftright(sh1, b * width).bitwiseAND(lit(mask))
-      else shiftright(sh2, (b - half) * width).bitwiseAND(lit(mask))
-    val banded = sigs.select(col("sh1"), col("sh2"),
-      explode(array((0 until nBands).map(b =>
-        struct(lit(b).as("band_no"),
-          bandOf(col("sh1"), col("sh2"), b).as("band_val"))): _*)).as("band"))
-      .select(col("sh1"), col("sh2"), col("band.band_no"), col("band.band_val"))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    def bandMatch(k: Int): Column =
-      bandOf(col("a.sh1"), col("a.sh2"), k) === bandOf(col("b.sh1"), col("b.sh2"), k)
-    val earlierBandMatches = (0 until nBands).map(k =>
-      col("a.band_no") > k && bandMatch(k)).reduce(_ || _)
-    val sigLess = col("a.sh1") < col("b.sh1") ||
-      (col("a.sh1") === col("b.sh1") && col("a.sh2") < col("b.sh2"))
-    val sigPairs = a.join(b,
-        col("a.band_no") === col("b.band_no") &&
-          col("a.band_val") === col("b.band_val") && sigLess)
-      .filter(!earlierBandMatches)
-      .select(col("a.sh1").as("sh_a1"), col("a.sh2").as("sh_a2"),
-        col("b.sh1").as("sh_b1"), col("b.sh2").as("sh_b2"),
-        (bit_count(col("a.sh1").bitwiseXOR(col("b.sh1"))) +
-          bit_count(col("a.sh2").bitwiseXOR(col("b.sh2")))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    val within = sims.as("x").join(sims.as("y"),
-        col("x.sh1") === col("y.sh1") && col("x.sh2") === col("y.sh2") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        bit_count(lit(0L)).as("hamming"))
-    val cross = sigPairs
-      .join(sims.select(col("sh1").as("sh_a1"), col("sh2").as("sh_a2"),
-        col("id").as("__ia")), Seq("sh_a1", "sh_a2"))
-      .join(sims.select(col("sh1").as("sh_b1"), col("sh2").as("sh_b2"),
-        col("id").as("__ib")), Seq("sh_b1", "sh_b2"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("hamming"))
-    within.unionByName(cross)
+    bandPairs(sims, Seq("sh1", "sh2"), nBands, maxHamming,
+      sims.agg(count(lit(1)), approx_count_distinct(struct(col("sh1"), col("sh2")))).head())
   }
 
   /** Signature-width decision rule, exposed for callers sizing a corpus
@@ -635,32 +567,23 @@ object Dedup {
     * past the 60-bit saturation mark takes the wide 120-bit path; small
     * radii on sub-million corpora keep the cheaper 60-bit signature.
     *
-    * SELF-SIZING (r16 verdict #2): with `expectedDistinctContents = 0`
-    * (unknown) the router no longer routes by radius alone — it
-    * materializes the 60-bit signature leaf and MEASURES distinct
-    * contents with the same one-scan approx_count_distinct probe the
-    * collapse gate runs (16-byte rows, partial-agg'd — negligible next
-    * to any band join). When the measurement stays narrow, the probed
-    * leaf AND the probe row are handed straight to the 60-bit pair
-    * generator, so nothing is computed twice; when it routes wide, the
-    * narrow leaf is released and the only waste is one signature pass
-    * over the corpus — the price of not knowing. Callers that already
-    * sized their corpus skip the probe by passing the count; the r15
-    * "always size the corpus and pass it" caveat is gone. `cutoff`
-    * exposes the saturation knob (default [[WideSignatureCutoff]]) —
-    * the HLL's ~5% rsd can only misroute near the boundary, where the
-    * two plans cost about the same and both are complete at the radius. */
+    * SELF-SIZING (r16 verdict #2): the router materializes the 60-bit
+    * signature leaf and MEASURES distinct contents with the same
+    * one-scan approx_count_distinct probe the collapse gate runs (16-byte
+    * rows, partial-agg'd — negligible next to any band join). When the
+    * measurement stays narrow, the probed leaf AND the probe row go
+    * straight to the pair kernel, so nothing is computed twice; when it
+    * routes wide, the narrow leaf is released and the only waste is one
+    * signature pass over the corpus. `cutoff` is the saturation mark
+    * (default [[WideSignatureCutoff]]) — the HLL's ~5% rsd can only
+    * misroute near it, where the two plans cost about the same and both
+    * are complete at the radius. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
-                   expectedDistinctContents: Long = 0L,
                    cutoff: Long = WideSignatureCutoff): DataFrame =
     if (maxHamming > 3)
       simhashHammingPairsWide(df, idCol, textCol, maxHamming)
-    else if (expectedDistinctContents > 0L) {
-      if (wideSignatureNeeded(maxHamming, expectedDistinctContents, cutoff))
-        simhashHammingPairsWide(df, idCol, textCol, maxHamming)
-      else simhashHammingPairs(df, idCol, textCol, maxHamming)
-    } else {
+    else {
       val sims = narrowSignatureLeaf(df, idCol, textCol)
       val stat = sims.agg(count(lit(1)), approx_count_distinct("sh")).head()
       if (wideSignatureNeeded(maxHamming, stat.getLong(1), cutoff)) {
@@ -668,7 +591,7 @@ object Dedup {
         // signature has both streams) — release it before re-scanning
         graft.plans.Checkpoints.unpersistCheckpoint(sims)
         simhashHammingPairsWide(df, idCol, textCol, maxHamming)
-      } else narrowPairsFromSigs(sims, maxHamming, stat)
+      } else bandPairs(sims, Seq("sh"), 4, maxHamming, stat)
     }
 
   /** DuckDB rendering of [[simhashHammingPairsWide]] — same
@@ -721,16 +644,14 @@ object Dedup {
   def crossCorpusNear(train: DataFrame, holdout: DataFrame, idCol: String,
                       textCol: String, shingleN: Int = 3, bands: Int = 4,
                       rowsPerBand: Int = 2): DataFrame = {
-    val nStreams = bands * rowsPerBand
-    val nDigests = (nStreams + 1) / 2
     def bandRows(df: DataFrame, idSel: Seq[String]): DataFrame = {
       val sel = idSel.map(col) :+ col(textCol)
       val withMh = graft.plans.Parallelism.widen(df.select(sel: _*))
         .select(idSel.map(col) :+
-          TextOps.minhashSignatureFromText(col(textCol), shingleN, nDigests).as("__mh"): _*)
-      val mh = (0 until nStreams).map(i => element_at(col("__mh"), i + 1))
-      val bandCols = (0 until bands).map(b => TextOps.bandHashFrom(mh, b * rowsPerBand, rowsPerBand))
-      withMh.select(idSel.map(col) :+ explode_outer(array(bandCols: _*)).as("band"): _*)
+          TextOps.minhashSignatureFromText(col(textCol), shingleN,
+            TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"): _*)
+      withMh.select(idSel.map(col) :+
+          explode_outer(TextOps.minhashBands(col("__mh"), bands, rowsPerBand)).as("band"): _*)
         .filter(col("band").isNotNull)
     }
     val holdBands = bandRows(holdout, Nil).select("band").distinct()
@@ -750,7 +671,6 @@ object Dedup {
                              shingleN: Int = 3, bands: Int = 4,
                              rowsPerBand: Int = 2): DataFrame = {
     val nStreams = bands * rowsPerBand
-    val nDigests = (nStreams + 1) / 2
     // Same exact-duplicate collapse as [[lshCandidatePairs]] (the
     // signature is a pure function of the text, so identical texts agree
     // on every stream: sim_est = 1.0 a priori): band-join and estimate
@@ -764,10 +684,10 @@ object Dedup {
       base.join(members.filter(col("rep") === col("id")).select(col("id")),
           Seq("id"), "left_semi")
         .select(col("id"),
-          TextOps.minhashSignatureFromText(col("__text"), shingleN, nDigests).as("__mh")))
-    val mh = (0 until nStreams).map(i => element_at(col("__mh"), i + 1))
-    val bandCols = (0 until bands).map(b => TextOps.bandHashFrom(mh, b * rowsPerBand, rowsPerBand))
-    val bandsDf = withSig.select(col("id"), explode_outer(array(bandCols: _*)).as("band"))
+          TextOps.minhashSignatureFromText(col("__text"), shingleN,
+            TextOps.minhashDigests(bands, rowsPerBand)).as("__mh")))
+    val bandsDf = withSig.select(col("id"),
+        explode_outer(TextOps.minhashBands(col("__mh"), bands, rowsPerBand)).as("band"))
       .filter(col("band").isNotNull)
     val a = bandsDf.as("a")
     val b = bandsDf.as("b")
@@ -789,9 +709,6 @@ object Dedup {
       .unionByName(withinPairs.withColumn("sim_est", lit(1.0)))
   }
 
-  /** N-gram Jaccard verification over LSH candidate pairs: the
-    * within-bucket verify step (`band join -> pair -> exact jaccard`).
-    * Self-join ONLY on the band key — bucket-bounded, not all-pairs. */
   /** Shared LSH candidate machinery for the pairwise verifiers, with
     * EXACT-DUPLICATE COLLAPSE: identical texts (keyed by sha-256) reduce
     * to one representative BEFORE the band self-join, so candidate
@@ -843,7 +760,6 @@ object Dedup {
   private def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                                 shingleN: Int, bands: Int,
                                 rowsPerBand: Int): CollapsedCandidates = {
-    val nStreams = bands * rowsPerBand
     val base = graft.plans.Parallelism
       .widen(df.select(col(idCol).as("id"), col(textCol).as("__text")))
     val members = contentGroups(base)
@@ -852,11 +768,9 @@ object Dedup {
     val withSh = repsText
       .select(col("id"), TextOps.shingles(col("__text"), shingleN).as("__sh"))
     val withMh = withSh.select(col("id"), col("__sh"),
-      TextOps.minhashSignature(col("__sh"), (nStreams + 1) / 2).as("__mh"))
-    val mh = (0 until nStreams).map(i => element_at(col("__mh"), i + 1))
-    val bandCols = (0 until bands).map(b => TextOps.bandHashFrom(mh, b * rowsPerBand, rowsPerBand))
+      TextOps.minhashSignature(col("__sh"), TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
     val bandsDf = graft.plans.Checkpoints.materialize(
-      withMh.select(col("id"), array(bandCols: _*).as("bands"))
+      withMh.select(col("id"), TextOps.minhashBands(col("__mh"), bands, rowsPerBand).as("bands"))
         .select(col("id"), explode_outer(col("bands")).as("band"))
         .filter(col("band").isNotNull))
     val a = bandsDf.as("a")
@@ -917,6 +831,9 @@ object Dedup {
         greatest(col("__ia"), col("__ib")).as("id_b") +: outScores: _*)
   }
 
+  /** N-gram Jaccard verification over LSH candidate pairs: the
+    * within-bucket verify step (`band join -> pair -> exact jaccard`).
+    * Self-join ONLY on the band key — bucket-bounded, not all-pairs. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
                    threshold: Double = 0.5): DataFrame = {
@@ -1146,14 +1063,12 @@ object Dedup {
     * needed. Output: (id, partner, hamming). */
   def simhashBestMatch(df: DataFrame, idCol: String, textCol: String,
                        maxHamming: Int = 3,
-                       expectedDistinctContents: Long = 0L,
                        cutoff: Long = WideSignatureCutoff): DataFrame = {
     // candidates come through THE router ([[simhashPairs]]): radius > 3
     // or a saturating distinct-content count takes the wide 120-bit
     // path with its per-radius band plan; both paths emit the same
     // (id_a, id_b, hamming) shape the argmin consumes
-    val pairs = simhashPairs(df, idCol, textCol, maxHamming,
-      expectedDistinctContents, cutoff)
+    val pairs = simhashPairs(df, idCol, textCol, maxHamming, cutoff)
     // explode-symmetrization, not self-union: one computation of the
     // banded pair subtree, two output rows per pair (see bestMatchPairs)
     val sym = pairs.select(explode(array(
@@ -1225,8 +1140,6 @@ object Dedup {
   def lshCandidateCensus(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, bands: Int = 4,
                          rowsPerBand: Int = 2): DataFrame = {
-    val nStreams = bands * rowsPerBand
-    val nDigests = (nStreams + 1) / 2
     // byte-floored widen (r19, VERDICT r18 #7): the census's consumers
     // are all band-sized aggregates over the checkpointed (id, band)
     // stream, so on a sub-floor input the 32-way fan-out's per-task
@@ -1238,11 +1151,11 @@ object Dedup {
     val base = graft.plans.Parallelism
       .widenIfAtLeast(df.select(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"),
-        TextOps.minhashSignatureFromText(col("__text"), shingleN, nDigests).as("__mh"))
-    val mh = (0 until nStreams).map(i => element_at(col("__mh"), i + 1))
-    val bandCols = (0 until bands).map(b => TextOps.bandHashFrom(mh, b * rowsPerBand, rowsPerBand))
+        TextOps.minhashSignatureFromText(col("__text"), shingleN,
+          TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
     val bandsDf = graft.plans.Checkpoints.materialize(
-      base.select(col("id"), explode_outer(array(bandCols: _*)).as("band"))
+      base.select(col("id"),
+          explode_outer(TextOps.minhashBands(col("__mh"), bands, rowsPerBand)).as("band"))
         .filter(col("band").isNotNull))
     // (band, n) shrinks map-side; every statistic below reads this
     // bounded table, never the (id, band) stream again
@@ -1293,20 +1206,15 @@ object Dedup {
         .widen(df.select(col(idCol).as("id"), col(textCol).as("__text")))
         .select(col("id"), TextOps.simhash60(col("__text")).as("sh1"),
           TextOps.simhash60b(col("__text")).as("sh2")))
-    // (plan, sigBits, nBands): the narrow path + every wideBandPlan row
-    val plans = Seq(("narrow_4x15", 60, 4), ("wide_2x60", 120, 2),
-      ("wide_4x30", 120, 4), ("wide_6x20", 120, 6), ("wide_8x15", 120, 8))
-    val keyCols = plans.flatMap { case (name, sigBits, nBands) =>
-      val width = sigBits / nBands
-      val mask = (1L << width) - 1
-      val half = nBands / 2
+    // (plan, signature streams, nBands): the narrow path + every
+    // wideBandPlan row
+    val wide = Seq("sh1", "sh2")
+    val plans = Seq(("narrow_4x15", Seq("sh1"), 4), ("wide_2x60", wide, 2),
+      ("wide_4x30", wide, 4), ("wide_6x20", wide, 6), ("wide_8x15", wide, 8))
+    val keyCols = plans.flatMap { case (name, sigCols, nBands) =>
       (0 until nBands).map { b =>
-        val v =
-          if (sigBits == 60) shiftright(col("sh1"), b * width).bitwiseAND(lit(mask))
-          else if (b < half) shiftright(col("sh1"), b * width).bitwiseAND(lit(mask))
-          else shiftright(col("sh2"), (b - half) * width).bitwiseAND(lit(mask))
         struct(lit(name).as("plan"), lit(nBands - 1).as("covers_radius"),
-          lit(b).as("band_no"), v.as("band_val"))
+          lit(b).as("band_no"), simhashBand(col, sigCols, nBands, b).as("band_val"))
       }
     }
     val e = sims.select(explode(array(keyCols: _*)).as("k"))

@@ -89,8 +89,20 @@ object TextOps {
     val parts = minhashes.slice(from, from + rows).map(_.cast("string"))
     md5(concat(parts.flatMap(p => Seq(p, lit(","))).dropRight(1): _*))
   }
-  def bandHash(shingleArr: Column, from: Int, rows: Int): Column =
-    bandHashFrom((from until from + rows).map(i => minhash(shingleArr, i)), 0, rows)
+
+  /** The MinHash-LSH band layout: `bands` band hashes over a signature
+    * array of `bands·rowsPerBand` streams, band b hashing streams
+    * [b·r, b·r + r). The signature must come from
+    * [[minhashDigests]]`(bands, rowsPerBand)` digests. */
+  def minhashBands(sig: Column, bands: Int, rowsPerBand: Int): Column = {
+    val mh = (0 until bands * rowsPerBand).map(i => element_at(sig, i + 1))
+    array((0 until bands).map(b => bandHashFrom(mh, b * rowsPerBand, rowsPerBand)): _*)
+  }
+
+  /** Digests per shingle a `bands`×`rowsPerBand` signature needs: each
+    * digest serves two streams. */
+  def minhashDigests(bands: Int, rowsPerBand: Int): Int = (bands * rowsPerBand + 1) / 2
+
   def bandHashSql(shingleArr: String, from: Int, rows: Int): String = {
     val parts = (from until from + rows).map(i => s"(${minhashSql(shingleArr, i)})::VARCHAR")
     s"md5(${parts.mkString(" || ',' || ")})"

@@ -28,22 +28,6 @@ object RecordLinkage {
       if (totalRows == 0L) 0.0 else droppedRows.toDouble / totalRows
   }
 
-  /** Snapshot of the most recent [[fuzzyJoin]] call's complete drop
-    * report. Written as ONE immutable map per call (never cleared then
-    * repopulated), so a concurrent reader always sees a self-consistent
-    * report from a single call — the r16 clear()/put() window could
-    * serve a map mixing sides from two interleaved calls. */
-  @volatile private var lastDrops: Map[String, CapDrop] = Map.empty
-
-  /** Per-side ("a"/"b") drop mass of the LAST capped [[fuzzyJoin]] pass —
-    * the observability hook for the silent-total-drop regime: a cap that
-    * swallows 100% of candidate mass reads as "no duplicates found"
-    * without it. Empty when the last call ran uncapped. Last-writer-wins
-    * under concurrency (always a complete single-call map, but "last" is
-    * whichever call finished most recently) — concurrent callers should
-    * use [[fuzzyJoinWithReport]], which returns the call's OWN report. */
-  def lastCapDrops: Map[String, CapDrop] = lastDrops
-
   /** Uppercased first `n` chars — the standard cheap block. */
   def prefixBlock(c: Column, n: Int = 3): Column = upper(substring(c, 1, n))
   def prefixBlockSql(c: String, n: Int = 3): String =
@@ -91,27 +75,17 @@ object RecordLinkage {
                 b: DataFrame, bId: String, bText: String, blockB: Column,
                 maxDist: Int, maxBlockSize: Option[Int] = None,
                 widenInputs: Boolean = true): DataFrame =
-    fuzzyJoinWithReport(a, aId, aText, blockA, b, bId, bText, blockB,
-      maxDist, maxBlockSize, widenInputs)._1
-
-  /** [[fuzzyJoin]] plus the call's OWN per-side drop report — the
-    * concurrency-safe observability path (VERDICT r16 #3): the report is
-    * local to this invocation, so two interleaved capped calls cannot
-    * cross-talk the way the shared [[lastCapDrops]] hook can. The report
-    * is computed eagerly (the census aggregate runs inside this call),
-    * so reading it costs nothing extra. */
-  def fuzzyJoinWithReport(a: DataFrame, aId: String, aText: String, blockA: Column,
-                          b: DataFrame, bId: String, bText: String, blockB: Column,
-                          maxDist: Int, maxBlockSize: Option[Int] = None,
-                          widenInputs: Boolean = true)
-      : (DataFrame, Map[String, CapDrop]) = {
-    val r = fuzzyJoinReleasable(a, aId, aText, blockA, b, bId, bText, blockB,
-      maxDist, maxBlockSize, widenInputs)
-    (r.pairs, r.report)
-  }
+    fuzzyJoinReleasable(a, aId, aText, blockA, b, bId, bText, blockB,
+      maxDist, maxBlockSize, widenInputs).pairs
 
   /** One capped-linkage call's full result: the pair stream, the
-    * per-side drop report, and THIS call's census release hook.
+    * per-side ("a"/"b") drop report, and THIS call's census release hook.
+    * The report is the observability record for the silent-total-drop
+    * regime (a cap that swallows 100% of candidate mass reads as "no
+    * duplicates found" without it); it is local to the call, so two
+    * interleaved capped calls cannot cross-talk, and it is empty when
+    * the call ran uncapped.
+    *
     * `releaseCensus()` unpersists only the block-census checkpoints this
     * invocation materialized — call it after the pair stream is fully
     * consumed (the censuses back the over-cap anti-join in the returned
@@ -123,7 +97,7 @@ object RecordLinkage {
                                      report: Map[String, CapDrop],
                                      releaseCensus: () => Unit)
 
-  /** [[fuzzyJoinWithReport]] plus a PER-CALL census release hook
+  /** [[fuzzyJoin]] plus its drop report and a PER-CALL census release hook
     * (VERDICT r17 #5): a long-lived driver interleaving capped linkage
     * calls with unrelated checkpointed work can release each call's own
     * census blocks on consumption instead of draining the global
@@ -143,7 +117,7 @@ object RecordLinkage {
     // the operator returned 0 pairs with no signal — on a real pipeline
     // that reads as "no duplicates found"). The per-side block census is
     // materialized once and reused: a 1-row aggregate over it yields the
-    // dropped block/row mass (recorded in [[lastCapDrops]], printed on
+    // dropped block/row mass (recorded in the call's report, printed on
     // stderr whenever anything was dropped), and its over-cap filter
     // feeds the same anti-join as before — no second census scan.
     def capped(df: DataFrame, side: String): DataFrame = maxBlockSize.fold(df) { cap =>
@@ -271,9 +245,7 @@ object RecordLinkage {
       .withColumn("dist", levenshtein(col("text_a"), col("text_b"), maxDist))
       .filter(col("dist") >= 0)
       .select("id_a", "id_b", "dist")
-    val snapshot = report.toMap
-    lastDrops = snapshot
-    ReleasableLinkage(out, snapshot,
+    ReleasableLinkage(out, report.toMap,
       () => censuses.foreach(graft.plans.Checkpoints.unpersistCheckpoint))
   }
 

@@ -203,14 +203,13 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("simhashPairs self-sizing: unknown corpus size probes the leaf and routes by measurement") {
-    // r16 verdict #2: expectedDistinctContents = 0 used to route by
-    // radius alone — the one silent scale hazard left (a >1M-distinct
-    // corpus on the default path saturated the 15-bit bands). The router
-    // now measures distinct contents from the materialized signature
-    // leaf; the `cutoff` knob lets this spec pin BOTH routes on one
-    // corpus (49 distinct docs: cutoff 10 must go wide, default must
-    // stay narrow), and the two routes must agree on the pair set
-    // exactly (both are pigeonhole-complete at radius <= 3).
+    // r16 verdict #2: routing by radius alone was the one silent scale
+    // hazard left (a >1M-distinct corpus on the default path saturated
+    // the 15-bit bands). The router measures distinct contents from the
+    // materialized signature leaf; the `cutoff` knob lets this spec pin
+    // BOTH routes on one corpus (49 distinct docs: cutoff 10 must go
+    // wide, default must stay narrow), and the two routes must agree on
+    // the pair set exactly (both are pigeonhole-complete at radius <= 3).
     val stream = (1 to 90).map(i => s"w$i")
     val corpus = (0 until 49).map { i =>
       ((i + 1).toLong, stream.slice(i, i + 18).mkString(" "))
@@ -243,18 +242,14 @@ class LlmOpsSpec extends SparkSpec {
     } yield (a._1, b._1) -> h).toMap
     assert(wideSet == brute(width120 = true), "wide route incomplete for the 120-bit signature")
     assert(narrowSet == brute(width120 = false), "narrow route incomplete for the 60-bit signature")
-    // an explicit size skips the probe and routes by the caller's number
-    val explicitWide = Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3,
-      expectedDistinctContents = 49L, cutoff = 10L)
-    assert(planOf(explicitWide).contains("sh2"))
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("simhash collapse gate: both plan paths equal the brute-force pair set") {
     // the adaptive gate routes a duplicate-free corpus to direct banding
     // and a duplicate-heavy one through the signature collapse — both
-    // must produce EXACTLY the brute-force hamming<=3 pair set (the gate
-    // is a plan choice, never a contract change)
+    // must produce EXACTLY the brute-force pair set (the gate is a plan
+    // choice, never a contract change), on the 60-bit path at radius 3
+    // and on the 120-bit path at radii 3 and 7
     val stream = (1 to 60).map(i => s"w$i")
     val clean = (0 until 24).map { i =>
       ((i + 1).toLong, stream.slice(i, i + 18).mkString(" "))
@@ -265,16 +260,26 @@ class LlmOpsSpec extends SparkSpec {
     } yield (id + 100L * r, t))
     for (corpus <- Seq(clean, duped)) {
       val df = corpus.toDF("doc_id", "text")
-      val got = Dedup.simhashHammingPairs(df, "doc_id", "text", maxHamming = 3)
-        .as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
-      val sigs = df.select(col("doc_id"), TextOps.simhash60(col("text")).as("s"))
-        .as[(Long, Long)].collect()
-      val want = (for {
+      def pairSet(pairs: org.apache.spark.sql.DataFrame): Map[(Long, Long), Int] =
+        pairs.as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
+      val sigs = df.select(col("doc_id"), TextOps.simhash60(col("text")).as("s1"),
+          TextOps.simhash60b(col("text")).as("s2"))
+        .as[(Long, Long, Long)].collect()
+      def brute(maxHamming: Int, width120: Boolean) = (for {
         a <- sigs; b <- sigs if a._1 < b._1
-        h = java.lang.Long.bitCount(a._2 ^ b._2)
-        if h <= 3
+        h = java.lang.Long.bitCount(a._2 ^ b._2) +
+          (if (width120) java.lang.Long.bitCount(a._3 ^ b._3) else 0)
+        if h <= maxHamming
       } yield (a._1, b._1) -> h).toMap
-      assert(got == want, s"gate path diverged: got ${got.size}, want ${want.size}")
+      val got = pairSet(Dedup.simhashHammingPairs(df, "doc_id", "text", maxHamming = 3))
+      val want = brute(3, width120 = false)
+      assert(got == want, s"60-bit gate path diverged: got ${got.size}, want ${want.size}")
+      for (h <- Seq(3, 7)) {
+        val gotW = pairSet(Dedup.simhashHammingPairsWide(df, "doc_id", "text", maxHamming = h))
+        val wantW = brute(h, width120 = true)
+        assert(gotW == wantW,
+          s"120-bit gate path diverged at radius $h: got ${gotW.size}, want ${wantW.size}")
+      }
       graft.plans.Checkpoints.releaseAll()
     }
   }

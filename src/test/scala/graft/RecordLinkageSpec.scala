@@ -59,13 +59,15 @@ class RecordLinkageSpec extends SparkSpec {
       Seq((20L, "alpha"), (21L, "alphb"), (22L, "gamma"))).toDF("id", "t")
     val b = (Seq((101L, "nameXXX")) ++
       Seq((120L, "alpha"), (121L, "alphc"), (122L, "delta"))).toDF("id", "t")
-    def run(cap: Option[Int]) = RecordLinkage.fuzzyJoin(
-      a, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      b, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      maxDist = 2, maxBlockSize = cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val uncapped = run(None)
-    val capped = run(Some(5))
+    def run(cap: Option[Int]) = {
+      val r = RecordLinkage.fuzzyJoinReleasable(
+        a, "id", "t", RecordLinkage.suffixBlock(col("t")),
+        b, "id", "t", RecordLinkage.suffixBlock(col("t")),
+        maxDist = 2, maxBlockSize = cap)
+      (r.pairs.collect().map(p => (p.getLong(0), p.getLong(1), p.getInt(2))).toSet, r.report)
+    }
+    val (uncapped, _) = run(None)
+    val (capped, drops) = run(Some(5))
     assert(uncapped.exists(_._2 == 101L), "hot-block pairs present uncapped")
     assert(!capped.exists(_._2 == 101L), "hot block survived the cap")
     assert(capped == uncapped.filterNot(_._2 == 101L),
@@ -78,36 +80,36 @@ class RecordLinkageSpec extends SparkSpec {
     assert(top.getString(0) == "XXX" && top.getLong(2) == 8L)
     // the cap run must have RECORDED what it dropped (loud, not silent):
     // side a lost the 8-row hot block, side b lost nothing
-    val drops = RecordLinkage.lastCapDrops
     assert(drops("a") == RecordLinkage.CapDrop(1L, 8L, 4L, 11L), drops)
     assert(drops("b") == RecordLinkage.CapDrop(0L, 0L, 4L, 4L), drops)
   }
 
   test("total-drop regime is reported, never silent (the sf10p shape)") {
     // EVERY block exceeds the cap on both sides — the operator returns
-    // 0 pairs by contract, and lastCapDrops must say 100% of the row
+    // 0 pairs by contract, and the call's report must say 100% of the row
     // mass was dropped (r15 verdict: "0 pairs" with no signal reads as
     // "no duplicates found", which is silently wrong)
     val a = (1L to 40L).map(i => (i, s"dup${i % 2}")).toDF("id", "t")
     val b = (101L to 140L).map(i => (i, s"dup${i % 2}")).toDF("id", "t")
-    val out = RecordLinkage.fuzzyJoin(
+    val out = RecordLinkage.fuzzyJoinReleasable(
       a, "id", "t", RecordLinkage.suffixBlock(col("t")),
       b, "id", "t", RecordLinkage.suffixBlock(col("t")),
       maxDist = 2, maxBlockSize = Some(5))
-    assert(out.count() == 0L)
-    val drops = RecordLinkage.lastCapDrops
+    assert(out.pairs.count() == 0L)
+    val drops = out.report
     assert(drops("a").droppedRowFraction == 1.0 &&
       drops("b").droppedRowFraction == 1.0, drops)
     assert(drops("a") == RecordLinkage.CapDrop(2L, 40L, 2L, 40L), drops)
-    // an uncapped call clears the record — no stale drop stats
-    RecordLinkage.fuzzyJoin(
+    // an uncapped call's report is empty — it dropped nothing
+    val uncapped = RecordLinkage.fuzzyJoinReleasable(
       a, "id", "t", RecordLinkage.suffixBlock(col("t")),
       b, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      maxDist = 2).count()
-    assert(RecordLinkage.lastCapDrops.isEmpty)
+      maxDist = 2)
+    uncapped.pairs.count()
+    assert(uncapped.report.isEmpty)
   }
 
-  test("fuzzyJoinWithReport: two interleaved capped calls keep their own reports") {
+  test("fuzzyJoinReleasable: two interleaved capped calls keep their own reports") {
     // VERDICT r16 #3 / ADVICE: the old global registry was cleared at the
     // start of every call, so two concurrent capped calls could serve a
     // report mixing sides from different calls. The per-call return value
@@ -119,14 +121,14 @@ class RecordLinkageSpec extends SparkSpec {
     val b2 = (101L to 140L).map(i => (i, s"dup${i % 2}")).toDF("id", "t")
     val expect1a = RecordLinkage.CapDrop(1L, 8L, 1L, 8L)
     val expect2a = RecordLinkage.CapDrop(2L, 40L, 2L, 40L)
-    def call1() = RecordLinkage.fuzzyJoinWithReport(
+    def call1() = RecordLinkage.fuzzyJoinReleasable(
       a1, "id", "t", RecordLinkage.suffixBlock(col("t")),
       b1, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      maxDist = 2, maxBlockSize = Some(5))._2
-    def call2() = RecordLinkage.fuzzyJoinWithReport(
+      maxDist = 2, maxBlockSize = Some(5)).report
+    def call2() = RecordLinkage.fuzzyJoinReleasable(
       a2, "id", "t", RecordLinkage.suffixBlock(col("t")),
       b2, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      maxDist = 2, maxBlockSize = Some(5))._2
+      maxDist = 2, maxBlockSize = Some(5)).report
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -139,9 +141,6 @@ class RecordLinkageSpec extends SparkSpec {
       assert(r1("b").totalRows == 2L && r2("b").totalRows == 40L,
         s"side-b reports crossed: $r1 / $r2")
     }
-    // the legacy hook still serves SOME complete single-call map
-    val last = RecordLinkage.lastCapDrops
-    assert(last("a") == expect1a || last("a") == expect2a, last)
     graft.plans.Checkpoints.releaseAll()
   }
 

@@ -176,12 +176,13 @@ class WidenSpec extends SparkSpec {
       (61L to 70L).map(i => (i, s"BBB_$i"))).toDF("id", "nm")
     val narrow = oneFile(skew, "lkc")
     val target = spark.sparkContext.defaultParallelism
-    val (out, report) = RecordLinkage.fuzzyJoinWithReport(
+    val r = RecordLinkage.fuzzyJoinReleasable(
       narrow, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
       narrow, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
       maxDist = 2, maxBlockSize = Some(20))
+    val out = r.pairs
     out.collect()
-    assert(report("a").droppedBlocks == 1L, "the hot block must be capped away")
+    assert(r.report("a").droppedBlocks == 1L, "the hot block must be capped away")
     assert(roundRobinExchanges(out, target) >= 2,
       "widen must fire on the select BELOW the cap's anti-join " +
         "(after it the plan is no longer scan-shaped and widen would no-op)")
