@@ -50,14 +50,20 @@ object Lifecycle {
     val p = Paths.get(outDir, HeartBeatFileName)
     def write(s: String): Unit = Files.writeString(p, s)
     write(HeartBeatInProgress)
-    @volatile var run = true
+    // the refresh checks `run` and writes under one lock, so once
+    // finish() has cleared it no refresh can overwrite the done stamp
+    val lock = new Object
+    var run = true
     val t = new Thread(() => {
-      try while (run) { Thread.sleep(intervalMs); if (run) write(HeartBeatInProgress) }
-      catch { case _: InterruptedException => () }
+      try while (lock.synchronized(run)) {
+        Thread.sleep(intervalMs)
+        lock.synchronized { if (run) write(HeartBeatInProgress) }
+      } catch { case _: InterruptedException => () }
     })
     t.setDaemon(true); t.start()
     success => {
-      run = false; t.interrupt()
+      lock.synchronized { run = false }
+      t.interrupt()
       // on failure the last in-progress stamp is left to go stale (the
       // reference does the same; the status reader applies the timeout)
       if (success) write(HeartBeatDone)

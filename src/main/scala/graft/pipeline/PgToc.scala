@@ -356,6 +356,26 @@ object PgToc {
     (pre, blobs)
   }
 
+  /** Write every table's `<dumpId>.dat` payload, tables concurrently:
+    * per-table concurrency is the dump-side parallelism lever (the
+    * reference's worker pool; same Future pool as Lifecycle.dump), and
+    * each table's COPY-text encode is itself a distributed Spark job.
+    * pg_dump convention: compressed payloads live at `<id>.dat.<ext>`
+    * while the TOC records the bare `.dat` name; pg_restore (and
+    * PgArchive) probe every suffix. */
+  private def writeDataFiles(tables: Seq[(String, org.apache.spark.sql.DataFrame)],
+                             outDir: String, dataIds: Map[String, Int],
+                             algo: Int): Unit = {
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val ext = ".dat" + graft.sources.Compress.extension(algo)
+    tables.map { case (table, df) =>
+      Future(graft.sources.CopyText.writeDatFile(
+        df, s"$outDir/${dataIds(table)}$ext", algo))
+    }.foreach(Await.result(_, Duration.Inf))
+  }
+
   /** Dump DataFrames as a COMPLETE pg_restore-loadable directory archive:
     * `toc.dat` (a pre-data TABLE entry with CREATE TABLE DDL generated
     * from the Spark schema when `includeSchema`, plus one TABLE DATA
@@ -407,21 +427,7 @@ object PgToc {
         owner = Some(owner),
         dependencies = deps.getOrElse(table, Nil).flatMap(schemaIds.get))
     }
-    // per-table concurrency is the dump-side parallelism lever (the
-    // reference's worker pool; same Future pool as Lifecycle.dump) —
-    // each table's COPY-text encode is itself a distributed Spark job
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // pg_dump convention: compressed payloads live at <id>.dat.<ext>
-    // while the TOC records the bare .dat name; pg_restore (and
-    // PgArchive) probe every suffix
-    val ext = ".dat" + graft.sources.Compress.extension(algo)
-    val writes = tables.map { case (table, df) =>
-      Future(graft.sources.CopyText.writeDatFile(
-        df, s"$outDir/${dataIds(table)}$ext", algo))
-    }
-    writes.foreach(Await.result(_, Duration.Inf))
+    writeDataFiles(tables, outDir, dataIds, algo)
     val dataEntries = tables.map { case (table, df) =>
       val id = dataIds(table)
       val file = s"$id.dat"
@@ -536,15 +542,7 @@ object PgToc {
       .filter(_.desc.contains("SEQUENCE"))
       .flatMap(e => e.tag.map(_ -> e)).toMap
     val dataIds = tables.zipWithIndex.map { case ((t, _), i) => t -> (maxId + i + 1) }.toMap
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val ext = ".dat" + graft.sources.Compress.extension(algo)
-    val writes = tables.map { case (table, df) =>
-      Future(graft.sources.CopyText.writeDatFile(
-        df, s"$outDir/${dataIds(table)}$ext", algo))
-    }
-    writes.foreach(Await.result(_, Duration.Inf))
+    writeDataFiles(tables, outDir, dataIds, algo)
     val dataEntries = tables.map { case (table, df) =>
       val id = dataIds(table)
       val ddl = tableDdl.get(table)

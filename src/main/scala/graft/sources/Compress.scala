@@ -12,14 +12,14 @@ import java.io.{InputStream, OutputStream}
   * pg_backup_archiver: 0=none 1=gzip 2=lz4 3=zstd); file extensions
   * follow pg_dump's directory format (`.gz` / `.lz4` / `.zst`, TOC
   * records the bare `.dat` name for all of them). lz4 members are LZ4
-  * FRAME format (what `pg_dump --compress=lz4` and the `lz4` CLI write —
-  * NOT Hadoop's incompatible block codec, which is why the lz4/zstd
-  * part-encode cannot ride Spark's text-writer compression option);
-  * zstd members are standard zstd frames. Both formats define
-  * concatenated frames as one valid stream, the property the
-  * parallel member encode/decode relies on (same as gzip members).
-  * Streams come from the lz4-java and zstd-jni libraries Spark itself
-  * bundles — no new dependency.
+  * FRAME format (what `pg_dump --compress=lz4` and the `lz4` CLI write,
+  * not Hadoop's incompatible block codec); zstd members are standard
+  * zstd frames. The archive writer streams each partition through
+  * [[output]] inside its task, one member per partition. gzip members,
+  * LZ4 frames and zstd frames all define concatenated members as one
+  * valid stream, the property the parallel member encode/decode relies
+  * on. Streams come from the lz4-java and zstd-jni libraries Spark
+  * itself bundles — no new dependency.
   */
 object Compress {
 
@@ -126,79 +126,4 @@ object Compress {
   def probeFile(dir: String, base: String): Option[java.io.File] =
     ("" +: Seq(Gzip, Lz4, Zstd).map(extension))
       .map(e => new java.io.File(dir, base + e)).find(_.exists())
-
-  /** Hadoop codec class name for Spark's text-writer `compression`
-    * option, so part files encode as REAL frame-format members IN THE
-    * EXECUTORS (Hadoop's own lz4/zstd codecs write incompatible block
-    * formats — these wrappers exist precisely to put the pg-compatible
-    * frame formats on the distributed write path). */
-  def hadoopCodecClass(algo: Int): String = algo match {
-    case Lz4  => classOf[Lz4FrameHadoopCodec].getName
-    case Zstd => classOf[ZstdFrameHadoopCodec].getName
-    case other => throw new IllegalArgumentException(
-      s"no frame codec wrapper for algorithm $other")
-  }
 }
-
-/** Minimal Hadoop CompressionCodec over a pair of wrap-stream
-  * constructors. Stream-based only: Spark's `CodecStreams` calls the
-  * single-argument create{Output,Input}Stream, so the Compressor/
-  * Decompressor pooling surface is deliberately unimplemented (null) —
-  * anything that insists on pooled (de)compressors is not a supported
-  * caller of these wrappers. */
-abstract class FrameHadoopCodec(
-    wrapOut: java.io.OutputStream => java.io.OutputStream,
-    wrapIn: InputStream => InputStream,
-    ext: String)
-    extends org.apache.hadoop.io.compress.CompressionCodec {
-  import org.apache.hadoop.io.compress.{CompressionInputStream, CompressionOutputStream, Compressor, Decompressor}
-
-  override def createOutputStream(out: java.io.OutputStream): CompressionOutputStream = {
-    val z = wrapOut(out)
-    new CompressionOutputStream(out) {
-      override def write(b: Int): Unit = z.write(b)
-      override def write(b: Array[Byte], o: Int, l: Int): Unit = z.write(b, o, l)
-      override def flush(): Unit = z.flush()
-      // the frame trailer is written by the frame stream's own close();
-      // finish() alone is not separable in these libraries, and the
-      // text-writer path only ever close()s
-      override def finish(): Unit = ()
-      override def resetState(): Unit =
-        throw new UnsupportedOperationException("frame codec: no state reset")
-      override def close(): Unit = z.close()
-    }
-  }
-  override def createOutputStream(out: java.io.OutputStream, c: Compressor): CompressionOutputStream =
-    createOutputStream(out)
-  override def createInputStream(in: InputStream): CompressionInputStream = {
-    val z = wrapIn(in)
-    new CompressionInputStream(in) {
-      override def read(): Int = z.read()
-      override def read(b: Array[Byte], o: Int, l: Int): Int = z.read(b, o, l)
-      override def resetState(): Unit =
-        throw new UnsupportedOperationException("frame codec: no split reset")
-      override def close(): Unit = z.close()
-    }
-  }
-  override def createInputStream(in: InputStream, d: Decompressor): CompressionInputStream =
-    createInputStream(in)
-  override def createCompressor(): Compressor = null
-  override def getCompressorType: Class[_ <: Compressor] = null
-  override def createDecompressor(): Decompressor = null
-  override def getDecompressorType: Class[_ <: Decompressor] = null
-  override def getDefaultExtension: String = ext
-}
-
-/** LZ4 FRAME format as a Hadoop codec (pg_dump's `--compress=lz4`
-  * member shape; NOT Hadoop's Lz4Codec block format). */
-final class Lz4FrameHadoopCodec extends FrameHadoopCodec(
-  out => new net.jpountz.lz4.LZ4FrameOutputStream(out),
-  in => new net.jpountz.lz4.LZ4FrameInputStream(in, false),
-  ".lz4")
-
-/** zstd frames as a Hadoop codec (pg_dump's `--compress=zstd` member
-  * shape, via the zstd-jni Spark bundles). */
-final class ZstdFrameHadoopCodec extends FrameHadoopCodec(
-  out => new com.github.luben.zstd.ZstdOutputStream(out),
-  in => new com.github.luben.zstd.ZstdInputStream(in),
-  ".zst")

@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Hadoop text input format whose splits are CLIPPED at a byte bound
@@ -136,20 +141,16 @@ object CopyText {
     sb.toString
   }
 
-  /** Encode a DataFrame (stringified columns) as COPY text lines. One
-    * output line per row; distributed text write (optionally gzip via
-    * codec option, matching the reference's `.dat.gz`). BinaryType
+  /** Render rows as COPY text lines, one line per row. BinaryType
     * columns render in PostgreSQL hex form (`\x...` — the exact inverse
     * of [[graft.sources.PgArchive.loadTyped]]'s unhex decode), so bytea
     * payloads survive a dump -> restore/re-load round-trip instead of
     * degrading to `Array.toString`. */
-  def write(df: DataFrame, path: String, compression: Option[String] = None): Unit = {
-    val cols = df.columns
-    val spark = df.sparkSession
-    import spark.implicits._
-    val lines = df.mapPartitions { rows =>
+  private def encodeLines(df: DataFrame): Dataset[String] = {
+    val n = df.columns.length
+    df.mapPartitions { rows =>
       rows.map { r =>
-        (0 until cols.length).map { i =>
+        (0 until n).map { i =>
           if (r.isNullAt(i)) "\\N"
           else r.get(i) match {
             case b: Array[Byte] => encodeField(byteaHex(b))
@@ -158,21 +159,14 @@ object CopyText {
         }.mkString("\t")
       }
     }(Encoders.STRING)
-    val w = compression.foldLeft(lines.write)((w, c) => w.option("compression", c))
-    w.mode("overwrite").text(path)
   }
 
-  /** Byte counter around the concat target so compressed member lengths
-    * are known as they are written. */
-  private final class CountingOutputStream(u: java.io.OutputStream)
-      extends java.io.OutputStream {
-    var count = 0L
-    override def write(b: Int): Unit = { u.write(b); count += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      u.write(b, off, len); count += len
-    }
-    override def flush(): Unit = u.flush()
-    override def close(): Unit = u.close()
+  /** Encode a DataFrame (stringified columns) as COPY text lines:
+    * distributed text write, optionally compressed via Spark's text
+    * `compression` option (matching the reference's `.dat.gz`). */
+  def write(df: DataFrame, path: String, compression: Option[String] = None): Unit = {
+    val w = compression.foldLeft(encodeLines(df).write)((w, c) => w.option("compression", c))
+    w.mode("overwrite").text(path)
   }
 
   /** Shield between a per-member compression stream and the shared
@@ -187,109 +181,96 @@ object CopyText {
     override def close(): Unit = u.flush()
   }
 
+  /** Member fan-out for inputs narrower than it. It fixes the byte
+    * layout of every payload [[writeDatFile]] writes, so it is a
+    * constant, not a setting. */
+  private val Buckets = 16
+
   /** Render one SINGLE `.dat` data file (the pg_restore directory-archive
-    * per-table payload): distributed COPY-text encode into a scratch dir,
-    * then a driver-side ordered stream-concat of the part files plus the
-    * `\.` terminator line. One table = one COPY stream is pg_restore's
-    * own contract, so the final single-stream hop is inherent to the
-    * format, not a scale bug — the encode itself stays distributed. */
+    * per-table payload). One table = one COPY stream is pg_restore's own
+    * contract, so the final single-stream concat is inherent to the
+    * format; the encode itself stays distributed. */
   def writeDatFile(df: DataFrame, file: String, gzip: Boolean = false): Unit =
     writeDatFile(df, file, if (gzip) Compress.Gzip else Compress.None)
 
-  /** Compressed payloads are written as CONCATENATED members (one per
-    * part + one for the terminator) — gzip members, LZ4 frames and zstd
-    * frames all define concatenation as a valid stream, so the
-    * distributed encode parallelism survives compression for ALL three
-    * algorithms: gzip rides Spark's own text codec, lz4/zstd ride the
-    * [[FrameHadoopCodec]] wrappers (Hadoop's bundled lz4/zstd codecs
-    * write block formats incompatible with the frame formats pg tooling
-    * expects — the wrappers put the right formats on the executor write
-    * path), and the driver-side concat is a plain byte copy either way.
-    * Member boundaries are recorded to a `.idx` sidecar so [[read]] can
-    * decompress members in parallel; pg_restore reads only the files
-    * toc.dat lists, so the sidecar is invisible to the native
-    * toolchain. */
+  /** One execution of the plan per payload.
+    *
+    *  - Execute once: the input plan runs a single time
+    *    ([[org.apache.spark.sql.GraftBridge.executedOnce]]); the
+    *    partition count and the encode reuse its final stage.
+    *  - Canonical layout: the encode is CPU-bound, so an input narrower
+    *    than [[Buckets]] partitions is widened to [[Buckets]] members
+    *    through a hash exchange on `xxhash64(all columns)`. The map side
+    *    only hashes; each bucket renders its rows to COPY lines and sorts
+    *    them by the line, 16 ways in parallel. Equal sort keys are
+    *    byte-identical lines, so payload and sidecar bytes are identical
+    *    across runs, input layouts and core counts, ties such as 0.0 vs
+    *    -0.0 included. Inputs at or above the fan-out keep their own
+    *    layout (native pg_dump payloads are not canonical across `-j`
+    *    either); their decoded row multiset is invariant.
+    *  - In-task members: each non-empty partition streams its lines
+    *    through one [[Compress.output]] member into an attempt-unique
+    *    file of the scratch dir and reports `(index, file, length)`.
+    *    gzip members, LZ4 frames and zstd frames all define
+    *    concatenation as one valid stream, so the driver concatenates
+    *    exactly the reported files in partition order and appends a `\.`
+    *    terminator member.
+    *
+    * Every data member's byte range goes to a `graftgzidx v1` sidecar
+    * (`<file>.idx`), with which [[read]] decodes members in parallel;
+    * pg_restore reads only the files toc.dat lists, so the sidecar is
+    * invisible to the native toolchain. An empty input writes the
+    * terminator alone and a sidecar with no members. The concat needs
+    * the scratch dir on the DRIVER-LOCAL filesystem (this method targets
+    * local directory archives): a member the driver cannot see fails
+    * with a diagnostic. */
   def writeDatFile(df: DataFrame, file: String, algo: Int): Unit = {
     val tmp = file + ".tmpdir"
-    val dir = new java.io.File(tmp)
+    val (rows, width) = org.apache.spark.sql.GraftBridge.executedOnce(df)
+    val lines =
+      if (width >= Buckets) encodeLines(rows)
+      else {
+        val cols = rows.columns.map(c => col(s"`$c`"))
+        encodeLines(rows.repartition(Buckets, xxhash64(cols: _*)))
+          .sortWithinPartitions("value")
+      }
     try {
-      // The encode (escape tables + compression) is CPU-bound: when the
-      // upstream plan has fewer partitions than the member fan-out (a
-      // one-file scan, a collapsed aggregate), widen it so the render
-      // uses the machine — measured 5.4 s -> 3.9 s on the 600k-row bench
-      // cycle. Row order inside a COPY payload is not semantic, but the
-      // BYTES must be run-to-run deterministic. The r18 shape used
-      // keyless round-robin, whose sortBeforeRepartition pays a full
-      // LOCAL SORT of every row inside the upstream stage — on the
-      // single-row-group bench fixture that is one task carrying
-      // scan + whole-table sort (~0.7 s serialized, the r18 profile's
-      // biggest single-task stage). Deterministic HASH bucketing on a
-      // row-content digest moves the determinism work to the reduce
-      // side instead (guide §2.5: derive synthetic keys
-      // deterministically, never from rand()/round-robin state): the
-      // map side only computes xxhash64 per row, and each of the 16
-      // members sorts its own 1/16th locally, in parallel. Bonus over
-      // round-robin: the member layout is now CANONICAL — bytes
-      // identical across runs AND across core counts (fixed bucket
-      // count, content-derived assignment, total per-member sort),
-      // where round-robin's member count tracked defaultParallelism.
-      // Retry-stable by construction (SPARK-38388 class: the key is a
-      // pure function of row content). Inputs already at or above the
-      // fan-out keep their own layout, as before — at real scale the
-      // encode inherits the upstream width and none of this fires.
-      val buckets = 16
-      val wide = if (df.rdd.getNumPartitions < buckets) {
-        import org.apache.spark.sql.functions.{col, xxhash64}
-        val cols = df.columns.map(c => col(s"`$c`"))
-        df.repartition(buckets, xxhash64(cols: _*))
-          .sortWithinPartitions(cols: _*)
-      } else df
-      val codec = algo match {
-        case Compress.None => None
-        case Compress.Gzip => Some("gzip")
-        case a             => Some(Compress.hadoopCodecClass(a))
-      }
-      write(wide, tmp, compression = codec)
-      // the concat step requires a DRIVER-LOCAL scratch dir (this method
-      // targets local directory archives; on a cluster, point `file` at
-      // local disk or concat on the storage layer) — fail with a
-      // diagnostic, not an NPE, if the write landed elsewhere
-      val listed = Option(dir.listFiles()).getOrElse(
-        throw new IllegalStateException(
-          s"CopyText.writeDatFile: scratch dir $tmp is not on the driver-local " +
-            "filesystem (spark default FS must be local for single-file rendering)"))
-      val parts = listed.filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val out = new CountingOutputStream(
-        new java.io.BufferedOutputStream(new java.io.FileOutputStream(file)))
-      val members = Seq.newBuilder[(Long, Long)]
-      try {
-        parts.foreach { p =>
-          val start = out.count
-          java.nio.file.Files.copy(p.toPath, out)
-          members += ((start, out.count - start))
-        }
-        if (algo == Compress.None) out.write("\\.\n".getBytes("UTF-8"))
+      val reported = lines.rdd.mapPartitionsWithIndex { (i, it) =>
+        if (!it.hasNext) Iterator.empty
         else {
-          // close() (not just finish()) releases native codec buffers
-          // immediately; the shield keeps the concat target open for the
-          // final close below
-          val z = Compress.output(algo, new NonClosingOutputStream(out))
-          z.write("\\.\n".getBytes("UTF-8")); z.close()
+          Files.createDirectories(Paths.get(tmp))
+          val name = f"part-$i%05d-${TaskContext.get().taskAttemptId()}"
+          val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+            Compress.output(algo, new java.io.BufferedOutputStream(
+              Files.newOutputStream(Paths.get(tmp, name)))), UTF_8), 1 << 16)
+          try it.foreach { l => w.write(l); w.write('\n') } finally w.close()
+          Iterator((i, name, Files.size(Paths.get(tmp, name))))
         }
-      } finally out.close()
-      // sidecar for EVERY algorithm, including none: uncompressed member
-      // ranges align to part-file (= line) boundaries, so the reader gets
-      // one-task-per-member parallel decode there too — without it a
-      // 129 MB uncompressed payload fell back to ~4 block-sized splits
-      // and loaded 7x slower than its zstd twin (10x soak, round 12)
-      locally {
-        val total = new java.io.File(file).length()
-        val lines = (s"graftgzidx v1 $total" +:
-          members.result().map { case (s, l) => s"$s $l" }).mkString("", "\n", "\n")
-        java.nio.file.Files.write(java.nio.file.Paths.get(file + ".idx"),
-          lines.getBytes("UTF-8"))
+      }.collect().sortBy(_._1)
+      reported.foreach { case (_, name, len) =>
+        val m = Paths.get(tmp, name)
+        if (!Files.isRegularFile(m) || Files.size(m) != len)
+          throw new IllegalStateException(
+            s"CopyText.writeDatFile: scratch dir $tmp is not on the driver-local " +
+              "filesystem (spark default FS must be local for single-file rendering)")
       }
+      val out = new java.io.BufferedOutputStream(Files.newOutputStream(Paths.get(file)))
+      try {
+        reported.foreach { case (_, name, _) => Files.copy(Paths.get(tmp, name), out) }
+        // close() (not just finish()) releases native codec buffers
+        // immediately; the shield keeps the concat target open
+        val z = Compress.output(algo, new NonClosingOutputStream(out))
+        z.write("\\.\n".getBytes(UTF_8)); z.close()
+      } finally out.close()
+      // member byte ranges follow from the verified lengths
+      val lens = reported.map(_._3)
+      val ranges = lens.zip(lens.scanLeft(0L)(_ + _))
+        .map { case (len, start) => s"$start $len" }
+      val idx = (s"graftgzidx v1 ${Files.size(Paths.get(file))}" +: ranges)
+        .mkString("", "\n", "\n")
+      Files.write(Paths.get(file + ".idx"), idx.getBytes(UTF_8))
     } finally {
+      val dir = new java.io.File(tmp)
       Option(dir.listFiles()).foreach(_.foreach(_.delete()))
       dir.delete()
     }

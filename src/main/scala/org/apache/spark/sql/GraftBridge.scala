@@ -50,6 +50,21 @@ object GraftBridge {
     (classic.Dataset.ofRows(session, plan), n)
   }
 
+  /** `df` with its plan executed ONCE: AQE runs every upstream query
+    * stage now, and the returned frame scans the final stage's RDD, so
+    * plans built on it do not run those stages again (`df.rdd` and
+    * every action each plan and run `df` anew). Returns the frame and
+    * its partition count. */
+  def executedOnce(df: DataFrame): (DataFrame, Int) = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val rdd = df.queryExecution.toRdd
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .toAttributes(df.schema)
+    val plan = org.apache.spark.sql.execution.LogicalRDD(attrs, rdd)(
+      session, None, None)
+    (classic.Dataset.ofRows(session, plan), rdd.getNumPartitions)
+  }
+
   /** Register graft's native expressions as SQL functions on a session
     * (the FunctionRegistry injection a SparkSessionExtensions would do;
     * exposed directly so `spark.sql("... u60_hash(col, 'prefix') ...")`

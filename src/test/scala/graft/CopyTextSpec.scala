@@ -188,6 +188,41 @@ class CopyTextSpec extends SparkSpec {
     }
   }
 
+  test("writeDatFile runs the input plan once") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val calls = spark.sparkContext.longAccumulator("encode-input-rows")
+    val tick = udf { (x: Long) => calls.add(1); x }
+    // the counter sits below a shuffle, so it fires once per row only
+    // if the upstream stage runs exactly once
+    val df = spark.range(0, 1000, 1, 4).select(tick(col("id")).as("id"))
+      .groupBy(col("id")).count()
+      .selectExpr("cast(id as string) id", "cast(count as string) n")
+    val dat = Files.createTempDirectory("copyonce").resolve("t.dat").toString
+    CopyText.writeDatFile(df, dat, graft.sources.Compress.None)
+    assert(calls.value == 1000L,
+      s"input plan ran ${calls.value / 1000.0} times (${calls.value} rows counted)")
+    assert(CopyText.read(spark, dat, Seq("id", "n")).count() == 1000)
+  }
+
+  test("writeDatFile of an empty input: terminator only, no data members, zero rows") {
+    import graft.sources.Compress
+    val df = spark.range(0, 50, 1, 4).filter("id < 0")
+      .selectExpr("cast(id as string) id", "'x' v")
+    for (algo <- Seq(Compress.None, Compress.Gzip, Compress.Lz4, Compress.Zstd)) {
+      val name = Compress.name(algo)
+      val dat = Files.createTempDirectory("copyempty")
+        .resolve("t.dat" + Compress.extension(algo))
+      CopyText.writeDatFile(df, dat.toString, algo)
+      val in = Compress.input(algo, Files.newInputStream(dat))
+      val payload = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      assert(payload == "\\.\n", s"$name: payload is not the terminator alone")
+      val idx = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dat.idx")), "UTF-8")
+      assert(idx == s"graftgzidx v1 ${Files.size(dat)}\n",
+        s"$name: sidecar must record zero data members: $idx")
+      assert(CopyText.read(spark, dat.toString, Seq("id", "v")).count() == 0, name)
+    }
+  }
+
   private def gzipBytes(s: String): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val gz = new java.util.zip.GZIPOutputStream(bos)

@@ -12,14 +12,14 @@ import graft.transformers.{HashText, Masking}
   *
   * The contract, as shipped:
   *  - same config + salt + parallelism ⇒ the member payload BYTES are
-  *    identical run to run, at every compression algorithm
-  *    (RoundRobinPartitioning local-sorts before exchanging, the scan
+  *    identical run to run, at every compression algorithm (the scan
   *    order of a fixed file set is stable, and the hash engine is
   *    input-deterministic);
-  *  - across DIFFERENT parallelism (r19, strengthened): inputs NARROWER
-  *    than the 16-member fan-out are hash-bucketed on a row-content
-  *    digest and locally sorted per member, so the payload bytes are
-  *    CANONICAL — identical across runs, input layouts and core counts;
+  *  - across DIFFERENT parallelism: inputs NARROWER than the 16-member
+  *    fan-out are hash-bucketed on a row-content digest and sorted per
+  *    member by the rendered COPY line, so the payload bytes are CANONICAL —
+  *    identical across runs, input layouts and core counts, even for
+  *    rows that tie as values but render differently (0.0 vs -0.0);
   *  - inputs already at or above the fan-out keep their own layout
   *    (pg_dump's own -Fd shape has the same property — payload bytes
   *    are not canonical across -j), so bytes legitimately differ there,
@@ -90,5 +90,23 @@ class DumpDeterminismSpec extends SparkSpec {
         .groupBy(identity).view.mapValues(_.length.toLong).toMap
     assert(decoded(f2) == decoded(f17),
       "decoded row multiset must be invariant across encode parallelism")
+  }
+
+  test("rows that tie as values but render differently: payload bytes independent of input order") {
+    // 0.0 and -0.0 are equal as doubles but render as different COPY
+    // lines; the layout must order them the same whatever order they
+    // arrive in
+    val rows = Seq((1, 0.0, "a"), (1, -0.0, "a"), (2, 1.5, "b"))
+    def input(rs: Seq[(Int, Double, String)]) = rs.toDF("id", "x", "s").coalesce(1)
+    val dir = Files.createTempDirectory("graft_dumpdet_tie").toString
+    for (algo <- Seq(graft.sources.Compress.None, graft.sources.Compress.Gzip)) {
+      val ext = graft.sources.Compress.extension(algo)
+      val fwd = s"$dir/fwd_$algo.dat$ext"; val rev = s"$dir/rev_$algo.dat$ext"
+      graft.sources.CopyText.writeDatFile(input(rows), fwd, algo)
+      graft.sources.CopyText.writeDatFile(input(rows.reverse), rev, algo)
+      val name = graft.sources.Compress.name(algo)
+      assert(sha(fwd) == sha(rev), s"$name payload bytes depend on input row order")
+      assert(sha(fwd + ".idx") == sha(rev + ".idx"), s"$name sidecar depends on input row order")
+    }
   }
 }
