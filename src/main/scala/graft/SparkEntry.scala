@@ -22,6 +22,13 @@ object SparkEntry {
   private def rd(s: SparkSession, dir: String, t: String): DataFrame =
     s.read.parquet(s"$dir/$t.parquet")
 
+  /** Output dir `name` of a query that writes files, under one scratch
+    * root per process (two processes on one sf dir never share a path),
+    * kept until JVM exit since the returned frames read it lazily. */
+  private lazy val scratchRoot = org.apache.spark.sql.GraftBridge.tempDirUntilExit("graft-queries")
+  private def scratchDir(name: String, dir: String): String =
+    new java.io.File(scratchRoot, s"${name}_${new java.io.File(dir).getName}").getPath
+
   /** Fixed merge table for q_bpe_tokencount — rule order matters (later
     * rules consume earlier merges' outputs: th+e, an+d). */
   val bpeFixedMerges: Seq[(String, String)] = Seq(
@@ -1146,7 +1153,7 @@ object SparkEntry {
     // them back (escapes, \N nulls), values survive exactly
     "q_copy_roundtrip" -> Q(
       (s, dir) => {
-        val path = s"/tmp/graft_copy_rt_${new java.io.File(dir).getName}"
+        val path = scratchDir("copy_rt", dir)
         val src = rd(s, dir, "customer")
           .select(CK.cast("string").as("ck"), col("c_name").as("nm"), col("c_mktsegment").as("seg"))
         graft.sources.CopyText.write(src, path)
@@ -1163,7 +1170,7 @@ object SparkEntry {
     // engine-specific by repo discipline)
     "q_pg_archive_roundtrip" -> Q(
       (s, dir) => {
-        val out = s"/tmp/graft_pg_arch_rt_${new java.io.File(dir).getName}"
+        val out = scratchDir("pg_arch_rt", dir)
         val src = rd(s, dir, "customer")
           .select(CK, col("c_name"), col("c_nationkey"), col("c_mktsegment"))
         graft.pipeline.PgToc.dumpArchive(Seq("customer" -> src), out, "rt")
@@ -1184,7 +1191,7 @@ object SparkEntry {
     // the oracle float-format-free per repo discipline.
     "q_pg_archive_lineitem" -> Q(
       (s, dir) => {
-        val out = s"/tmp/graft_pg_arch_li_${new java.io.File(dir).getName}"
+        val out = scratchDir("pg_arch_li", dir)
         val src = rd(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
             col("l_quantity").cast("int").as("l_quantity"),

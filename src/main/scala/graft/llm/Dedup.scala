@@ -215,59 +215,58 @@ object Dedup {
     * exchange over the doc↔band bipartite graph until stable, so chains
     * (A~B~C without A sharing a band with C) collapse to one cluster —
     * union-find semantics, executed as Spark joins. Per iteration: two
-    * groupBy/join rounds on (band, rep) pairs, localCheckpoint to cut
+    * groupBy/join rounds on (band, rep) pairs, an eager checkpoint to cut
     * lineage; converges in O(cluster diameter) iterations (small for LSH
     * graphs). Only (id, band, rep) longs shuffle — never text or
     * signatures. */
   def minhashLshClusters(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 2,
                          maxIter: Int = 20): DataFrame = {
-    // byte-floored like [[minhashLsh]]'s identical leaf (r19): measured
-    // neutral here at sf0.1 (min 1.994 floored vs 1.975 unconditional —
-    // the iteration barriers dominate, see below), floored for the same
+    // byte-floored like [[minhashLsh]]'s identical leaf, for the same
     // work model as its measured family twins
     val withMh = graft.plans.Parallelism
       .widenIfAtLeast(df.select(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"),
         TextOps.minhashSignatureFromText(col("__text"), shingleN,
           TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
-    val allEdges = withMh.select(col("id"),
+    // every checkpoint goes through checkpointObserved: exact leaf stats
+    // (the pointer jump joins a checkpoint with itself) and the
+    // convergence sum from the job that materializes the round
+    val bridge = org.apache.spark.sql.GraftBridge
+    val (allEdges, _) = bridge.checkpointObserved(withMh.select(col("id"),
         explode_outer(TextOps.minhashBands(col("__mh"), bands, rowsPerBand)).as("band"))
-      .filter(col("band").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("band").isNotNull))
     // Prune to the ACTIVE subgraph and seed iteration 0 in ONE aggregate:
     // a singleton band (one edge row) propagates the doc's own rep back to
     // it — a no-op — so only bands with >= 2 edge rows can move a label;
     // and under identity labels the band minimum is just min(id). One
     // groupBy(band) emits both (band_rep, n), so the prune filter and the
-    // iteration-0 band minima come from the SAME pass over allEdges
-    // (round 5 ran them as two passes — on corpora with little duplicate
-    // structure the prep cost more than the iterations). Docs outside the
-    // active subgraph keep rep = own id via the final left join's
-    // coalesce; n >= 2 drops only bands that cannot link anything, so the
-    // pruning is safe whether or not a surviving band's rows are distinct
-    // docs. The inner join both prunes allEdges AND attaches the seed rep,
-    // so the loop's edge set and iteration 0's labels share one
+    // iteration-0 band minima come from the SAME pass over allEdges. Docs
+    // outside the active subgraph keep rep = own id via the final left
+    // join's coalesce; n >= 2 drops only bands that cannot link anything,
+    // so the pruning is safe whether or not a surviving band's rows are
+    // distinct docs. The inner join both prunes allEdges AND attaches the
+    // seed rep, so the loop's edge set and iteration 0's labels share one
     // checkpointed (band, id, band_rep) relation — three longs per edge.
     val bandAgg = allEdges.groupBy("band")
       .agg(min("id").as("band_rep"), count(lit(1)).as("__n"))
       .filter(col("__n") >= 2)
       .select("band", "band_rep")
-    val pruned = allEdges.join(bandAgg, "band").localCheckpoint(true)
+    val (pruned, _) = bridge.checkpointObserved(allEdges.join(bandAgg, "band"))
     graft.plans.Checkpoints.unpersistCheckpoint(allEdges)
     // projection over the checkpoint — no recompute, no extra pass
     val edges = pruned.select("id", "band")
     // Convergence check WITHOUT a labels×next join: min-propagation is
     // monotone — an id's own rep feeds its bands' minima, so reps only
     // ever decrease — hence the labels changed iff sum(rep) decreased.
-    // One exact decimal aggregate over the just-materialized checkpoint
+    // One exact decimal aggregate observed by each round's checkpoint
     // replaces the old-vs-new equi-join per iteration (decimal(38), not
     // long: a corpus-scale sum of 64-bit ids overflows long).
-    def repSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("rep").cast("decimal(38,0)"))).head().getDecimal(0)
-    var labels = pruned.groupBy("id").agg(min("band_rep").as("rep"))
-      .localCheckpoint(true)
-    var prevSum = repSum(labels)
+    val repTotal = sum(col("rep").cast("decimal(38,0)"))
+    val (seedLabels, seedCensus) = bridge.checkpointObserved(
+      pruned.groupBy("id").agg(min("band_rep").as("rep")), repTotal)
+    var labels = seedLabels
+    var prevSum = seedCensus.getDecimal(1)
     var converged = false
     var iter = 1
     def propagate(l: DataFrame): DataFrame = {
@@ -278,45 +277,41 @@ object Dedup {
     }
     while (!converged && iter < maxIter) {
       // BATCH TWO propagation rounds per materialization in the shallow
-      // (pre-jump) phase (r19, VERDICT r18 #6): at sf0.1 the loop's cost
-      // is not data but the per-round checkpoint barrier + fresh Catalyst
-      // cycle (the profile ledger shows ~30 jobs of 10-70 ms inside a
-      // ~2 s construct). Chaining two rounds into one plan halves the
-      // barriers; the intermediate is consumed exactly once, so nothing
-      // recomputes. The fixpoint is invariant (propagate(fix) = fix) —
-      // the only cost is up to one no-op round when convergence lands on
-      // an odd round, and the monotone-sum convergence test stays valid
-      // at batch granularity (sum unchanged over two monotone rounds ⇒
-      // both were no-ops). The jump phase keeps single rounds: the
-      // self-join needs its input materialized or it would run twice.
-      val propagated = (
+      // (pre-jump) phase: at small scale the loop's cost is not data but
+      // the per-round checkpoint barrier + fresh Catalyst cycle. Chaining
+      // two rounds into one plan halves the barriers; the intermediate is
+      // consumed exactly once, so nothing recomputes. The fixpoint is
+      // invariant (propagate(fix) = fix) — the only cost is up to one
+      // no-op round when convergence lands on an odd round, and the
+      // monotone-sum convergence test stays valid at batch granularity
+      // (sum unchanged over two monotone rounds ⇒ both were no-ops). The
+      // jump phase keeps single rounds: the self-join needs its input
+      // materialized or it would run twice.
+      val (propagated, propagatedCensus) = bridge.checkpointObserved(
         if (iter < 4 && iter + 1 < maxIter) { iter += 1; propagate(propagate(labels)) }
-        else propagate(labels)
-      ).localCheckpoint(true)
+        else propagate(labels), repTotal)
       // POINTER JUMPING from iteration 4 on: band propagation moves a
       // label ONE hop per round, so a duplicate-cluster chain of depth d
-      // costs d rounds — the sf10 rehearsal (100 key-shifted replicas,
-      // half of them edit-noised) built chains deeper than 20 and hit the
-      // maxIter wall. rep(i) := rep(rep(i)) halves the remaining depth
-      // every round (labels always decrease toward the component min, so
-      // the chase is monotone and safe), turning convergence into
+      // costs d rounds (edit-noised replicas build chains deeper than
+      // the maxIter wall). rep(i) := rep(rep(i)) halves the remaining
+      // depth every round (labels always decrease toward the component
+      // min, so the chase is monotone and safe), turning convergence into
       // O(log d) like the self-FK path doubling. The first rounds skip
       // the extra join: shallow graphs (the common case — LSH cluster
       // diameters are small) converge before it would ever help, and the
       // per-iteration cost stays one join cheaper there. Every rep is
       // itself a member id of the active subgraph, so the chase join is
       // inner and total.
-      val next =
-        if (iter < 4) propagated
+      val (next, nextCensus) =
+        if (iter < 4) (propagated, propagatedCensus)
         else {
-          val jumped = propagated.as("x")
+          val jumped = bridge.checkpointObserved(propagated.as("x")
             .join(propagated.as("y"), col("x.rep") === col("y.id"))
-            .select(col("x.id").as("id"), col("y.rep").as("rep"))
-            .localCheckpoint(true)
+            .select(col("x.id").as("id"), col("y.rep").as("rep")), repTotal)
           graft.plans.Checkpoints.unpersistCheckpoint(propagated)
           jumped
         }
-      val newSum = repSum(next)
+      val newSum = nextCensus.getDecimal(1)
       // `next` is materialized (eager checkpoint) — the superseded
       // checkpoint's blocks can go, keeping storage bounded across
       // iterations

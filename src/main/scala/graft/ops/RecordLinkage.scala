@@ -284,20 +284,19 @@ object RecordLinkage {
     * edge list until stable (converges in O(component diameter) rounds,
     * small for match graphs).
     *
-    * SEMI-NAIVE rounds (r15, closing the 0.44 soak exponent): a node's
-    * label can only drop when a NEIGHBOR's label dropped in the previous
-    * round, so each round propagates only from the FRONTIER — the ids
-    * improved last round — instead of re-joining the full edge set.
+    * SEMI-NAIVE rounds: a node's label can only drop when a NEIGHBOR's
+    * label dropped in the previous round, so each round propagates only
+    * from the FRONTIER — the ids improved last round — instead of
+    * re-joining the full edge set.
     * Components that converged simply stop appearing in the frontier and
     * their edges drop out of every later round's join (the
     * freeze-converged-components idea, realized as delta iteration
     * rather than explicit edge bookkeeping — same effect, no mutable
     * edge set to maintain). Convergence = empty frontier, checked by the
-    * same per-round job that materializes it; localCheckpoint per round
-    * bounds lineage exactly as before. On FixpointSoak's adversarial
-    * shape (4M star nodes + one 24-hop path) the stars converge in ~2
-    * rounds and the remaining ~22 rounds touch only the path's handful
-    * of edges — per-round work tracks the frontier, not the graph.
+    * same per-round job that materializes it; a checkpoint per round
+    * bounds lineage. Per-round work tracks the frontier, not the graph:
+    * star components converge in a couple of rounds and later rounds
+    * touch only the edges of the long paths still moving.
     *
     * Only (id, rep) longs shuffle — never the record payloads. Records
     * with no match keep themselves as their entity (final left join).
@@ -313,20 +312,20 @@ object RecordLinkage {
                      maxIter: Int = 30): DataFrame = {
     val fwd = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
-    val edges = fwd.unionByName(
-        fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    // seed: rep_0(id) = min over {id} ∪ direct neighbors — one aggregate.
-    // Every labeled node starts in the frontier (all labels are "new").
-    // Per-round checkpoints go through checkpointCounted, NOT
+    // Every checkpoint goes through checkpointObserved, NOT
     // Dataset.localCheckpoint: the propagated origin Statistics would
     // compound multiplicatively round over round (labels rides both
     // sides of each round's joins) until the driver grinds in BigInteger
     // arithmetic inside the stats visitor — see the GraftBridge scaladoc
-    // for the live pathology. The exact counted stats also let the
+    // for the live pathology. The exact observed stats also let the
     // (shrinking) frontier broadcast into both per-round joins.
     val bridge = org.apache.spark.sql.GraftBridge
-    var (labels, _) = bridge.checkpointCounted(edges
+    val (edges, _) = bridge.checkpointObserved(fwd.unionByName(
+        fwd.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct())
+    // seed: rep_0(id) = min over {id} ∪ direct neighbors — one aggregate.
+    // Every labeled node starts in the frontier (all labels are "new").
+    var (labels, _) = bridge.checkpointObserved(edges
       .groupBy(col("src").as("id"))
       .agg(min(least(col("src"), col("dst"))).as("rep")))
     var frontier = labels
@@ -336,31 +335,31 @@ object RecordLinkage {
       // push the frontier's labels one hop; keep only genuine improvements
       val viaNb = edges.join(frontier.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min("rep").as("cand"))
-      val (hopImproved, nHop) = bridge.checkpointCounted(
+      val (hopImproved, hopCensus) = bridge.checkpointObserved(
         viaNb.join(labels, "id")
           .filter(col("cand") < col("rep"))
           .select(col("id"), col("cand").as("rep")))
-      // FRONTIER-SCOPED POINTER JUMP (r15): a hop-improved node's new rep
-      // may itself carry an older label than ITS rep's current one —
-      // chasing rep := labels(rep) halves the remaining chain depth along
-      // exactly the active paths (deep chains are where round counts
-      // live; the 24-round soak path is the motivating shape). The chase
-      // is one join bounded by the FRONTIER size, so the semi-naive
+      val nHop = hopCensus.getLong(0)
+      // FRONTIER-SCOPED POINTER JUMP: a hop-improved node's new rep may
+      // itself carry an older label than ITS rep's current one — chasing
+      // rep := labels(rep) halves the remaining chain depth along exactly
+      // the active paths (deep chains are where round counts live). The
+      // chase is one join bounded by the FRONTIER size, so the semi-naive
       // "work tracks the frontier" property is preserved — a global
       // rep(rep) pass would be O(N) per round and give that back.
       // Monotone-safe: labels(rep) <= rep always, and any label a chase
       // lands on is the min of ids reachable from the component.
-      val (improved, nImproved) =
-        if (nHop == 0) (hopImproved, 0L)
-        else bridge.checkpointCounted(
+      val improved =
+        if (nHop == 0) hopImproved
+        else bridge.checkpointObserved(
           hopImproved.join(labels.select(col("id").as("rep"),
               col("rep").as("__chased")), Seq("rep"), "left_outer")
             .select(col("id"),
-              least(col("rep"), coalesce(col("__chased"), col("rep"))).as("rep")))
+              least(col("rep"), coalesce(col("__chased"), col("rep"))).as("rep")))._1
       if (improved ne hopImproved) {
         graft.plans.Checkpoints.unpersistCheckpoint(hopImproved)
       }
-      val (next, _) = bridge.checkpointCounted(
+      val (next, _) = bridge.checkpointObserved(
         labels.join(improved.withColumnRenamed("rep", "better"),
             Seq("id"), "left_outer")
           .select(col("id"), coalesce(col("better"), col("rep")).as("rep")))
@@ -369,8 +368,7 @@ object RecordLinkage {
       labels = next
       frontier = improved
       // the chase join is row-preserving (left_outer + select over
-      // hopImproved), so nImproved == nHop whenever the chase runs and
-      // 0 exactly when nHop is 0 — nHop IS the frontier size
+      // hopImproved), so nHop IS the frontier size
       frontierSize = nHop
       iter += 1
     }

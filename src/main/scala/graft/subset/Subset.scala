@@ -1,6 +1,7 @@
 package graft.subset
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.checkpointObserved
 import org.apache.spark.sql.functions._
 import graft.pipeline.FkRef
 
@@ -17,8 +18,8 @@ import scala.collection.mutable
   * (`graph.go:495-618`, `675-805`), we build DataFrame plans: acyclic
   * components become left-semi / null-escape joins that Catalyst+AQE turn
   * into broadcast or shuffled hash joins as sizes dictate; cyclic SCCs run
-  * a semi-naïve fix-point on PK projections with localCheckpoint per
-  * iteration (no recursive CTE in Catalyst; SURVEY §7.4 scale note: iterate
+  * a semi-naïve fix-point on PK projections with an eager checkpoint per
+  * round (no recursive CTE in Catalyst; SURVEY §7.4 scale note: iterate
   * on keys only, join back at the end).
   */
 object SubsetGraph {
@@ -108,35 +109,33 @@ object SubsetPlanner {
     def baseFiltered(t: String): DataFrame =
       conds.getOrElse(t, Nil).foldLeft(dfs(t))((d, c) => d.filter(expr(c)))
 
-    /** Filter `child` rows to those whose FK points into the surviving
-      * parent keys (semi-join), with NULL-escape for nullable FKs and the
-      * polymorphic guard ANDed in (`graph.go:581-615`). Parent key columns
-      * are re-aliased to fresh names so self-referencing FKs (same table on
-      * both sides) never hit Spark's ambiguous-self-join detection.
-      * When the referenced columns ARE the parent's primary key they are
-      * unique by catalog metadata — the distinct() (an extra shuffle+agg
-      * per edge) is skipped; left_semi joins tolerate build-side dups
-      * anyway, so distinct only matters for the left_outer escape path. */
-    def applyEdge(child: DataFrame, e: FkRef, parentSurviving: DataFrame): DataFrame = {
-      val fresh = e.parentCols.map(c => s"__graft_p_$c")
-      val isPk = pks.get(e.parentTable).contains(e.parentCols)
+    /** Rows of `child` whose FK points into the surviving parent keys
+      * (`passing`), or exactly the complement (`!passing`): NULL-escape for
+      * nullable FKs and the polymorphic guard ANDed in
+      * (`graph.go:581-615`). When the referenced columns ARE the parent's
+      * primary key they are unique by catalog metadata — the distinct()
+      * (an extra shuffle+agg per edge) is skipped; left_semi/left_anti
+      * joins tolerate build-side dups anyway, so distinct only matters
+      * for the left_outer escape path. */
+    def edgeRows(child: DataFrame, e: FkRef, parentSurviving: DataFrame,
+                 passing: Boolean = true): DataFrame = {
       val rawKeys = parentSurviving.select(e.parentCols.map(col): _*)
-      val parentKeys = (if (isPk) rawKeys else rawKeys.distinct()).toDF(fresh: _*)
-      val joinCond = e.childCols.zip(fresh)
-        .map { case (c, p) => child(c) === parentKeys(p) }.reduce(_ && _)
+      val parentKeys = aliasedKeys(e,
+        if (pks.get(e.parentTable).contains(e.parentCols)) rawKeys else rawKeys.distinct())
       if (e.nullable || e.polymorphicCond.isDefined) {
-        // keep rows where FK is NULL, or the polymorphic guard doesn't
-        // match, or the parent survives: left_outer + escape filter
+        // a row passes when its FK is NULL, or the polymorphic guard
+        // doesn't match, or the parent survives: left_outer + escape filter
         val marked = parentKeys.withColumn("__hit__", lit(1))
-        val joined = child.join(
-          marked, e.childCols.zip(fresh).map { case (c, p) => child(c) === marked(p) }.reduce(_ && _),
-          "left_outer")
+        val joined = child.join(marked, keyCond(child, e, marked), "left_outer")
         val nullEscape = e.childCols.map(c => child(c).isNull).reduce(_ || _)
         val polyEscape = e.polymorphicCond.map(c => !expr(c)).getOrElse(lit(false))
-        joined.filter(col("__hit__").isNotNull || nullEscape || polyEscape)
+        joined.filter(
+          if (passing) col("__hit__").isNotNull || nullEscape || polyEscape
+          else col("__hit__").isNull && !nullEscape && !polyEscape)
           .select(child.columns.map(child(_)).toIndexedSeq: _*)
       } else {
-        child.join(parentKeys, joinCond, "left_semi")
+        child.join(parentKeys, keyCond(child, e, parentKeys),
+          if (passing) "left_semi" else "left_anti")
       }
     }
 
@@ -147,7 +146,7 @@ object SubsetPlanner {
         val t = comp.head
         val outgoing = relevantEdges.filter(_.childTable == t)
         val filtered = outgoing.foldLeft(baseFiltered(t)) { (d, e) =>
-          applyEdge(d, e, surviving(e.parentTable))
+          edgeRows(d, e, surviving(e.parentTable))
         }
         surviving(t) = filtered
       } else {
@@ -166,30 +165,6 @@ object SubsetPlanner {
             Some((t, e))
           case _ => None
         }
-        /** Rows of `child` that FAIL edge `e` against `parentSurviving` —
-          * the exact complement of [[applyEdge]] (same parent-key
-          * projection, same null/polymorphic escapes, negated). */
-        def edgeVictims(child: DataFrame, e: FkRef, parentSurviving: DataFrame): DataFrame = {
-          val fresh = e.parentCols.map(c => s"__graft_p_$c")
-          val isPk = pks.get(e.parentTable).contains(e.parentCols)
-          val rawKeys = parentSurviving.select(e.parentCols.map(col): _*)
-          val parentKeys = (if (isPk) rawKeys else rawKeys.distinct()).toDF(fresh: _*)
-          val joinCond = e.childCols.zip(fresh)
-            .map { case (c, p) => child(c) === parentKeys(p) }.reduce(_ && _)
-          if (e.nullable || e.polymorphicCond.isDefined) {
-            val marked = parentKeys.withColumn("__hit__", lit(1))
-            val joined = child.join(marked,
-              e.childCols.zip(fresh).map { case (c, p) => child(c) === marked(p) }.reduce(_ && _),
-              "left_outer")
-            val nullEscape = e.childCols.map(c => child(c).isNull).reduce(_ || _)
-            val polyEscape = e.polymorphicCond.map(c => !expr(c)).getOrElse(lit(false))
-            joined.filter(col("__hit__").isNull && !nullEscape && !polyEscape)
-              .select(child.columns.map(child(_)).toIndexedSeq: _*)
-          } else {
-            child.join(parentKeys, joinCond, "left_anti")
-          }
-        }
-
         /** Parent keys of edge `e` that lost their LAST supporting row in
           * the previous round: the deletion frontier children must check.
           * When the referenced cols are the parent's PK, every removed
@@ -210,47 +185,43 @@ object SubsetPlanner {
         /** Split `d` by the dead-key frontier of edge `e`: (kept, victims).
           * NULL FKs never equi-match (the null escape, implicitly); a
           * polymorphic guard rides the join condition so non-matching
-          * rows are untouchable, mirroring [[applyEdge]]'s escape. */
+          * rows are untouchable, mirroring [[edgeRows]]'s escape. */
         def splitByDeadKeys(d: DataFrame, e: FkRef, dead: DataFrame): (DataFrame, DataFrame) = {
-          val fresh = e.parentCols.map(c => s"__graft_p_$c")
-          val keyed = dead.toDF(fresh: _*)
-          val keyCond = e.childCols.zip(fresh)
-            .map { case (c, p) => d(c) === keyed(p) }.reduce(_ && _)
-          val full = e.polymorphicCond.map(c => keyCond && expr(c)).getOrElse(keyCond)
+          val keyed = aliasedKeys(e, dead)
+          val cond = keyCond(d, e, keyed)
+          val full = e.polymorphicCond.map(c => cond && expr(c)).getOrElse(cond)
           (d.join(keyed, full, "left_anti"), d.join(keyed, full, "left_semi"))
         }
 
-        // DELTA-ITERATION (r16): the r13-r15 Jacobi loop refiltered EVERY
-        // table against EVERY parent's FULL key set each round — O(rounds
-        // × table size) shuffle-join work even when a round deletes three
-        // rows (the 25-round soak exponent 0.32-0.34 lived here). Survival
-        // w.r.t. an edge can only flip when a matching parent KEY loses
-        // its last supporting row, so each round now (1) projects the
-        // previous round's REMOVED rows to per-edge dead-key frontiers
-        // (delta-sized, AQE broadcasts them), (2) anti-joins each child
-        // against its frontiers — one scan of the checkpointed table with
+        // DELTA ITERATION: refiltering EVERY table against EVERY parent's
+        // FULL key set each round costs O(rounds × table size) shuffle
+        // joins even when a round deletes three rows. Survival w.r.t. an
+        // edge can only flip when a matching parent KEY loses its last
+        // supporting row, so each round (1) projects the previous round's
+        // REMOVED rows to per-edge dead-key frontiers (delta-sized, AQE
+        // broadcasts them), (2) anti-joins each child against its
+        // frontiers — one scan of the checkpointed table with
         // broadcast-sized exchanges, no full-table shuffle — and (3)
         // captures the semi-join complement as the next frontier. Round 1
         // is the one full Jacobi pass (it seeds the frontier); the fixed
         // point is the same greatest fixed point by monotonicity (sets
         // only shrink; a key's death is detected the round after its last
         // support dies). Tables whose frontiers are empty are untouched —
-        // quiescent tables cost nothing, matching the semi-naive
-        // discipline entityClusters uses.
-        // TOMBSTONE MODE (r17 experiment, VERDICT r16 #4): instead of
-        // localCheckpoint-REWRITING every shrinking table each round
-        // (write volume = table size × shrinking rounds — the remaining
-        // super-linear term at cluster scale), accumulate per-table
-        // dead-PK tombstone sets (checkpointed, delta+cumulative sized)
-        // and evaluate each table as ONE lazy anti-join
-        // base ⟕̸ tombstone — lineage depth stays constant because both
-        // sides are checkpoint leaves, and the only per-round writes are
-        // the (tiny) frontier and the grown tombstone. The fixed point
-        // is unchanged: deletions are monotone, and a view built from
-        // base minus all accumulated deletions equals the rewritten
-        // table by induction. Requires a declared PK on every component
-        // table (the subtraction key); falls back to rewrite mode
-        // otherwise.
+        // quiescent tables cost nothing.
+        // TOMBSTONE MODE: rewriting every shrinking table each round
+        // writes table size × shrinking rounds. Instead accumulate
+        // per-table dead-PK tombstone sets (checkpointed,
+        // delta+cumulative sized) and evaluate each table as ONE lazy
+        // anti-join base ⟕̸ tombstone — lineage depth stays constant
+        // because both sides are checkpoint leaves, and the only
+        // per-round writes are the (tiny) frontier and the grown
+        // tombstone. The fixed point is unchanged: deletions are
+        // monotone, and a view built from base minus all accumulated
+        // deletions equals the rewritten table by induction. Requires a
+        // declared PK on every component table (the subtraction key);
+        // falls back to rewrite mode otherwise.
+        // Every checkpoint below goes through checkpointObserved: a
+        // frontier's size comes from the job that materializes it.
         val tombstoneMode = comp.forall(t => pks.get(t).exists(_.nonEmpty))
         def runFixPoint(): Unit = {
           import graft.plans.Checkpoints.unpersistCheckpoint
@@ -262,8 +233,8 @@ object SubsetPlanner {
           // seed: own conds + external edges (already-final parents)
           var current: Map[String, DataFrame] = comp.map { t =>
             val seeded = external.filter(_.childTable == t)
-              .foldLeft(baseFiltered(t))((d, e) => applyEdge(d, e, surviving(e.parentTable)))
-            t -> seeded.localCheckpoint(true)
+              .foldLeft(baseFiltered(t))((d, e) => edgeRows(d, e, surviving(e.parentTable)))
+            t -> checkpointObserved(seeded)._1
           }.toMap
           val byChild = internal.groupBy(_.childTable)
           // round 1 — full Jacobi refilter; per-edge victims seed the frontier
@@ -273,14 +244,15 @@ object SubsetPlanner {
             val stepped = comp.flatMap { t =>
               byChild.get(t).map { es =>
                 val survivors = es.foldLeft(current(t))((dd, e) =>
-                  applyEdge(dd, e, current(e.parentTable)))
-                val victims = es.map(e => edgeVictims(current(t), e, current(e.parentTable)))
+                  edgeRows(dd, e, current(e.parentTable)))
+                val victims = es.map(e =>
+                  edgeRows(current(t), e, current(e.parentTable), passing = false))
                   .reduce(_ unionByName _)
-                t -> (survivors.localCheckpoint(true), victims.localCheckpoint(true))
+                t -> (checkpointObserved(survivors)._1, checkpointObserved(victims))
               }
             }.toMap
-            removed = stepped.map { case (t, (_, v)) => t -> v }
-            removedCount = removed.map { case (t, v) => t -> v.count() }
+            removed = stepped.map { case (t, (_, (v, _))) => t -> v }
+            removedCount = stepped.map { case (t, (_, (_, n))) => t -> n.getLong(0) }
               .withDefaultValue(0L)
             stepped.foreach { case (t, (d, _)) =>
               unpersistCheckpoint(current(t))
@@ -315,14 +287,15 @@ object SubsetPlanner {
             // checkpoints), then the shrunken tables / grown tombstones,
             // then release the superseded round's blocks (VERDICT r3
             // "What's wrong #2")
-            val newRemoved = stepped.map { case (t, (_, v)) => t -> v.localCheckpoint(true) }
-            val newCounts = newRemoved.map { case (t, v) => t -> v.count() }
+            val observed = stepped.map { case (t, (_, v)) => t -> checkpointObserved(v) }
+            val newRemoved = observed.map { case (t, (v, _)) => t -> v }
+            val newCounts = observed.map { case (t, (_, n)) => t -> n.getLong(0) }
             if (tombstoneMode) {
               // victims came from view(t), so their PKs are disjoint from
               // the existing tombstone — the union never needs a distinct
               val grown = newRemoved.collect { case (t, v) if newCounts(t) > 0L =>
                 val add = v.select(pks(t).map(col): _*)
-                t -> tomb.get(t).fold(add)(_ unionByName add).localCheckpoint(true)
+                t -> checkpointObserved(tomb.get(t).fold(add)(_ unionByName add))._1
               }
               removed.values.foreach(unpersistCheckpoint)
               grown.keys.foreach(t => tomb.get(t).foreach(unpersistCheckpoint))
@@ -332,7 +305,7 @@ object SubsetPlanner {
               tomb = tomb ++ grown
             } else {
               val changed = stepped.collect { case (t, (d, _)) if newCounts(t) > 0L =>
-                t -> d.localCheckpoint(true)
+                t -> checkpointObserved(d)._1
               }
               removed.values.foreach(unpersistCheckpoint)
               changed.keys.foreach(t => unpersistCheckpoint(current(t)))
@@ -361,7 +334,7 @@ object SubsetPlanner {
         selfFk match {
           case Some((t, e)) =>
             val seeded = external.filter(_.childTable == t)
-              .foldLeft(baseFiltered(t))((d, x) => applyEdge(d, x, surviving(x.parentTable)))
+              .foldLeft(baseFiltered(t))((d, x) => edgeRows(d, x, surviving(x.parentTable)))
             surviving(t) = selfFkClosure(dfs(t), seeded, e)
           case None => runFixPoint()
         }
@@ -369,6 +342,19 @@ object SubsetPlanner {
     }
     surviving.toMap
   }
+
+  private def fresh(parentCol: String): String = s"__graft_p_$parentCol"
+
+  /** `keys` (edge `e`'s parent columns) renamed to fresh names, so a
+    * self-referencing FK (same table on both sides) never hits Spark's
+    * ambiguous-self-join detection. */
+  private def aliasedKeys(e: FkRef, keys: DataFrame): DataFrame =
+    keys.toDF(e.parentCols.map(fresh): _*)
+
+  /** Equi-join condition of `child`'s FK columns against [[aliasedKeys]]. */
+  private def keyCond(child: DataFrame, e: FkRef, keyed: DataFrame): Column =
+    e.childCols.zip(e.parentCols)
+      .map { case (c, p) => child(c) === keyed(fresh(p)) }.reduce(_ && _)
 
   /** Path-doubling survival closure for a single self-referencing FK
     * (`fk` → own `pk`). A row survives iff every row on its ancestor chain
@@ -402,44 +388,39 @@ object SubsetPlanner {
     val okMark = seeded.select(col(pk).as("__p"), lit(1).as("__ok"))
     val bad0 = col("__ok").isNull ||
       (if (e.nullable) lit(false) else col("__anc").isNull)
-    var state = base.select(col(pk).as("__id"), col(fk).as("__anc"))
-      .join(okMark, col("__id") === col("__p"), "left_outer")
-      .select(col("__id"), col("__anc"), bad0.as("__bad"))
-      .localCheckpoint(true)
-    // one aggregate job per round over the fresh checkpoint: rows, bad
-    // rows (`__bad` only goes false -> true, so flips = the bad delta)
-    // and live rows (an unresolved ancestor, not yet bad)
-    def census(): (Long, Long, Long) = {
-      val r = state.agg(count(lit(1)), count_if(col("__bad")),
-        count_if(col("__anc").isNotNull && !col("__bad"))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    val (n, initialBad, initialLive) = census()
-    val cap = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n)).toInt + 1
+    // each checkpoint observes its rows, bad rows (`__bad` only goes
+    // false -> true, so flips = the bad delta) and live rows (an
+    // unresolved ancestor, not yet bad)
+    val census = Seq(count_if(col("__bad")), count_if(col("__anc").isNotNull && !col("__bad")))
+    val (seededState, counts) = checkpointObserved(
+      base.select(col(pk).as("__id"), col(fk).as("__anc"))
+        .join(okMark, col("__id") === col("__p"), "left_outer")
+        .select(col("__id"), col("__anc"), bad0.as("__bad")), census: _*)
+    var state = seededState
+    val cap = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, counts.getLong(0))).toInt + 1
     var iter = 0
-    var bad = initialBad
-    var live = initialLive
+    var bad = counts.getLong(1)
+    var live = counts.getLong(2)
     var flips = 1L // no round has run yet
     while (iter < cap && live > 0L && flips > 0L) {
       val anc = state.select(col("__id").as("__aid"), col("__anc").as("__anc2"),
         col("__bad").as("__abad"))
-      val next = state.join(anc, col("__anc") === col("__aid"), "left_outer")
-        .select(col("__id"),
-          when(col("__anc").isNull || col("__aid").isNull, lit(null).cast(ancType))
-            .otherwise(col("__anc2")).as("__anc"),
-          (col("__bad") ||
-            when(col("__anc").isNull, lit(false))
-              // non-NULL fk with no matching pk row: dangling ref, dead end
-              .when(col("__aid").isNull, lit(true))
-              .otherwise(col("__abad"))).as("__bad"))
-        .localCheckpoint(true)
+      val (next, nextCounts) = checkpointObserved(
+        state.join(anc, col("__anc") === col("__aid"), "left_outer")
+          .select(col("__id"),
+            when(col("__anc").isNull || col("__aid").isNull, lit(null).cast(ancType))
+              .otherwise(col("__anc2")).as("__anc"),
+            (col("__bad") ||
+              when(col("__anc").isNull, lit(false))
+                // non-NULL fk with no matching pk row: dangling ref, dead end
+                .when(col("__aid").isNull, lit(true))
+                .otherwise(col("__abad"))).as("__bad")), census: _*)
       Checkpoints.unpersistCheckpoint(state)
       state = next
       iter += 1
-      val (_, badNow, liveNow) = census()
-      flips = badNow - bad
-      bad = badNow
-      live = liveNow
+      flips = nextCounts.getLong(1) - bad
+      bad = nextCounts.getLong(1)
+      live = nextCounts.getLong(2)
     }
     graft.plans.FixpointStats.record("selfFkClosure", iter)
     val good = state.filter(!col("__bad")).select(col("__id").as("__gid"))

@@ -1,11 +1,16 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Minimal bridge to Spark 4's private[sql] Column<->Expression converters
-  * (`org.apache.spark.sql.classic.ExpressionUtils`), required to register
-  * custom Catalyst expressions (e.g. graft.expressions.U60Hash) as
-  * Columns without going through a FunctionRegistry extension. */
+/** Bridge to Spark 4 internals: the private[sql] Column<->Expression
+  * converters (to register custom Catalyst expressions such as
+  * graft.expressions.U60Hash as Columns), the `LogicalRDD` leaves behind
+  * the fix-point checkpoint primitive, and private[spark] utilities. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -15,39 +20,40 @@ object GraftBridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Eager local checkpoint with EXACT, freshly-counted statistics —
-    * the fix-point-safe alternative to `Dataset.localCheckpoint`.
+  /** A fresh directory under `java.io.tmpdir` that Spark's shutdown hook
+    * deletes, with its contents, at JVM exit (`Utils` is private[spark]). */
+  def tempDirUntilExit(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
+
+  private val observations = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Eager local checkpoint of `df` that also returns aggregates over the
+    * rows it materialized, from the same job — the one checkpoint
+    * primitive of every fix-point round. `count(lit(1))` and `aggs` ride
+    * the plan as a `Dataset.observe` under a name fresh to this call (an
+    * observation name is single-use per plan), so a round learns its
+    * size and convergence figures without a second action over the
+    * checkpoint. Returns the frame and the row `(count, aggs…)`, equal to
+    * `df.agg(count(lit(1)), aggs…).head()`.
     *
-    * Spark 4's `Dataset.localCheckpoint` funnels through
-    * `LogicalRDD.fromDataset`, which PROPAGATES the origin plan's
-    * estimated Statistics onto the checkpoint leaf. In an iterative
-    * loop whose round plan joins the previous checkpoint with itself
-    * (directly or transitively), the propagated `sizeInBytes` COMPOUNDS
-    * multiplicatively — visitJoin multiplies child sizes — so the BigInt
-    * doubles its digit count every round; by round ~24 the driver spends
-    * MINUTES inside BigInteger.multiply computing a number with 2^24
-    * digits (found live: FixpointSoak's entity_clusters run pinned one
-    * core in Toom-Cook multiplication, r15). Checkpointing the RDD
-    * directly skips the origin-stats computation entirely, and the row
-    * count we take for eagerness doubles as an exact Statistics, so
-    * downstream joins still broadcast a small frontier.
-    *
-    * Returns (checkpointed frame, row count). Release the blocks with
-    * `graft.plans.Checkpoints.unpersistCheckpoint` exactly like a
-    * `localCheckpoint` result. */
-  def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy())
+    * Not `Dataset.localCheckpoint`: its leaf copies the origin plan's
+    * ESTIMATED Statistics, and in a loop whose round plan joins the
+    * previous checkpoint with itself the copied `sizeInBytes` compounds
+    * (visitJoin multiplies child sizes) until query planning spends
+    * minutes in BigInteger.multiply. This leaf carries exact stats from the
+    * observed count instead, so a shrinking frontier still broadcasts.
+    * Release the blocks with `graft.plans.Checkpoints.unpersistCheckpoint`
+    * exactly like a `localCheckpoint` result. */
+  def checkpointObserved(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+    val name = s"__graft_checkpoint_${observations.incrementAndGet()}"
+    val qe = df.observe(name, functions.count(functions.lit(1)), aggs: _*).queryExecution
+    val rdd = qe.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    val n = rdd.count()
-    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
-      .toAttributes(df.schema)
-    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-      sizeInBytes = BigInt(n).max(1) * math.max(8, df.schema.defaultSize),
-      rowCount = Some(BigInt(n)))
-    val plan = org.apache.spark.sql.execution.LogicalRDD(attrs, rdd)(
-      session, Some(stats), None)
-    (classic.Dataset.ofRows(session, plan), n)
+    rdd.count()
+    val row = qe.observedMetrics(name)
+    val n = BigInt(row.getLong(0))
+    (rddLeaf(df, rdd, Some(Statistics(
+      sizeInBytes = n.max(1) * math.max(8, df.schema.defaultSize), rowCount = Some(n)))), row)
   }
 
   /** `df` with its plan executed ONCE: AQE runs every upstream query
@@ -56,13 +62,16 @@ object GraftBridge {
     * every action each plan and run `df` anew). Returns the frame and
     * its partition count. */
   def executedOnce(df: DataFrame): (DataFrame, Int) = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val rdd = df.queryExecution.toRdd
-    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
-      .toAttributes(df.schema)
-    val plan = org.apache.spark.sql.execution.LogicalRDD(attrs, rdd)(
-      session, None, None)
-    (classic.Dataset.ofRows(session, plan), rdd.getNumPartitions)
+    (rddLeaf(df, rdd, None), rdd.getNumPartitions)
+  }
+
+  /** A frame of `df`'s schema scanning `rdd`, with `stats` on its leaf. */
+  private def rddLeaf(df: DataFrame, rdd: RDD[InternalRow],
+                      stats: Option[Statistics]): DataFrame = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session,
+      LogicalRDD(DataTypeUtils.toAttributes(df.schema), rdd)(session, stats, None))
   }
 
   /** Register graft's native expressions as SQL functions on a session

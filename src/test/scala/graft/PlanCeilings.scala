@@ -64,8 +64,10 @@ object PlanCeilings {
     // the pair join itself is exchange-free at this sf (block keys
     // broadcast-join, AQE decides; conditional pin dormant — see above)
     "q_fuzzy_link_best"     -> (2, 1),
-    "q_dedup_cluster"       -> (1, 2),
-    "q_subset_selffk"       -> (1, 2),
+    // the final join reads a fix-point checkpoint whose leaf carries
+    // exact row counts, so it broadcasts instead of shuffling both sides
+    "q_dedup_cluster"       -> (1, 0),
+    "q_subset_selffk"       -> (1, 0),
     "q_ivf_topk"            -> (1, 0),
     "q_asof_join"           -> (2, 1),
     "q_range_join"          -> (2, 0),

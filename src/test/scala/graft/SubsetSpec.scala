@@ -136,6 +136,25 @@ class SubsetSpec extends SparkSpec {
       s"leaked checkpoint blocks: $before -> $after RDDs in storage")
   }
 
+  test("self-FK closure: each round's census rides its checkpoint job") {
+    // the product path's self-FK shape (see ScaleSoakSpec's zero-flip
+    // case): 4 doubling rounds after the seed checkpoint, 2 jobs per
+    // checkpoint on this input. A separate census action after each
+    // checkpoint took the same plan to 26 jobs
+    val chain = spark.range(0, 300).select(
+      col("id").as("c_custkey"), (col("id") / 2).cast("long").as("c_parent"))
+    val (surviving, jobs) = JobCount(spark)(SubsetPlanner.plan(Map("customer" -> chain),
+      Map("customer" -> Seq("c_custkey")),
+      Seq(FkRef("customer", Seq("c_parent"), "customer", Seq("c_custkey"))),
+      Map("customer" -> Seq(
+        "c_custkey <> 16 AND (c_custkey < 16 OR pmod(xxhash64(c_custkey, 7L), 10) <> 0)"))))
+    val rounds = graft.plans.FixpointStats.last("selfFkClosure").get
+    val kept = surviving("customer").count()
+    graft.plans.Checkpoints.releaseAll()
+    assert(rounds == 4 && kept > 16 && kept < 300 - 16)
+    assert(jobs <= 2 * (rounds + 1), s"plan ran $jobs jobs over $rounds rounds + seed")
+  }
+
   test("restore order groups cycles and puts parents before children") {
     val order = SubsetGraph.restoreOrder(Seq("child", "parent", "grand"),
       Seq(edge("child", "parent", "x", "x"), edge("parent", "grand", "x", "x")))
