@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
   * driver's own fixtures, warm-timed, median of 3 consecutive samples per
   * query, sum of medians as total. The driver fixtures are single-row-group
   * parquet files, so scan stages run on ONE task locally (round-2 caveat);
-  * as a layout DIAGNOSTIC the bench also stages each table as 32-file
-  * parquet under /tmp (untimed) and times the headline set against that
-  * parallel-scan layout, reported as total_staged_32file / queries_staged_
-  * 32file. Set SPARK_GRAFT_STAGE=0 to skip staging.
+  * as a layout DIAGNOSTIC the bench also stages each table as one parquet
+  * file per core (untimed) in a per-process temp dir removed at JVM exit,
+  * and times the headline set against that parallel-scan layout, reported
+  * as total_staged_32file / queries_staged_32file. Set
+  * SPARK_GRAFT_STAGE=0 to skip staging.
   */
 object Bench {
 
@@ -75,10 +76,12 @@ object Bench {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Untimed staging: the same rows of every table under `sfDir`,
-    * rewritten as a `cpus`-file layout under /tmp so scans run parallel
-    * tasks. Returns the staged directory. */
+    * rewritten as a `cpus`-file layout so scans run parallel tasks, in a
+    * temp dir of this process (two processes on one sf dir never share
+    * it) removed at JVM exit. Returns the staged directory. */
   def stageTables(spark: SparkSession, sfDir: String, cpus: Int): String = {
-    val stageDir = s"/tmp/graft_bench_staged_${new java.io.File(sfDir).getName}"
+    val stageDir = org.apache.spark.sql.GraftBridge.tempDirUntilExit(
+      s"graft_bench_staged_${new java.io.File(sfDir).getName}").getPath
     tables.foreach { t =>
       val src = s"$sfDir/$t.parquet"
       if (new java.io.File(src).exists())
@@ -627,7 +630,7 @@ object Bench {
     def jsNames(ns: Iterable[String]) =
       ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Full diagnostics (min/median/max, staged layout pass, loadavg at
-    // every phase boundary) go to a file AND a non-final stdout line; the
+    // every phase boundary) go to a non-final stdout line; the
     // FINAL line is the compact primary metric only. The driver keeps a
     // bounded tail of stdout and parses the last line as JSON — the full
     // record outgrew that capture in round 7 (BENCH_r07 parsed: null).
@@ -672,11 +675,6 @@ object Bench {
       s""","loadavg_warmup_before":$loadWarm""" +
       s""","loadavg_before":$loadBefore,"loadavg_after":$loadMid""" +
       s""","sf":"$sfDir"$onlyTag$extras}"""
-    // per-SF path: back-to-back runs against different fixtures must not
-    // clobber each other's diagnostics
-    val diagPath = s"/tmp/graft_bench_diag_${new java.io.File(sfDir).getName}.json"
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(diagPath), diag)
-    catch { case _: Throwable => () }
     println(diag)
     // compact: ms-precision medians keep 31 queries well inside the tail
     def ms(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
@@ -697,7 +695,7 @@ object Bench {
       s"""${normFields(total, probeSt, probeMt, gatedClean, cpus)},""" +
       s""""suspect":${jsNames(suspects)},"failed":${jsNames(failed)},""" +
       s"""$moverJson,""" +
-      s""""queries":$qCompact,"sf":"$sfDir"$onlyTag,"diag":"$diagPath"}""")
+      s""""queries":$qCompact,"sf":"$sfDir"$onlyTag}""")
     spark.stop()
   }
 }

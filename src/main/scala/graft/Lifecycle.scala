@@ -598,154 +598,100 @@ object Lifecycle {
       case None => s"$name: unknown transformer"
     }
 
+  /** The shared `pg-restore` flags, parsed ONCE into the value every
+    * entry point reads — the `-l` listing, the `-f` script and the
+    * direct restore all apply the exact same selection. */
+  private def pgRestoreOptions(rest: List[String]): graft.sources.PgRestore.Options = {
+    def has(flags: String*): Boolean = flags.exists(rest.contains)
+    def values(flags: String*): Seq[String] = rest.sliding(2).collect {
+      case Seq(f, v) if flags.contains(f) => v }.toSeq
+    def valueOf(prefix: String): Option[String] =
+      rest.collectFirst { case a if a.startsWith(prefix) => a.stripPrefix(prefix) }
+    // --list-format text|json|yaml (reference restore.go:67-69):
+    // text = the pg_restore -l shape; json/yaml = a metadata document
+    // whose entries[].dumpId form the list (a manifest.json works)
+    val listFormat = valueOf("--list-format=").getOrElse("text")
+    graft.sources.PgRestore.Options(
+      dataOnly = has("--data-only", "-a"),
+      schemaOnly = has("--schema-only", "-s"),
+      section = valueOf("--section="),
+      clean = has("--clean", "-c"),
+      ifExists = has("--if-exists"),
+      create = has("--create", "-C"),
+      singleTransaction = has("--single-transaction", "-1"),
+      noOwner = has("--no-owner", "-O"),
+      // native pg_restore's short flag is -x (alias --no-acl); the
+      // historical -X is kept for scripts that already use it
+      noPrivileges = has("--no-privileges", "--no-acl", "-x", "-X"),
+      // --use-list <file>: the native -L — restore only (and in the
+      // order of) the listed dumpIds; --with-deps adds each listed
+      // entry's transitive dependency closure
+      useList = values("--use-list").headOption.map { f =>
+        val text = Files.readString(Paths.get(f))
+        if (listFormat == "text") graft.sources.PgRestore.parseRestoreList(text)
+        else graft.sources.PgRestore.parseStructuredRestoreList(text, listFormat)
+      },
+      withDeps = has("--with-deps"),
+      tables = values("--table", "-t"),
+      indexes = values("--index", "-i"),
+      functions = values("--function", "-P"),
+      triggers = values("--trigger", "-T"),
+      schemas = values("--schema", "-n"),
+      excludeSchemas = values("--exclude-schema", "-N"),
+      strictNames = has("--strict-names"),
+      noBlobs = has("--no-blobs", "-B"),
+      noComments = has("--no-comments"),
+      noPublications = has("--no-publications"),
+      noSubscriptions = has("--no-subscriptions"),
+      noSecurityLabels = has("--no-security-labels"),
+      noTablespaces = has("--no-tablespaces"),
+      noTableAccessMethod = has("--no-table-access-method"))
+  }
+
   /** The `pg-restore` CLI verb, extracted so specs can drive the full
     * flag surface without owning the Spark session. `-f` renders a
-    * script and returns; otherwise the archive replays directly. Every
-    * selection/rendering flag is parsed ONCE and handed to BOTH paths
-    * — the script the -f path writes reflects the exact selection the
-    * direct restore would apply (native parity: pg_restore -f runs the
-    * same restore, with SQL going to a file instead of a server). */
+    * script and returns; otherwise the archive replays directly. */
   private[graft] def pgRestoreCli(archDir: String, conninfo: String,
                                   rest: List[String]): Unit = {
-        val jobs = rest.sliding(2).collectFirst {
-          case Seq("--jobs", n) => n.toInt }.getOrElse(4)
-        // --use-list <file>: the native -L — restore only (and in the
-        // order of) the listed dumpIds; --with-deps adds each listed
-        // entry's transitive dependency closure
-        // --list-format text|json|yaml (reference restore.go:67-69):
-        // text = the pg_restore -l shape; json/yaml = a metadata document
-        // whose entries[].dumpId form the list (a manifest.json works)
-        val listFormat = rest.collectFirst {
-          case a if a.startsWith("--list-format=") =>
-            a.stripPrefix("--list-format=")
-        }.getOrElse("text")
-        val useList = rest.sliding(2).collectFirst {
-          case Seq("--use-list", f) =>
-            val text = Files.readString(Paths.get(f))
-            if (listFormat == "text")
-              graft.sources.PgRestore.parseRestoreList(text)
-            else
-              graft.sources.PgRestore.parseStructuredRestoreList(text, listFormat)
-        }
-        // --scripts <json>: the reference's restore.scripts block —
-        // per-section before/after hooks (query / query_file / command)
-        val scripts = rest.sliding(2).collectFirst {
-          case Seq("--scripts", f) =>
-            graft.sources.PgRestore.scriptsFromJson(
-              Files.readString(Paths.get(f)))
-        }.getOrElse(Map.empty[String, Seq[graft.sources.PgRestore.Script]])
-        // every selection/rendering flag is parsed ONCE here and handed
-        // to BOTH execution paths — the -f script path renders with the
-        // exact same selection the direct restore would apply
-        val selTables = rest.sliding(2).collect {
-          case Seq("--table" | "-t", v) => v }.toSeq
-        val selIndexes = rest.sliding(2).collect {
-          case Seq("--index" | "-i", v) => v }.toSeq
-        val selFunctions = rest.sliding(2).collect {
-          case Seq("--function" | "-P", v) => v }.toSeq
-        val selTriggers = rest.sliding(2).collect {
-          case Seq("--trigger" | "-T", v) => v }.toSeq
-        val selSchemas = rest.sliding(2).collect {
-          case Seq("--schema" | "-n", v) => v }.toSeq
-        val selExcludeSchemas = rest.sliding(2).collect {
-          case Seq("--exclude-schema" | "-N", v) => v }.toSeq
-        val optDataOnly = rest.contains("--data-only") || rest.contains("-a")
-        val optSchemaOnly = rest.contains("--schema-only") || rest.contains("-s")
-        val optSection = rest.collectFirst {
-          case a if a.startsWith("--section=") => a.stripPrefix("--section=") }
-        val optClean = rest.contains("--clean") || rest.contains("-c")
-        val optIfExists = rest.contains("--if-exists")
-        val optCreate = rest.contains("--create") || rest.contains("-C")
-        val optNoOwner = rest.contains("--no-owner") || rest.contains("-O")
-        // native pg_restore's short flag is -x (alias --no-acl); the
-        // historical -X is kept for scripts that already use it
-        val optNoPrivileges = rest.contains("--no-privileges") ||
-          rest.contains("--no-acl") || rest.contains("-x") || rest.contains("-X")
-        val optSingleTx = rest.contains("--single-transaction") || rest.contains("-1")
-        val optWithDeps = rest.contains("--with-deps")
-        val optStrictNames = rest.contains("--strict-names")
-        val optNoBlobs = rest.contains("--no-blobs") || rest.contains("-B")
-        val optNoComments = rest.contains("--no-comments")
-        val optNoPublications = rest.contains("--no-publications")
-        val optNoSubscriptions = rest.contains("--no-subscriptions")
-        val optNoSecurityLabels = rest.contains("--no-security-labels")
-        val optNoTablespaces = rest.contains("--no-tablespaces")
-        val optNoTableAm = rest.contains("--no-table-access-method")
-        // native -f: render the archive as a plain SQL script instead of
-        // executing it ('-' = stdout); selection flags apply the same
-        rest.sliding(2).collectFirst { case Seq("--file" | "-f", v) => v }
-          .foreach { target =>
-            val os = if (target == "-") System.out
-              else java.nio.file.Files.newOutputStream(Paths.get(target))
-            val n = try graft.sources.PgRestore.toScript(archDir, os,
-              dataOnly = optDataOnly,
-              schemaOnly = optSchemaOnly,
-              section = optSection,
-              clean = optClean,
-              ifExists = optIfExists,
-              create = optCreate,
-              noOwner = optNoOwner,
-              noPrivileges = optNoPrivileges,
-              singleTransaction = optSingleTx,
-              useList = useList, withDeps = optWithDeps,
-              tables = selTables, indexes = selIndexes,
-              functions = selFunctions, triggers = selTriggers,
-              schemas = selSchemas, excludeSchemas = selExcludeSchemas,
-              strictNames = optStrictNames,
-              noBlobs = optNoBlobs, noComments = optNoComments,
-              noPublications = optNoPublications,
-              noSubscriptions = optNoSubscriptions,
-              noSecurityLabels = optNoSecurityLabels,
-              noTablespaces = optNoTablespaces,
-              noTableAccessMethod = optNoTableAm)
-            finally if (target != "-") os.close()
-            System.err.println(s"[pg-restore] wrote $n entries to $target")
-            return
-          }
-        graft.sources.PgRestore.restore(archDir, Seq("-d", conninfo),
-          dataOnly = optDataOnly,
-          disableTriggers = rest.contains("--disable-triggers"),
-          jobs = jobs, useList = useList,
-          withDeps = optWithDeps,
-          scripts = scripts,
-          restoreInOrder = rest.contains("--restore-in-order"),
-          // CLI default matches the native tool: CONTINUE past failed
-          // statements/COPYs (warn + closing summary); -e aborts on the
-          // first error (cmd/restore/restore.go:154)
-          exitOnError = rest.contains("--exit-on-error") || rest.contains("-e"),
-          clean = optClean,
-          create = optCreate,
-          tables = selTables, indexes = selIndexes,
-          strictNames = optStrictNames,
-          ifExists = optIfExists,
-          section = optSection,
-          noDataForFailedTables = rest.contains("--no-data-for-failed-tables"),
-          noOwner = optNoOwner,
-          noPrivileges = optNoPrivileges,
-          schemaOnly = optSchemaOnly,
-          noBlobs = optNoBlobs,
-          noComments = optNoComments,
-          schemas = selSchemas,
-          excludeSchemas = selExcludeSchemas,
-          functions = selFunctions,
-          triggers = selTriggers,
-          noPublications = optNoPublications,
-          noSubscriptions = optNoSubscriptions,
-          noSecurityLabels = optNoSecurityLabels,
-          enableRowSecurity = rest.contains("--enable-row-security"),
-          singleTransaction = optSingleTx,
-          noTablespaces = optNoTablespaces,
-          noTableAccessMethod = optNoTableAm,
-          verbose = rest.contains("--verbose") || rest.contains("-v"),
-          // opt-in hang guard: statements hung on a lock fail loudly
-          // after N seconds (server-side lock_timeout for DDL + COPY,
-          // byte-idle kill while a COPY feed is mid-stream) instead of
-          // hanging the restore; silent-but-working statements (long
-          // CREATE INDEX, commit tails) are never touched
-          watchdogSec = rest.collectFirst {
-            case a if a.startsWith("--watchdog=") =>
-              a.stripPrefix("--watchdog=").toInt }.getOrElse(0))
-          .foreach(l => println(s"[pg-restore] $l"))
+    val opts = pgRestoreOptions(rest)
+    // native -f: render the archive as a plain SQL script instead of
+    // executing it ('-' = stdout)
+    rest.sliding(2).collectFirst { case Seq("--file" | "-f", v) => v }
+      .foreach { target =>
+        val os = if (target == "-") System.out
+          else java.nio.file.Files.newOutputStream(Paths.get(target))
+        val n = try graft.sources.PgRestore.toScript(archDir, os, opts)
+          finally if (target != "-") os.close()
+        System.err.println(s"[pg-restore] wrote $n entries to $target")
+        return
+      }
+    graft.sources.PgRestore.restore(archDir, Seq("-d", conninfo), opts,
+      jobs = rest.sliding(2).collectFirst {
+        case Seq("--jobs", n) => n.toInt }.getOrElse(4),
+      // --scripts <json>: the reference's restore.scripts block —
+      // per-section before/after hooks (query / query_file / command)
+      scripts = rest.sliding(2).collectFirst {
+        case Seq("--scripts", f) =>
+          graft.sources.PgRestore.scriptsFromJson(Files.readString(Paths.get(f)))
+      }.getOrElse(Map.empty),
+      restoreInOrder = rest.contains("--restore-in-order"),
+      // CLI default matches the native tool: CONTINUE past failed
+      // statements/COPYs (warn + closing summary); -e aborts on the
+      // first error (cmd/restore/restore.go:154)
+      exitOnError = rest.contains("--exit-on-error") || rest.contains("-e"),
+      disableTriggers = rest.contains("--disable-triggers"),
+      enableRowSecurity = rest.contains("--enable-row-security"),
+      noDataForFailedTables = rest.contains("--no-data-for-failed-tables"),
+      verbose = rest.contains("--verbose") || rest.contains("-v"),
+      // opt-in hang guard: statements hung on a lock fail loudly
+      // after N seconds (server-side lock_timeout for DDL + COPY,
+      // byte-idle kill while a COPY feed is mid-stream) instead of
+      // hanging the restore; silent-but-working statements (long
+      // CREATE INDEX, commit tails) are never touched
+      watchdogSec = rest.collectFirst {
+        case a if a.startsWith("--watchdog=") =>
+          a.stripPrefix("--watchdog=").toInt }.getOrElse(0))
+      .foreach(l => println(s"[pg-restore] $l"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -793,32 +739,7 @@ object Lifecycle {
         // feed back via --use-list for selective restore). Selection
         // flags restrict the listing exactly as native -l does.
         val sel = graft.sources.PgRestore.listSelectedIds(archDir,
-          dataOnly = rest.contains("--data-only") || rest.contains("-a"),
-          schemaOnly = rest.contains("--schema-only") || rest.contains("-s"),
-          section = rest.collectFirst {
-            case a if a.startsWith("--section=") => a.stripPrefix("--section=") },
-          create = rest.contains("--create") || rest.contains("-C"),
-          tables = rest.sliding(2).collect {
-            case Seq("--table" | "-t", v) => v }.toSeq,
-          indexes = rest.sliding(2).collect {
-            case Seq("--index" | "-i", v) => v }.toSeq,
-          functions = rest.sliding(2).collect {
-            case Seq("--function" | "-P", v) => v }.toSeq,
-          triggers = rest.sliding(2).collect {
-            case Seq("--trigger" | "-T", v) => v }.toSeq,
-          schemas = rest.sliding(2).collect {
-            case Seq("--schema" | "-n", v) => v }.toSeq,
-          excludeSchemas = rest.sliding(2).collect {
-            case Seq("--exclude-schema" | "-N", v) => v }.toSeq,
-          strictNames = rest.contains("--strict-names"),
-          noBlobs = rest.contains("--no-blobs") || rest.contains("-B"),
-          noComments = rest.contains("--no-comments"),
-          noPrivileges = rest.contains("--no-privileges") ||
-            rest.contains("--no-acl") || rest.contains("-x") ||
-            rest.contains("-X"),
-          noPublications = rest.contains("--no-publications"),
-          noSubscriptions = rest.contains("--no-subscriptions"),
-          noSecurityLabels = rest.contains("--no-security-labels")).toSet
+          pgRestoreOptions(rest)).toSet
         graft.sources.PgRestore.listLines(archDir).foreach { l =>
           val id = "^(\\d+);".r.findFirstMatchIn(l.trim).map(_.group(1).toInt)
           if (id.forall(sel)) println(l)

@@ -326,94 +326,268 @@ object PgRestore {
       .flatMap(l => pat.findFirstMatchIn(l).map(_.group(1).toInt)).toSeq
   }
 
-  /** Replay the archive at `dir` into the database `psqlArgs` points at.
-    * Returns one human line per restored entry. `dataOnly` skips schema
-    * (pre/post-data) statements — the native `-a`; `disableTriggers`
-    * wraps each COPY in `session_replication_role = replica` (the
-    * reference's integrity control; superuser required).
+  /** The selection and rendering flags of native pg_restore, shared by
+    * every entry point: the direct [[restore]], the `-f` [[toScript]] and
+    * the `-l` [[listSelectedIds]] read one value through one [[plan]], so
+    * the script and the listing show exactly what the direct restore
+    * runs (native pg_restore -f is the same restore with SQL going to a
+    * file instead of a server).
     *
-    * `useList` is the `pg_restore -L` filter ([[parseRestoreList]]
-    * output): only the listed entries replay (the reference reorders
-    * the TOC to the list, `cmd/restore.go:329-343`). Duplicate dump ids
-    * in the list are deduped (first occurrence wins), and a listed id
-    * missing from the archive fails loudly (same message shape). List
-    * order is honored WITHIN each restore section — execution still
-    * phases pre-data → data waves → SEQUENCE SET/blobs → post-data, so
-    * a list that interleaves sections replays section-phased, not
-    * literally as listed (restoring an index before its table's data
-    * is never correct; the phasing preserves that invariant the same
-    * way the native tool's parallel mode does). Within the data
-    * section, listed tables keep list order subject to dependency
-    * waves. `withDeps` additionally pulls each listed entry's
-    * transitive dependency closure back in, in TOC order — the
-    * [[graft.pipeline.Manifest.filtered]] discipline (iterative visited
-    * set, cycle-safe) for users who list only the tables they want and
-    * expect the DDL those tables need to come along; the native tool
-    * makes the user list everything, so the default matches it.
+    *  - `dataOnly` (`-a`) / `schemaOnly` (`-s`) / `section`
+    *    (`--section=pre-data|data|post-data`): which sections run; `-s`
+    *    is the pre-data + post-data pair, and `-s` with `-a` is refused.
+    *  - `clean` (`-c`): replay each selected entry's dropStmt in reverse
+    *    TOC order before recreating; `ifExists` (`--if-exists`) rewrites
+    *    those drops to tolerate absence.
+    *  - `create` (`-C`): execute the archive's DATABASE entry against the
+    *    maintenance database derived from `psqlArgs` (dbname swapped to
+    *    `postgres`), then restore into the target as given.
+    *  - `singleTransaction` (`-1`): the whole restore in ONE session and
+    *    ONE transaction (BEGIN/COMMIT around the script); refused with
+    *    `create` — CREATE DATABASE is not transactional.
+    *  - `noOwner` (`-O`) / `noPrivileges` (`-x`): no synthesized or
+    *    stored `ALTER ... OWNER TO`; no ACL entries.
+    *  - `useList` (`-L`, [[parseRestoreList]] output): only the listed
+    *    entries replay, list order kept within each phase; duplicate ids
+    *    are deduped (first occurrence wins) and an id missing from the
+    *    archive fails loudly. `withDeps` additionally pulls each listed
+    *    entry's transitive dependency closure back in, in TOC order —
+    *    the [[graft.pipeline.Manifest.filtered]] discipline for users who
+    *    list only the tables they want; the native tool makes the user
+    *    list everything, so the default matches it.
+    *  - `tables`/`indexes`/`functions`/`triggers` (`-t`/`-I`/`-P`/`-T`),
+    *    `schemas`/`excludeSchemas` (`-n`/`-N`): named selection;
+    *    `strictNames` makes each name that matches nothing an error
+    *    instead of an empty selection.
+    *  - `noBlobs`/`noComments`/`noPublications`/`noSubscriptions`/
+    *    `noSecurityLabels`: drop those entries.
+    *  - `noTablespaces`/`noTableAccessMethod`: no synthesized
+    *    `SET default_tablespace` / `SET default_table_access_method`. */
+  case class Options(dataOnly: Boolean = false,
+                     schemaOnly: Boolean = false,
+                     section: Option[String] = None,
+                     clean: Boolean = false,
+                     ifExists: Boolean = false,
+                     create: Boolean = false,
+                     singleTransaction: Boolean = false,
+                     noOwner: Boolean = false,
+                     noPrivileges: Boolean = false,
+                     useList: Option[Seq[Int]] = None,
+                     withDeps: Boolean = false,
+                     tables: Seq[String] = Nil,
+                     indexes: Seq[String] = Nil,
+                     functions: Seq[String] = Nil,
+                     triggers: Seq[String] = Nil,
+                     schemas: Seq[String] = Nil,
+                     excludeSchemas: Seq[String] = Nil,
+                     strictNames: Boolean = false,
+                     noBlobs: Boolean = false,
+                     noComments: Boolean = false,
+                     noPublications: Boolean = false,
+                     noSubscriptions: Boolean = false,
+                     noSecurityLabels: Boolean = false,
+                     noTablespaces: Boolean = false,
+                     noTableAccessMethod: Boolean = false)
+
+  /** One entry's statements as native pg_restore issues them: the
+    * stored definition (`-O` strips any `ALTER ... OWNER TO` line it
+    * carries) and the owner statement synthesized from the TOC's OWNER
+    * field (absent under `-O`, or when the definition is empty). */
+  private case class Step(entry: PgToc.Entry, body: Option[String],
+                          owner: Option[String])
+
+  /** What a restore under one [[Options]] value does, phase by phase, in
+    * execution order: the DATABASE entry for `-C`, the `-c` drops, then
+    * pre-data steps, TABLE DATA loads, the other data-section steps
+    * (SEQUENCE SET, BLOBS), and post-data steps. `toc` is the whole
+    * archive, in file order. */
+  private case class Plan(toc: PgToc.Toc,
+                          database: Option[PgToc.Entry],
+                          drops: Seq[(PgToc.Entry, String)],
+                          pre: Seq[Step], loads: Seq[PgToc.Entry],
+                          data: Seq[Step], post: Seq[Step],
+                          runPre: Boolean, runData: Boolean, runPost: Boolean) {
+    def blobs: Boolean = data.exists(_.entry.desc.contains("BLOBS"))
+
+    /** `-C`: the DATABASE entry and its CREATE DATABASE statement. */
+    def createDatabase: (PgToc.Entry, String) = {
+      val e = database.getOrElse(throw new IllegalArgumentException(
+        "pg-restore: --create needs a DATABASE entry in the archive"))
+      (e, e.defn.filter(_.trim.nonEmpty).getOrElse(
+        throw new IllegalArgumentException(
+          "pg-restore: DATABASE entry carries no CREATE DATABASE statement")))
+    }
+  }
+
+  /** Ownable descs: native synthesizes `ALTER <desc> <name> OWNER TO`. */
+  private val Ownable = Set("TABLE", "SEQUENCE", "VIEW", "MATERIALIZED VIEW",
+    "FOREIGN TABLE", "SCHEMA")
+
+  /** Read the TOC once, check `o`, select entries and give each its
+    * phase. Every entry runs in the phase of its section, where a
+    * SECTION_NONE entry (COMMENT, ACL, SECURITY LABEL) takes the section
+    * of the entry before it in file order — pg_backup_archiver's
+    * curSection rule, so a COMMENT ON INDEX runs in post-data after its
+    * index. Entries keep the selection's order (list order under `-L`)
+    * within a phase. DATABASE and DATABASE PROPERTIES follow `-C` alone,
+    * before any section gate (native `_tocEntryRequired`). */
+  private def plan(dir: String, o: Options): Plan = {
+    o.section.foreach(s => require(ScriptSections.contains(s),
+      s"pg-restore: --section must be pre-data|data|post-data, got $s"))
+    require(!(o.schemaOnly && o.dataOnly),
+      "pg-restore: --schema-only and --data-only are mutually exclusive")
+    require(!(o.create && o.singleTransaction),
+      "pg-restore: --create cannot run inside --single-transaction " +
+        "(CREATE DATABASE is not transactional)")
+    val runPre = o.section.forall(_ == "pre-data") && !o.dataOnly
+    val runData = o.section.forall(_ == "data") && !o.schemaOnly
+    val runPost = o.section.forall(_ == "post-data") && !o.dataOnly
+    val toc = PgToc.readFile(s"$dir/toc.dat")
+    val selected = selectEntries(toc, o).entries
+    val sectionOf: Map[Int, Int] = {
+      var cur = PgToc.SectionPreData
+      toc.entries.map { e =>
+        val s =
+          if (toc.header.version >= PgToc.V1_11) e.section
+          else legacySection(e.desc.getOrElse(""))
+        if (s != PgToc.SectionNone) cur = s
+        e.dumpId -> cur
+      }.toMap
+    }
+    def phase(e: PgToc.Entry): Option[Int] = {
+      val desc = e.desc.getOrElse("")
+      if (replaySkip(desc, o.create)) None
+      else if (desc == "DATABASE PROPERTIES") Some(PgToc.SectionPreData)
+      else Some(sectionOf(e.dumpId)).filter {
+        case PgToc.SectionData => runData
+        case PgToc.SectionPostData => runPost
+        case _ => runPre
+      }
+    }
+    val qi = PgSource.quoteIdent _
+    def step(e: PgToc.Entry): Step = {
+      // archives that carry explicit ALTER OWNER lines in defn (our
+      // merged shapes never do; belt for foreign producers) follow -O
+      val body = e.defn.filter(_.trim.nonEmpty).map(raw =>
+        if (!o.noOwner) raw
+        else raw.linesIterator
+          .filterNot(_.matches("""ALTER .* OWNER TO .*;\s*""")).mkString("\n"))
+        .filter(_.trim.nonEmpty)
+      // ownership lives in the TOC's OWNER FIELD (verified against real
+      // pg_dump 15 toc.dat): native pg_restore SYNTHESIZES the statement
+      // from it at restore time, and -O suppresses exactly that synthesis
+      // (the restore then runs as the connecting user)
+      val owner = if (o.noOwner || body.isEmpty) None else for {
+        d <- e.desc.filter(Ownable)
+        who <- e.owner.filter(_.nonEmpty); t <- e.tag.filter(_.nonEmpty)
+      } yield {
+        val qn = e.namespace.filter(_.nonEmpty) match {
+          case Some(ns) if d != "SCHEMA" => s"${qi(ns)}.${qi(t)}"
+          case _ => qi(t)
+        }
+        s"ALTER $d $qn OWNER TO ${qi(who)};"
+      }
+      Step(e, body, owner)
+    }
+    val phased = selected.flatMap(e => phase(e).map(_ -> e))
+    def steps(s: Int) = phased.collect { case (`s`, e) => e }
+    val (loads, dataRest) = steps(PgToc.SectionData)
+      .partition(_.desc.contains("TABLE DATA"))
+    // -c: drop selected objects in reverse TOC order before recreating.
+    // Session-level entries (DATABASE, ENCODING, ...) are skipped in
+    // replay, so their drops are skipped too — native -c never drops the
+    // target database unless -C re-creates it via maintenance
+    val drops =
+      if (!o.clean || !runPre) Nil
+      else selected.reverse
+        .filterNot(_.desc.exists(d => replaySkip(d, create = false)))
+        .flatMap(e => e.dropStmt.map(_.trim).filter(_.nonEmpty).map(raw =>
+          e -> (if (o.ifExists) injectIfExists(raw) else raw)))
+    Plan(toc,
+      database = if (o.create) toc.entries.find(_.desc.contains("DATABASE")) else None,
+      drops = drops,
+      pre = steps(PgToc.SectionPreData).map(step), loads = loads,
+      data = dataRest.map(step), post = steps(PgToc.SectionPostData).map(step),
+      runPre = runPre, runData = runData, runPost = runPost)
+  }
+
+  /** Section of an entry in a pre-1.11 archive, which records none:
+    * pg_backup_archiver ReadToc's rules for pre-8.4 archives. */
+  private def legacySection(desc: String): Int = desc match {
+    case "COMMENT" | "ACL" | "ACL LANGUAGE" => PgToc.SectionNone
+    case "TABLE DATA" | "BLOBS" | "BLOB COMMENTS" => PgToc.SectionData
+    case "CONSTRAINT" | "CHECK CONSTRAINT" | "FK CONSTRAINT" | "INDEX" |
+         "RULE" | "TRIGGER" => PgToc.SectionPostData
+    case _ => PgToc.SectionPreData
+  }
+
+  /** A TABLE DATA entry's COPY statement and payload file. Structural
+    * archive corruption always throws, on every path — a missing payload
+    * is not a per-table data error the server reported, and a script or
+    * single-transaction restore without it would load an empty table. */
+  private def payload(dir: String, e: PgToc.Entry): (String, java.io.File) = {
+    val base = e.fileName.filter(_.nonEmpty).getOrElse(
+      throw new IllegalArgumentException(
+        s"pg-restore: TABLE DATA ${e.tag.getOrElse("?")} has no data file"))
+    val f = Compress.probeFile(dir, base).getOrElse(
+      throw new IllegalArgumentException(
+        s"pg-restore: missing payload $base(.gz/.lz4/.zst)"))
+    val copySql = e.copyStmt.map(_.trim.stripSuffix(";")).getOrElse(
+      throw new IllegalArgumentException(
+        s"pg-restore: TABLE DATA ${e.tag.getOrElse("?")} has no COPY statement"))
+    (copySql, f)
+  }
+
+  /** Replay the archive at `dir` into the database `psqlArgs` points at,
+    * under the selection `opts` (see [[Options]]). Returns one human line
+    * per restored entry.
     *
-    * Native failure/selection flags (reference passthrough surface,
-    * `cmd/restore/restore.go:146-217`; here there is no binary to
-    * delegate to, so each is EXECUTED, not forwarded):
+    * Execution phases pre-data → data waves → SEQUENCE SET/blobs →
+    * post-data. Under `-L` a list that interleaves sections therefore
+    * replays section-phased, not literally as listed (restoring an index
+    * before its table's data is never correct; the phasing preserves
+    * that invariant the same way the native tool's parallel mode does);
+    * within the data section, listed tables keep list order subject to
+    * dependency waves.
+    *
+    * Executor-only flags:
+    *  - `jobs`: per-table COPY concurrency, like `pg_restore -j`.
+    *  - `scripts`: user hooks before/after each section that runs.
+    *  - `restoreInOrder`: load tables strictly sequentially in TOC/list
+    *    order instead of in dependency waves.
     *  - `exitOnError` (`-e`): abort on the first failed statement/COPY.
     *    The API default stays fail-fast (library callers want loud
     *    breakage); the CLI default matches the native tool — CONTINUE,
     *    warn per failure, and close with `errors ignored on restore: N`
     *    (`restorers/table.go:90-102`: a failed table rolls back ITS
-    *    transaction and the wave moves on). Exit-code-worthy archive
-    *    corruption (missing payload file) still always throws.
-    *  - `clean` (`-c`): replay each selected entry's dropStmt in reverse
-    *    TOC order before recreating. A failed drop (object absent, no
-    *    `--if-exists` here) follows the exitOnError rule, like native.
-    *  - `create` (`-C`): execute the archive's DATABASE entry against
-    *    the maintenance database derived from `psqlArgs` (dbname
-    *    swapped to `postgres`), then restore into the target as given.
-    *  - `tables`/`indexes` (`-t`/`-i`): restore only the named
-    *    relations/indexes (DDL + data for tables; nothing else — like
-    *    native, no schemas/blobs come along). `strictNames` makes each
-    *    name that matches nothing an error instead of an empty
-    *    selection. */
+    *    transaction and the wave moves on). A failed `-c` drop follows
+    *    the same rule. Archive corruption (missing payload file) always
+    *    throws.
+    *  - `disableTriggers`: each COPY runs under
+    *    `session_replication_role = replica` (the reference's integrity
+    *    control; superuser required); `enableRowSecurity`: COPY into RLS
+    *    tables goes through the connecting role's policies.
+    *  - `noDataForFailedTables`: a table whose CREATE failed gets no data.
+    *  - `verbose`: one stderr line per created object / loaded table.
+    *  - `watchdogSec`: opt-in hang guard (see [[exec]], [[copyFrom]]). */
   def restore(dir: String, psqlArgs: Seq[String],
-              dataOnly: Boolean = false,
-              disableTriggers: Boolean = false,
+              opts: Options = Options(),
               jobs: Int = 4,
-              useList: Option[Seq[Int]] = None,
-              withDeps: Boolean = false,
               scripts: Map[String, Seq[Script]] = Map.empty,
               restoreInOrder: Boolean = false,
               exitOnError: Boolean = true,
-              clean: Boolean = false,
-              create: Boolean = false,
-              tables: Seq[String] = Nil,
-              indexes: Seq[String] = Nil,
-              strictNames: Boolean = false,
-              ifExists: Boolean = false,
-              section: Option[String] = None,
-              noDataForFailedTables: Boolean = false,
-              noOwner: Boolean = false,
-              noPrivileges: Boolean = false,
-              schemaOnly: Boolean = false,
-              noBlobs: Boolean = false,
-              noComments: Boolean = false,
-              schemas: Seq[String] = Nil,
-              excludeSchemas: Seq[String] = Nil,
-              functions: Seq[String] = Nil,
-              triggers: Seq[String] = Nil,
-              noPublications: Boolean = false,
-              noSubscriptions: Boolean = false,
-              noSecurityLabels: Boolean = false,
+              disableTriggers: Boolean = false,
               enableRowSecurity: Boolean = false,
-              singleTransaction: Boolean = false,
-              noTablespaces: Boolean = false,
-              noTableAccessMethod: Boolean = false,
+              noDataForFailedTables: Boolean = false,
               verbose: Boolean = false,
               watchdogSec: Int = 0): Seq[String] = {
-    section.foreach(s => require(ScriptSections.contains(s),
-      s"pg-restore: --section must be pre-data|data|post-data, got $s"))
-    require(!(schemaOnly && dataOnly),
-      "pg-restore: --schema-only and --data-only are mutually exclusive")
-    require(!(create && singleTransaction),
-      "pg-restore: --create cannot run inside --single-transaction")
-    if (singleTransaction) {
+    val p = plan(dir, opts)
+    val pre =
+      (if (disableTriggers) Seq("SET session_replication_role = replica") else Nil) ++
+        // native --enable-row-security: COPY into RLS tables goes through
+        // the policies of the connecting role instead of failing
+        (if (enableRowSecurity) Seq("SET row_security = on") else Nil)
+    if (opts.singleTransaction) {
       // native -1: everything in ONE session, ONE transaction — implies
       // exit-on-error (any failure rolls the whole restore back). Render
       // the script form and replay it through a single psql -1 session.
@@ -436,44 +610,20 @@ object PgRestore {
           // session-level integrity controls ride at the top of the
           // script (SET outside the transaction = session scope), same
           // effect as the per-COPY `pre` statements on the direct path
-          val sets =
-            (if (disableTriggers) Seq("SET session_replication_role = replica;\n") else Nil) ++
-              (if (enableRowSecurity) Seq("SET row_security = on;\n") else Nil)
-          sets.foreach(s => os.write(s.getBytes("UTF-8")))
-          toScript(dir, os, dataOnly, schemaOnly, section, clean,
-            ifExists, create = false, noOwner, noPrivileges,
-            singleTransaction = true, useList, withDeps, tables, indexes,
-            functions, triggers, schemas, excludeSchemas, strictNames,
-            noBlobs, noComments, noPublications, noSubscriptions,
-            noSecurityLabels, noTablespaces, noTableAccessMethod)
+          pre.foreach(s => os.write(s"$s;\n".getBytes("UTF-8")))
+          render(dir, p, opts, os)
         } finally os.close()
         val cmd = Seq("/usr/bin/psql", "-X", "-q", "-v", "ON_ERROR_STOP=1") ++
           psqlArgs ++ Seq("-o", "/dev/null", "-f", tmp.toString)
-        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-        p.getOutputStream.close()
-        val outText = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        require(p.waitFor() == 0,
+        val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+        proc.getOutputStream.close()
+        val outText = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+        require(proc.waitFor() == 0,
           s"pg-restore: single-transaction replay failed (rolled back): " +
             outText.takeRight(400))
         return Seq(s"single transaction: $n entries applied")
       } finally java.nio.file.Files.deleteIfExists(tmp)
     }
-    // --section=X restores ONE section; dataOnly is the legacy -a alias
-    // for the data section; -s = the pre-data + post-data pair (all DDL,
-    // no data — native pg_restore's own mapping)
-    val runPre = section.forall(_ == "pre-data") && !dataOnly
-    val runData = section.forall(_ == "data") && !schemaOnly
-    val runPost = section.forall(_ == "post-data") && !dataOnly
-    val fullToc = PgToc.readFile(s"$dir/toc.dat")
-    val selected = selectEntries(fullToc, useList, withDeps, tables, indexes,
-      functions, triggers, schemas, excludeSchemas, strictNames, noBlobs,
-      noComments, noPublications, noSubscriptions, noSecurityLabels,
-      noPrivileges, create)
-    val pre =
-      (if (disableTriggers) Seq("SET session_replication_role = replica") else Nil) ++
-        // native --enable-row-security: COPY into RLS tables goes through
-        // the policies of the connecting role instead of failing
-        (if (enableRowSecurity) Seq("SET row_security = on") else Nil)
     val done = Seq.newBuilder[String]
 
     // continue-mode error accounting (native default): each failure
@@ -485,40 +635,24 @@ object PgRestore {
         ignored.incrementAndGet()
         System.err.println(s"[pg-restore] warning: $msg (continuing)")
       }
+    def name(e: PgToc.Entry): String =
+      s"${e.desc.getOrElse("?")} ${e.tag.getOrElse("?")}"
 
-    // -C: stand the target database up first, from the archive's own
-    // DATABASE entry, via the maintenance database (native reconnect
-    // dance; `cmd/restore.go:391+` delegates this section the same way)
-    if (create) {
-      val dbEntry = fullToc.entries.find(_.desc.contains("DATABASE")).getOrElse(
-        throw new IllegalArgumentException(
-          "pg-restore: --create needs a DATABASE entry in the archive"))
-      val sql = dbEntry.defn.filter(_.trim.nonEmpty).getOrElse(
-        throw new IllegalArgumentException(
-          "pg-restore: DATABASE entry carries no CREATE DATABASE statement"))
+    // -C: stand the target database up first, via the maintenance
+    // database (native reconnect dance; `cmd/restore.go:391+` delegates
+    // this section the same way)
+    if (opts.create) {
+      val (db, sql) = p.createDatabase
       val (rc, out) = exec(maintenanceArgs(psqlArgs), sql)
       require(rc == 0, s"pg-restore: CREATE DATABASE failed: $out")
-      done += s"DATABASE ${dbEntry.tag.getOrElse("?")}"
+      done += name(db)
     }
-
-    // -c: drop selected objects in reverse TOC order before recreating.
-    // A drop that fails (object absent) follows the exitOnError rule —
-    // native counts those as ignored errors by default too — unless
-    // --if-exists rewrote it to tolerate absence (the native pairing).
-    if (clean && runPre && !dataOnly)
-      selected.entries.reverse
-        // session-level entries (DATABASE, ENCODING, ...) are skipped in
-        // replay, so their drops are skipped too — native -c never drops
-        // the target database unless -C re-creates it via maintenance
-        .filterNot(_.desc.exists(d => replaySkip(d, create = false)))
-        .foreach { e =>
-        e.dropStmt.map(_.trim).filter(_.nonEmpty).foreach { raw =>
-          val sql = if (ifExists) injectIfExists(raw) else raw
-          val (rc, out) = exec(psqlArgs, sql, watchdogSec)
-          if (rc != 0) failOrWarn(
-            s"pg-restore: DROP for ${e.desc.getOrElse("?")} ${e.tag.getOrElse("?")} failed: ${out.trim}")
-        }
-      }
+    // a drop that fails (object absent) follows the exitOnError rule —
+    // native counts those as ignored errors by default too
+    p.drops.foreach { case (e, sql) =>
+      val (rc, out) = exec(psqlArgs, sql, watchdogSec)
+      if (rc != 0) failOrWarn(s"pg-restore: DROP for ${name(e)} failed: ${out.trim}")
+    }
 
     // --no-data-for-failed-tables: a TABLE whose CREATE failed (already
     // exists, usually) must not have the archive's data appended on top
@@ -529,64 +663,24 @@ object PgRestore {
     def tableKey(e: PgToc.Entry): Option[(String, String)] =
       e.tag.map(t => (e.namespace.filter(_.nonEmpty).getOrElse(""), t))
 
-    // ownership lives in the TOC's OWNER FIELD (verified against real
-    // pg_dump 15 toc.dat): native pg_restore SYNTHESIZES the
-    // `ALTER <type> <name> OWNER TO <role>` statement from it at restore
-    // time, and -O suppresses exactly that synthesis (the restore then
-    // runs as the connecting user — the flag's point when the dump's
-    // roles don't exist on the target)
-    val ownable = Map("TABLE" -> "TABLE", "SEQUENCE" -> "SEQUENCE",
-      "VIEW" -> "VIEW", "MATERIALIZED VIEW" -> "MATERIALIZED VIEW",
-      "FOREIGN TABLE" -> "FOREIGN TABLE", "SCHEMA" -> "SCHEMA")
-    def applyOwner(e: PgToc.Entry): Unit =
-      if (!noOwner) for {
-        d <- e.desc; kind <- ownable.get(d)
-        o <- e.owner.filter(_.nonEmpty); t <- e.tag.filter(_.nonEmpty)
-      } {
-        val qi = graft.sources.PgSource.quoteIdent _
-        val qn = e.namespace.filter(_.nonEmpty) match {
-          case Some(ns) if d != "SCHEMA" => s"${qi(ns)}.${qi(t)}"
-          case _ => qi(t)
-        }
-        val (rc, out) = exec(psqlArgs, s"ALTER $kind $qn OWNER TO ${qi(o)};")
-        if (rc != 0) failOrWarn(
-          s"pg-restore: ALTER OWNER for $d $t failed: ${out.trim}")
-      }
-
-    def execDefn(e: PgToc.Entry): Unit = {
-      // -X: ACL entries (GRANT/REVOKE/DEFAULT ACL) are skipped whole
-      if (noPrivileges && e.desc.exists(d => d == "ACL" || d == "DEFAULT ACL"))
-        return
-      e.defn.filter(_.trim.nonEmpty).foreach { raw =>
-        // archives that carry explicit ALTER OWNER lines in defn (our
-        // merged shapes never do; belt for foreign producers) follow -O
-        val body =
-          if (!noOwner) raw
-          else raw.linesIterator
-            .filterNot(_.matches("""ALTER .* OWNER TO .*;\s*"""))
-            .mkString("\n")
-        if (body.trim.isEmpty) return
-        if (verbose) System.err.println(
-          s"[pg-restore] creating ${e.desc.getOrElse("?")} " +
-            s"${e.namespace.filter(_.nonEmpty).fold("")(_ + ".")}${e.tag.getOrElse("?")}")
-        // tablespace/AM live in TOC FIELDS: native synthesizes the SET
-        // before the object's DDL ( pg_backup_archiver _selectTablespace /
-        // _printTableAccessMethod); --no-tablespaces / the AM twin
-        // suppress exactly that synthesis. Each statement runs in its own
-        // psql session here, so the SET rides the same -c batch. An empty
-        // tablespace string means "database default" — already this
-        // session's state, so only non-empty values need a SET.
-        val sets = tsSets(e, noTablespaces, noTableAccessMethod)
-        val sql = (sets :+ body).mkString("\n")
-        val (rc, out) = exec(psqlArgs, sql, watchdogSec)
-        if (rc != 0) {
-          if (e.desc.contains("TABLE")) tableKey(e).foreach(failedTables.add)
-          failOrWarn(
-            s"pg-restore: ${e.desc.getOrElse("?")} ${e.tag.getOrElse("?")} failed: $out")
-        }
-        else {
-          done += s"${e.desc.getOrElse("?")} ${e.tag.getOrElse("?")}"
-          applyOwner(e)
+    def execStep(s: Step): Unit = s.body.foreach { body =>
+      val e = s.entry
+      if (verbose) System.err.println(
+        s"[pg-restore] creating ${e.desc.getOrElse("?")} " +
+          s"${e.namespace.filter(_.nonEmpty).fold("")(_ + ".")}${e.tag.getOrElse("?")}")
+      // each statement runs in its own psql session, so the entry's
+      // tablespace/AM SETs ride the same -c batch
+      val sql = (tsSets(e, opts) :+ body).mkString("\n")
+      val (rc, out) = exec(psqlArgs, sql, watchdogSec)
+      if (rc != 0) {
+        if (e.desc.contains("TABLE")) tableKey(e).foreach(failedTables.add)
+        failOrWarn(s"pg-restore: ${name(e)} failed: $out")
+      } else {
+        done += name(e)
+        s.owner.foreach { own =>
+          val (rcO, outO) = exec(psqlArgs, own)
+          if (rcO != 0) failOrWarn(
+            s"pg-restore: ALTER OWNER for ${name(e)} failed: ${outO.trim}")
         }
       }
     }
@@ -602,17 +696,7 @@ object PgRestore {
           "created, will not restore its data (--no-data-for-failed-tables)")
         return false
       }
-      // structural archive corruption always throws — a missing payload
-      // is not a per-table data error the server reported
-      val base = e.fileName.filter(_.nonEmpty).getOrElse(
-        throw new IllegalArgumentException(
-          s"pg-restore: TABLE DATA ${e.tag.getOrElse("?")} has no data file"))
-      val f = Compress.probeFile(dir, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"pg-restore: missing payload $base(.gz/.lz4/.zst)"))
-      val copySql = e.copyStmt.map(_.trim.stripSuffix(";")).getOrElse(
-        throw new IllegalArgumentException(
-          s"pg-restore: TABLE DATA ${e.tag.getOrElse("?")} has no COPY statement"))
+      val (copySql, f) = payload(dir, e)
       if (verbose) System.err.println(
         s"[pg-restore] processing data for table " +
           s"${e.namespace.filter(_.nonEmpty).fold("")(_ + ".")}${e.tag.getOrElse("?")}")
@@ -627,8 +711,7 @@ object PgRestore {
 
     // dependency WAVES inside the data section: a data entry whose deps
     // include another data entry waits for it; independents run together
-    val dataEntries = selected.entries.filter(_.desc.contains("TABLE DATA"))
-    val dataIds = dataEntries.map(_.dumpId).toSet
+    val dataIds = p.loads.map(_.dumpId).toSet
     def waves(remaining: Seq[PgToc.Entry], doneIds: Set[Int],
               acc: Seq[Seq[PgToc.Entry]]): Seq[Seq[PgToc.Entry]] =
       if (remaining.isEmpty) acc
@@ -640,55 +723,44 @@ object PgRestore {
         waves(blocked, doneIds ++ ready.map(_.dumpId), acc :+ ready)
       }
 
-    // 1. schema + pre-data statements, TOC order (unless data-only or
-    // --section scoped it out) — user scripts bracket the sections that
-    // RUN (reference cmd/restore.go:381,446)
-    if (runPre) {
-      done ++= runScripts(psqlArgs, scripts, "pre-data", "before")
-      selected.entries.filter(e => e.section == PgToc.SectionPreData ||
-          e.section == PgToc.SectionNone).foreach { e =>
-        val d = e.desc.getOrElse("")
-        if (!replaySkip(d, create)) execDefn(e)
-      }
-      done ++= runScripts(psqlArgs, scripts, "pre-data", "after")
+    // user scripts bracket the sections that RUN (reference
+    // cmd/restore.go:381,446)
+    def hooked(run: Boolean, section: String)(body: => Unit): Unit = {
+      if (run) done ++= runScripts(psqlArgs, scripts, section, "before")
+      body
+      if (run) done ++= runScripts(psqlArgs, scripts, section, "after")
     }
+    // 1. pre-data statements
+    hooked(p.runPre, "pre-data")(p.pre.foreach(execStep))
     // 2. data: tables in dependency waves through a worker pool — or,
     // under the native --restore-in-order flag, strictly sequentially in
     // TOC/list order (deterministic replay; what the reference's flag
     // disables parallel reordering for)
-    if (runData) {
-      done ++= runScripts(psqlArgs, scripts, "data", "before")
+    hooked(p.runData, "data") {
       import scala.concurrent.{Await, Future, ExecutionContext}
       import scala.concurrent.duration.Duration
       if (restoreInOrder)
-        dataEntries.foreach { e =>
-          if (loadTable(e)) done += s"TABLE DATA ${e.tag.getOrElse("?")}"
+        p.loads.foreach { e =>
+          if (loadTable(e)) done += name(e)
         }
       else {
         val ec = ExecutionContext.fromExecutorService(
           java.util.concurrent.Executors.newFixedThreadPool(math.max(1, jobs)))
-        try waves(dataEntries, Set.empty, Nil).foreach { wave =>
+        try waves(p.loads, Set.empty, Nil).foreach { wave =>
           // in continue mode a failed COPY returns false — only tables
           // that actually loaded are reported as restored
           val oks = wave.map(e => Future(loadTable(e))(ec))
             .map(Await.result(_, Duration.Inf))
           wave.zip(oks).foreach { case (e, ok) =>
-            if (ok) done += s"TABLE DATA ${e.tag.getOrElse("?")}" }
+            if (ok) done += name(e) }
         } finally ec.shutdown()
       }
       // remaining data-section statements (SEQUENCE SET) + blobs
-      selected.entries.filter(e => e.section == PgToc.SectionData &&
-        e.desc.contains("SEQUENCE SET")).foreach(execDefn)
-      if (selected.entries.exists(_.desc.contains("BLOBS")))
-        done ++= restoreBlobs(dir, psqlArgs, createOids = dataOnly)
-      done ++= runScripts(psqlArgs, scripts, "data", "after")
+      p.data.foreach(execStep)
+      if (p.blobs) done ++= restoreBlobs(dir, psqlArgs, createOids = opts.dataOnly)
     }
-    // 3. post-data (constraints, indexes, FKs) + ACLs
-    if (runPost) {
-      done ++= runScripts(psqlArgs, scripts, "post-data", "before")
-      selected.entries.filter(_.section == PgToc.SectionPostData).foreach(execDefn)
-      done ++= runScripts(psqlArgs, scripts, "post-data", "after")
-    }
+    // 3. post-data (constraints, indexes, FKs, their comments)
+    hooked(p.runPost, "post-data")(p.post.foreach(execStep))
     // native closing summary (pg_restore prints "errors ignored on
     // restore: N" when it continued past failures)
     if (ignored.get() > 0) done += s"errors ignored on restore: ${ignored.get()}"
@@ -698,49 +770,39 @@ object PgRestore {
   /** Session-level descs: skipped in replay, never dropped by -c. */
   private val SessionDescs = Set("DATABASE", "ENCODING", "STDSTRINGS", "SEARCHPATH")
 
-  /** Replay-time gate shared by the direct and script paths. DATABASE
-    * PROPERTIES (ALTER DATABASE <source> SET ...) is selected like native
-    * (`_tocEntryRequired` keeps it in the TOC) but REPLAYED only under
-    * --create — native gates it on `ropt->createDB`
-    * (pg_backup_archiver.c), because without -C the statement would
-    * mutate a same-named database that already exists on the target
-    * cluster, or abort a valid restore under -e when it doesn't. */
+  /** Replay-time gate of [[plan]]. DATABASE PROPERTIES (ALTER DATABASE
+    * <source> SET ...) is selected like native (`_tocEntryRequired`
+    * keeps it in the TOC) but REPLAYED only under --create — native
+    * gates it on `ropt->createDB` (pg_backup_archiver.c), because
+    * without -C the statement would mutate a same-named database that
+    * already exists on the target cluster, or abort a valid restore
+    * under -e when it doesn't. */
   private def replaySkip(desc: String, create: Boolean): Boolean =
     SessionDescs(desc) || (desc == "DATABASE PROPERTIES" && !create)
 
-  /** Synthesized tablespace / access-method SETs for one entry — native
-    * pg_restore derives these from the TOC FIELDS at restore time
-    * (pg_backup_archiver.c `_selectTablespace` /
+  /** Synthesized tablespace / access-method SETs for one entry on the
+    * direct path — native pg_restore derives these from the TOC FIELDS
+    * at restore time (pg_backup_archiver.c `_selectTablespace` /
     * `_printTableAccessMethod`); `--no-tablespaces` /
     * `--no-table-access-method` suppress exactly that synthesis. A NULL
     * field means "emit no SET"; an empty tablespace means the database
     * default — already every fresh session's state, so the direct path
-    * (one psql session per statement) skips it. */
-  private def tsSets(e: PgToc.Entry, noTablespaces: Boolean,
-                     noTableAccessMethod: Boolean): Seq[String] =
-    (if (noTablespaces) None
+    * (one psql session per statement) skips it. The script renderer
+    * tracks one long session instead and emits a SET on change. */
+  private def tsSets(e: PgToc.Entry, o: Options): Seq[String] =
+    (if (o.noTablespaces) None
      else e.tablespace.filter(_.nonEmpty).map(ts =>
        s"SET default_tablespace = ${PgSource.quoteIdent(ts)};")).toSeq ++
-      (if (noTableAccessMethod) None
+      (if (o.noTableAccessMethod) None
        else e.tableam.filter(_.nonEmpty).map(am =>
          s"SET default_table_access_method = ${PgSource.quoteIdent(am)};")).toSeq
 
-  /** The shared selection pipeline behind [[restore]] and [[toScript]]:
-    * -L list filter (+ --with-deps closure), -t/-i/-P/-T named selection,
-    * -n/-N namespace filters, and the --no-* entry drops, with
-    * --strict-names making unmatched names an error. */
-  private def selectEntries(fullToc: PgToc.Toc,
-                            useList: Option[Seq[Int]], withDeps: Boolean,
-                            tables: Seq[String], indexes: Seq[String],
-                            functions: Seq[String], triggers: Seq[String],
-                            schemas: Seq[String], excludeSchemas: Seq[String],
-                            strictNames: Boolean, noBlobs: Boolean,
-                            noComments: Boolean, noPublications: Boolean,
-                            noSubscriptions: Boolean,
-                            noSecurityLabels: Boolean,
-                            noPrivileges: Boolean = false,
-                            create: Boolean = false): PgToc.Toc = {
-    val toc = useList match {
+  /** The selection pipeline of [[plan]]: -L list filter (+ --with-deps
+    * closure), -t/-i/-P/-T named selection, -n/-N namespace filters, and
+    * the --no-* entry drops, with --strict-names making unmatched names
+    * an error. */
+  private def selectEntries(fullToc: PgToc.Toc, o: Options): PgToc.Toc = {
+    val toc = o.useList match {
       case None => fullToc
       case Some(rawIds) =>
         // duplicate ids in a hand-edited list must not restore twice;
@@ -750,7 +812,7 @@ object PgRestore {
         ids.foreach(id => require(byId.contains(id),
           s"pg-restore: entry from provided list with dump id $id is not found"))
         val entries =
-          if (!withDeps) ids.map(byId)
+          if (!o.withDeps) ids.map(byId)
           else {
             val needed = scala.collection.mutable.Set[Int]()
             val queue = scala.collection.mutable.Queue[Int](ids: _*)
@@ -765,6 +827,7 @@ object PgRestore {
           }
         fullToc.copy(entries = entries)
     }
+    import o.{tables, indexes, functions, triggers, schemas, excludeSchemas}
     // Selection semantics verified ENTRY-BY-ENTRY against real
     // pg_restore 15 `-l` output (PgInteropSpec differential matrix);
     // mirrors pg_backup_archiver.c `_tocEntryRequired`:
@@ -789,7 +852,7 @@ object PgRestore {
       tag == want || (!want.contains("(") && tag.takeWhile(_ != '(') == want)
     def trgMatch(tag: String, want: String): Boolean =
       tag == want || tag.endsWith(" " + want)
-    if (strictNames) {
+    if (o.strictNames) {
       tables.foreach(t => require(
         toc.entries.exists(e => e.tag.contains(t) && e.desc.exists(relationDescs)),
         s"""pg-restore: table "$t" not found in archive (--strict-names)"""))
@@ -816,15 +879,15 @@ object PgRestore {
           val ns = e.namespace.filter(_.nonEmpty)
           if (SessionDescs(desc) || desc == "DATABASE PROPERTIES")
             true // replay skips these; the -l listing hides/gates them
-          else if (noBlobs && (desc.startsWith("BLOB") || desc == "LARGE OBJECT"))
+          else if (o.noBlobs && (desc.startsWith("BLOB") || desc == "LARGE OBJECT"))
             false
-          else if (noComments && desc == "COMMENT") false
-          else if (noPublications && desc.startsWith("PUBLICATION")) false
-          else if (noSubscriptions && desc == "SUBSCRIPTION") false
-          else if (noSecurityLabels && desc == "SECURITY LABEL") false
-          else if (noPrivileges && (desc == "ACL" || desc == "DEFAULT ACL")) false
+          else if (o.noComments && desc == "COMMENT") false
+          else if (o.noPublications && desc.startsWith("PUBLICATION")) false
+          else if (o.noSubscriptions && desc == "SUBSCRIPTION") false
+          else if (o.noSecurityLabels && desc == "SECURITY LABEL") false
+          else if (o.noPrivileges && (desc == "ACL" || desc == "DEFAULT ACL")) false
           else if (desc == "ACL" || desc == "COMMENT" || desc == "SECURITY LABEL") {
-            if (e.tag.exists(_.startsWith("DATABASE "))) create
+            if (e.tag.exists(_.startsWith("DATABASE "))) o.create
             else if (schemas.nonEmpty || excludeSchemas.nonEmpty || selTypes)
               e.dependencies.size == 1 && required(e.dependencies.head)
             else true
@@ -852,52 +915,17 @@ object PgRestore {
   }
 
   /** Native `pg_restore -l <flags>`: the dumpIds the archive would list
-    * (equivalently, restore) under the given selection — PrintTOCSummary
-    * + `_tocEntryRequired` faithfully: the sliding-section rule
-    * (SECTION_NONE entries like ACLs/COMMENTs inherit the current
-    * position's section in file order), the never-listed
+    * (equivalently, restore) under `opts`, in file order — the ids of
+    * [[plan]]'s entries, so the listing shows exactly what a restore
+    * runs: the sliding section rule, the never-listed
     * ENCODING/STDSTRINGS/SEARCHPATH specials, and the DATABASE entry's
-    * createDB-only rule (listed first, before any section gate).
-    * Verified against the real pg_restore 15 binary over a 24-combo
-    * flag matrix in PgInteropSpec. */
-  def listSelectedIds(dir: String,
-                      dataOnly: Boolean = false, schemaOnly: Boolean = false,
-                      section: Option[String] = None, create: Boolean = false,
-                      useList: Option[Seq[Int]] = None, withDeps: Boolean = false,
-                      tables: Seq[String] = Nil, indexes: Seq[String] = Nil,
-                      functions: Seq[String] = Nil, triggers: Seq[String] = Nil,
-                      schemas: Seq[String] = Nil,
-                      excludeSchemas: Seq[String] = Nil,
-                      strictNames: Boolean = false, noBlobs: Boolean = false,
-                      noComments: Boolean = false, noPrivileges: Boolean = false,
-                      noPublications: Boolean = false,
-                      noSubscriptions: Boolean = false,
-                      noSecurityLabels: Boolean = false): Seq[Int] = {
-    val fullToc = PgToc.readFile(s"$dir/toc.dat")
-    val selected = selectEntries(fullToc, useList, withDeps, tables, indexes,
-      functions, triggers, schemas, excludeSchemas, strictNames, noBlobs,
-      noComments, noPublications, noSubscriptions, noSecurityLabels,
-      noPrivileges, create).entries.map(_.dumpId).toSet
-    val runPre = section.forall(_ == "pre-data") && !dataOnly
-    val runData = section.forall(_ == "data") && !schemaOnly
-    val runPost = section.forall(_ == "post-data") && !dataOnly
-    val hidden = Set("ENCODING", "STDSTRINGS", "SEARCHPATH")
-    var cur = PgToc.SectionPreData
-    fullToc.entries.flatMap { e =>
-      val sec = if (e.section == PgToc.SectionNone) cur
-                else { cur = e.section; cur }
-      val desc = e.desc.getOrElse("")
-      if (hidden(desc)) None
-      else if (desc == "DATABASE" || desc == "DATABASE PROPERTIES")
-        (if (create) Some(e.dumpId) else None)
-      else {
-        val sectionOk =
-          if (sec == PgToc.SectionData) runData
-          else if (sec == PgToc.SectionPostData) runPost
-          else runPre
-        if (sectionOk && selected(e.dumpId)) Some(e.dumpId) else None
-      }
-    }
+    * createDB-only rule. Verified against the real pg_restore 15 binary
+    * over a 24-combo flag matrix in PgInteropSpec. */
+  def listSelectedIds(dir: String, opts: Options = Options()): Seq[Int] = {
+    val p = plan(dir, opts)
+    val ids = (p.database.toSeq ++ p.loads ++
+      (p.pre ++ p.data ++ p.post).map(_.entry)).map(_.dumpId).toSet
+    p.toc.entries.map(_.dumpId).filter(ids)
   }
 
   /** Structured use-list (`--list-format=json|yaml`, reference
@@ -930,47 +958,19 @@ object PgRestore {
   }
 
   /** Native `pg_restore -f` (script output): render the archive as ONE
-    * plain-SQL stream — DDL in TOC order, each TABLE DATA as a
-    * `COPY ... FROM stdin;` block with its decompressed payload inlined
+    * plain-SQL stream under `opts` — DDL in TOC order, each TABLE DATA as
+    * a `COPY ... FROM stdin;` block with its decompressed payload inlined
     * (payloads already end with the `\.` terminator), SEQUENCE SET, then
-    * post-data — honoring the same selection flags as [[restore]].
-    * `singleTransaction` wraps the body in BEGIN/COMMIT (incompatible
-    * with `create` — CREATE DATABASE cannot run in a transaction, the
-    * native restriction). Large objects are not representable in plain
-    * SQL here; their entries are skipped with a warning.
-    * Returns the number of entries rendered. */
+    * post-data: the same [[plan]] the direct [[restore]] runs.
+    * `singleTransaction` wraps the body in BEGIN/COMMIT. Large objects
+    * are not representable in plain SQL here; their entries are skipped
+    * with a warning. Returns the number of entries rendered. */
   def toScript(dir: String, out: java.io.OutputStream,
-               dataOnly: Boolean = false, schemaOnly: Boolean = false,
-               section: Option[String] = None,
-               clean: Boolean = false, ifExists: Boolean = false,
-               create: Boolean = false,
-               noOwner: Boolean = false, noPrivileges: Boolean = false,
-               singleTransaction: Boolean = false,
-               useList: Option[Seq[Int]] = None, withDeps: Boolean = false,
-               tables: Seq[String] = Nil, indexes: Seq[String] = Nil,
-               functions: Seq[String] = Nil, triggers: Seq[String] = Nil,
-               schemas: Seq[String] = Nil, excludeSchemas: Seq[String] = Nil,
-               strictNames: Boolean = false, noBlobs: Boolean = false,
-               noComments: Boolean = false, noPublications: Boolean = false,
-               noSubscriptions: Boolean = false,
-               noSecurityLabels: Boolean = false,
-               noTablespaces: Boolean = false,
-               noTableAccessMethod: Boolean = false): Int = {
-    section.foreach(s => require(ScriptSections.contains(s),
-      s"pg-restore: --section must be pre-data|data|post-data, got $s"))
-    require(!(schemaOnly && dataOnly),
-      "pg-restore: --schema-only and --data-only are mutually exclusive")
-    require(!(create && singleTransaction),
-      "pg-restore: --create cannot run inside --single-transaction " +
-        "(CREATE DATABASE is not transactional)")
-    val runPre = section.forall(_ == "pre-data") && !dataOnly
-    val runData = section.forall(_ == "data") && !schemaOnly
-    val runPost = section.forall(_ == "post-data") && !dataOnly
-    val fullToc = PgToc.readFile(s"$dir/toc.dat")
-    val selected = selectEntries(fullToc, useList, withDeps, tables, indexes,
-      functions, triggers, schemas, excludeSchemas, strictNames, noBlobs,
-      noComments, noPublications, noSubscriptions, noSecurityLabels,
-      noPrivileges, create)
+               opts: Options = Options()): Int =
+    render(dir, plan(dir, opts), opts, out)
+
+  private def render(dir: String, p: Plan, o: Options,
+                     out: java.io.OutputStream): Int = {
     val w = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(out, "UTF-8"))
     var rendered = 0
@@ -982,97 +982,52 @@ object PgRestore {
       }
     }
     w.write(s"-- graft pg-restore script (archive: $dir)\n")
-    if (create) {
-      val dbEntry = fullToc.entries.find(_.desc.contains("DATABASE")).getOrElse(
-        throw new IllegalArgumentException(
-          "pg-restore: --create needs a DATABASE entry in the archive"))
-      dbEntry.defn.filter(_.trim.nonEmpty).foreach(stmt)
+    if (o.create) {
+      val (db, sql) = p.createDatabase
+      stmt(sql)
       // the native script reconnects into the new database
-      dbEntry.tag.foreach(t =>
-        w.write(s"\\connect ${PgSource.quoteIdent(t)}\n"))
+      db.tag.foreach(t => w.write(s"\\connect ${PgSource.quoteIdent(t)}\n"))
     }
-    if (singleTransaction) w.write("BEGIN;\n")
-    val ownable = Map("TABLE" -> "TABLE", "SEQUENCE" -> "SEQUENCE",
-      "VIEW" -> "VIEW", "MATERIALIZED VIEW" -> "MATERIALIZED VIEW",
-      "FOREIGN TABLE" -> "FOREIGN TABLE", "SCHEMA" -> "SCHEMA")
+    if (o.singleTransaction) w.write("BEGIN;\n")
     // script form tracks the session's current tablespace/AM like native
     // (one long session; a SET is emitted only on CHANGE — including the
     // initial `SET default_tablespace = '';` real pg_dump scripts open
     // tables with). SET lines don't count as rendered entries.
     var currTs: String = null
     var currAm: String = null
-    def emitTsSets(e: PgToc.Entry): Unit = {
-      if (!noTablespaces) e.tablespace.foreach { want =>
+    def emit(s: Step): Unit = {
+      if (!o.noTablespaces) s.entry.tablespace.foreach { want =>
         if (want != currTs) {
           w.write(if (want.isEmpty) "SET default_tablespace = '';\n"
                   else s"SET default_tablespace = ${PgSource.quoteIdent(want)};\n")
           currTs = want
         }
       }
-      if (!noTableAccessMethod) e.tableam.filter(_.nonEmpty).foreach { want =>
+      if (!o.noTableAccessMethod) s.entry.tableam.filter(_.nonEmpty).foreach { want =>
         if (want != currAm) {
           w.write(s"SET default_table_access_method = ${PgSource.quoteIdent(want)};\n")
           currAm = want
         }
       }
+      s.body.foreach(stmt)
+      s.owner.foreach(stmt)
     }
-    def emitDefn(e: PgToc.Entry): Unit = {
-      if (noPrivileges && e.desc.exists(d => d == "ACL" || d == "DEFAULT ACL"))
-        return
-      emitTsSets(e)
-      e.defn.filter(_.trim.nonEmpty).foreach { raw =>
-        val sql =
-          if (!noOwner) raw
-          else raw.linesIterator
-            .filterNot(_.matches("""ALTER .* OWNER TO .*;\s*"""))
-            .mkString("\n")
-        stmt(sql)
-        if (!noOwner) for {
-          d <- e.desc; kind <- ownable.get(d)
-          o <- e.owner.filter(_.nonEmpty); t <- e.tag.filter(_.nonEmpty)
-        } {
-          val qi = PgSource.quoteIdent _
-          val qn = e.namespace.filter(_.nonEmpty) match {
-            case Some(ns) if d != "SCHEMA" => s"${qi(ns)}.${qi(t)}"
-            case _ => qi(t)
-          }
-          stmt(s"ALTER $kind $qn OWNER TO ${qi(o)}")
-        }
-      }
+    p.drops.foreach { case (_, sql) => stmt(sql) }
+    p.pre.foreach(emit)
+    p.loads.foreach { e =>
+      val (copySql, f) = payload(dir, e)
+      w.write(copySql); w.write(";\n"); w.flush()
+      val in = Compress.input(Compress.algoOfFile(f.getName),
+        new java.io.BufferedInputStream(new java.io.FileInputStream(f)))
+      try in.transferTo(out) finally in.close()
+      rendered += 1
     }
-    if (clean && runPre && !dataOnly)
-      selected.entries.reverse
-        .filterNot(_.desc.exists(d => replaySkip(d, create = false))).foreach {
-        e => e.dropStmt.map(_.trim).filter(_.nonEmpty)
-          .foreach(raw => stmt(if (ifExists) injectIfExists(raw) else raw))
-      }
-    if (runPre)
-      selected.entries.filter(e => e.section == PgToc.SectionPreData ||
-          e.section == PgToc.SectionNone)
-        .filterNot(_.desc.exists(d => replaySkip(d, create))).foreach(emitDefn)
-    if (runData) {
-      selected.entries.filter(_.desc.contains("TABLE DATA")).foreach { e =>
-        for {
-          copySql <- e.copyStmt.map(_.trim.stripSuffix(";"))
-          base <- e.fileName.filter(_.nonEmpty)
-          f <- Compress.probeFile(dir, base)
-        } {
-          w.write(copySql); w.write(";\n"); w.flush()
-          val in = Compress.input(Compress.algoOfFile(f.getName),
-            new java.io.BufferedInputStream(new java.io.FileInputStream(f)))
-          try in.transferTo(out) finally in.close()
-          rendered += 1
-        }
-      }
-      selected.entries.filter(e => e.section == PgToc.SectionData &&
-        e.desc.contains("SEQUENCE SET")).foreach(emitDefn)
-      if (selected.entries.exists(_.desc.contains("BLOBS")) && !noBlobs)
-        System.err.println("[pg-restore] warning: large objects are not " +
-          "representable in script output — use the direct restore path")
-    }
-    if (runPost)
-      selected.entries.filter(_.section == PgToc.SectionPostData).foreach(emitDefn)
-    if (singleTransaction) w.write("COMMIT;\n")
+    p.data.foreach(emit)
+    if (p.blobs)
+      System.err.println("[pg-restore] warning: large objects are not " +
+        "representable in script output — use the direct restore path")
+    p.post.foreach(emit)
+    if (o.singleTransaction) w.write("COMMIT;\n")
     w.flush()
     rendered
   }

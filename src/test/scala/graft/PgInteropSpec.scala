@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.pipeline.PgToc
+import graft.sources.PgRestore.Options
 import graft.streaming.StreamingMask
 
 /** LIVE PostgreSQL interop — the strongest archive-compat evidence
@@ -516,9 +517,8 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE ul_tgt")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=ul_tgt user=graft"),
-      useList = Some(Seq(ids("ulparent" -> "TABLE"),
-        ids("ulparent" -> "TABLE DATA"),
-        ids("ulparent" -> "TABLE DATA"))))
+      Options(useList = Some(Seq(ids("ulparent" -> "TABLE"),
+        ids("ulparent" -> "TABLE DATA"), ids("ulparent" -> "TABLE DATA")))))
     assert(psql("ul_tgt", "SELECT count(*) FROM ulparent")._2.trim == "2",
       "duplicate list ids must not restore twice")
     assert(psql("ul_tgt", "SELECT count(*) FROM ulchild")._1 != 0,
@@ -530,7 +530,7 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE ul_tgt2")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=ul_tgt2 user=graft"),
-      useList = Some(Seq(ids("ulchild" -> "TABLE DATA"))), withDeps = true,
+      Options(useList = Some(Seq(ids("ulchild" -> "TABLE DATA"))), withDeps = true),
       restoreInOrder = true)
     assert(psql("ul_tgt2", "SELECT count(*) FROM ulchild")._2.trim == "2")
     assert(psql("ul_tgt2", "SELECT count(*) FROM ulparent")._2.trim == "2")
@@ -673,7 +673,7 @@ class PgInteropSpec extends SparkSpec {
     // --create: the DATABASE entry (stored unconditionally, like real
     // pg_dump) stands the target up via the maintenance connection
     assert(psql("flagtgt", "SELECT 1")._1 != 0, "target must not pre-exist")
-    graft.sources.PgRestore.restore(arch, Seq("-d", conn), create = true)
+    graft.sources.PgRestore.restore(arch, Seq("-d", conn), Options(create = true))
     assert(psql("flagtgt", "SELECT count(*) FROM good")._2.trim == "40")
 
     // poison `bad`: re-create it with a PRIMARY KEY the archive's
@@ -685,7 +685,7 @@ class PgInteropSpec extends SparkSpec {
     // WITH -e (exitOnError): first failure aborts the restore
     val e = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-        dataOnly = true, exitOnError = true)
+        Options(dataOnly = true), exitOnError = true)
     }
     assert(e.getMessage.contains("COPY bad failed"), e.getMessage)
 
@@ -693,7 +693,7 @@ class PgInteropSpec extends SparkSpec {
     // back, the wave continues, and the run closes with the summary line
     psql("flagtgt", "DELETE FROM good")
     val lines = graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      dataOnly = true, exitOnError = false)
+      Options(dataOnly = true), exitOnError = false)
     assert(lines.exists(_.startsWith("errors ignored on restore:")), lines)
     // the returned log is the SUCCESS record: the healthy table reads
     // as restored, the failed one must NOT
@@ -709,7 +709,7 @@ class PgInteropSpec extends SparkSpec {
     // drops it first so the replay into a non-empty target succeeds
     psql("flagtgt", "INSERT INTO good VALUES (999, 'stale')")
     graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      clean = true, tables = Seq("good"), exitOnError = true)
+      Options(clean = true, tables = Seq("good")), exitOnError = true)
     assert(psql("flagtgt", "SELECT count(*), max(k) FROM good")._2.trim == "40|40",
       "--clean must have dropped the stale row before re-creating")
     assert(psql("flagtgt", "SELECT count(*) FROM bad")._2.trim == "0",
@@ -719,11 +719,11 @@ class PgInteropSpec extends SparkSpec {
     // it, an empty (no-op) selection without it
     val s = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-        tables = Seq("nope"), strictNames = true)
+        Options(tables = Seq("nope"), strictNames = true))
     }
     assert(s.getMessage.contains("\"nope\" not found"), s.getMessage)
     assert(graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      tables = Seq("nope")).isEmpty, "non-strict unmatched selection is empty")
+      Options(tables = Seq("nope"))).isEmpty, "non-strict unmatched selection is empty")
 
     // maintenance-args derivation covers all conninfo shapes
     assert(graft.sources.PgRestore.maintenanceArgs(
@@ -781,7 +781,8 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE owntgt2")
     val l2 = graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=owntgt2 user=graft"),
-      exitOnError = false, noOwner = true, noPrivileges = true)
+      Options(noOwner = true, noPrivileges = true),
+      exitOnError = false)
     assert(!l2.exists(_.startsWith("errors ignored")), l2)
     assert(psql("owntgt2", "SELECT count(*) FROM ot")._2.trim == "1")
     assert(psql("owntgt2",
@@ -830,7 +831,7 @@ class PgInteropSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch,
         Seq("-d", s"host=$sockDir dbname=scr3 user=graft"),
-        dataOnly = true, singleTransaction = true)
+        Options(dataOnly = true, singleTransaction = true))
     }
     assert(e.getMessage.contains("rolled back"), e.getMessage)
     assert(psql("scr3", "SELECT count(*) FROM sgood")._2.trim == "0",
@@ -838,7 +839,7 @@ class PgInteropSpec extends SparkSpec {
     // contrast: the default wave restore lands sgood and skips sbad
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=scr3 user=graft"),
-      dataOnly = true, exitOnError = false)
+      Options(dataOnly = true), exitOnError = false)
     assert(psql("scr3", "SELECT count(*) FROM sgood")._2.trim == "30")
     assert(psql("scr3", "SELECT count(*) FROM sbad")._2.trim == "0")
     // and a CLEAN single-transaction run applies everything atomically
@@ -847,7 +848,7 @@ class PgInteropSpec extends SparkSpec {
     psql("scr3", "CREATE TABLE sbad(k bigint, v text)")
     val ok = graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=scr3 user=graft"),
-      dataOnly = true, singleTransaction = true)
+      Options(dataOnly = true, singleTransaction = true))
     assert(ok.exists(_.startsWith("single transaction:")), ok)
     assert(psql("scr3", "SELECT count(*) FROM sgood")._2.trim == "30")
     assert(psql("scr3", "SELECT count(*) FROM sbad")._2.trim == "2")
@@ -855,7 +856,7 @@ class PgInteropSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch,
         Seq("-d", s"host=$sockDir dbname=scr3 user=graft"),
-        singleTransaction = true, create = true)
+        Options(singleTransaction = true, create = true))
     }
     // -1 + --disable-triggers: the session SET rides at the top of the
     // rendered script, so a row-mangling trigger on the target must NOT
@@ -868,7 +869,7 @@ class PgInteropSpec extends SparkSpec {
       "CREATE TRIGGER sgood_mangle BEFORE INSERT ON sgood FOR EACH ROW EXECUTE FUNCTION mangle()")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=scr3 user=graft"),
-      dataOnly = true, singleTransaction = true, disableTriggers = true)
+      Options(dataOnly = true, singleTransaction = true), disableTriggers = true)
     assert(psql("scr3", "SELECT count(*) FROM sgood WHERE v = 'X'")._2.trim == "0",
       "--disable-triggers under -1 must suppress the trigger")
     assert(psql("scr3", "SELECT count(*) FROM sgood")._2.trim == "30")
@@ -877,14 +878,14 @@ class PgInteropSpec extends SparkSpec {
     psql("scr3", "DELETE FROM sgood"); psql("scr3", "DELETE FROM sbad")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=scr3 user=graft"),
-      dataOnly = true, singleTransaction = true)
+      Options(dataOnly = true, singleTransaction = true))
     assert(psql("scr3", "SELECT count(*) FROM sgood WHERE v = 'X'")._2.trim == "30")
     // scripts hooks cannot ride the -1 script detour — rejected loudly,
     // never silently skipped
     val sErr = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch,
         Seq("-d", s"host=$sockDir dbname=scr3 user=graft"),
-        singleTransaction = true,
+        Options(singleTransaction = true),
         scripts = Map("pre-data" -> Seq(graft.sources.PgRestore.Script(
           "x", "before", query = Some("SELECT 1")))))
     }
@@ -919,7 +920,7 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE feattgt2")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=feattgt2 user=graft"),
-      noPublications = true, exitOnError = true)
+      Options(noPublications = true), exitOnError = true)
     assert(psql("feattgt2",
       "SELECT count(*) FROM pg_publication WHERE pubname='ftpub'")._2.trim == "0")
     assert(psql("feattgt2", "SELECT count(*) FROM ft")._2.trim == "1")
@@ -930,7 +931,7 @@ class PgInteropSpec extends SparkSpec {
     psql("feattgt3", "CREATE TABLE ft(k int, v text)")
     val selLines = graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=feattgt3 user=graft"),
-      functions = Seq("bump"), triggers = Seq("ft_bump"), exitOnError = true)
+      Options(functions = Seq("bump"), triggers = Seq("ft_bump")), exitOnError = true)
     assert(psql("feattgt3",
       "SELECT count(*) FROM pg_proc WHERE proname='bump'")._2.trim == "1",
       s"restore replayed: ${selLines.mkString("; ")}")
@@ -945,7 +946,7 @@ class PgInteropSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch,
         Seq("-d", s"host=$sockDir dbname=feattgt3 user=graft"),
-        functions = Seq("nope"), strictNames = true)
+        Options(functions = Seq("nope"), strictNames = true))
     }
     assert(e.getMessage.contains("function \"nope\" not found"), e.getMessage)
 
@@ -958,7 +959,7 @@ class PgInteropSpec extends SparkSpec {
     psql("rlstgt", "CREATE POLICY allow_all ON ft FOR ALL USING (true) WITH CHECK (true)")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=rlstgt user=graft"),
-      dataOnly = true, enableRowSecurity = true, exitOnError = false,
+      Options(dataOnly = true), enableRowSecurity = true, exitOnError = false,
       noDataForFailedTables = false)
     assert(psql("rlstgt", "SELECT count(*) FROM ft")._2.trim == "1")
   }
@@ -984,7 +985,7 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE nstgt1")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=nstgt1 user=graft"),
-      schemaOnly = true, exitOnError = true)
+      Options(schemaOnly = true), exitOnError = true)
     assert(psql("nstgt1", "SELECT count(*) FROM s1.t1")._2.trim == "0")
     assert(psql("nstgt1", "SELECT count(*) FROM s2.t2")._2.trim == "0",
       "-s must create every table empty")
@@ -1000,7 +1001,7 @@ class PgInteropSpec extends SparkSpec {
     psql("nstgt2", "CREATE SCHEMA s1")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=nstgt2 user=graft"),
-      schemas = Seq("s1"), noComments = true, exitOnError = true)
+      Options(schemas = Seq("s1"), noComments = true), exitOnError = true)
     assert(psql("nstgt2", "SELECT count(*) FROM s1.t1")._2.trim == "2")
     assert(psql("nstgt2", "SELECT count(*) FROM s2.t2")._1 != 0,
       "-n s1 must not create s2 objects")
@@ -1011,7 +1012,7 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE nstgt3")
     graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=nstgt3 user=graft"),
-      excludeSchemas = Seq("s2"), exitOnError = true)
+      Options(excludeSchemas = Seq("s2")), exitOnError = true)
     assert(psql("nstgt3", "SELECT count(*) FROM s1.t1")._2.trim == "2")
     assert(psql("nstgt3", "SELECT count(*) FROM s2.t2")._1 != 0)
 
@@ -1019,14 +1020,14 @@ class PgInteropSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch,
         Seq("-d", s"host=$sockDir dbname=nstgt3 user=graft"),
-        schemas = Seq("nope"), strictNames = true)
+        Options(schemas = Seq("nope"), strictNames = true))
     }
     assert(e.getMessage.contains("\"nope\" not found"), e.getMessage)
     // -s and -a are mutually exclusive (native)
     intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch,
         Seq("-d", s"host=$sockDir dbname=nstgt3 user=graft"),
-        schemaOnly = true, dataOnly = true)
+        Options(schemaOnly = true, dataOnly = true))
     }
   }
 
@@ -1070,16 +1071,16 @@ class PgInteropSpec extends SparkSpec {
     // (counted, continue-mode) — with it the drop is a clean no-op
     val e = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-        clean = true, exitOnError = true)
+        Options(clean = true), exitOnError = true)
     }
     assert(e.getMessage.contains("DROP for"), e.getMessage)
     val lines = graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      clean = true, ifExists = true, exitOnError = true)
+      Options(clean = true, ifExists = true), exitOnError = true)
     assert(!lines.exists(_.startsWith("errors ignored")), lines)
     assert(psql("ietgt", "SELECT count(*) FROM ietab")._2.trim == "10")
     // idempotent now: clean+if-exists replays over the populated target
     graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      clean = true, ifExists = true, exitOnError = true)
+      Options(clean = true, ifExists = true), exitOnError = true)
     assert(psql("ietgt", "SELECT count(*) FROM ietab")._2.trim == "10")
 
     // the textual rewrite itself (native pg_backup_archiver shape)
@@ -1098,14 +1099,14 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE sectgt")
     val connS = s"host=$sockDir dbname=sectgt user=graft"
     graft.sources.PgRestore.restore(arch, Seq("-d", connS),
-      section = Some("pre-data"), exitOnError = true)
+      Options(section = Some("pre-data")), exitOnError = true)
     assert(psql("sectgt", "SELECT count(*) FROM ietab")._2.trim == "0",
       "--section=pre-data must move no data")
     graft.sources.PgRestore.restore(arch, Seq("-d", connS),
-      section = Some("data"), exitOnError = true)
+      Options(section = Some("data")), exitOnError = true)
     assert(psql("sectgt", "SELECT count(*) FROM ietab")._2.trim == "10")
     intercept[IllegalArgumentException](graft.sources.PgRestore.restore(
-      arch, Seq("-d", connS), section = Some("nope")))
+      arch, Seq("-d", connS), Options(section = Some("nope"))))
 
     // --no-data-for-failed-tables: a table whose CREATE failed (already
     // exists, holding its OWN rows) must not get archive data appended
@@ -1190,7 +1191,8 @@ class PgInteropSpec extends SparkSpec {
     assert(e.getMessage.contains("graftts"), e.getMessage)
     // with it: everything lands in the target's default tablespace
     graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      exitOnError = true, noTablespaces = true)
+      Options(noTablespaces = true),
+      exitOnError = true)
     assert(psql("tstgt", "SELECT count(*) FROM tst")._2.trim == "3")
 
     // script form: SETs synthesized from the TOC fields, change-tracked;
@@ -1198,7 +1200,7 @@ class PgInteropSpec extends SparkSpec {
     def script(noTs: Boolean, noAm: Boolean): String = {
       val bos = new java.io.ByteArrayOutputStream()
       graft.sources.PgRestore.toScript(arch, bos,
-        noTablespaces = noTs, noTableAccessMethod = noAm)
+        Options(noTablespaces = noTs, noTableAccessMethod = noAm))
       bos.toString("UTF-8")
     }
     val full = script(noTs = false, noAm = false)
@@ -1217,7 +1219,8 @@ class PgInteropSpec extends SparkSpec {
     System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
     try graft.sources.PgRestore.restore(arch,
       Seq("-d", s"host=$sockDir dbname=tstgt2 user=graft"),
-      exitOnError = true, noTablespaces = true, verbose = true)
+      Options(noTablespaces = true),
+      exitOnError = true, verbose = true)
     finally System.setErr(oldErr)
     val narr = errBuf.toString("UTF-8")
     assert(narr.contains("creating TABLE"), narr.take(400))
@@ -1246,6 +1249,10 @@ class PgInteropSpec extends SparkSpec {
     psql("rich", "COMMENT ON COLUMN a.t1.v IS 'a column'")
     psql("rich", "GRANT SELECT ON a.t2 TO PUBLIC")
     psql("rich", "CREATE PUBLICATION richpub FOR TABLE a.t1")
+    // SECTION_NONE entries that pg_dump places after post-data ones:
+    // each must slide into post-data, behind the object it annotates
+    psql("rich", "COMMENT ON INDEX a.idx_t2 IS 'an index'")
+    psql("rich", "COMMENT ON CONSTRAINT t1_pkey ON a.t1 IS 'a key'")
     val arch = s"$base/rich_arch"
     val (rcD, outD) = asPg(s"PGHOST=$sockDir PGUSER=graft " +
       s"/usr/bin/pg_dump -Fd -d rich -f $arch")
@@ -1261,55 +1268,55 @@ class PgInteropSpec extends SparkSpec {
     }
     val combos: Seq[(String, () => Seq[Int])] = Seq(
       "" -> (() => PgRestore.listSelectedIds(arch)),
-      "-a" -> (() => PgRestore.listSelectedIds(arch, dataOnly = true)),
-      "-s" -> (() => PgRestore.listSelectedIds(arch, schemaOnly = true)),
-      "-t t1" -> (() => PgRestore.listSelectedIds(arch, tables = Seq("t1"))),
+      "-a" -> (() => PgRestore.listSelectedIds(arch, Options(dataOnly = true))),
+      "-s" -> (() => PgRestore.listSelectedIds(arch, Options(schemaOnly = true))),
+      "-t t1" -> (() => PgRestore.listSelectedIds(arch, Options(tables = Seq("t1")))),
       "-t t1 -t t2" -> (() =>
-        PgRestore.listSelectedIds(arch, tables = Seq("t1", "t2"))),
-      "-t nope" -> (() => PgRestore.listSelectedIds(arch, tables = Seq("nope"))),
-      "-n a" -> (() => PgRestore.listSelectedIds(arch, schemas = Seq("a"))),
-      "-n b" -> (() => PgRestore.listSelectedIds(arch, schemas = Seq("b"))),
+        PgRestore.listSelectedIds(arch, Options(tables = Seq("t1", "t2")))),
+      "-t nope" -> (() => PgRestore.listSelectedIds(arch, Options(tables = Seq("nope")))),
+      "-n a" -> (() => PgRestore.listSelectedIds(arch, Options(schemas = Seq("a")))),
+      "-n b" -> (() => PgRestore.listSelectedIds(arch, Options(schemas = Seq("b")))),
       "-N a" -> (() =>
-        PgRestore.listSelectedIds(arch, excludeSchemas = Seq("a"))),
+        PgRestore.listSelectedIds(arch, Options(excludeSchemas = Seq("a")))),
       "-n a -N b" -> (() => PgRestore.listSelectedIds(arch,
-        schemas = Seq("a"), excludeSchemas = Seq("b"))),
+        Options(schemas = Seq("a"), excludeSchemas = Seq("b")))),
       "-I idx_t2" -> (() =>
-        PgRestore.listSelectedIds(arch, indexes = Seq("idx_t2"))),
+        PgRestore.listSelectedIds(arch, Options(indexes = Seq("idx_t2")))),
       "-P 'f1(integer)'" -> (() =>
-        PgRestore.listSelectedIds(arch, functions = Seq("f1(integer)"))),
+        PgRestore.listSelectedIds(arch, Options(functions = Seq("f1(integer)")))),
       "-T 't1 tg1'" -> (() =>
-        PgRestore.listSelectedIds(arch, triggers = Seq("t1 tg1"))),
+        PgRestore.listSelectedIds(arch, Options(triggers = Seq("t1 tg1")))),
       "--section=pre-data" -> (() =>
-        PgRestore.listSelectedIds(arch, section = Some("pre-data"))),
+        PgRestore.listSelectedIds(arch, Options(section = Some("pre-data")))),
       "--section=data" -> (() =>
-        PgRestore.listSelectedIds(arch, section = Some("data"))),
+        PgRestore.listSelectedIds(arch, Options(section = Some("data")))),
       "--section=post-data" -> (() =>
-        PgRestore.listSelectedIds(arch, section = Some("post-data"))),
+        PgRestore.listSelectedIds(arch, Options(section = Some("post-data")))),
       "-a -t t1" -> (() =>
-        PgRestore.listSelectedIds(arch, dataOnly = true, tables = Seq("t1"))),
+        PgRestore.listSelectedIds(arch, Options(dataOnly = true, tables = Seq("t1")))),
       "-s -n a" -> (() =>
-        PgRestore.listSelectedIds(arch, schemaOnly = true, schemas = Seq("a"))),
+        PgRestore.listSelectedIds(arch, Options(schemaOnly = true, schemas = Seq("a")))),
       "--no-comments" -> (() =>
-        PgRestore.listSelectedIds(arch, noComments = true)),
+        PgRestore.listSelectedIds(arch, Options(noComments = true))),
       "-t t1 --section=data" -> (() => PgRestore.listSelectedIds(arch,
-        tables = Seq("t1"), section = Some("data"))),
+        Options(tables = Seq("t1"), section = Some("data")))),
       "-n a -t t1" -> (() => PgRestore.listSelectedIds(arch,
-        schemas = Seq("a"), tables = Seq("t1"))),
-      "-t v1" -> (() => PgRestore.listSelectedIds(arch, tables = Seq("v1"))),
+        Options(schemas = Seq("a"), tables = Seq("t1")))),
+      "-t v1" -> (() => PgRestore.listSelectedIds(arch, Options(tables = Seq("v1")))),
       "-t t1_k_seq" -> (() =>
-        PgRestore.listSelectedIds(arch, tables = Seq("t1_k_seq"))),
-      "-C" -> (() => PgRestore.listSelectedIds(arch, create = true)),
+        PgRestore.listSelectedIds(arch, Options(tables = Seq("t1_k_seq")))),
+      "-C" -> (() => PgRestore.listSelectedIds(arch, Options(create = true))),
       "-C -a" -> (() =>
-        PgRestore.listSelectedIds(arch, create = true, dataOnly = true)),
-      "-t t2" -> (() => PgRestore.listSelectedIds(arch, tables = Seq("t2"))),
+        PgRestore.listSelectedIds(arch, Options(create = true, dataOnly = true))),
+      "-t t2" -> (() => PgRestore.listSelectedIds(arch, Options(tables = Seq("t2")))),
       "-t t2 --no-privileges" -> (() => PgRestore.listSelectedIds(arch,
-        tables = Seq("t2"), noPrivileges = true)),
+        Options(tables = Seq("t2"), noPrivileges = true))),
       "--no-privileges" -> (() =>
-        PgRestore.listSelectedIds(arch, noPrivileges = true)),
+        PgRestore.listSelectedIds(arch, Options(noPrivileges = true))),
       "--no-publications" -> (() =>
-        PgRestore.listSelectedIds(arch, noPublications = true)),
+        PgRestore.listSelectedIds(arch, Options(noPublications = true))),
       "-n a --no-comments -a" -> (() => PgRestore.listSelectedIds(arch,
-        schemas = Seq("a"), noComments = true, dataOnly = true)))
+        Options(schemas = Seq("a"), noComments = true, dataOnly = true))))
     val failures = combos.flatMap { case (flags, ours) =>
       val n = nativeIds(flags)
       val o = ours()
@@ -1322,9 +1329,71 @@ class PgInteropSpec extends SparkSpec {
     val (rcN, outN) = sh(s"/usr/bin/pg_restore -l -t nope --strict-names $arch")
     assert(rcN != 0 && outN.contains("\"nope\" not found"), outN)
     val e = intercept[IllegalArgumentException] {
-      PgRestore.listSelectedIds(arch, tables = Seq("nope"), strictNames = true)
+      PgRestore.listSelectedIds(arch, Options(tables = Seq("nope"), strictNames = true))
     }
     assert(e.getMessage.contains("\"nope\" not found"), e.getMessage)
+
+    // the same archive restored into empty databases three ways — direct
+    // with -e, the -f script through psql ON_ERROR_STOP, and -1 — lands
+    // the schema native pg_restore -d lands, the post-data COMMENTs
+    // included (pg_dump 15.14+ brackets its output with a random
+    // \restrict key, so those two lines are dropped before comparing)
+    def schemaOf(db: String): String = {
+      val (rc, out) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_dump --schema-only -d $db")
+      assert(rc == 0, out)
+      out.linesIterator.filterNot(l => l.startsWith("\\restrict") ||
+        l.startsWith("\\unrestrict")).mkString("\n")
+    }
+    def conn(db: String): Seq[String] = Seq("-d", s"host=$sockDir dbname=$db user=graft")
+    for (db <- Seq("rich_native", "rich_direct", "rich_script", "rich_1tx"))
+      psql("postgres", s"CREATE DATABASE $db")
+    val (rcR, outR) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_restore -d rich_native $arch")
+    assert(rcR == 0, outR)
+    PgRestore.restore(arch, conn("rich_direct"), exitOnError = true)
+    val script = s"$base/rich.sql"
+    val os = java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(script))
+    try PgRestore.toScript(arch, os) finally os.close()
+    val (rcS, outS) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/psql -X -q " +
+      s"-v ON_ERROR_STOP=1 -d rich_script -f $script")
+    assert(rcS == 0, outS)
+    PgRestore.restore(arch, conn("rich_1tx"), Options(singleTransaction = true))
+    val want = schemaOf("rich_native")
+    assert(want.contains("COMMENT ON CONSTRAINT t1_pkey ON a.t1") &&
+      want.contains("COMMENT ON INDEX a.idx_t2"), want)
+    for (db <- Seq("rich_direct", "rich_script", "rich_1tx"))
+      assert(schemaOf(db) == want, s"$db: schema differs from native pg_restore -d")
+  }
+
+  test("pg-restore -f / -1: a missing payload fails as on the direct path") {
+    live()
+    psql("postgres", "CREATE DATABASE mp_src")
+    psql("mp_src", "CREATE TABLE t(k int PRIMARY KEY, v text)")
+    psql("mp_src", "INSERT INTO t SELECT g, 'v' || g FROM generate_series(1, 20) g")
+    val arch = s"$base/mp_arch"
+    val (rcD, outD) = asPg(s"PGHOST=$sockDir PGUSER=graft " +
+      s"/usr/bin/pg_dump -Fd -d mp_src -f $arch")
+    assert(rcD == 0, outD)
+    sh(s"chmod -R a+rX $arch")
+    val data = PgToc.readFile(s"$arch/toc.dat").entries
+      .find(_.desc.contains("TABLE DATA")).get
+    assert(graft.sources.Compress.probeFile(arch, data.fileName.get).get.delete())
+    import graft.sources.PgRestore
+    def missing(restore: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](restore)
+      assert(e.getMessage.contains(s"missing payload ${data.fileName.get}"), e.getMessage)
+    }
+    psql("postgres", "CREATE DATABASE mp_tgt")
+    val conn = Seq("-d", s"host=$sockDir dbname=mp_tgt user=graft")
+    // -1 must not commit an empty table and report success
+    missing(PgRestore.restore(arch, conn, Options(singleTransaction = true)))
+    assert(psql("mp_tgt", "SELECT to_regclass('public.t') IS NULL")._2.trim == "t",
+      "a failed single-transaction restore must apply nothing")
+    missing(PgRestore.toScript(arch, new java.io.ByteArrayOutputStream()))
+    missing(PgRestore.restore(arch, conn, exitOnError = true))
+    // native pg_restore -1 refuses the same archive
+    psql("postgres", "CREATE DATABASE mp_native")
+    val (rcN, outN) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_restore -1 -d mp_native $arch")
+    assert(rcN != 0 && outN.contains("could not open input file"), outN)
   }
 
   test("restore wave pool: poisoned-wave semantics, exact error count, idle watchdog") {
@@ -1350,7 +1419,7 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE wavetgt")
     val conn = s"host=$sockDir dbname=wavetgt user=graft"
     graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      schemaOnly = true, exitOnError = true)
+      Options(schemaOnly = true), exitOnError = true)
     // poison the PARENT: a PK + a pre-seeded duplicate make its COPY fail
     psql("wavetgt", "DROP TABLE wparent")
     psql("wavetgt", "CREATE TABLE wparent(k bigint PRIMARY KEY, v text)")
@@ -1360,7 +1429,7 @@ class PgInteropSpec extends SparkSpec {
     // never starts
     val e1 = intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-        dataOnly = true, exitOnError = true, jobs = 4)
+        Options(dataOnly = true), exitOnError = true, jobs = 4)
     }
     assert(e1.getMessage.contains("COPY wparent failed"), e1.getMessage)
     assert(psql("wavetgt", "SELECT count(*) FROM wchild")._2.trim == "0",
@@ -1371,7 +1440,7 @@ class PgInteropSpec extends SparkSpec {
     // the closing count is EXACT
     psql("wavetgt", "DELETE FROM waux"); psql("wavetgt", "DELETE FROM wchild")
     val lines = graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-      dataOnly = true, exitOnError = false, jobs = 4)
+      Options(dataOnly = true), exitOnError = false, jobs = 4)
     assert(lines.contains("TABLE DATA wchild") && lines.contains("TABLE DATA waux"), lines)
     assert(!lines.contains("TABLE DATA wparent"), lines)
     assert(lines.last == "errors ignored on restore: 1", lines)
@@ -1400,7 +1469,7 @@ class PgInteropSpec extends SparkSpec {
       val t0 = System.nanoTime()
       val e2 = intercept[IllegalArgumentException] {
         graft.sources.PgRestore.restore(arch, Seq("-d", conn),
-          dataOnly = true, exitOnError = true, tables = Seq("waux"),
+          Options(dataOnly = true, tables = Seq("waux")), exitOnError = true,
           watchdogSec = 2)
       }
       assert(e2.getMessage.contains("lock timeout"), e2.getMessage)
@@ -1538,7 +1607,7 @@ class PgInteropSpec extends SparkSpec {
     assert(!tocD.entries.exists(e => e.desc.contains("TABLE") &&
       !e.desc.contains("TABLE DATA")), "no DDL entries in -a")
     graft.sources.PgRestore.restore(archD,
-      Seq("-d", s"host=$sockDir dbname=sectgt1 user=graft"), dataOnly = true)
+      Seq("-d", s"host=$sockDir dbname=sectgt1 user=graft"), Options(dataOnly = true))
     assert(psql("sectgt1", "SELECT count(*), max(id) FROM sec_t")._2.trim == "50|50")
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.{Manifest, ManifestEntry, PgToc}
 import graft.pipeline.PgToc.{Compression, Crtm, Entry, Header, Toc}
+import graft.sources.PgRestore.Options
 
 /** pg_restore-compatible TOC codec: byte round-trips at both supported
   * gate extremes, corruption rejection, and — when the real pg_restore
@@ -120,7 +121,7 @@ class PgTocSpec extends AnyFunSuite {
     // a listed id the archive doesn't know fails loudly BEFORE any SQL
     // (reference message shape, cmd/restore.go:337)
     val ex = intercept[IllegalArgumentException](
-      PgRestore.restore(dir, Seq("-d", "unused"), useList = Some(Seq(99))))
+      PgRestore.restore(dir, Seq("-d", "unused"), Options(useList = Some(Seq(99)))))
     assert(ex.getMessage.contains("dump id 99"))
   }
 
@@ -193,9 +194,13 @@ class PgTocSpec extends AnyFunSuite {
         defn = Some("ALTER DATABASE testdb SET work_mem TO '64MB';\n"),
         dependencies = Seq(10)) +: base.entries)
     PgToc.writeFile(withProps, s"$dir/toc.dat")
+    // every TABLE DATA entry needs its payload: the script path fails
+    // on a missing one, like the direct path
+    for (f <- Seq("customer.dat", "orders.dat"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, f), "\\.\n")
     def script(create: Boolean): String = {
       val bos = new java.io.ByteArrayOutputStream()
-      PgRestore.toScript(dir, bos, create = create)
+      PgRestore.toScript(dir, bos, Options(create = create))
       bos.toString("UTF-8")
     }
     val plain = script(create = false)
@@ -207,10 +212,44 @@ class PgTocSpec extends AnyFunSuite {
     // -c must not render a DROP for either session-level entry
     val cleaned = {
       val bos = new java.io.ByteArrayOutputStream()
-      PgRestore.toScript(dir, bos, clean = true)
+      PgRestore.toScript(dir, bos, Options(clean = true))
       bos.toString("UTF-8")
     }
     assert(!cleaned.contains("DROP DATABASE"), cleaned)
+  }
+
+  test("pre-1.11 archives replay by the sections native ReadToc infers from desc") {
+    import graft.sources.PgRestore
+    // a v1.10 TOC stores no section: every entry reads back SECTION_NONE,
+    // and only the desc says where it belongs
+    val dir = java.nio.file.Files.createTempDirectory("legacytoc").toString
+    val entries = Seq(
+      Entry(dumpId = 1, tag = Some("t"), desc = Some("TABLE"),
+        namespace = Some("public"), owner = Some("graft"),
+        defn = Some("CREATE TABLE public.t (k integer);\n")),
+      Entry(dumpId = 2, hadDumper = 1, tag = Some("t"), desc = Some("TABLE DATA"),
+        namespace = Some("public"), owner = Some("graft"),
+        copyStmt = Some("COPY public.t (k) FROM stdin;\n"),
+        dependencies = Seq(1), fileName = Some("2.dat")),
+      Entry(dumpId = 3, tag = Some("t_k"), desc = Some("INDEX"),
+        namespace = Some("public"), owner = Some("graft"),
+        defn = Some("CREATE INDEX t_k ON public.t USING btree (k);\n"),
+        dependencies = Seq(1)),
+      Entry(dumpId = 4, tag = Some("INDEX t_k"), desc = Some("COMMENT"),
+        namespace = Some("public"), owner = Some("graft"),
+        defn = Some("COMMENT ON INDEX public.t_k IS 'k';\n"),
+        dependencies = Seq(3)))
+    PgToc.writeFile(fixtureToc(10).copy(entries = entries), s"$dir/toc.dat")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "2.dat"), "1\n\\.\n")
+    val bos = new java.io.ByteArrayOutputStream()
+    PgRestore.toScript(dir, bos)
+    val script = bos.toString("UTF-8")
+    val at = Seq("CREATE TABLE", "COPY public.t", "CREATE INDEX", "COMMENT ON INDEX")
+      .map(script.indexOf(_))
+    assert(at.forall(_ >= 0) && at == at.sorted, script)
+    assert(PgRestore.listSelectedIds(dir, Options(section = Some("data"))) == Seq(2))
+    assert(PgRestore.listSelectedIds(dir, Options(section = Some("post-data"))) ==
+      Seq(3, 4))
   }
 
   test("real pg_restore -l accepts and lists our archive") {

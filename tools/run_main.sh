@@ -1,9 +1,14 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes — no sbt
 # lock contention with a concurrent `sbt test`. Usage:
-#   tools/run_main.sh graft.ScaleFixture /root/testdata/sf0.1 /tmp/x 10
+#   tools/run_main.sh graft.ScaleFixture <sf dir> <out dir> 10
+# The classes are those of the checkout this script sits in, so a second
+# checkout (say, of a parent commit for an A/B) runs its own build.
 set -euo pipefail
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+# the Spark jars the build compiles against (build.sbt's unmanagedBase)
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$REPO/build.sbt")"
+CP="$REPO/target/scala-2.13/classes:$(ls "$JARS"/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
