@@ -128,16 +128,22 @@ object Lifecycle {
         s""""tocFileSize":$tocSize,"files":${all.length}}""")
   }
 
+  /** The dump verbs' validation gate (validate.go semantics): print every
+    * warning, abort on any error before a payload is written. */
+  private def requireValid(verb: String, warnings: Seq[ValidationWarning]): Unit = {
+    warnings.foreach(w => System.err.println(s"[${w.severity}] ${w.table}.${w.column}: ${w.msg}"))
+    require(!warnings.exists(_.severity == "error"), s"$verb: validation errors — aborting")
+  }
+
   def dump(spark: SparkSession, configJson: String, sfDir: String, outDir: String): Manifest =
     withHeartbeat(outDir)(dumpBody(spark, configJson, sfDir, outDir))
 
   private def dumpBody(spark: SparkSession, configJson: String, sfDir: String,
                        outDir: String): Manifest = {
     val configs = ConfigLoader.fromJson(configJson)
-    // 1. validation gate (validate.go semantics: fatal on errors)
-    val warnings = configs.flatMap(c => Planner.validate(Catalog.load(spark, sfDir, c.table), c))
-    warnings.foreach(w => System.err.println(s"[${w.severity}] ${w.table}.${w.column}: ${w.msg}"))
-    require(!warnings.exists(_.severity == "error"), "dump: validation errors — aborting")
+    // 1. validation gate
+    requireValid("dump",
+      configs.flatMap(c => Planner.validate(Catalog.load(spark, sfDir, c.table), c)))
     // 2. subset closure over the configured conds
     val dfs = configs.map(c => c.table -> Catalog.load(spark, sfDir, c.table)).toMap
     val conds = configs.map(c => c.table -> c.subsetConds).toMap
@@ -175,23 +181,6 @@ object Lifecycle {
     manifest
   }
 
-  /** The reference's own one-command workflow (`greenmask dump`): ingest
-    * each configured table FROM a live PostgreSQL over the COPY protocol
-    * (`sources/PgSource` via psql — no JDBC driver needed), apply the
-    * config's masking plan, and write a pg_restore-loadable directory
-    * archive. `pg_restore -d <target> <outDir>` then stands up the
-    * masked copy. `conninfo` is a libpq string, e.g.
-    * "host=/sockdir dbname=src user=graft".
-    *
-    * Schema fidelity: when the `pg_dump` client binary is present (and
-    * `schemaFromSource`), the archive's schema sections come from a REAL
-    * `pg_dump --schema-only -Fd` of the source merged with our masked
-    * data entries ([[PgToc.dumpArchiveMerged]]; the reference does
-    * exactly this, `cmd/dump.go:212-251,551-590`) — so restoring into an
-    * EMPTY database reproduces primary keys, indexes, FK constraints,
-    * defaults, sequences, comments and ACLs, with sequence positions
-    * replayed from `pg_sequences`. Without the binary it falls back to
-    * CREATE TABLE DDL generated from the Spark schema (bare tables). */
   /** Guard for [[pgDump]]'s partition expansion: the config-named
     * partitioned tables must have pairwise-disjoint leaf sets. Naming a
     * root AND a sub-partitioned descendant in the same config is
@@ -230,6 +219,24 @@ object Lifecycle {
       case _ => Nil
     }
 
+  /** The reference's own one-command workflow (`greenmask dump`): ingest
+    * each configured table FROM a live PostgreSQL over the COPY protocol
+    * (`sources/PgSource` via psql — no JDBC driver needed), apply the
+    * config's masking plan, and write a pg_restore-loadable directory
+    * archive. `pg_restore -d <target> <outDir>` then stands up the
+    * masked copy. `conninfo` is a libpq string, e.g.
+    * "host=/sockdir dbname=src user=graft".
+    *
+    * Schema fidelity: the masked data is spliced into a schema TOC by
+    * the one archive writer, [[PgToc.dumpArchiveMerged]] (the reference
+    * does exactly this, `cmd/dump.go:212-251,551-590`). When the
+    * `pg_dump` client binary is present (and `schemaFromSource`), that
+    * TOC is a REAL `pg_dump --schema-only -Fd` of the source — so
+    * restoring into an EMPTY database reproduces primary keys, indexes,
+    * FK constraints, defaults, sequences, comments and ACLs, with
+    * sequence positions replayed from `pg_sequences`. Without the binary
+    * it is [[PgToc.generatedSchemaToc]]'s CREATE TABLE DDL from the
+    * Spark schema (bare tables). */
   def pgDump(spark: SparkSession, configJson: String, conninfo: String,
              outDir: String,
              schemaFromSource: Boolean = true,
@@ -296,19 +303,22 @@ object Lifecycle {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val masked =
+    val frames =
       if (sections == "schema-only") Nil
       else configs.map { cfg =>
         // subset conds push into the COPY's SELECT: the SOURCE SERVER
         // filters, so a subset dump moves only the subset's bytes
         cfg -> Future(graft.sources.PgSource.table(spark, psqlArgs, cfg.table,
           conds = cfg.subsetConds, slices = cfg.dumpSlices))
-      }.map { case (cfg, fut) =>
-        cfg.table -> Planner.plan(Await.result(fut, Duration.Inf),
-          cfg.copy(subsetConds = Nil))
-      }
-    val dbName = "\\bdbname=(\\S+)".r.findFirstMatchIn(conninfo)
-      .map(_.group(1)).getOrElse("graft")
+      }.map { case (cfg, fut) => cfg -> Await.result(fut, Duration.Inf) }
+    // dump's gate, minus the allowed-type check: COPY frames are
+    // string-typed, so only a transform on a missing column (which
+    // Planner.plan would skip, leaving the column unmasked) is an error
+    requireValid("pg-dump",
+      frames.flatMap { case (cfg, df) => Planner.unknownColumns(df, cfg) })
+    val masked = frames.map { case (cfg, df) =>
+      cfg.table -> Planner.plan(df, cfg.copy(subsetConds = Nil))
+    }
     // FK edges from the live catalog drive BOTH the TOC dependency ids
     // (what pg_restore's dependency sorter reads under -j) and the entry
     // ORDER (single-session pg_restore replays TOC order — parents must
@@ -321,41 +331,42 @@ object Lifecycle {
     val ordered = graft.subset.SubsetGraph.restoreOrder(names, edges)
       .flatten.map(n => n -> byName(n))
     val pgDumpBin = new java.io.File("/usr/bin/pg_dump")
+    val capture = schemaFromSource && pgDumpBin.canExecute && sections != "data-only"
     if (sections == "schema-only")
-      require(pgDumpBin.canExecute && schemaFromSource,
+      require(capture,
         "pg-dump --schema-only needs the pg_dump client binary " +
           "(schema fidelity comes from the real --schema-only archive)")
-    if (schemaFromSource && pgDumpBin.canExecute && sections != "data-only") {
-      // full-fidelity path: real schema-only archive of the source,
-      // masked data merged in (uncompressed so PgToc parses it plainly)
-      val schemaDir = Paths.get(outDir + ".schema")
-      if (Files.exists(schemaDir)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(schemaDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
-      }
-      val p = new ProcessBuilder((Seq(pgDumpBin.getPath, "-Fd",
-        "--schema-only", "--compress=0") ++ passthrough ++
-        Seq("-d", conninfo, "-f", schemaDir.toString)): _*)
-        .redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      require(p.waitFor() == 0, s"pg_dump --schema-only failed:\n$out")
-      val schemaToc = PgToc.readFile(s"$schemaDir/toc.dat")
-      locally { // scratch schema archive fully absorbed into the merge
-        import scala.jdk.CollectionConverters._
-        Files.walk(schemaDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
-      }
-      val sequences = graft.sources.PgSource.sequenceValues(psqlArgs)
-      PgToc.dumpArchiveMerged(ordered, outDir, schemaToc,
-        deps = deps, sequences = sequences, compress = compress,
-        copyTargets = copyRoots.toMap)
-    } else
-      // data-only (native -a shape: TABLE DATA, no DDL), or the
-      // no-binary fallback with Spark-DDL schema
-      graft.pipeline.PgToc.dumpArchive(ordered, outDir, dbName,
-        includeSchema = sections != "data-only", deps = deps,
-        compress = compress, copyTargets = copyRoots.toMap)
+    val schemaToc =
+      if (capture) {
+        // full-fidelity path: real schema-only archive of the source
+        // (uncompressed so PgToc parses it plainly), absorbed into the
+        // merge and deleted
+        val schemaDir = Paths.get(outDir + ".schema")
+        if (Files.exists(schemaDir)) rmTree(schemaDir)
+        val p = new ProcessBuilder((Seq(pgDumpBin.getPath, "-Fd",
+          "--schema-only", "--compress=0") ++ passthrough ++
+          Seq("-d", conninfo, "-f", schemaDir.toString)): _*)
+          .redirectErrorStream(true).start()
+        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+        require(p.waitFor() == 0, s"pg_dump --schema-only failed:\n$out")
+        try PgToc.readFile(s"$schemaDir/toc.dat") finally rmTree(schemaDir)
+      } else
+        // data-only (native -a shape: TABLE DATA, no DDL), or the
+        // no-binary fallback with Spark-DDL schema
+        PgToc.generatedSchemaToc(ordered,
+          dbName = "\\bdbname=(\\S+)".r.findFirstMatchIn(conninfo)
+            .map(_.group(1)).getOrElse("graft"),
+          deps = deps, includeSchema = sections != "data-only")
+    // sequence positions replay whenever data moves into a target that
+    // has the sequence DDL (the captured schema, or the pre-created
+    // tables a data-only restore needs), as native pg_dump / pg_dump -a
+    // do; the Spark-DDL fallback creates no sequences for a setval
+    val sequences =
+      if (sections == "data-only" || (sections == "all" && capture))
+        graft.sources.PgSource.sequenceValues(psqlArgs)
+      else Map.empty[String, Long]
+    PgToc.dumpArchiveMerged(ordered, outDir, schemaToc, deps = deps,
+      sequences = sequences, compress = compress, copyTargets = copyRoots.toMap)
   }
 
   /** validate --data: warnings + original-vs-transformed diff counts. */
@@ -695,7 +706,13 @@ object Lifecycle {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = LocalSession()
+    // started on first use: the pg-restore, pg-diff and dump-directory
+    // verbs never touch Spark, so they pay no session start
+    var session: Option[SparkSession] = None
+    def spark: SparkSession = session.getOrElse {
+      val s = LocalSession(); session = Some(s); s
+    }
+    def exit(code: Int): Nothing = { session.foreach(_.stop()); sys.exit(code) }
     args.toList match {
       case "dump" :: cfgPath :: sfDir :: outDir :: Nil =>
         dump(spark, Files.readString(Paths.get(cfgPath)), sfDir, outDir)
@@ -733,7 +750,7 @@ object Lifecycle {
             s"rows=$na/$nb fp=${ha.take(12)}/${hb.take(12)}")
           ok
         }
-        if (results.contains(false)) { spark.stop(); sys.exit(1) }
+        if (results.contains(false)) exit(1)
       case "pg-restore" :: archDir :: "--list" :: rest =>
         // `pg_restore -l` analog: emit the archive's restore list (edit +
         // feed back via --use-list for selective restore). Selection
@@ -828,7 +845,7 @@ object Lifecycle {
           .foreach(println)
       case "delete" :: root :: name :: Nil =>
         if (deleteDump(root, name)) println(s"deleted $name")
-        else { System.err.println(s"no dump named $name under $root"); sys.exit(1) }
+        else { System.err.println(s"no dump named $name under $root"); exit(1) }
       case "list-transformers" :: Nil => listTransformers().foreach(println)
       case "show-transformer" :: name :: Nil => println(showTransformer(name))
       case "curate" :: cfgPath :: sfDir :: outDir :: Nil =>
@@ -846,7 +863,7 @@ object Lifecycle {
             s"rule=${r.getInt(0)} ${r.getString(1)}/${r.getString(2)} " +
             s"observed=${r.getLong(4)}m")
         }
-        if (report.exists(!_.getBoolean(3))) { spark.stop(); sys.exit(1) }
+        if (report.exists(!_.getBoolean(3))) exit(1)
       case other =>
         System.err.println(
           "usage: dump <config.json> <sfDir> <outDir> | " +
@@ -873,8 +890,8 @@ object Lifecycle {
             "list-transformers | show-transformer <name> | " +
             "curate <config.json> <sfDir> <outDir> | " +
             "expect <rules.json> <sfDir> <table>")
-        sys.exit(2)
+        exit(2)
     }
-    spark.stop()
+    session.foreach(_.stop())
   }
 }

@@ -325,7 +325,7 @@ object PgToc {
     * data-section `BLOBS` entry (hadDumper=1, file `blobs.toc`, no
     * owner/namespace). Returns (pre-data entries, BLOBS data entry). */
   def blobTocEntries(oids: Seq[Long], acls: Map[Long, String],
-                     firstId: Int, owner: String): (Seq[Entry], Entry) = {
+                     firstId: Int, owner: Option[String]): (Seq[Entry], Entry) = {
     var id = firstId
     val pre = oids.flatMap { oid =>
       val blobId = id
@@ -335,7 +335,7 @@ object PgToc {
         section = SectionPreData,
         defn = Some(s"SELECT pg_catalog.lo_create('$oid');\n"),
         dropStmt = Some(s"SELECT pg_catalog.lo_unlink('$oid');\n"),
-        owner = Some(owner))
+        owner = owner)
       id += 1
       val acl = acls.get(oid).map { sql =>
         val e = Entry(
@@ -343,7 +343,7 @@ object PgToc {
           tag = Some(s"LARGE OBJECT $oid"), desc = Some("ACL"),
           section = SectionNone,
           defn = Some(if (sql.endsWith("\n")) sql else sql + "\n"),
-          owner = Some(owner), dependencies = Seq(blobId))
+          owner = owner, dependencies = Seq(blobId))
         id += 1
         e
       }
@@ -376,20 +376,59 @@ object PgToc {
     }.foreach(Await.result(_, Duration.Inf))
   }
 
-  /** Dump DataFrames as a COMPLETE pg_restore-loadable directory archive:
-    * `toc.dat` (a pre-data TABLE entry with CREATE TABLE DDL generated
-    * from the Spark schema when `includeSchema`, plus one TABLE DATA
-    * entry per table with explicit column lists in the COPY statements)
-    * and one `<dumpId>.dat` COPY-text data file per table
-    * (`CopyText.writeDatFile`). With schema entries,
-    * `pg_restore -d <db> <outDir>` alone creates the tables and loads
-    * the data — the reference's masked-dump -> pg_restore workflow,
-    * producible straight from Spark; data-only archives restore with
-    * `-a` into pre-created tables. `deps` maps child table -> parent
-    * tables for the TOC dependency ids (restore ordering). `compress`
-    * is a [[graft.sources.Compress]] spec ("none"/"gzip"/"lz4"/"zstd");
-    * lz4/zstd bump the archive version to 1.15, the first that can
-    * record them. */
+  /** The schema TOC a Spark-only archive implies: pg_dump's DATABASE
+    * entry (real pg_dump ALWAYS stores it, with and without -C —
+    * restore-time --create/-C decides whether to execute it) plus, when
+    * `includeSchema`, one pre-data TABLE entry per table with CREATE
+    * TABLE DDL generated from the Spark schema (bare tables: no keys,
+    * defaults or sequences). TABLE entries take ids 1..n in `tables`
+    * order, DATABASE n+1; `deps` (child -> parents) become TABLE->TABLE
+    * dependency ids. The v1.14 header is the PostgreSQL 15 shape.
+    * [[dumpArchiveMerged]] splices the data into it, exactly as into a
+    * real `pg_dump --schema-only` capture. */
+  def generatedSchemaToc(tables: Seq[(String, org.apache.spark.sql.DataFrame)],
+                         dbName: String,
+                         namespace: String = "public", owner: String = "graft",
+                         deps: Map[String, Seq[String]] = Map.empty,
+                         includeSchema: Boolean): Toc = {
+    // pg_dump-style identifier quoting: simple lower-case names pass
+    // through, everything else double-quotes — mixed-case Spark column
+    // names survive the generated DDL
+    def qi(n: String) = graft.sources.PgSource.quoteIdent(n)
+    val ids = tables.map(_._1).zipWithIndex.map { case (t, i) => t -> (i + 1) }.toMap
+    val tableEntries = if (!includeSchema) Nil else tables.map { case (table, df) =>
+      val cols = df.schema.fields
+        .map(f => s"    ${qi(f.name)} ${pgType(f.dataType)}").mkString(",\n")
+      Entry(
+        dumpId = ids(table), hadDumper = 0, oid = ids(table).toLong,
+        tag = Some(table), desc = Some("TABLE"),
+        section = SectionPreData,
+        defn = Some(s"CREATE TABLE ${qi(namespace)}.${qi(table)} (\n$cols\n);\n"),
+        dropStmt = Some(s"DROP TABLE ${qi(namespace)}.${qi(table)};\n"),
+        namespace = Some(namespace), tablespace = Some(""),
+        tableam = Some("heap"), relkind = 'r'.toByte,
+        owner = Some(owner),
+        dependencies = deps.getOrElse(table, Nil).flatMap(ids.get))
+    }
+    val dbId = tableEntries.size + 1
+    val dbEntry = Entry(
+      dumpId = dbId, hadDumper = 0, oid = dbId.toLong,
+      tag = Some(dbName), desc = Some("DATABASE"), section = SectionPreData,
+      defn = Some(s"CREATE DATABASE ${qi(dbName)};\n"),
+      dropStmt = Some(s"DROP DATABASE ${qi(dbName)};\n"),
+      owner = Some(owner))
+    Toc(Header(1, 14, 0, dbName = Some(dbName),
+      remoteVersion = Some("15.0"), dumpVersion = Some("15.0")),
+      dbEntry +: tableEntries)
+  }
+
+  /** Dump DataFrames as a COMPLETE pg_restore-loadable directory archive
+    * over the schema TOC [[generatedSchemaToc]] builds: with
+    * `includeSchema`, `pg_restore -d <db> <outDir>` alone creates the
+    * tables and loads the data — the reference's masked-dump ->
+    * pg_restore workflow, producible straight from Spark; data-only
+    * archives restore with `-a` into pre-created tables. Entries,
+    * payloads and header come from [[dumpArchiveMerged]]. */
   def dumpArchive(tables: Seq[(String, org.apache.spark.sql.DataFrame)],
                   outDir: String, dbName: String,
                   namespace: String = "public", owner: String = "graft",
@@ -399,129 +438,37 @@ object PgToc {
                   compress: String = "none",
                   largeObjects: Option[org.apache.spark.sql.DataFrame] = None,
                   loAcls: Map[Long, String] = Map.empty,
-                  copyTargets: Map[String, String] = Map.empty): Toc = {
-    Files.createDirectories(Paths.get(outDir))
-    val algo = graft.sources.Compress.parse(compress)
-    val n = tables.size
-    // schema entries take ids 1..n, data entries n+1..2n (restore order:
-    // pre-data first; pg_restore also honors sections)
-    val schemaIds = tables.zipWithIndex.map { case ((t, _), i) => t -> (i + 1) }.toMap
-    val dataIds = tables.zipWithIndex.map { case ((t, _), i) =>
-      t -> (if (includeSchema) n + i + 1 else i + 1)
-    }.toMap
-    // pg_dump-style identifier quoting: simple lower-case names pass
-    // through, everything else double-quotes — mixed-case Spark column
-    // names survive the generated DDL and COPY statements
-    def qi(n: String) = graft.sources.PgSource.quoteIdent(n)
-    val schemaEntries = if (!includeSchema) Nil else tables.map { case (table, df) =>
-      val cols = df.schema.fields
-        .map(f => s"    ${qi(f.name)} ${pgType(f.dataType)}").mkString(",\n")
-      Entry(
-        dumpId = schemaIds(table), hadDumper = 0, oid = schemaIds(table).toLong,
-        tag = Some(table), desc = Some("TABLE"),
-        section = SectionPreData,
-        defn = Some(s"CREATE TABLE ${qi(namespace)}.${qi(table)} (\n$cols\n);\n"),
-        dropStmt = Some(s"DROP TABLE ${qi(namespace)}.${qi(table)};\n"),
-        namespace = Some(namespace), tablespace = Some(""),
-        tableam = Some("heap"), relkind = 'r'.toByte,
-        owner = Some(owner),
-        dependencies = deps.getOrElse(table, Nil).flatMap(schemaIds.get))
-    }
-    writeDataFiles(tables, outDir, dataIds, algo)
-    val dataEntries = tables.map { case (table, df) =>
-      val id = dataIds(table)
-      val file = s"$id.dat"
-      Entry(
-        dumpId = id, hadDumper = 1, oid = id.toLong,
-        tag = Some(table), desc = Some("TABLE DATA"),
-        section = SectionData,
-        // --load-via-partition-root: the COPY targets the routing root
-        // so the server re-partitions rows on restore (native pg_dump
-        // semantics; reference entries/table.go RootPt*)
-        copyStmt = Some(s"COPY ${qi(namespace)}.${qi(copyTargets.getOrElse(table, table))} " +
-          s"(${df.columns.map(qi).mkString(", ")}) FROM stdin;\n"),
-        namespace = Some(namespace), relkind = 'r'.toByte,
-        owner = Some(owner),
-        dependencies =
-          (if (includeSchema) Seq(schemaIds(table)) else Nil) ++
-            deps.getOrElse(table, Nil).flatMap(dataIds.get),
-        fileName = Some(file))
-    }
-    // SEQUENCE SET entries replay sequence positions on the target
-    // (`setval`, the reference's sequence restore —
-    // `internal/db/postgres/dumpers/sequence.go`): executable statements,
-    // no data file.
-    val seqBase = (if (includeSchema) 2 * n else n)
-    val seqEntries = sequences.toSeq.sortBy(_._1).zipWithIndex.map {
-      case ((seq, value), i) =>
-        Entry(
-          dumpId = seqBase + i + 1, hadDumper = 0, oid = (seqBase + i + 1).toLong,
-          tag = Some(seq), desc = Some("SEQUENCE SET"),
-          section = SectionData,
-          defn = Some(s"SELECT pg_catalog.setval('${namespace}.${seq}', ${value}, true);\n"),
-          namespace = Some(namespace), owner = Some(owner))
-    }
-    // large objects: blob payload files + pg_dump-shaped BLOB/ACL/BLOBS
-    // entries (write side of PgArchive.loadLargeObjects)
-    val (blobPre, blobData) = largeObjects match {
-      case Some(los) =>
-        val oids = writeBlobFiles(los, outDir, algo)
-        val (pre, data) = blobTocEntries(oids, loAcls,
-          firstId = seqBase + sequences.size + 1, owner = owner)
-        (pre, Seq(data))
-      case None => (Nil, Nil)
-    }
-    // v1.14 (the PostgreSQL 15 shape) stores a gzip LEVEL int, enough
-    // for none/gzip; lz4/zstd exist only as a v1.15+ algorithm byte, so
-    // those archives write the 1.15 header (entry layout is unchanged
-    // between 1.14 and 1.15 — the gates in between are header-only)
-    val minor = if (algo >= 2) 15 else 14
-    // real pg_dump ALWAYS stores the DATABASE entry (CREATE + DROP
-    // statements; verified against pg_dump 15 toc.dat with and without
-    // -C) — restore-time --create/-C decides whether to execute it
-    val dbId = seqBase + sequences.size +
-      (if (largeObjects.nonEmpty) blobPre.size + 2 else 1)
-    val dbEntry = Entry(
-      dumpId = dbId, hadDumper = 0, oid = dbId.toLong,
-      tag = Some(dbName), desc = Some("DATABASE"), section = SectionPreData,
-      defn = Some(s"CREATE DATABASE ${graft.sources.PgSource.quoteIdent(dbName)};\n"),
-      dropStmt = Some(s"DROP DATABASE ${graft.sources.PgSource.quoteIdent(dbName)};\n"),
-      owner = Some(owner))
-    val toc = Toc(Header(1, minor, 0, dbName = Some(dbName),
-      remoteVersion = Some("15.0"), dumpVersion = Some("15.0"),
-      compression = headerCompression(algo)),
-      dbEntry +: (schemaEntries ++ blobPre ++ dataEntries ++ seqEntries ++ blobData))
-    writeFile(toc, s"$outDir/toc.dat")
-    toc
-  }
+                  copyTargets: Map[String, String] = Map.empty): Toc =
+    dumpArchiveMerged(tables, outDir,
+      generatedSchemaToc(tables, dbName, namespace, owner, deps, includeSchema),
+      deps, sequences, namespace, compress, largeObjects, loAcls, copyTargets)
 
-  /** Header compression field for a member algorithm: v1.15+ readers see
-    * the algorithm byte; pre-1.15 readers see the level int (gzip
-    * default 6, pg_dump's own default). */
-  private def headerCompression(algo: Int): Compression = algo match {
-    case 0 => Compression()
-    case 1 => Compression(algorithm = 1, level = 6)
-    case a => Compression(algorithm = a)
-  }
-
-  /** Merge a REAL `pg_dump --schema-only -Fd` archive with Spark-masked
-    * table data — the reference's own dump shape (`internal/db/postgres/
-    * cmd/dump.go:212-251` shells out for the schema sections;
-    * `dump.go:551-590` merges the TOC): the source archive's entries are
+  /** The one archive writer: splice Spark-masked table data into a
+    * schema TOC — a REAL `pg_dump --schema-only -Fd` capture (the
+    * reference's own dump shape: `internal/db/postgres/cmd/dump.go:
+    * 212-251` shells out for the schema sections, `dump.go:551-590`
+    * merges the TOC) or [[generatedSchemaToc]]. The schema entries are
     * kept VERBATIM (full-fidelity DDL — primary keys, indexes, FK
     * constraints, defaults, sequences, ACLs, comments, in pg_dump's own
-    * order), our TABLE DATA entries (ids allocated past the schema TOC's
-    * max) are spliced in before the first post-data entry, each
-    * depending on its table's TABLE definition entry, and SEQUENCE SET
-    * entries replay the source's sequence positions. Restoring the
-    * result into an EMPTY database reproduces the source's complete
-    * schema with masked data — no pre-created tables needed.
+    * order); restoring a capture-based archive into an EMPTY database
+    * reproduces the source's complete schema with masked data.
+    *
+    * Spliced in before the first post-data entry, with ids allocated
+    * past the schema TOC's max: large-object BLOB/ACL entries, one
+    * TABLE DATA entry per table (explicit column list in the COPY
+    * statement, depending on its table's TABLE entry), SEQUENCE SET
+    * entries replaying `sequences`, and the BLOBS entry. Payloads are
+    * one `<dumpId>.dat` COPY-text file per table
+    * (`CopyText.writeDatFile`) plus the blob files.
     *
     * `tables` must already be in restore (parents-first) order; `deps`
-    * adds data->data dependency ids on top of the data->DDL ones (what
-    * `pg_restore -j` reads). Owner and namespace come from each table's
-    * own schema entry, falling back to `namespace`/"graft" for tables
-    * the schema archive doesn't know. */
+    * maps child table -> parent tables and adds data->data dependency
+    * ids on top of the data->DDL ones (what `pg_restore -j` reads).
+    * Namespace and owner come from each table's or sequence's own
+    * schema entry, falling back to `namespace` and to the DATABASE
+    * entry's owner. `compress` is a [[graft.sources.Compress]] spec
+    * ("none"/"gzip"/"lz4"/"zstd"); lz4/zstd bump a pre-1.15 header to
+    * 1.15, the first version that can record them. */
   def dumpArchiveMerged(tables: Seq[(String, org.apache.spark.sql.DataFrame)],
                         outDir: String, schemaToc: Toc,
                         deps: Map[String, Seq[String]] = Map.empty,
@@ -531,17 +478,16 @@ object PgToc {
                         largeObjects: Option[org.apache.spark.sql.DataFrame] = None,
                         loAcls: Map[Long, String] = Map.empty,
                         copyTargets: Map[String, String] = Map.empty): Toc = {
-    Files.createDirectories(Paths.get(outDir))
     val algo = graft.sources.Compress.parse(compress)
+    Files.createDirectories(Paths.get(outDir))
     def qi(n: String) = graft.sources.PgSource.quoteIdent(n)
+    def ddlByTag(desc: String): Map[String, Entry] = schemaToc.entries
+      .filter(_.desc.contains(desc)).flatMap(e => e.tag.map(_ -> e)).toMap
+    val tableDdl = ddlByTag("TABLE")
+    val seqDdl = ddlByTag("SEQUENCE")
+    val dbOwner = schemaToc.entries.find(_.desc.contains("DATABASE")).flatMap(_.owner)
     val maxId = schemaToc.entries.map(_.dumpId).maxOption.getOrElse(0)
-    val tableDdl: Map[String, Entry] = schemaToc.entries
-      .filter(_.desc.contains("TABLE"))
-      .flatMap(e => e.tag.map(_ -> e)).toMap
-    val seqDdl: Map[String, Entry] = schemaToc.entries
-      .filter(_.desc.contains("SEQUENCE"))
-      .flatMap(e => e.tag.map(_ -> e)).toMap
-    val dataIds = tables.zipWithIndex.map { case ((t, _), i) => t -> (maxId + i + 1) }.toMap
+    val dataIds = tables.map(_._1).zipWithIndex.map { case (t, i) => t -> (maxId + i + 1) }.toMap
     writeDataFiles(tables, outDir, dataIds, algo)
     val dataEntries = tables.map { case (table, df) =>
       val id = dataIds(table)
@@ -552,16 +498,22 @@ object PgToc {
         tableOid = ddl.map(_.oid).getOrElse(0L), oid = id.toLong,
         tag = Some(table), desc = Some("TABLE DATA"),
         section = SectionData,
-        // --load-via-partition-root routing (see dumpArchive)
+        // --load-via-partition-root: the COPY targets the routing root
+        // so the server re-partitions rows on restore (native pg_dump
+        // semantics; reference entries/table.go RootPt*)
         copyStmt = Some(s"COPY ${qi(ns)}.${qi(copyTargets.getOrElse(table, table))} " +
           s"(${df.columns.map(qi).mkString(", ")}) FROM stdin;\n"),
         namespace = Some(ns), relkind = 'r'.toByte,
-        owner = ddl.flatMap(_.owner).orElse(Some("graft")),
+        owner = ddl.flatMap(_.owner).orElse(dbOwner),
         dependencies =
           ddl.map(_.dumpId).toSeq ++
             deps.getOrElse(table, Nil).flatMap(dataIds.get),
         fileName = Some(s"$id.dat"))
     }
+    // SEQUENCE SET entries replay sequence positions on the target
+    // (`setval`, the reference's sequence restore —
+    // `internal/db/postgres/dumpers/sequence.go`): executable statements,
+    // no data file
     val seqBase = maxId + tables.size
     val seqEntries = sequences.toSeq.sortBy(_._1).zipWithIndex.map {
       case ((seq, value), i) =>
@@ -573,15 +525,16 @@ object PgToc {
           section = SectionData,
           defn = Some(s"SELECT pg_catalog.setval('${qi(ns)}.${qi(seq)}', ${value}, true);\n"),
           namespace = Some(ns),
-          owner = ddl.flatMap(_.owner).orElse(Some("graft")),
+          owner = ddl.flatMap(_.owner).orElse(dbOwner),
           dependencies = ddl.map(_.dumpId).toSeq)
     }
-    // large objects (same pg_dump shape as dumpArchive's)
+    // large objects: blob payload files + pg_dump-shaped BLOB/ACL/BLOBS
+    // entries (write side of PgArchive.loadLargeObjects)
     val (blobPre, blobData) = largeObjects match {
       case Some(los) =>
         val oids = writeBlobFiles(los, outDir, algo)
         val (preE, dataE) = blobTocEntries(oids, loAcls,
-          firstId = seqBase + sequences.size + 1, owner = "graft")
+          firstId = seqBase + sequences.size + 1, owner = dbOwner)
         (preE, Seq(dataE))
       case None => (Nil, Nil)
     }
@@ -593,14 +546,20 @@ object PgToc {
     val (pre, post) =
       if (splitAt < 0) (schemaToc.entries, Seq.empty[Entry])
       else schemaToc.entries.splitAt(splitAt)
-    // a pg_dump-15 schema TOC is v1.14, which cannot record lz4/zstd:
-    // bump to 1.15 (entry layout unchanged between the two — the gates
-    // in between are header-only)
+    // v1.14 (the PostgreSQL 15 shape) stores a gzip LEVEL int (pg_dump's
+    // default 6), enough for none/gzip; lz4/zstd exist only as a v1.15+
+    // algorithm byte, so those archives write the 1.15 header (entry
+    // layout is unchanged between 1.14 and 1.15 — the gates in between
+    // are header-only)
     val bumped =
       if (algo >= 2 && schemaToc.header.version < V1_15)
         schemaToc.header.copy(versionMajor = 1, versionMinor = 15, versionRev = 0)
       else schemaToc.header
-    val header = bumped.copy(compression = headerCompression(algo))
+    val header = bumped.copy(compression = algo match {
+      case 0 => Compression()
+      case 1 => Compression(algorithm = 1, level = 6)
+      case a => Compression(algorithm = a)
+    })
     val toc = Toc(header,
       pre ++ blobPre ++ dataEntries ++ seqEntries ++ blobData ++ post)
     writeFile(toc, s"$outDir/toc.dat")

@@ -239,10 +239,7 @@ object Planner {
     * declared). */
   def validate(df: DataFrame, cfg: TableConfig,
                constraints: Seq[TableConstraint] = Nil): Seq[ValidationWarning] = {
-    val cols = df.columns.toSet
     val types = df.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
-    val unknown = cfg.transforms.filterNot(t => cols(t.column)).map(t =>
-      ValidationWarning("error", cfg.table, t.column, "column does not exist"))
     val pkCols = Catalog.tables.find(_.name == cfg.table).map(_.primaryKey.toSet).getOrElse(Set.empty)
     val pkHit = cfg.transforms.filter(t => pkCols(t.column)).map(t =>
       ValidationWarning("warning", cfg.table, t.column,
@@ -274,7 +271,15 @@ object Planner {
     } yield ValidationWarning("warning", cfg.table, t.column,
       s"transformer affects ${c.kind} constraint ${c.name}" +
         c.detail.fold("")(d => s" ($d)"))
-    unknown ++ pkHit ++ fkHit ++ typeHit ++ constraintHit
+    unknownColumns(df, cfg) ++ pkHit ++ fkHit ++ typeHit ++ constraintHit
+  }
+
+  /** The error for every transform on a column `df` lacks: [[plan]]
+    * would silently skip it, leaving that column unmasked. */
+  def unknownColumns(df: DataFrame, cfg: TableConfig): Seq[ValidationWarning] = {
+    val cols = df.columns.toSet
+    cfg.transforms.filterNot(t => cols(t.column)).map(t =>
+      ValidationWarning("error", cfg.table, t.column, "column does not exist"))
   }
 
   /** apply_for_inherited (ref `config_builder.go:723-766`,

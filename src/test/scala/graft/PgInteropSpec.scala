@@ -1575,10 +1575,19 @@ class PgInteropSpec extends SparkSpec {
     live()
     psql("postgres", "CREATE DATABASE secsrc")
     assert(psql("secsrc",
-      "CREATE TABLE sec_t (id bigint PRIMARY KEY, v text)")._1 == 0)
+      "CREATE TABLE sec_t (id bigint PRIMARY KEY, v text, n serial)")._1 == 0)
     assert(psql("secsrc",
-      "INSERT INTO sec_t SELECT g, 'v' || g FROM generate_series(1, 50) g")._1 == 0)
+      "INSERT INTO sec_t (id, v) SELECT g, 'v' || g FROM generate_series(1, 50) g")._1 == 0)
     val conninfo = s"host=$sockDir dbname=secsrc user=graft"
+    // which shape carries sequence positions is native pg_dump's call
+    def seqSets(toc: PgToc.Toc) =
+      toc.entries.filter(_.desc.contains("SEQUENCE SET")).flatMap(_.tag)
+    def nativeSeqSets(flag: String) = {
+      val dir = s"$base/sec_native$flag"
+      val (rc, out) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_dump -Fd $flag -d secsrc -f $dir")
+      assert(rc == 0, out)
+      seqSets(PgToc.readFile(s"$dir/toc.dat"))
+    }
 
     // --schema-only: NO data moves (no TABLE DATA entries, no payload
     // files); restore stands up the empty table WITH its PK
@@ -1587,6 +1596,8 @@ class PgInteropSpec extends SparkSpec {
       """{"tables":[{"table":"sec_t"}]}""", conninfo, archS,
       sections = "schema-only")
     assert(!tocS.entries.exists(_.desc.contains("TABLE DATA")))
+    // native -s moves no sequence positions either (SEQUENCE SET is data)
+    assert(seqSets(tocS) == nativeSeqSets("-s") && seqSets(tocS).isEmpty)
     assert(!new java.io.File(archS).listFiles()
       .exists(f => f.getName.matches("\\d+\\.dat.*")), "no payloads in -s")
     psql("postgres", "CREATE DATABASE sectgt1")
@@ -1606,9 +1617,47 @@ class PgInteropSpec extends SparkSpec {
     assert(tocD.entries.exists(_.desc.contains("TABLE DATA")))
     assert(!tocD.entries.exists(e => e.desc.contains("TABLE") &&
       !e.desc.contains("TABLE DATA")), "no DDL entries in -a")
+    // native pg_dump -a carries the serial's position as SEQUENCE SET
+    assert(seqSets(tocD) == nativeSeqSets("-a") && seqSets(tocD) == Seq("sec_t_n_seq"))
     graft.sources.PgRestore.restore(archD,
       Seq("-d", s"host=$sockDir dbname=sectgt1 user=graft"), Options(dataOnly = true))
     assert(psql("sectgt1", "SELECT count(*), max(id) FROM sec_t")._2.trim == "50|50")
+    // the -a restore resumes the serial at the source's position
+    assert(psql("sectgt1", "SELECT nextval('sec_t_n_seq')")._2.trim == "51")
+  }
+
+  test("pg-dump refuses a transform on a missing column before writing any payload") {
+    live()
+    psql("postgres", "CREATE DATABASE typosrc")
+    assert(psql("typosrc",
+      "CREATE TABLE typo_t (id bigint, email text); " +
+        "INSERT INTO typo_t VALUES (1, 'ada@x.io')")._1 == 0)
+    val out = s"$base/typo_arch"
+    val config = """{ "tables": [ { "table": "typo_t", "transforms": [
+      {"column": "emial", "name": "Masking", "params": {"type": "name"}} ] } ] }"""
+    // Planner.plan skips a transform on a missing column, so without
+    // the gate `email` would land in the archive unmasked
+    val ex = intercept[IllegalArgumentException](graft.Lifecycle.pgDump(spark,
+      config, s"host=$sockDir dbname=typosrc user=graft", out))
+    assert(ex.getMessage.contains("validation errors"), ex.getMessage)
+    val files = Option(new java.io.File(out).listFiles()).toSeq.flatten.map(_.getName)
+    assert(!files.exists(_.matches("\\d+\\.dat.*")) && !files.contains("toc.dat"),
+      s"payload written before the gate: $files")
+  }
+
+  test("generated archive: a mixed-case sequence name survives setval") {
+    live()
+    import spark.implicits._
+    val arch = s"$base/mixseq_arch"
+    PgToc.dumpArchive(Seq("mixt" -> Seq((1L, "a")).toDF("id", "v")), arch,
+      "mixseq_tgt", sequences = Map("MixSeq" -> 9L))
+    psql("postgres", "CREATE DATABASE mixseq_tgt")
+    assert(psql("mixseq_tgt",
+      "CREATE TABLE mixt (id bigint, v text); CREATE SEQUENCE \\\"MixSeq\\\"")._1 == 0)
+    graft.sources.PgRestore.restore(arch,
+      Seq("-d", s"host=$sockDir dbname=mixseq_tgt user=graft"),
+      Options(dataOnly = true), exitOnError = true)
+    assert(psql("mixseq_tgt", "SELECT last_value FROM \\\"MixSeq\\\"")._2.trim == "9")
   }
 
   test("restore scripts: per-section before/after hooks run in order; failures abort loudly") {
