@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline._
-import graft.subset.SubsetPlanner
+import graft.subset.{SubsetGraph, SubsetPlanner}
 
 import java.nio.file.{Files, Paths}
 
@@ -22,7 +22,7 @@ object Lifecycle {
     * byte-accurate costing exists for) would otherwise serialize O(files)
     * driver round-trips into dump startup (round-6 advice). Files that
     * vanish between plan and stat contribute 0. */
-  def inputBytes(spark: SparkSession, df: org.apache.spark.sql.DataFrame): Long = {
+  def inputBytes(spark: SparkSession, df: DataFrame): Long = {
     val hconf = spark.sparkContext.hadoopConfiguration
     df.inputFiles.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent).map {
       case (dir, files) =>
@@ -35,7 +35,6 @@ object Lifecycle {
     }.sum
   }
 
-  /** dump: config -> validate -> subset -> transform -> write + manifest. */
   /** Dump heartbeat (reference `cmd/dump.go:57,753-771` +
     * `utils/dumpstatus/status.go`): a `heartbeat` file holding
     * `in-progress`, refreshed every `intervalMs` by a daemon thread,
@@ -128,28 +127,53 @@ object Lifecycle {
         s""""tocFileSize":$tocSize,"files":${all.length}}""")
   }
 
-  /** The dump verbs' validation gate (validate.go semantics): print every
-    * warning, abort on any error before a payload is written. */
-  private def requireValid(verb: String, warnings: Seq[ValidationWarning]): Unit = {
+  /** The one planning step of `dump` and `pg-dump`: the validation gate
+    * (validate.go semantics: print every warning, abort on any error
+    * before a payload is written), the FK closure of the `subset_conds`
+    * over `keys`, then each table's masking plan, in `frames` order.
+    * `fromCopy` frames are pg-dump's string-typed COPY frames, already
+    * filtered by their conds (PostgreSQL SQL) on the source server: each
+    * cond becomes `true`, so those tables root the closure without being
+    * evaluated again; the gate skips the allowed-type check; and an FK
+    * the closure joins must compare as text ([[CatalogKeys.textComparable]]).
+    * A partitioned table in `keys.leaves` is dumped as its leaves, so an
+    * FK onto it closes against the union of its dumped leaves. */
+  private def planTables(verb: String, frames: Seq[(TableConfig, DataFrame)], keys: CatalogKeys,
+                         fromCopy: Boolean): Seq[(String, DataFrame)] = {
+    val warnings = frames.flatMap { case (cfg, df) =>
+      Planner.validate(df, cfg, keys = keys, checkTypes = !fromCopy) }
     warnings.foreach(w => System.err.println(s"[${w.severity}] ${w.table}.${w.column}: ${w.msg}"))
     require(!warnings.exists(_.severity == "error"), s"$verb: validation errors — aborting")
+    val dfs = frames.map { case (cfg, df) => cfg.table -> df }.toMap
+    val conds = frames.map { case (cfg, _) =>
+      cfg.table -> (if (fromCopy) cfg.subsetConds.map(_ => "true") else cfg.subsetConds) }.toMap
+    val parts = keys.leaves.map { case (p, ls) => p -> ls.filter(dfs.contains) }
+      .filter { case (p, ls) => ls.nonEmpty && !dfs.contains(p) }
+    val partDfs = parts.map { case (p, ls) =>
+      p -> ls.map(l => conds(l).foldLeft(dfs(l))(_ filter _)).reduce(_ unionByName _) }
+    val partConds = parts.map { case (p, ls) =>
+      p -> (if (ls.exists(l => conds(l).nonEmpty)) Seq("true") else Nil) }
+    def end(t: String, cs: Seq[String]) =
+      s"$t(${cs.mkString(", ")}) ${cs.map(c => keys.colTypes(t -> c)).mkString(", ")}"
+    SubsetGraph.joinedEdges(dfs.keySet ++ parts.keySet, keys.fks, conds ++ partConds)
+      .find(e => !keys.textComparable(e)).foreach { e => throw new IllegalArgumentException(
+        s"$verb: the subset closure would join ${end(e.childTable, e.childCols)} -> " +
+          s"${end(e.parentTable, e.parentCols)} as COPY text, where equal keys print " +
+          "differently — aborting") }
+    val kept = SubsetPlanner.plan(dfs ++ partDfs, keys.pks, keys.fks, conds ++ partConds)
+    frames.map { case (cfg, _) =>
+      cfg.table -> Planner.plan(kept(cfg.table), cfg.copy(subsetConds = Nil)) }
   }
 
-  def dump(spark: SparkSession, configJson: String, sfDir: String, outDir: String): Manifest =
-    withHeartbeat(outDir)(dumpBody(spark, configJson, sfDir, outDir))
-
-  private def dumpBody(spark: SparkSession, configJson: String, sfDir: String,
-                       outDir: String): Manifest = {
+  /** dump: config -> validate -> subset -> transform -> write + manifest,
+    * closing subsets over `keys` (by default the testdata's, [[Catalog.fixture]]). */
+  def dump(spark: SparkSession, configJson: String, sfDir: String, outDir: String,
+           keys: CatalogKeys = Catalog.fixture): Manifest = withHeartbeat(outDir) {
     val configs = ConfigLoader.fromJson(configJson)
-    // 1. validation gate
-    requireValid("dump",
-      configs.flatMap(c => Planner.validate(Catalog.load(spark, sfDir, c.table), c)))
-    // 2. subset closure over the configured conds
     val dfs = configs.map(c => c.table -> Catalog.load(spark, sfDir, c.table)).toMap
-    val conds = configs.map(c => c.table -> c.subsetConds).toMap
-    val pks = Catalog.tables.map(t => t.name -> t.primaryKey).toMap
-    val surviving = SubsetPlanner.plan(dfs, pks, Catalog.fkRefs, conds)
-    // 3. transform + write: jobs submitted concurrently, big tables first
+    val masked = planTables("dump", configs.map(c => c -> dfs(c.table)), keys,
+      fromCopy = false).toMap
+    // transform + write: jobs submitted concurrently, big tables first
     // (cost scoring orders submission; Spark's scheduler is the worker
     // pool — the analog of dump.go:415-433's N-job pool). Cost is REAL
     // bytes on disk — the reference scores by table size
@@ -160,17 +184,12 @@ object Lifecycle {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val jobs = order.map { t =>
-      val cfg = configs.find(_.table == t).get
-      val planned = Planner.plan(surviving(t), cfg.copy(subsetConds = Nil))
-      val path = s"$outDir/$t"
-      (t, planned, path, Future(StorageWriter.write(planned, path)))
-    }
-    val dumped = jobs.map { case (t, planned, path, job) =>
+    val jobs = order.map(t => t -> Future(StorageWriter.write(masked(t), s"$outDir/$t")))
+    val dumped = jobs.map { case (t, job) =>
       Await.result(job, Duration.Inf)
-      (t, planned, path)
+      (t, masked(t), s"$outDir/$t")
     }
-    val manifest = Manifest.build(dumped)
+    val manifest = Manifest.build(dumped, keys)
     Files.createDirectories(Paths.get(outDir))
     Manifest.write(manifest, s"$outDir/manifest.json")
     // pg_restore-compatible twin of the manifest: `pg_restore -l <outDir>`
@@ -221,8 +240,9 @@ object Lifecycle {
 
   /** The reference's own one-command workflow (`greenmask dump`): ingest
     * each configured table FROM a live PostgreSQL over the COPY protocol
-    * (`sources/PgSource` via psql — no JDBC driver needed), apply the
-    * config's masking plan, and write a pg_restore-loadable directory
+    * (`sources/PgSource` via psql — no JDBC driver needed), close the
+    * config's subset over the live FKs, apply its masking plan
+    * ([[planTables]]), and write a pg_restore-loadable directory
     * archive. `pg_restore -d <target> <outDir>` then stands up the
     * masked copy. `conninfo` is a libpq string, e.g.
     * "host=/sockdir dbname=src user=graft".
@@ -297,6 +317,10 @@ object Lifecycle {
           .map(l => cfg.copy(table = l, applyForInherited = false))
       }
     }
+    // the live keys also give the TOC dependency ids (what pg_restore -j
+    // sorts by) and the entry ORDER (single-session pg_restore replays
+    // TOC order — parents first), as the reference records at dump time
+    val keys = graft.sources.PgSource.keys(psqlArgs)
     // per-table COPY transfers are network-bound and independent — run
     // them through the same Future pool as the archive writes (the
     // reference's dump worker pool; wall-clock = slowest table, not sum)
@@ -307,28 +331,13 @@ object Lifecycle {
       if (sections == "schema-only") Nil
       else configs.map { cfg =>
         // subset conds push into the COPY's SELECT: the SOURCE SERVER
-        // filters, so a subset dump moves only the subset's bytes
+        // filters the closure's roots, so only their subset moves
         cfg -> Future(graft.sources.PgSource.table(spark, psqlArgs, cfg.table,
           conds = cfg.subsetConds, slices = cfg.dumpSlices))
       }.map { case (cfg, fut) => cfg -> Await.result(fut, Duration.Inf) }
-    // dump's gate, minus the allowed-type check: COPY frames are
-    // string-typed, so only a transform on a missing column (which
-    // Planner.plan would skip, leaving the column unmasked) is an error
-    requireValid("pg-dump",
-      frames.flatMap { case (cfg, df) => Planner.unknownColumns(df, cfg) })
-    val masked = frames.map { case (cfg, df) =>
-      cfg.table -> Planner.plan(df, cfg.copy(subsetConds = Nil))
-    }
-    // FK edges from the live catalog drive BOTH the TOC dependency ids
-    // (what pg_restore's dependency sorter reads under -j) and the entry
-    // ORDER (single-session pg_restore replays TOC order — parents must
-    // come first). The reference records the same at dump time.
-    val deps = graft.sources.PgSource.fkDeps(psqlArgs)
-    val names = masked.map(_._1)
-    val edges = deps.toSeq.flatMap { case (c, ps) =>
-      ps.filter(names.contains).map(p => FkRef(c, Nil, p, Nil)) }
+    val masked = planTables("pg-dump", frames, keys, fromCopy = true)
     val byName = masked.toMap
-    val ordered = graft.subset.SubsetGraph.restoreOrder(names, edges)
+    val ordered = SubsetGraph.restoreOrder(masked.map(_._1), keys.deps)
       .flatten.map(n => n -> byName(n))
     val pgDumpBin = new java.io.File("/usr/bin/pg_dump")
     val capture = schemaFromSource && pgDumpBin.canExecute && sections != "data-only"
@@ -356,7 +365,7 @@ object Lifecycle {
         PgToc.generatedSchemaToc(ordered,
           dbName = "\\bdbname=(\\S+)".r.findFirstMatchIn(conninfo)
             .map(_.group(1)).getOrElse("graft"),
-          deps = deps, includeSchema = sections != "data-only")
+          deps = keys.deps, includeSchema = sections != "data-only")
     // sequence positions replay whenever data moves into a target that
     // has the sequence DDL (the captured schema, or the pre-created
     // tables a data-only restore needs), as native pg_dump / pg_dump -a
@@ -365,20 +374,21 @@ object Lifecycle {
       if (sections == "data-only" || (sections == "all" && capture))
         graft.sources.PgSource.sequenceValues(psqlArgs)
       else Map.empty[String, Long]
-    PgToc.dumpArchiveMerged(ordered, outDir, schemaToc, deps = deps,
+    PgToc.dumpArchiveMerged(ordered, outDir, schemaToc, deps = keys.deps,
       sequences = sequences, compress = compress, copyTargets = copyRoots.toMap)
   }
 
-  /** validate --data: warnings + original-vs-transformed diff counts. */
+  /** validate --data: warnings + original-vs-transformed diff counts,
+    * with PKs and FKs from `keys`. */
   def validate(spark: SparkSession, configJson: String, sfDir: String,
-               rowsLimit: Int = 1000): Seq[String] = {
+               keys: CatalogKeys = Catalog.fixture, rowsLimit: Int = 1000): Seq[String] = {
     val configs = ConfigLoader.fromJson(configJson)
     configs.flatMap { cfg =>
       val df = Catalog.load(spark, sfDir, cfg.table)
-      val rawWarnings = Planner.validate(df, cfg)
+      val rawWarnings = Planner.validate(df, cfg, keys = keys)
       val warnings = rawWarnings.map(w =>
         s"""{"severity":"${w.severity}","table":"${w.table}","column":"${w.column}","msg":"${w.msg}"}""")
-      val pk = Catalog.tables.find(_.name == cfg.table).map(_.primaryKey).getOrElse(Seq.empty)
+      val pk = keys.primaryKey(cfg.table)
       val diffLine =
         // fatal plan errors => warnings only, no data pass (validate.go
         // exits non-zero before the data stage)
@@ -715,7 +725,7 @@ object Lifecycle {
     def exit(code: Int): Nothing = { session.foreach(_.stop()); sys.exit(code) }
     args.toList match {
       case "dump" :: cfgPath :: sfDir :: outDir :: Nil =>
-        dump(spark, Files.readString(Paths.get(cfgPath)), sfDir, outDir)
+        dump(spark, Files.readString(Paths.get(cfgPath)), sfDir, outDir, Catalog.fixture)
       case "pg-dump" :: cfgPath :: conninfo :: outDir :: rest =>
         // --compress=none|gzip|lz4|zstd[:level] or a bare gzip level
         // 0-9 (the full native pg_dump 16 grammar — a plain integer is
@@ -772,7 +782,7 @@ object Lifecycle {
           println(s"[pg-ingest] $t -> $outDir/$t")
         }
       case "validate" :: cfgPath :: sfDir :: Nil =>
-        validate(spark, Files.readString(Paths.get(cfgPath)), sfDir).foreach(println)
+        validate(spark, Files.readString(Paths.get(cfgPath)), sfDir, Catalog.fixture).foreach(println)
       case "restore" :: manifestPath :: target :: rest =>
         val inserts = rest.contains("--inserts")
         // reference restore flags (cmd/restore.go): --on-conflict-do-nothing

@@ -498,9 +498,8 @@ object SparkEntry {
       (s, dir) => {
         val dfs = Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
           .map(t => t -> rd(s, dir, t)).toMap
-        val pks = Catalog.tables.map(t => t.name -> t.primaryKey).toMap
-        val edges = Catalog.fkRefs.filterNot(_.childTable == "events")
-        val surviving = SubsetPlanner.plan(dfs, pks, edges,
+        val edges = Catalog.fixture.fks.filterNot(_.childTable == "events")
+        val surviving = SubsetPlanner.plan(dfs, Catalog.fixture.pks, edges,
           Map("customer" -> Seq("c_acctbal > 0")))
         surviving("lineitem").select("l_orderkey", "l_linenumber")
           .orderBy("l_orderkey", "l_linenumber")
@@ -518,9 +517,8 @@ object SparkEntry {
         val dfs = Map("customer" -> rd(s, dir, "customer"), "orders" -> ordersNull)
         val edges = Seq(FkRef("orders", Seq("o_custkey"), "customer", Seq("c_custkey"),
           nullable = true))
-        val surviving = SubsetPlanner.plan(dfs,
-          Map("customer" -> Seq("c_custkey"), "orders" -> Seq("o_orderkey")),
-          edges, Map("customer" -> Seq("c_acctbal > 0")))
+        val surviving = SubsetPlanner.plan(dfs, Catalog.fixture.pks, edges,
+          Map("customer" -> Seq("c_acctbal > 0")))
         surviving("orders").select("o_orderkey").orderBy("o_orderkey")
       },
       Some("""SELECT o_orderkey FROM orders
@@ -533,9 +531,8 @@ object SparkEntry {
         val edges = Seq(
           FkRef("nation", Seq("n_regionkey"), "region", Seq("r_regionkey")),
           FkRef("region", Seq("r_regionkey"), "nation", Seq("n_regionkey"), virtual = true))
-        val surviving = SubsetPlanner.plan(dfs,
-          Map("nation" -> Seq("n_nationkey"), "region" -> Seq("r_regionkey")),
-          edges, Map("nation" -> Seq("n_nationkey < 10")))
+        val surviving = SubsetPlanner.plan(dfs, Catalog.fixture.pks, edges,
+          Map("nation" -> Seq("n_nationkey < 10")))
         surviving("nation").select("n_nationkey").orderBy("n_nationkey")
       },
       // closed form of the fix-point for this config
@@ -580,9 +577,8 @@ object SparkEntry {
         val dfs = Map("customer" -> rd(s, dir, "customer"), "events" -> rd(s, dir, "events"))
         val edges = Seq(FkRef("events", Seq("user_id"), "customer", Seq("c_custkey"),
           polymorphicCond = Some("event_type = 'click'"), virtual = true))
-        val surviving = SubsetPlanner.plan(dfs,
-          Map("customer" -> Seq("c_custkey"), "events" -> Seq("event_id")),
-          edges, Map("customer" -> Seq("c_acctbal > 0")))
+        val surviving = SubsetPlanner.plan(dfs, Catalog.fixture.pks, edges,
+          Map("customer" -> Seq("c_acctbal > 0")))
         surviving("events").select("event_id").orderBy("event_id")
       },
       Some("""SELECT event_id FROM events

@@ -54,9 +54,8 @@ case class Manifest(entries: Seq[ManifestEntry]) {
     val names = entries.map(_.table)
     val byName = entries.map(e => e.table -> e).toMap
     val idToName = entries.map(e => e.dumpId -> e.table).toMap
-    val edges = entries.flatMap(e => e.dependsOn.flatMap(idToName.get)
-      .map(p => FkRef(e.table, Nil, p, Nil)))
-    SubsetGraph.restoreOrder(names, edges).map(_.flatMap(byName.get))
+    val deps = entries.map(e => e.table -> e.dependsOn.flatMap(idToName.get)).toMap
+    SubsetGraph.restoreOrder(names, deps).map(_.flatMap(byName.get))
   }
 }
 
@@ -70,17 +69,11 @@ object Manifest {
     tables.sortBy { case (_, size, nT) => -costScore(size, nT) }.map(_._1)
 
   /** Build a manifest for a set of dumped tables, wiring dependencies from
-    * the FK graph (dependencies recorded at dump time — `dump.go:383-413`).
-    * Self-FKs (childTable == parentTable) are NOT recorded as dependsOn —
-    * a table trivially depends on itself and a self-dep would only feed
-    * cycles into the restore-order sort. */
-  def build(dumped: Seq[(String, DataFrame, String)],
-            refs: Seq[FkRef] = Catalog.fkRefs): Manifest = {
+    * `keys.deps` (dependencies recorded at dump time — `dump.go:383-413`). */
+  def build(dumped: Seq[(String, DataFrame, String)], keys: CatalogKeys): Manifest = {
     val ids = dumped.zipWithIndex.map { case ((t, _, _), i) => t -> (i + 1) }.toMap
     Manifest(dumped.zipWithIndex.map { case ((table, df, path), i) =>
-      val deps = refs.filter(r => r.childTable == table && r.parentTable != table &&
-          ids.contains(r.parentTable))
-        .map(r => ids(r.parentTable)).distinct.sorted
+      val deps = keys.deps.getOrElse(table, Nil).flatMap(ids.get).sorted
       ManifestEntry(i + 1, table, path, df.schema.json, df.count(), deps)
     })
   }

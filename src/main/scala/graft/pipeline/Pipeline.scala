@@ -15,6 +15,43 @@ case class FkRef(childTable: String, childCols: Seq[String],
 
 case class TableMeta(name: String, primaryKey: Seq[String])
 
+/** The keys of one schema: each table's primary key and every
+  * column-level foreign key (the reference's `pg_constraint` graph,
+  * `subset/graph.go:70-178`). Built by [[Catalog.fixture]],
+  * [[Catalog.introspectJdbc]] or `sources.PgSource.keys`; only the live
+  * source fills `leaves` (partitioned table -> its leaf partitions, which
+  * hold its rows in a dump) and `colTypes` ((table, key column) -> SQL
+  * type). */
+case class CatalogKeys(tables: Seq[TableMeta], fks: Seq[FkRef],
+                       leaves: Map[String, Seq[String]] = Map.empty,
+                       colTypes: Map[(String, String), String] = Map.empty) {
+  val pks: Map[String, Seq[String]] = tables.map(t => t.name -> t.primaryKey).toMap
+
+  def primaryKey(table: String): Seq[String] = pks.getOrElse(table, Nil)
+
+  /** child -> parent tables (restore order, TOC/manifest dependency
+    * ids): both ends among `tables`, self-FKs dropped — a self-dependency
+    * would only feed cycles into the restore-order sort. A partitioned
+    * parent stands for its leaves, whose data entries a dump holds. */
+  lazy val deps: Map[String, Seq[String]] =
+    fks.filter(r => r.childTable != r.parentTable &&
+        pks.contains(r.childTable) && pks.contains(r.parentTable))
+      .groupBy(_.childTable).map { case (c, rs) =>
+        c -> rs.flatMap(r => leaves.getOrElse(r.parentTable, Seq(r.parentTable))).distinct }
+
+  /** Whether equal keys of `e` print as equal text on both ends, as a
+    * join of string-typed COPY frames needs: the same SQL type, both
+    * integers, or both unpadded strings. An unknown type passes. */
+  def textComparable(e: FkRef): Boolean = {
+    def family(t: String) =
+      if (Set("smallint", "integer", "bigint")(t)) "integer"
+      else if (t == "text" || t.startsWith("character varying")) "text" else t
+    e.childCols.zip(e.parentCols).forall { case (c, p) =>
+      Seq(colTypes.get(e.childTable -> c), colTypes.get(e.parentTable -> p)).flatten
+        .map(family).distinct.size < 2 }
+  }
+}
+
 /** Table constraints beyond PK/FK — the `pkg/toolkit/constraints.go`
   * surface (`Check:51`, `Unique:215`, `Exclusion:82`,
   * `TriggerConstraint:246`). Each implements the reference's
@@ -71,6 +108,9 @@ object Catalog {
     FkRef("lineitem", Seq("l_suppkey"), "supplier", Seq("s_suppkey")),
     FkRef("events", Seq("user_id"), "customer", Seq("c_custkey"), virtual = true))
 
+  /** The testdata schema's keys: the catalog value of every parquet dump. */
+  val fixture: CatalogKeys = CatalogKeys(tables, fkRefs)
+
   def load(spark: org.apache.spark.sql.SparkSession, sfDir: String, table: String): DataFrame =
     spark.read.parquet(s"$sfDir/$table.parquet")
 
@@ -125,35 +165,28 @@ object Catalog {
   /** Live catalog introspection over JDBC metadata — the `pg_catalog`
     * queries of `context/pg_catalog.go:37-160` re-expressed through
     * `DatabaseMetaData` (portable across PG/Derby/etc.): tables, primary
-    * keys, and imported foreign keys become TableMeta/FkRef. */
-  def introspectJdbc(url: String, schema: String = null): (Seq[TableMeta], Seq[FkRef]) = {
+    * keys, and imported foreign keys become one [[CatalogKeys]]. */
+  def introspectJdbc(url: String, schema: String = null): CatalogKeys = {
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val md = conn.getMetaData
-      val tables = scala.collection.mutable.ArrayBuffer[String]()
-      val rs = md.getTables(null, schema, "%", Array("TABLE"))
-      while (rs.next()) tables += rs.getString("TABLE_NAME")
-      rs.close()
+      def rows[T](rs: java.sql.ResultSet)(f: java.sql.ResultSet => T): Seq[T] =
+        try Iterator.continually(rs).takeWhile(_.next()).map(f).toList finally rs.close()
+      val tables = rows(md.getTables(null, schema, "%", Array("TABLE")))(_.getString("TABLE_NAME"))
       val metas = tables.map { t =>
-        val pks = scala.collection.mutable.ArrayBuffer[(Short, String)]()
-        val prs = md.getPrimaryKeys(null, schema, t)
-        while (prs.next()) pks += ((prs.getShort("KEY_SEQ"), prs.getString("COLUMN_NAME")))
-        prs.close()
-        TableMeta(t.toLowerCase, pks.sortBy(_._1).map(_._2.toLowerCase).toSeq)
-      }.toSeq
+        val pk = rows(md.getPrimaryKeys(null, schema, t))(r =>
+          (r.getShort("KEY_SEQ"), r.getString("COLUMN_NAME").toLowerCase))
+        TableMeta(t.toLowerCase, pk.sortBy(_._1).map(_._2))
+      }
       val refs = tables.flatMap { t =>
-        val frs = md.getImportedKeys(null, schema, t)
-        val rows = scala.collection.mutable.ArrayBuffer[(String, String, String, Short)]()
-        while (frs.next()) rows += ((frs.getString("PKTABLE_NAME"), frs.getString("PKCOLUMN_NAME"),
-          frs.getString("FKCOLUMN_NAME"), frs.getShort("KEY_SEQ")))
-        frs.close()
-        rows.groupBy(_._1).map { case (parent, cols) =>
+        rows(md.getImportedKeys(null, schema, t))(r => (r.getString("PKTABLE_NAME").toLowerCase,
+          r.getString("PKCOLUMN_NAME").toLowerCase, r.getString("FKCOLUMN_NAME").toLowerCase,
+          r.getShort("KEY_SEQ"))).groupBy(_._1).map { case (parent, cols) =>
           val sorted = cols.sortBy(_._4)
-          FkRef(t.toLowerCase, sorted.map(_._3.toLowerCase).toSeq,
-            parent.toLowerCase, sorted.map(_._2.toLowerCase).toSeq)
+          FkRef(t.toLowerCase, sorted.map(_._3), parent, sorted.map(_._2))
         }
-      }.toSeq
-      (metas, refs)
+      }
+      CatalogKeys(metas, refs)
     } finally conn.close()
   }
 }
@@ -236,23 +269,27 @@ object Planner {
     * (analog of `config_builder.go:526-629` warning machinery).
     * `constraints` carries the table's Check/Unique/Exclusion/Trigger
     * constraints (catalog metadata; empty for the parquet fixtures unless
-    * declared). */
+    * declared); `keys` the PKs and FKs the key warnings read.
+    * `checkTypes = false` skips the allowed-type check, for frames whose
+    * types are not the source's (string-typed COPY frames). */
   def validate(df: DataFrame, cfg: TableConfig,
-               constraints: Seq[TableConstraint] = Nil): Seq[ValidationWarning] = {
+               constraints: Seq[TableConstraint] = Nil,
+               keys: CatalogKeys = Catalog.fixture,
+               checkTypes: Boolean = true): Seq[ValidationWarning] = {
     val types = df.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
-    val pkCols = Catalog.tables.find(_.name == cfg.table).map(_.primaryKey.toSet).getOrElse(Set.empty)
+    val pkCols = keys.primaryKey(cfg.table).toSet
     val pkHit = cfg.transforms.filter(t => pkCols(t.column)).map(t =>
       ValidationWarning("warning", cfg.table, t.column,
         "transformer affects a primary-key column; ensure hash engine + apply_for_references"))
     // constraint IsAffected analog (`pkg/toolkit/constraints.go:63-78`):
     // FK child columns under transformation break referential joins unless
     // the same deterministic transformer runs on the parent side
-    val fkCols = Catalog.fkRefs.filter(_.childTable == cfg.table).flatMap(_.childCols).toSet
+    val fkCols = keys.fks.filter(_.childTable == cfg.table).flatMap(_.childCols).toSet
     val fkHit = cfg.transforms.filter(t => fkCols(t.column)).map(t =>
       ValidationWarning("warning", cfg.table, t.column,
         "transformer affects a foreign-key column; use hash engine + apply_for_references on the parent"))
     // allowed-type check (SetAllowedColumnTypes analog)
-    val typeHit = cfg.transforms.flatMap { t =>
+    val typeHit = if (!checkTypes) Nil else cfg.transforms.flatMap { t =>
       for {
         actual <- types.get(t.column)
         allowed <- t.transformer.allowedInputTypes
@@ -271,15 +308,11 @@ object Planner {
     } yield ValidationWarning("warning", cfg.table, t.column,
       s"transformer affects ${c.kind} constraint ${c.name}" +
         c.detail.fold("")(d => s" ($d)"))
-    unknownColumns(df, cfg) ++ pkHit ++ fkHit ++ typeHit ++ constraintHit
-  }
-
-  /** The error for every transform on a column `df` lacks: [[plan]]
-    * would silently skip it, leaving that column unmasked. */
-  def unknownColumns(df: DataFrame, cfg: TableConfig): Seq[ValidationWarning] = {
-    val cols = df.columns.toSet
-    cfg.transforms.filterNot(t => cols(t.column)).map(t =>
+    // a transform on a column `df` lacks: [[plan]] would silently skip
+    // it, leaving that column unmasked
+    val unknown = cfg.transforms.filterNot(t => types.contains(t.column)).map(t =>
       ValidationWarning("error", cfg.table, t.column, "column does not exist"))
+    unknown ++ pkHit ++ fkHit ++ typeHit ++ constraintHit
   }
 
   /** apply_for_inherited (ref `config_builder.go:723-766`,
@@ -302,8 +335,8 @@ object Planner {
     * transformed PK, so joins still work after masking. Returns the
     * per-table extra transforms to merge into each config. */
   def applyForReferences(table: String, pkCol: String, t: ScalarTransformer,
-                         refs: Seq[FkRef] = Catalog.fkRefs): Map[String, ColumnTransform] = {
-    refs.filter(r => r.parentTable == table && r.parentCols == Seq(pkCol))
+                         keys: CatalogKeys): Map[String, ColumnTransform] = {
+    keys.fks.filter(r => r.parentTable == table && r.parentCols == Seq(pkCol))
       .map(r => r.childTable -> ColumnTransform(r.childCols.head, t)).toMap
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.pipeline.{CatalogKeys, FkRef, TableMeta}
 
 /** COPY-based ingestion from a live PostgreSQL — the reference's dump
   * path IS `COPY <table> TO STDOUT` over the wire
@@ -47,6 +48,16 @@ object PgSource {
     (rc, errBuf.toString("UTF-8"))
   }
 
+  /** Rows of one catalog query, fields split on the unit separator (no
+    * identifier breaks that split as `|` can). stderr is drained apart,
+    * so server notices cannot masquerade as rows. */
+  private def query(psqlArgs: Seq[String], what: String, sql: String): Seq[Array[String]] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-F", "\u001f", "-c", sql), buf)
+    require(rc == 0, s"PgSource.$what: psql rc=$rc: $err")
+    buf.toString("UTF-8").split("\n").filter(_.nonEmpty).map(_.split("\u001f", -1)).toSeq
+  }
+
   /** Low-level: run one `COPY ... TO STDOUT`, spool the stream to
     * `spoolFile`, and read it back distributed as a string-typed
     * DataFrame with `columns`. */
@@ -61,29 +72,28 @@ object PgSource {
     CopyText.read(spark, spoolFile, columns)
   }
 
-  /** Column names of a live table, in ordinal position order. stdout
-    * carries ONLY the query result (stderr is drained separately), so
-    * server notices cannot masquerade as columns. */
+  /** Column names of a live table, in ordinal position order. */
   def columnsOf(psqlArgs: Seq[String], table: String,
                 namespace: String = "public"): Seq[String] = {
     val sql = "SELECT column_name FROM information_schema.columns " +
       s"WHERE table_schema = '${namespace.replace("'", "''")}' " +
       s"AND table_name = '${table.replace("'", "''")}' " +
       "ORDER BY ordinal_position"
-    val buf = new java.io.ByteArrayOutputStream()
-    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-c", sql), buf)
-    require(rc == 0, s"PgSource.columnsOf: psql rc=$rc: $err")
-    val cols = buf.toString("UTF-8").split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+    val cols = query(psqlArgs, "columnsOf", sql).map(_.head)
     require(cols.nonEmpty, s"PgSource: table $namespace.$table has no columns")
     cols
   }
 
-  /** Foreign-key edges (child table -> referenced parent tables) from
-    * the live catalog — the dependency information the reference records
-    * into its TOC at dump time (`dump.go:383-413` analog) so restore
-    * order respects referential integrity. */
-  def fkDeps(psqlArgs: Seq[String],
-             namespace: String = "public"): Map[String, Seq[String]] = {
+  /** The namespace's PKs and column-level FKs from the live catalog (the
+    * reference's `getReferences`, `subset/graph.go:654-669`). `conkey`/
+    * `confkey` unnest WITH ORDINALITY, so a composite key keeps its
+    * declared column order; an FK is nullable when any child column lacks
+    * NOT NULL. Tables are every relation a key names; `colTypes` holds
+    * each key column's `format_type`. The per-partition copies
+    * PostgreSQL makes of an FK that references a partitioned table are
+    * left out: as edges they would demand a parent row in every
+    * partition. Such a parent's leaves come from [[partitionLeaves]]. */
+  def keys(psqlArgs: Seq[String], namespace: String = "public"): CatalogKeys = {
     val ns = namespace.replace("'", "''")
     // pg_catalog.pg_constraint, NOT information_schema: the info-schema
     // view constraint_column_usage only shows tables the current role
@@ -94,21 +104,33 @@ object PgSource {
     // table in a DIFFERENT schema must not fabricate a dependency edge
     // onto the dumped table (bare relnames would mis-attribute it)
     val sql =
-      "SELECT c.relname, p.relname AS parent " +
+      "SELECT con.oid, con.contype, c.relname, a.attname, p.relname, pa.attname, a.attnotnull, " +
+        "format_type(a.atttypid, a.atttypmod), format_type(pa.atttypid, pa.atttypmod), p.relkind " +
         "FROM pg_catalog.pg_constraint con " +
         "JOIN pg_catalog.pg_class c ON con.conrelid = c.oid " +
-        "JOIN pg_catalog.pg_class p ON con.confrelid = p.oid " +
         "JOIN pg_catalog.pg_namespace n ON c.relnamespace = n.oid " +
-        "JOIN pg_catalog.pg_namespace np ON p.relnamespace = np.oid " +
-        s"WHERE con.contype = 'f' AND n.nspname = '$ns' AND np.nspname = '$ns' " +
-        "ORDER BY 1, 2"
-    val buf = new java.io.ByteArrayOutputStream()
-    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-c", sql), buf)
-    require(rc == 0, s"PgSource.fkDeps: psql rc=$rc: $err")
-    buf.toString("UTF-8").split("\n").map(_.trim).filter(_.nonEmpty)
-      .map(_.split("\\|")).collect {
-        case Array(child, parent) if child != parent => child -> parent
-      }.toSeq.distinct.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        "LEFT JOIN pg_catalog.pg_class p ON con.confrelid = p.oid " +
+        "LEFT JOIN pg_catalog.pg_namespace np ON p.relnamespace = np.oid " +
+        "CROSS JOIN LATERAL unnest(con.conkey, con.confkey) WITH ORDINALITY AS k(ck, pk, ord) " +
+        "JOIN pg_catalog.pg_attribute a ON a.attrelid = con.conrelid AND a.attnum = k.ck " +
+        "LEFT JOIN pg_catalog.pg_attribute pa ON pa.attrelid = con.confrelid AND pa.attnum = k.pk " +
+        "LEFT JOIN pg_catalog.pg_constraint par ON par.oid = con.conparentid " +
+        "WHERE par.conrelid IS DISTINCT FROM con.conrelid " +
+        s"AND n.nspname = '$ns' AND (con.contype = 'p' OR " +
+        s"(con.contype = 'f' AND np.nspname = '$ns')) " +
+        "ORDER BY c.relname, p.relname, con.conname, con.oid, k.ord"
+    val rows = query(psqlArgs, "keys", sql)
+    val cons = rows.map(_(0)).distinct.map(rows.groupBy(_(0)))
+    val (pkCons, fkCons) = cons.partition(_.head(1) == "p")
+    val fks = fkCons.map(r => FkRef(r.head(2), r.map(_(3)), r.head(4), r.map(_(5)),
+      nullable = r.exists(_(6) == "f")))
+    val pkOf = pkCons.map(r => r.head(2) -> r.map(_(3))).toMap
+    val names = (pkCons.map(_.head(2)) ++ fks.flatMap(f => Seq(f.childTable, f.parentTable))).distinct
+    val colTypes = rows.flatMap(r => ((r(2), r(3)) -> r(7)) +:
+      (if (r(1) == "f") Seq((r(4), r(5)) -> r(8)) else Nil)).toMap
+    val leaves = if (rows.exists(_(9) == "p")) partitionLeaves(psqlArgs, namespace)
+                 else Map.empty[String, Seq[String]]
+    CatalogKeys(names.map(t => TableMeta(t, pkOf.getOrElse(t, Nil))), fks, leaves, colTypes)
   }
 
   /** relkind of every user relation in the namespace ('r' plain table,
@@ -121,11 +143,7 @@ object PgSource {
     val sql = "SELECT c.relname, c.relkind FROM pg_catalog.pg_class c " +
       "JOIN pg_catalog.pg_namespace n ON c.relnamespace = n.oid " +
       s"WHERE n.nspname = '$ns' AND c.relkind IN ('r', 'p') ORDER BY 1"
-    val buf = new java.io.ByteArrayOutputStream()
-    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-c", sql), buf)
-    require(rc == 0, s"PgSource.relkinds: psql rc=$rc: $err")
-    buf.toString("UTF-8").split("\n").map(_.trim).filter(_.nonEmpty)
-      .map(_.split("\\|")).collect { case Array(t, k) => t -> k.head }.toMap
+    query(psqlArgs, "relkinds", sql).collect { case Array(t, k) => t -> k.head }.toMap
   }
 
   /** LEAF partitions (relkind 'r') of EVERY partitioned table in the
@@ -152,12 +170,8 @@ object PgSource {
       "JOIN pg_class rp ON tree.root = rp.oid " +
       "JOIN pg_class cp ON tree.child = cp.oid " +
       "WHERE cp.relkind = 'r' ORDER BY 1, 2"
-    val buf = new java.io.ByteArrayOutputStream()
-    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-c", sql), buf)
-    require(rc == 0, s"PgSource.partitionLeaves: psql rc=$rc: $err")
-    buf.toString("UTF-8").split("\n").map(_.trim).filter(_.nonEmpty)
-      .map(_.split("\\|")).collect { case Array(root, leaf) => root -> leaf }
-      .toSeq.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    query(psqlArgs, "partitionLeaves", sql).collect { case Array(root, leaf) => root -> leaf }
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
   }
 
   /** Current positions of every CALLED sequence in the namespace
@@ -170,11 +184,7 @@ object PgSource {
     val ns = namespace.replace("'", "''")
     val sql = "SELECT sequencename, last_value FROM pg_catalog.pg_sequences " +
       s"WHERE schemaname = '$ns' AND last_value IS NOT NULL ORDER BY 1"
-    val buf = new java.io.ByteArrayOutputStream()
-    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-c", sql), buf)
-    require(rc == 0, s"PgSource.sequenceValues: psql rc=$rc: $err")
-    buf.toString("UTF-8").split("\n").map(_.trim).filter(_.nonEmpty)
-      .map(_.split("\\|")).collect { case Array(s, v) => s -> v.toLong }.toMap
+    query(psqlArgs, "sequenceValues", sql).collect { case Array(s, v) => s -> v.toLong }.toMap
   }
 
   /** Order-independent content fingerprint of a live table: row count +
@@ -184,12 +194,9 @@ object PgSource {
   def tableFingerprint(psqlArgs: Seq[String], table: String,
                        namespace: String = "public"): (Long, String) = {
     val qt = s"${quoteIdent(namespace)}.${quoteIdent(table)}"
-    val sql = s"SELECT count(*) || '|' || coalesce(md5(string_agg(h, '' ORDER BY h)), 'empty') " +
+    val sql = s"SELECT count(*), coalesce(md5(string_agg(h, '' ORDER BY h)), 'empty') " +
       s"FROM (SELECT md5(t.*::text) AS h FROM $qt t) s"
-    val buf = new java.io.ByteArrayOutputStream()
-    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-c", sql), buf)
-    require(rc == 0, s"PgSource.tableFingerprint: psql rc=$rc: $err")
-    val Array(n, h) = buf.toString("UTF-8").trim.split("\\|", 2)
+    val Seq(Array(n, h)) = query(psqlArgs, "tableFingerprint", sql)
     (n.toLong, h)
   }
 
@@ -201,10 +208,7 @@ object PgSource {
       .replace("'", "''")
     val sql = s"SELECT GREATEST(relpages, 1) FROM pg_catalog.pg_class " +
       s"WHERE oid = '$rel'::regclass"
-    val buf = new java.io.ByteArrayOutputStream()
-    val (rc, err) = runPsql(psqlArgs ++ Seq("-A", "-t", "-c", sql), buf)
-    require(rc == 0, s"PgSource.relPages: psql rc=$rc: $err")
-    buf.toString("UTF-8").trim.toLong
+    query(psqlArgs, "relPages", sql).head.head.toLong
   }
 
   /** Ingest a whole table: discover columns, COPY it out, distribute.

@@ -29,8 +29,13 @@ object SubsetGraph {
     * `graph.go:251-297`). Returns components in REVERSE topological order
     * of the condensed DAG (every component appears after the components it
     * points to — i.e. parents first). */
-  def sccs(tables: Seq[String], edges: Seq[FkRef]): Seq[Seq[String]] = {
-    val adj = edges.groupBy(_.childTable).view.mapValues(_.map(_.parentTable)).toMap
+  def sccs(tables: Seq[String], edges: Seq[FkRef]): Seq[Seq[String]] =
+    restoreOrder(tables, edges.groupBy(_.childTable).view.mapValues(_.map(_.parentTable)).toMap)
+
+  /** Topological order of tables for restore (children after parents) —
+    * `graph.go:622-653`: [[sccs]] over `deps` (child -> parent tables, as
+    * [[graft.pipeline.CatalogKeys.deps]]). Cyclic groups stay grouped. */
+  def restoreOrder(tables: Seq[String], deps: Map[String, Seq[String]]): Seq[Seq[String]] = {
     val index = mutable.Map[String, Int]()
     val low = mutable.Map[String, Int]()
     val onStack = mutable.Set[String]()
@@ -41,7 +46,7 @@ object SubsetGraph {
     def strongConnect(v: String): Unit = {
       index(v) = counter; low(v) = counter; counter += 1
       stack.push(v); onStack += v
-      for (w <- adj.getOrElse(v, Nil) if tables.contains(w)) {
+      for (w <- deps.getOrElse(v, Nil) if tables.contains(w)) {
         if (!index.contains(w)) { strongConnect(w); low(v) = math.min(low(v), low(w)) }
         else if (onStack(w)) low(v) = math.min(low(v), index(w))
       }
@@ -59,10 +64,26 @@ object SubsetGraph {
     out.toSeq
   }
 
-  /** Topological order of tables for restore (children after parents) —
-    * `graph.go:622-653`. Cyclic groups stay grouped. */
-  def restoreOrder(tables: Seq[String], edges: Seq[FkRef]): Seq[Seq[String]] =
-    sccs(tables, edges)
+  /** The FK edges a subset closure joins: both ends among `tables`, and
+    * the parent affected. Affected-set pruning mirrors the reference,
+    * which only generates subset queries along paths that reach a cond —
+    * unconditioned parents keep all rows, so semi-joining against them is
+    * a no-op: a table is affected iff it has conds or any FK parent is
+    * affected. */
+  def joinedEdges(tables: Set[String], edges: Seq[FkRef],
+                  conds: Map[String, Seq[String]]): Seq[FkRef] = {
+    val allEdges = edges.filter(e => tables(e.childTable) && tables(e.parentTable))
+    val affected = mutable.Set[String]()
+    conds.collect { case (t, cs) if cs.nonEmpty && tables(t) => affected += t }
+    var grew = true
+    while (grew) {
+      grew = false
+      allEdges.foreach { e =>
+        if (affected(e.parentTable) && !affected(e.childTable)) { affected += e.childTable; grew = true }
+      }
+    }
+    allEdges.filter(e => affected(e.parentTable))
+  }
 
   /** Detect whether a component of size>=1 contains a cycle (self-FK or
     * multi-table loop) — `component.go:95-153`. */
@@ -86,24 +107,7 @@ object SubsetPlanner {
            edges: Seq[FkRef], conds: Map[String, Seq[String]],
            maxIter: Int = 50): Map[String, DataFrame] = {
     val tables = dfs.keys.toSeq
-    val allEdges = edges.filter(e => dfs.contains(e.childTable) && dfs.contains(e.parentTable))
-    // Affected-set pruning (mirrors the reference, which only generates
-    // subset queries along paths that reach a cond — unconditioned parents
-    // keep all rows, so semi-joining against them is a no-op): a table is
-    // affected iff it has conds or any FK parent is affected.
-    val affected = {
-      val set = mutable.Set[String]()
-      conds.collect { case (t, cs) if cs.nonEmpty && dfs.contains(t) => set += t }
-      var grew = true
-      while (grew) {
-        grew = false
-        allEdges.foreach { e =>
-          if (set(e.parentTable) && !set(e.childTable)) { set += e.childTable; grew = true }
-        }
-      }
-      set.toSet
-    }
-    val relevantEdges = allEdges.filter(e => affected(e.parentTable))
+    val relevantEdges = joinedEdges(dfs.keySet, edges, conds)
     val surviving = mutable.Map[String, DataFrame]()
 
     def baseFiltered(t: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{ConfigLoader, Manifest}
+import graft.pipeline.{CatalogKeys, ConfigLoader, FkRef, Manifest, TableMeta}
 
 import java.nio.file.Files
 
@@ -97,5 +97,27 @@ class LifecycleE2ESpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Lifecycle.dump(spark, badConfig, "/root/testdata/sf0.001",
         Files.createTempDirectory("graftbad").toString))
+  }
+
+  test("dump closes a subset over the catalog value it is given, not only the TPC-H keys") {
+    val sfDir = Files.createTempDirectory("graft_acct").toString
+    (1 to 40).map(i => (i.toLong, s"a$i")).toDF("id", "name")
+      .write.parquet(s"$sfDir/acct.parquet")
+    (1 to 200).map(i => (i.toLong, (i % 40 + 1).toLong, i * 10)).toDF("tid", "acct_id", "amt")
+      .write.parquet(s"$sfDir/txn.parquet")
+    val keys = CatalogKeys(Seq(TableMeta("acct", Seq("id")), TableMeta("txn", Seq("tid"))),
+      Seq(FkRef("txn", Seq("acct_id"), "acct", Seq("id"))))
+    val outDir = Files.createTempDirectory("graft_acct_out").toString
+    val manifest = Lifecycle.dump(spark,
+      """{"tables":[{"table":"txn"},{"table":"acct","subset_conds":["id % 4 <> 0"]}]}""",
+      sfDir, outDir, keys)
+    val acct = spark.read.parquet(s"$outDir/acct")
+    val txn = spark.read.parquet(s"$outDir/txn")
+    assert(acct.count() == 30)
+    // no child row keeps a dropped parent
+    assert(txn.join(acct, txn("acct_id") === acct("id"), "left_anti").count() == 0)
+    assert(txn.count() == 150)
+    val ids = manifest.entries.map(e => e.table -> e.dumpId).toMap
+    assert(manifest.entries.find(_.table == "txn").get.dependsOn == Seq(ids("acct")))
   }
 }

@@ -37,7 +37,7 @@ class LifecycleSpec extends SparkSpec {
     val c = Seq((1L, 10)).toDF("c_custkey", "x")
     val o = Seq((5L, 1L)).toDF("o_orderkey", "o_custkey")
     val m = Manifest.build(Seq(
-      ("customer", c, "/dump/customer"), ("orders", o, "/dump/orders")))
+      ("customer", c, "/dump/customer"), ("orders", o, "/dump/orders")), Catalog.fixture)
     assert(m.entries.map(_.table) == Seq("customer", "orders"))
     assert(m.entries(1).dependsOn == Seq(1)) // orders depends on customer
     val tmp = Files.createTempFile("manifest", ".json").toString

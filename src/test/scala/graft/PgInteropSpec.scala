@@ -1051,7 +1051,8 @@ class PgInteropSpec extends SparkSpec {
     val df = Seq((1L, "x")).toDF("id", "v")
     df.write.mode("overwrite").parquet(s"$dir/t")
     graft.pipeline.Manifest.write(
-      graft.pipeline.Manifest.build(Seq(("t", df, s"$dir/t")), refs = Nil),
+      graft.pipeline.Manifest.build(Seq(("t", df, s"$dir/t")),
+        keys = graft.pipeline.CatalogKeys(Nil, Nil)),
       s"$dir/manifest.json")
     val ids = PgRestore.parseStructuredRestoreList(
       java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/manifest.json")), "json")
@@ -1973,15 +1974,25 @@ class PgInteropSpec extends SparkSpec {
     // subset_conds filter on the SOURCE server (inside the COPY SELECT);
     // payments is listed FIRST in the config but depends on accounts —
     // the dumped TOC must reorder parents-first
+    // the transform on the FK column account_id keeps it pointing at a
+    // kept account, and draws the gate's foreign-key warning
     val config = """{ "tables": [
-      { "table": "payments", "transforms": [] },
+      { "table": "payments", "transforms": [
+        {"column": "account_id", "name": "Replace", "params": {"value": "1"}} ] },
       { "table": "accounts",
         "subset_conds": ["id <= 1"],
         "transforms": [
         {"column": "holder", "name": "Masking", "params": {"type": "name"}},
         {"column": "iban", "name": "Masking", "params": {"type": "id"}} ] } ] }"""
-    val toc = Lifecycle.pgDump(spark, config,
-      s"host=$sockDir dbname=cli_src user=graft", out)
+    val errBuf = new java.io.ByteArrayOutputStream()
+    val oldErr = System.err
+    System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+    val toc =
+      try Lifecycle.pgDump(spark, config, s"host=$sockDir dbname=cli_src user=graft", out)
+      finally System.setErr(oldErr)
+    assert(errBuf.toString("UTF-8").linesIterator.contains(
+      "[warning] payments.account_id: transformer affects a foreign-key column; " +
+        "use hash engine + apply_for_references on the parent"), errBuf.toString("UTF-8").take(400))
     assert(toc.header.dbName.contains("cli_src"))
     assert(toc.entries.exists(e => e.desc.contains("TABLE") &&
       e.defn.exists(_.contains("CREATE TABLE public.accounts"))))
@@ -2005,6 +2016,172 @@ class PgInteropSpec extends SparkSpec {
     // Masking("id") keeps a 6-char prefix and stars the rest; the subset
     // cond dropped row 2 on the source server
     assert(got.map(_(1)).toSeq == Seq("DE0212****"), "subset + mask wrong")
+  }
+
+  test("pg-dump closes a root cond over the live FKs: native pg_restore creates every constraint") {
+    live()
+    psql("postgres", "CREATE DATABASE sub_src")
+    // cust <- ord <- item. item's composite FK lists its columns in an
+    // order that differs from attnum order on both sides, and it is
+    // nullable: items with a NULL key column escape the closure
+    assert(psql("sub_src",
+      "CREATE TABLE cust(id int PRIMARY KEY, name text); " +
+        "CREATE TABLE ord(ord_no int, cust_id int REFERENCES cust(id), note text, " +
+        "PRIMARY KEY (cust_id, ord_no)); " +
+        "CREATE TABLE item(item_id int PRIMARY KEY, o_cust int, o_no int, qty int, " +
+        "FOREIGN KEY (o_no, o_cust) REFERENCES ord(ord_no, cust_id)); " +
+        "INSERT INTO cust SELECT g, 'c' || g FROM generate_series(1, 30) g; " +
+        "INSERT INTO ord SELECT n, c, 'n' || n FROM generate_series(1, 30) c, " +
+        "generate_series(1, 4) n WHERE n <= c % 5; " +
+        "INSERT INTO item SELECT g, CASE WHEN g % 7 = 0 THEN NULL ELSE 1 + g % 30 END, " +
+        "CASE WHEN g % 11 = 0 THEN NULL ELSE 1 + g % 4 END, g FROM generate_series(1, 300) g " +
+        "WHERE g % 7 = 0 OR g % 11 = 0 OR 1 + g % 4 <= (1 + g % 30) % 5")._1 == 0)
+    val src = s"host=$sockDir dbname=sub_src user=graft"
+    val out = s"$base/sub_arch"
+    val config = """{ "tables": [
+      { "table": "item" }, { "table": "ord" },
+      { "table": "cust", "subset_conds": ["id % 3 <> 0"] } ] }"""
+    val t0 = System.nanoTime()
+    Lifecycle.pgDump(spark, config, src, out)
+    info(f"pg-dump with closure: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    psql("postgres", "CREATE DATABASE sub_tgt")
+    val (rc, o) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_restore -d sub_tgt $out")
+    assert(rc == 0, o)
+    val constraints = "SELECT count(*) FROM pg_constraint WHERE contype IN ('p', 'f') " +
+      "AND connamespace = 'public'::regnamespace"
+    assert(psql("sub_tgt", constraints)._2.trim == "5", "constraints missing on the target")
+    // brute-force closure on the source, fingerprinted like the target
+    val closure = Map(
+      "cust" -> "SELECT * FROM cust WHERE id % 3 <> 0",
+      "ord" -> "SELECT * FROM ord WHERE cust_id IN (SELECT id FROM cust WHERE id % 3 <> 0)",
+      "item" -> ("SELECT * FROM item WHERE o_cust IS NULL OR o_no IS NULL OR " +
+        "(o_no, o_cust) IN (SELECT ord_no, cust_id FROM ord " +
+        "WHERE cust_id IN (SELECT id FROM cust WHERE id % 3 <> 0))"))
+    for ((t, q) <- closure) {
+      val (_, want) = psql("sub_src", "SELECT count(*) || '|' || " +
+        "coalesce(md5(string_agg(h, '' ORDER BY h)), 'empty') " +
+        s"FROM (SELECT md5(t.*::text) AS h FROM ($q) t) s")
+      val got = graft.sources.PgSource.tableFingerprint(
+        Seq("-d", s"host=$sockDir dbname=sub_tgt user=graft"), t)
+      assert(s"${got._1}|${got._2}" == want.trim, s"$t: target $got, closure $want")
+    }
+    // the closure dropped rows on every level, and kept NULL-key items
+    val kept = psql("sub_tgt", "SELECT (SELECT count(*) FROM cust) || ',' || " +
+      "(SELECT count(*) FROM ord) || ',' || (SELECT count(*) FROM item) || ',' || " +
+      "(SELECT count(*) FROM item WHERE o_no IS NULL OR o_cust IS NULL)")._2.trim
+      .split(",").map(_.toInt)
+    val all = psql("sub_src", "SELECT (SELECT count(*) FROM cust) || ',' || " +
+      "(SELECT count(*) FROM ord) || ',' || (SELECT count(*) FROM item)")._2.trim
+      .split(",").map(_.toInt)
+    assert(kept.take(3).zip(all).forall { case (k, a) => k > 0 && k < a } && kept(3) > 0,
+      s"kept ${kept.mkString(",")} of ${all.mkString(",")}")
+  }
+
+  test("PgSource.keys: column-ordered composite, nullable and self FKs; namespace- and partition-aware") {
+    live()
+    psql("postgres", "CREATE DATABASE keys_src")
+    assert(psql("keys_src",
+      "CREATE TABLE acct(id int PRIMARY KEY, mgr int REFERENCES acct(id)); " +
+        "CREATE TABLE book(no int, acct_id int NOT NULL REFERENCES acct(id), " +
+        "PRIMARY KEY (acct_id, no)); " +
+        "CREATE TABLE line(id int PRIMARY KEY, b_acct int, b_no int NOT NULL, " +
+        "FOREIGN KEY (b_no, b_acct) REFERENCES book(no, acct_id)); " +
+        "CREATE SCHEMA other; CREATE TABLE other.acct(id int PRIMARY KEY); " +
+        "CREATE TABLE note(id int PRIMARY KEY, acct_id int NOT NULL REFERENCES other.acct(id)); " +
+        "CREATE TABLE other.memo(id int PRIMARY KEY, acct_id int REFERENCES public.acct(id)); " +
+        "CREATE TABLE ev(id int NOT NULL, acct_id int NOT NULL REFERENCES acct(id)) " +
+        "PARTITION BY RANGE (id); " +
+        "CREATE TABLE ev_1 PARTITION OF ev FOR VALUES FROM (0) TO (100); " +
+        // an FK onto a partitioned table: PostgreSQL's per-partition
+        // copies (shop -> rp_1) are not declared keys
+        "CREATE TABLE rp(id int PRIMARY KEY) PARTITION BY RANGE (id); " +
+        "CREATE TABLE rp_1 PARTITION OF rp FOR VALUES FROM (0) TO (100); " +
+        "CREATE TABLE shop(id int PRIMARY KEY, rp_id int REFERENCES rp(id))")._1 == 0)
+    import graft.pipeline.{FkRef, TableMeta}
+    val keys = graft.sources.PgSource.keys(
+      Seq("-d", s"host=$sockDir dbname=keys_src user=graft"))
+    assert(keys.fks == Seq(
+      FkRef("acct", Seq("mgr"), "acct", Seq("id"), nullable = true),
+      FkRef("book", Seq("acct_id"), "acct", Seq("id")),
+      FkRef("ev", Seq("acct_id"), "acct", Seq("id")),
+      FkRef("ev_1", Seq("acct_id"), "acct", Seq("id")),
+      FkRef("line", Seq("b_no", "b_acct"), "book", Seq("no", "acct_id"), nullable = true),
+      FkRef("shop", Seq("rp_id"), "rp", Seq("id"), nullable = true)))
+    assert(keys.tables.toSet == Set(TableMeta("acct", Seq("id")),
+      TableMeta("book", Seq("acct_id", "no")), TableMeta("line", Seq("id")),
+      TableMeta("note", Seq("id")), TableMeta("ev", Nil), TableMeta("ev_1", Nil),
+      TableMeta("rp", Seq("id")), TableMeta("rp_1", Seq("id")), TableMeta("shop", Seq("id"))))
+    assert(keys.pks == Map("acct" -> Seq("id"), "book" -> Seq("acct_id", "no"),
+      "line" -> Seq("id"), "note" -> Seq("id"), "ev" -> Nil, "ev_1" -> Nil,
+      "rp" -> Seq("id"), "rp_1" -> Seq("id"), "shop" -> Seq("id")))
+    // rp's rows live in its leaf: shop's dependency is on rp_1
+    assert(keys.leaves == Map("ev" -> Seq("ev_1"), "rp" -> Seq("rp_1")))
+    assert(keys.deps == Map("book" -> Seq("acct"), "ev" -> Seq("acct"),
+      "ev_1" -> Seq("acct"), "line" -> Seq("book"), "shop" -> Seq("rp_1")))
+    assert(Seq("line" -> "b_no", "book" -> "no", "shop" -> "rp_id", "rp" -> "id")
+      .map(keys.colTypes) == Seq.fill(4)("integer"))
+  }
+
+  test("pg-dump --data-only closes an FK onto a partitioned table over its leaves, parents first") {
+    live()
+    psql("postgres", "CREATE DATABASE part_src")
+    val ddl = "CREATE TABLE rp(id int PRIMARY KEY, v text) PARTITION BY RANGE (id); " +
+      "CREATE TABLE rp_1 PARTITION OF rp FOR VALUES FROM (0) TO (50); " +
+      "CREATE TABLE rp_2 PARTITION OF rp FOR VALUES FROM (50) TO (100); " +
+      "CREATE TABLE shop(id int PRIMARY KEY, rp_id int REFERENCES rp(id)); "
+    assert(psql("part_src", ddl +
+      "INSERT INTO rp SELECT g, 'v' || g FROM generate_series(1, 99) g; " +
+      "INSERT INTO shop SELECT g, CASE WHEN g % 10 = 0 THEN NULL ELSE 1 + (g * 7) % 99 END " +
+      "FROM generate_series(1, 40) g")._1 == 0)
+    val out = s"$base/part_arch"
+    // the child is listed first: rp's leaves must still load before it
+    val config = """{ "tables": [ { "table": "shop" },
+      { "table": "rp", "apply_for_inherited": true, "subset_conds": ["id % 2 = 0"] } ] }"""
+    val toc = Lifecycle.pgDump(spark, config, s"host=$sockDir dbname=part_src user=graft", out,
+      sections = "data-only")
+    val data = toc.entries.filter(_.desc.contains("TABLE DATA"))
+    assert(data.flatMap(_.tag) == Seq("rp_1", "rp_2", "shop"), s"TOC order: ${data.flatMap(_.tag)}")
+    assert(data.last.dependencies.toSet.intersect(data.map(_.dumpId).toSet) ==
+      data.init.map(_.dumpId).toSet, "shop's data entry must depend on both leaves")
+    psql("postgres", "CREATE DATABASE part_tgt")
+    assert(psql("part_tgt", ddl)._1 == 0)
+    // one session, the FK already in place: rows load in TOC order
+    val (rc, o) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_restore -a -d part_tgt $out")
+    assert(rc == 0, o)
+    val closure = Map(
+      "rp" -> "SELECT * FROM rp WHERE id % 2 = 0",
+      "shop" -> "SELECT * FROM shop WHERE rp_id IS NULL OR rp_id % 2 = 0")
+    def fingerprint(q: String) = "SELECT count(*) || '|' || " +
+      s"coalesce(md5(string_agg(h, '' ORDER BY h)), 'empty') FROM (SELECT md5(t.*::text) AS h FROM ($q) t) s"
+    for ((t, q) <- closure)
+      assert(psql("part_tgt", fingerprint(s"SELECT * FROM $t"))._2 ==
+        psql("part_src", fingerprint(q))._2, s"$t differs from its closure")
+  }
+
+  test("pg-dump refuses a closure over FK keys whose text forms differ, and joins int onto bigint") {
+    live()
+    psql("postgres", "CREATE DATABASE ktype_src")
+    assert(psql("ktype_src",
+      "CREATE TABLE np(v numeric(12,4) PRIMARY KEY); " +
+        "CREATE TABLE nc(id int PRIMARY KEY, v numeric(10,2) REFERENCES np(v)); " +
+        "CREATE TABLE ip(id int PRIMARY KEY); " +
+        "CREATE TABLE ic(id int PRIMARY KEY, p bigint NOT NULL REFERENCES ip(id)); " +
+        "INSERT INTO np VALUES (1), (2), (3); INSERT INTO nc VALUES (1, 1), (2, 2), (3, 3); " +
+        "INSERT INTO ip VALUES (1), (2), (3); INSERT INTO ic VALUES (1, 1), (2, 2), (3, 3)")._1 == 0)
+    val src = s"host=$sockDir dbname=ktype_src user=graft"
+    // '1.00' and '1.0000' are the same key: a text join would drop every nc row
+    val err = intercept[IllegalArgumentException](Lifecycle.pgDump(spark,
+      """{ "tables": [ { "table": "nc" }, { "table": "np", "subset_conds": ["v < 3"] } ] }""",
+      src, s"$base/ktype_n"))
+    assert(err.getMessage.contains("nc(v) numeric(10,2) -> np(v) numeric(12,4)"), err.getMessage)
+    val out = s"$base/ktype_i"
+    Lifecycle.pgDump(spark,
+      """{ "tables": [ { "table": "ic" }, { "table": "ip", "subset_conds": ["id < 3"] } ] }""",
+      src, out)
+    psql("postgres", "CREATE DATABASE ktype_tgt")
+    val (rc, o) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_restore -d ktype_tgt $out")
+    assert(rc == 0, o)
+    assert(psql("ktype_tgt", "SELECT string_agg(p::text, ',' ORDER BY p) FROM ic")._2.trim == "1,2")
   }
 
   test("pg-dump passthrough flags reach the real schema capture") {

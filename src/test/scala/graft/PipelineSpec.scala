@@ -73,7 +73,7 @@ class PipelineSpec extends SparkSpec {
 
   test("applyForReferences propagates to referencing FK columns") {
     val t = RandomInt(0, 99, tweak = "ref")
-    val extra = Planner.applyForReferences("customer", "c_custkey", t)
+    val extra = Planner.applyForReferences("customer", "c_custkey", t, Catalog.fixture)
     assert(extra.keySet == Set("orders", "events"))
     assert(extra("orders").column == "o_custkey")
   }

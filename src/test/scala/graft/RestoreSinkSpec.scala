@@ -139,7 +139,8 @@ class RestoreSinkSpec extends SparkSpec {
         "pref BIGINT REFERENCES intro_parent(pid))")
       st.close()
     } finally conn.close()
-    val (tables, refs) = graft.pipeline.Catalog.introspectJdbc(url, "APP")
+    val keys = graft.pipeline.Catalog.introspectJdbc(url, "APP")
+    val (tables, refs) = (keys.tables, keys.fks)
     val byName = tables.map(t => t.name -> t).toMap
     assert(byName("intro_parent").primaryKey == Seq("pid"))
     assert(byName("intro_child").primaryKey == Seq("cid"))

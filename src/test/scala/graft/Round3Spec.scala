@@ -172,7 +172,7 @@ class ManifestRound3Spec extends SparkSpec {
     val df = Seq((1L, "a", 1.5)).toDF("id", "name", "score")
     val dir = Files.createTempDirectory("graft_m3").toString
     df.write.mode("overwrite").parquet(s"$dir/t")
-    val m = Manifest.build(Seq(("t", df, s"$dir/t")), refs = Nil)
+    val m = Manifest.build(Seq(("t", df, s"$dir/t")), keys = CatalogKeys(Nil, Nil))
     Manifest.write(m, s"$dir/manifest.json")
     val back = Manifest.readEntries(s"$dir/manifest.json")
     val stored = Manifest.schemaOf(back.head)
@@ -198,7 +198,8 @@ class ManifestRound3Spec extends SparkSpec {
   test("build never records a self-dependency for self-FK tables") {
     val df = Seq((1L, 2L)).toDF("id", "parent_id")
     val selfRef = Seq(FkRef("emp", Seq("parent_id"), "emp", Seq("id")))
-    val m = Manifest.build(Seq(("emp", df, "/tmp/emp")), refs = selfRef)
+    val m = Manifest.build(Seq(("emp", df, "/tmp/emp")),
+      keys = CatalogKeys(Seq(TableMeta("emp", Seq("id"))), selfRef))
     assert(m.entries.head.dependsOn.isEmpty)
   }
 
@@ -222,7 +223,7 @@ class ManifestRound3Spec extends SparkSpec {
     val df = Seq((1L, "x")).toDF("id", "v")
     Files.createDirectories(java.nio.file.Paths.get(s"$root/d1"))
     df.write.mode("overwrite").parquet(s"$root/d1/t")
-    Manifest.write(Manifest.build(Seq(("t", df, s"$root/d1/t")), refs = Nil),
+    Manifest.write(Manifest.build(Seq(("t", df, s"$root/d1/t")), keys = CatalogKeys(Nil, Nil)),
       s"$root/d1/manifest.json")
     val listed = Lifecycle.listDumps(root)
     assert(listed.size == 1 && listed.head.startsWith("d1 tables=1 rows=1"))
@@ -416,7 +417,7 @@ class RestoreFallbackSpec extends SparkSpec {
     val df = Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("id", "v")
     df.write.mode("overwrite").parquet(s"$dir/ins_restore_t")
     Manifest.write(Manifest.build(Seq(("ins_restore_t", df, s"$dir/ins_restore_t")),
-      refs = Nil), s"$dir/manifest.json")
+      keys = CatalogKeys(Nil, Nil)), s"$dir/manifest.json")
     val conn = DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
@@ -528,7 +529,7 @@ class RestoreFallbackSpec extends SparkSpec {
     val df = Seq((1L, "one"), (2L, "dup")).toDF("id", "v")
     df.write.mode("overwrite").parquet(s"$dir/excl_r_t")
     Manifest.write(Manifest.build(Seq(("excl_r_t", df, s"$dir/excl_r_t")),
-      refs = Nil), s"$dir/manifest.json")
+      keys = CatalogKeys(Nil, Nil)), s"$dir/manifest.json")
     val conn = DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()
@@ -554,7 +555,7 @@ class RestoreFallbackSpec extends SparkSpec {
     val df = Seq((1L, "one"), (2L, "two")).toDF("id", "v")
     df.write.mode("overwrite").parquet(s"$dir/integ_r_t")
     Manifest.write(Manifest.build(Seq(("integ_r_t", df, s"$dir/integ_r_t")),
-      refs = Nil), s"$dir/manifest.json")
+      keys = CatalogKeys(Nil, Nil)), s"$dir/manifest.json")
     val conn = DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()

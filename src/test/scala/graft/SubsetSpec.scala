@@ -157,7 +157,7 @@ class SubsetSpec extends SparkSpec {
 
   test("restore order groups cycles and puts parents before children") {
     val order = SubsetGraph.restoreOrder(Seq("child", "parent", "grand"),
-      Seq(edge("child", "parent", "x", "x"), edge("parent", "grand", "x", "x")))
+      Map("child" -> Seq("parent"), "parent" -> Seq("grand")))
     assert(order.flatten == Seq("grand", "parent", "child"))
   }
 }
