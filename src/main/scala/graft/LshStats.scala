@@ -105,22 +105,20 @@ object LshStats {
     val (bands, rowsPerBand) = (4, 2)
     val withMh = docs.select(col("doc_id"), TextOps.minhashSignatureFromText(col("text"), 3,
       TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
-    val mhEdges = withMh.select(col("doc_id"),
+    // census + (optionally) two recall joins read this — materialize so
+    // the signature pass over the corpus runs once
+    val mhEdges = graft.plans.Checkpoints.materialize(withMh.select(col("doc_id"),
       posexplode(TextOps.minhashBands(col("__mh"), bands, rowsPerBand))
         .as(Seq("band_idx", "band")))
-      .filter(col("band").isNotNull)
-      // census + (optionally) two recall joins read this — materialize so
-      // the signature pass over the corpus runs once
-      .localCheckpoint(true)
+      .filter(col("band").isNotNull))
     val mhCensus = bandCensus(mhEdges)
 
     // SimHash 4×15-bit band census (simhashHammingPairs's banding)
-    val shEdges = docs
+    val shEdges = graft.plans.Checkpoints.materialize(docs
       .select(col("doc_id"), TextOps.simhash60(col("text")).as("sh"))
       .select(col("doc_id"), posexplode(array((0 until 4).map(b =>
         Dedup.simhashBand(col, Seq("sh"), 4, b)): _*))
-        .as(Seq("band_idx", "band")))
-      .localCheckpoint(true)
+        .as(Seq("band_idx", "band"))))
     val shCensus = bandCensus(shEdges)
 
     // WIDE 120-bit band censuses, one per wideBandPlan the engine can
@@ -150,7 +148,7 @@ object LshStats {
     val mhTotal = mhCensus.map(_._4).sum
     val shTotal = shCensus.map(_._4).sum
     val planted = plantedSrc.map { src =>
-      val pairs = plantedPairs(spark, src, docs).localCheckpoint(true)
+      val pairs = graft.plans.Checkpoints.materialize(plantedPairs(spark, src, docs))
       def block(recall: Map[String, (Long, Long)]): String =
         Seq("light", "heavy").map { k =>
           val (h, n) = recall.getOrElse(k, (0L, 0L))

@@ -60,6 +60,8 @@ object Bpe {
   def train(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     require(nMerges >= 1, "Bpe.train: need >= 1 merges")
     val spark = df.sparkSession
+    // each round's word table replaces (and releases) the one before it;
+    // the returned merges are a local collection, so the last table goes too
     var words = graft.plans.Checkpoints.materialize(wordTable(df, textCol))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
@@ -72,11 +74,14 @@ object Bpe {
       else {
         val (l, r, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((step, l, r, c))
-        words = graft.plans.Checkpoints.materialize(words.withColumn("s",
+        val next = graft.plans.Checkpoints.materialize(words.withColumn("s",
           replace(col("s"), lit(Sep + l + Sep + r + Sep), lit(Sep + l + r + Sep))))
+        graft.plans.Checkpoints.unpersistCheckpoint(words)
+        words = next
         step += 1
       }
     }
+    graft.plans.Checkpoints.unpersistCheckpoint(words)
     import spark.implicits._
     merges.toSeq.toDF("step", "lhs", "rhs", "pair_count")
   }

@@ -650,10 +650,11 @@ object Corpus {
     * single gram stream (disjoint by construction: tokens cannot contain
     * the space a bigram always has) feeding one map-side-combinable
     * aggregate whose result is Zipf-small. That small relation is
-    * localCheckpoint'd (registered with [[graft.plans.Checkpoints]]) so
-    * the totals reduction and the two self-joins below it never re-run
-    * the corpus explode; the final top-k is an `orderBy(...).limit(k)`
-    * → TakeOrderedAndProject, never a global sort. */
+    * materialized (registered with [[graft.plans.Checkpoints]]) with the
+    * totals riding its checkpoint job, so the two self-joins below it
+    * never re-run the corpus explode; the final top-k is an
+    * `orderBy(...).limit(k)` → TakeOrderedAndProject, never a global
+    * sort. */
   def pmiCollocations(df: DataFrame, textCol: String,
                       minCount: Int = 5, k: Int = 50): DataFrame = {
     import graft.llm.Curation.lnNano
@@ -662,13 +663,11 @@ object Corpus {
         filter(TextOps.shingles(col(textCol), 2), b =>
           length(split_part(b, lit(" "), lit(1))) > 0 &&
             length(split_part(b, lit(" "), lit(2))) > 0))).as("g"))
-    val freqs = graft.plans.Checkpoints.materialize(
-      grams.groupBy("g").agg(count(lit(1)).as("f")))
     val isBigram = col("g").contains(" ")
-    val tot = freqs.agg(
-      sum(when(isBigram, col("f"))).as("tb"),
-      sum(when(!isBigram, col("f"))).as("tu")).head()
-    val (tb, tu) = (tot.getLong(0), tot.getLong(1))
+    val (freqs, tot) = graft.plans.Checkpoints.materialize(
+      grams.groupBy("g").agg(count(lit(1)).as("f")),
+      sum(when(isBigram, col("f"))), sum(when(!isBigram, col("f"))))
+    val (tb, tu) = (tot.getLong(1), tot.getLong(2))
     def lnNanoL(x: Long): Long = math.floor(math.log(x.toDouble) * 1e9 + 0.5).toLong
     val uni = freqs.filter(!isBigram)
     val cand = freqs.filter(isBigram && col("f") >= minCount)

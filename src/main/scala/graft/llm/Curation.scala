@@ -109,24 +109,8 @@ object Curation {
     * join + the per-doc aggregate). Output: (idCol, n_bigrams,
     * xent2_nanonats); docs with < 2 tokens score (0, 0). */
   def bigramCrossEntropy(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // SCAN-WIDTH HYGIENE (r18): the tokenize/shingle/explode passes are
-    // the heavy per-row compute here, and on a narrow scan (one-file
-    // fixture, non-splittable input) they serialize behind a single task
-    // — the r18 profile showed one 2.2 s single-task stage carrying ~70%
-    // of the query. r19 correction of the r18 claim (VERDICT r18 #2/#4):
-    // the redistribution is NOT shared between the streams — column
-    // pruning hands the unigram stream a text-only projection, so its
-    // round-robin exchange never canonicalizes with the bigram stream's.
-    // The executed plan (PlanAudit, AQE-final) materializes TWO
-    // round-robin exchanges + 3 file scans; the DOWNSTREAM perDocBg hash
-    // exchange DOES reuse (reuse=1), which keeps the bigram subtree
-    // single. Sharing the base for real — widen + localCheckpoint so
-    // both streams read finished rows (1 exchange, 1 corpus scan) — was
-    // measured NEGATIVE same-session at sf0.1: min 1.49 s (this shape)
-    // vs 1.69-1.79 s (checkpointed base) across 3 interleaved windows;
-    // the materialization barrier + block write/read cost more than the
-    // saved scan+exchange. At real scale the scan is already wide and
-    // widen() is a no-op, so both costs vanish.
+    // unconditional widen: the shingle explode serializes behind a narrow
+    // scan; the base is NOT checkpointed (COVERAGE.md ledger)
     val base = graft.plans.Parallelism.widen(df.select(col(idCol), col(textCol)))
     val toks = base.select(col(idCol), explode(TextOps.tokens(col(textCol))).as("token"))
       .filter(length(col("token")) > 0)
@@ -141,14 +125,9 @@ object Curation {
       .filter(length(split_part(col("bg"), lit(" "), lit(1))) > 0 &&
         length(split_part(col("bg"), lit(" "), lit(2))) > 0)
     // per-(doc, bigram) counts first: map-side combinable, and the term
-    // join then touches distinct pairs instead of bigram instances.
-    // Measured negative result #2 (round 12, sf0.1 idle): materializing
-    // this aggregate ONCE via localCheckpoint — so both consumers read
-    // finished rows instead of re-aggregating off the ReusedExchange —
-    // benches 3.16 s vs 3.06 s for the exchange-reuse form; the block
-    // write+read costs more than the second reduce-side agg saves.
-    // (Negative result #1, earlier round: fusing the unigram stream out
-    // of the bigram stream.) The 3-scan/1-reuse shape stays.
+    // join then touches distinct pairs instead of bigram instances. Not
+    // checkpointed: the exchange-reuse form measured faster (COVERAGE.md
+    // ledger).
     val perDocBg = bgs.groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("c"))
     val terms = perDocBg.groupBy("bg").agg(sum("c").as("fb"))
       .withColumn("prev", split_part(col("bg"), lit(" "), lit(1)))

@@ -170,14 +170,8 @@ object Dedup {
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 2): DataFrame = {
     // ONE native pass from text to the whole signature (MinHashShingle60),
-    // then cheap band hashing. Byte-FLOORED widen (r19): unlike the
-    // shingle-EXPLODE kernels (dedupSpansAcross, bigram — widen stays
-    // unconditional there, measured positive), the fused signature kernel
-    // collapses each doc to one small array and the downstream stages are
-    // band-sized aggregates, so on a sub-floor input the 32-way
-    // redistribution's per-task overhead exceeds the serialized kernel:
-    // same-window A/B at sf0.1, min 1.283 s (unconditional) -> 0.902 s
-    // (floored). A large narrow scan still widens.
+    // then cheap band hashing. Byte-floored widen: the fused kernel
+    // collapses each doc to one small array (COVERAGE.md ledger).
     val withMh = graft.plans.Parallelism.widenIfAtLeast(df.select(col(idCol), col(textCol)))
       .select(col(idCol),
         TextOps.minhashSignatureFromText(col(textCol), shingleN,
@@ -473,31 +467,25 @@ object Dedup {
   def simhashHammingPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3, "simhashHammingPairs: 4 bands cover hamming <= 3")
-    val sims = narrowSignatureLeaf(df, idCol, textCol)
-    bandPairs(sims, Seq("sh"), 4, maxHamming,
-      sims.agg(count(lit(1)), approx_count_distinct("sh")).head())
+    val (sims, stat) = narrowSignatureLeaf(df, idCol, textCol)
+    bandPairs(sims, Seq("sh"), 4, maxHamming, stat)
   }
 
   /** Widen a narrow scan, then materialize the 60-bit signature ONCE as
-    * (id, sh) — two longs per doc. Without the checkpoint every consumer
-    * would re-derive its side from the raw text, running the simhash
-    * pass over the whole corpus once per consumer. Shared by the narrow
-    * path and the [[simhashPairs]] self-sizing probe (which reuses the
-    * SAME leaf when routing stays narrow — the probe is never wasted).
-    *
-    * Byte-floored widen (r19): one simhash60 per row collapses to a
-    * (long, long) leaf — same sub-floor overhead argument as
-    * [[minhashLsh]]; same-window A/B at sf0.1 min 0.984 s
-    * (unconditional) -> 0.910 s (floored), floor-first order too. The
-    * WIDE leaf ([[simhashHammingPairsWide]]) measured the OTHER way
-    * (two signature kernels per row: widen min 0.793/0.817 vs floored
-    * 0.980/1.043 across both orders) and keeps the unconditional
-    * widen. */
-  private def narrowSignatureLeaf(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    * (id, sh) — two longs per doc — with the collapse gate's probe row
+    * `(count, approx_count_distinct(sh))` from the same job. Without the
+    * checkpoint every consumer would re-derive its side from the raw
+    * text. Shared by the narrow path and the [[simhashPairs]] self-sizing
+    * probe (which reuses the SAME leaf when routing stays narrow). The
+    * widen is byte-floored: one simhash60 per row collapses to a
+    * (long, long) leaf (COVERAGE.md "Execution-policy ledger"). */
+  private def narrowSignatureLeaf(df: DataFrame, idCol: String,
+                                  textCol: String): (DataFrame, org.apache.spark.sql.Row) =
     graft.plans.Checkpoints.materialize(
       graft.plans.Parallelism
         .widenIfAtLeast(df.select(col(idCol).as("id"), col(textCol).as("__text")))
-        .select(col("id"), TextOps.simhash60(col("__text")).as("sh")))
+        .select(col("id"), TextOps.simhash60(col("__text")).as("sh")),
+      approx_count_distinct("sh"))
 
   /** Band plan of the 120-bit signature for a requested hamming radius:
     * the SMALLEST aligned band count whose pigeonhole covers the radius
@@ -530,13 +518,13 @@ object Dedup {
   def simhashHammingPairsWide(df: DataFrame, idCol: String, textCol: String,
                               maxHamming: Int = 7): DataFrame = {
     val (nBands, _) = wideBandPlan(maxHamming)
-    val sims = graft.plans.Checkpoints.materialize(
+    val (sims, stat) = graft.plans.Checkpoints.materialize(
       graft.plans.Parallelism
         .widen(df.select(col(idCol).as("id"), col(textCol).as("__text")))
         .select(col("id"), TextOps.simhash60(col("__text")).as("sh1"),
-          TextOps.simhash60b(col("__text")).as("sh2")))
-    bandPairs(sims, Seq("sh1", "sh2"), nBands, maxHamming,
-      sims.agg(count(lit(1)), approx_count_distinct(struct(col("sh1"), col("sh2")))).head())
+          TextOps.simhash60b(col("__text")).as("sh2")),
+      approx_count_distinct(struct(col("sh1"), col("sh2"))))
+    bandPairs(sims, Seq("sh1", "sh2"), nBands, maxHamming, stat)
   }
 
   /** Signature-width decision rule, exposed for callers sizing a corpus
@@ -563,13 +551,12 @@ object Dedup {
     * radii on sub-million corpora keep the cheaper 60-bit signature.
     *
     * SELF-SIZING (r16 verdict #2): the router materializes the 60-bit
-    * signature leaf and MEASURES distinct contents with the same
-    * one-scan approx_count_distinct probe the collapse gate runs (16-byte
-    * rows, partial-agg'd — negligible next to any band join). When the
-    * measurement stays narrow, the probed leaf AND the probe row go
-    * straight to the pair kernel, so nothing is computed twice; when it
-    * routes wide, the narrow leaf is released and the only waste is one
-    * signature pass over the corpus. `cutoff` is the saturation mark
+    * signature leaf and MEASURES distinct contents with the collapse
+    * gate's approx_count_distinct probe, which rides the leaf's own
+    * checkpoint job. When the measurement stays narrow, the probed leaf
+    * AND the probe row go straight to the pair kernel, so nothing is
+    * computed twice; when it routes wide, the narrow leaf is released and
+    * the only waste is one signature pass over the corpus. `cutoff` is the saturation mark
     * (default [[WideSignatureCutoff]]) — the HLL's ~5% rsd can only
     * misroute near it, where the two plans cost about the same and both
     * are complete at the radius. */
@@ -579,8 +566,7 @@ object Dedup {
     if (maxHamming > 3)
       simhashHammingPairsWide(df, idCol, textCol, maxHamming)
     else {
-      val sims = narrowSignatureLeaf(df, idCol, textCol)
-      val stat = sims.agg(count(lit(1)), approx_count_distinct("sh")).head()
+      val (sims, stat) = narrowSignatureLeaf(df, idCol, textCol)
       if (wideSignatureNeeded(maxHamming, stat.getLong(1), cutoff)) {
         // saturated: the narrow leaf is useless to the wide path (its
         // signature has both streams) — release it before re-scanning
@@ -770,31 +756,16 @@ object Dedup {
         .filter(col("band").isNotNull))
     val a = bandsDf.as("a")
     val b = bandsDf.as("b")
-    // COMPUTE-DENSE EXCHANGE PIN (r19, same class as RecordLinkage's
-    // block-join pin): the candidate-id exchange carries two longs per
-    // pair, so AQE's byte-based coalescing folds it toward one
-    // partition — and the ENTIRE verify chain (the shingle joins
-    // broadcast at these sizes, so no exchange breaks the stage) then
-    // runs the per-pair intersect/union work on ONE task. Measured at
-    // the sf1 synth fixture: q_dedup_best_match 11.94 s with the
-    // coalesce vs 5.94 s with coalescing disabled — per-pair verify is
-    // compute-dense per shuffled byte, exactly what byte-derived
-    // coalescing cannot see. A user-specified repartition is never
-    // coalesced, so pin the pair stream at the session's parallelism.
-    // The pin sits BELOW the distinct: there it SATISFIES the distinct's
-    // hash(id_a, id_b) requirement and replaces the ENSURE_REQUIREMENTS
-    // exchange outright (same exchange count, now non-coalescable; the
-    // cost is only the lost map-side pre-dedup of band duplicates —
-    // two-long rows). Pinned ABOVE the distinct it is pruned as
-    // redundant (identical partitioning to the aggregate's output) and
-    // the serialization returns. Keys hash without skew (pairs are
-    // near-unique). Measured: sf1 11.94 -> 3.64 s min (3.3x, beats
-    // even coalescing-off's 5.94 s), sf0.1 neutral (2.23 vs 2.28).
-    val pinned = math.max(df.sparkSession.sparkContext.defaultParallelism,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val pairIds = a.join(b, col("a.band") === col("b.band") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .repartition(pinned, col("id_a"), col("id_b"))
+    // Compute-dense exchange pin: the candidate-id exchange carries two
+    // longs per pair while the verify chain above it does per-pair set
+    // work, so AQE's byte-based coalescing would fold it onto one task
+    // (COVERAGE.md "Execution-policy ledger"). It sits BELOW the distinct,
+    // where it satisfies the distinct's hash(id_a, id_b) requirement and
+    // replaces that exchange; above it, it would be pruned as redundant.
+    val pairIds = graft.plans.Parallelism.pin(
+        a.join(b, col("a.band") === col("b.band") && col("a.id") < col("b.id"))
+          .select(col("a.id").as("id_a"), col("b.id").as("id_b")),
+        col("id_a"), col("id_b"))
       .distinct()
     val shing = withSh.select(col("id"), array_distinct(col("__sh")).as("sh"))
     val repPairs = pairIds
@@ -1135,14 +1106,8 @@ object Dedup {
   def lshCandidateCensus(df: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, bands: Int = 4,
                          rowsPerBand: Int = 2): DataFrame = {
-    // byte-floored widen (r19, VERDICT r18 #7): the census's consumers
-    // are all band-sized aggregates over the checkpointed (id, band)
-    // stream, so on a sub-floor input the 32-way fan-out's per-task
-    // overhead swamps the serialized signature kernel — same-window A/B
-    // at sf0.1 min 1.197 s (unconditional) -> 0.690 s (floored); the
-    // profile ledger showed the downstream 32-task stages burning
-    // 6-10 s of task-time for <0.1 s of useful aggregate work. A large
-    // narrow scan still widens (the r17 hazard stays closed).
+    // byte-floored widen: every consumer is a band-sized aggregate over
+    // the checkpointed (id, band) stream (COVERAGE.md ledger)
     val base = graft.plans.Parallelism
       .widenIfAtLeast(df.select(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"),

@@ -109,23 +109,17 @@ object QualityClassifier {
       .select(col(idCol), col("__lab"),
         explode(TextOps.tokens(col(textCol))).as("token"))
       .filter(length(col("token")) > 0)
-    // The vocab is Zipf-small next to the corpus (the same bound that
-    // makes the weight table broadcastable), but before r18 it was
-    // COMPUTED TWICE from the corpus token stream: once under the
-    // 1-row normalizer collect below and again under the top-V weights
-    // limit. Materializing the (token, c_pos, c_all) aggregate makes
-    // the second consumer read finished rows — one full tokenize pass
-    // of the corpus removed at any scale, for a vocab-sized checkpoint.
-    val vocab = graft.plans.Checkpoints.materialize(
+    // The vocab is Zipf-small next to the corpus. Materializing the
+    // (token, c_pos, c_all) aggregate makes the top-V weights read
+    // finished rows instead of re-tokenizing the corpus, and its
+    // checkpoint job also yields the global normalizers (the constants
+    // fold into literals; no 1-row cross join in the plan).
+    val (vocab, t) = graft.plans.Checkpoints.materialize(
       toks.groupBy("token").agg(
         sum(when(col("__lab"), 1L).otherwise(0L)).as("c_pos"),
-        count(lit(1)).as("c_all")))
-    // Global normalizers: one bounded 1-row driver reduction each (the
-    // constants fold into literals; no 1-row cross join in the plan).
-    val t = vocab.agg(
-      coalesce(sum("c_pos"), lit(0L)), coalesce(sum("c_all"), lit(0L)),
-      count(lit(1))).head()
-    val (nPos, nAll, v) = (t.getLong(0), t.getLong(1), t.getLong(2))
+        count(lit(1)).as("c_all")),
+      coalesce(sum("c_pos"), lit(0L)), coalesce(sum("c_all"), lit(0L)))
+    val (v, nPos, nAll) = (t.getLong(0), t.getLong(1), t.getLong(2))
     val nNeg = nAll - nPos
     val d = labeled.agg(
       coalesce(sum(when(col("__lab"), 1L).otherwise(0L)), lit(0L)),

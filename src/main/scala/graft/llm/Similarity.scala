@@ -74,13 +74,8 @@ object Similarity {
   def withLshBuckets(df: DataFrame, idCol: String, vecCol: String,
                      nPlanes: Int = 8, dim: Int = 32): DataFrame = {
     val planes = hyperplanes(nPlanes, dim)
-    // scan-width hygiene (same rationale as Dedup.scala:82): the bucket
-    // assignment is nPlanes x dim multiply-adds PER ROW, and the pair
-    // joins downstream ([[cosineNearDupPairs]]) can BROADCAST one side —
-    // the stream side then inherits the scan's split count straight into
-    // the per-pair cosine stage. A one-file embeddings parquet scans to
-    // few splits; widen() redistributes only then (no-op on any real
-    // multi-split corpus).
+    // byte-floored widen: nPlanes x dim multiply-adds per row, linear in
+    // bytes (COVERAGE.md ledger)
     graft.plans.Parallelism.widenIfAtLeast(df.select(col(idCol), col(vecCol)))
       .select(col(idCol), col(vecCol), lshBucket(col(vecCol), planes).as("bucket"))
   }
@@ -737,19 +732,10 @@ object Similarity {
   }
 
   /** Nearest-centroid assignment (argmax cosine over the k centroids).
-    *
-    * The input is widened first (see
-    * [[graft.plans.Parallelism.widenIfAtLeast]]): the argmax costs
-    * k x dim multiply-adds per row — with the adaptive k = N/64 that is
-    * the single most compute-dense scan in the semdedup family — and a
-    * LARGE one-file embeddings parquet would otherwise serialize it
-    * behind the scan's split count. The size floor is what makes the
-    * hygiene free: the per-row work is linear in bytes, so below the
-    * floor the serialized stage is bounded while the redistribution is
-    * pure overhead (r18 measured the unfloored widen costing 2.5x on
-    * the sub-MB bench fixtures). No-op for non-scan-shaped inputs
-    * (kmeansRefine's loop, checkpointed cells) and for any real
-    * multi-split corpus. */
+    * The input is widened above the byte floor
+    * ([[graft.plans.Parallelism.widenIfAtLeast]]): the argmax costs
+    * k x dim multiply-adds per row, linear in bytes (COVERAGE.md
+    * ledger). */
   def ivfAssign(df: DataFrame, vecCol: String, centroids: Seq[Array[Double]]): DataFrame = {
     val sims = array(centroids.map(c => cosineTo(col(vecCol), c.toSeq)): _*)
     graft.plans.Parallelism.widenIfAtLeast(df).withColumn("__sims", sims)

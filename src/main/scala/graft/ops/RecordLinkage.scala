@@ -112,24 +112,19 @@ object RecordLinkage {
     require(maxBlockSize.forall(_ > 0), "fuzzyJoin: maxBlockSize must be positive")
     val report = scala.collection.mutable.Map.empty[String, CapDrop]
     val censuses = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // Cap enforcement is LOUD about what it drops (r15 verdict: at a
-    // 100-replica duplication every mid-slice block exceeded the cap and
-    // the operator returned 0 pairs with no signal — on a real pipeline
-    // that reads as "no duplicates found"). The per-side block census is
-    // materialized once and reused: a 1-row aggregate over it yields the
+    // Cap enforcement is LOUD about what it drops: the per-side block
+    // census is materialized once, its checkpoint job also yields the
     // dropped block/row mass (recorded in the call's report, printed on
     // stderr whenever anything was dropped), and its over-cap filter
-    // feeds the same anti-join as before — no second census scan.
+    // feeds the anti-join.
     def capped(df: DataFrame, side: String): DataFrame = maxBlockSize.fold(df) { cap =>
-      val census = graft.plans.Checkpoints.materialize(
-        df.groupBy("__blk").agg(count(lit(1)).as("__bn")))
+      val (census, stat) = graft.plans.Checkpoints.materialize(
+        df.groupBy("__blk").agg(count(lit(1)).as("__bn")),
+        coalesce(sum("__bn"), lit(0L)), count(when(col("__bn") > cap, 1)),
+        coalesce(sum(when(col("__bn") > cap, col("__bn"))), lit(0L)))
       // the two sides run concurrently (pool below); the per-call
       // collections are the only shared mutable state
       censuses.synchronized { censuses += census }
-      val stat = census.agg(
-        count(lit(1)), coalesce(sum("__bn"), lit(0L)),
-        count(when(col("__bn") > cap, 1)),
-        coalesce(sum(when(col("__bn") > cap, col("__bn"))), lit(0L))).head()
       val drop = CapDrop(stat.getLong(2), stat.getLong(3),
         stat.getLong(0), stat.getLong(1))
       report.synchronized { report.put(side, drop) }
@@ -142,31 +137,12 @@ object RecordLinkage {
       df.join(census.filter(col("__bn") > cap).select("__blk"),
         Seq("__blk"), "left_anti")
     }
-    // SCAN-WIDTH HYGIENE on both row sides (r17 forward note, same
-    // rationale as Dedup.scala:82): the block join below may BROADCAST
-    // one side, and a broadcast plan makes the OTHER side inherit its
-    // scan's split count straight into the quadratic Levenshtein stage —
-    // a one-file fixture parquet would run the O(Σ|a_blk|×|b_blk|) DP on
-    // a handful of tasks. The SMJ path redistributes on __blk anyway, so
-    // widen() only ever pays on the broadcast plan with a narrow scan
-    // (and is a no-op on any real multi-split corpus). Applied BEFORE
-    // the cap's anti-join: widen only inspects scan-shaped plans, so
-    // widening after capped() would never fire.
-    // The two sides' census materializations + 1-row stat collects are
-    // INDEPENDENT Spark actions; running them from a 2-thread pool
-    // overlaps their barriers (guide §2.6 — the scheduler happily runs
-    // both, actions were only sequential because this code called them
-    // sequentially). r18 measured q_fuzzy_link_capped 2.59 s -> 2.14 s
-    // min at sf0.1. Uncapped calls build no census and take the plain
-    // sequential path (capped() is then pure plan construction).
-    // `widenInputs = false` is the caller's escape hatch for inputs it
-    // KNOWS are tiny with tiny blocks (a byte floor cannot gate this one:
-    // block-join DP work is super-linear in bytes, so a small side can
-    // still carry unbounded compute — only the caller knows). r18
-    // measured the redistribution costing q_entity_clusters ~2x at the
-    // sf0.1 bench (500-row sides, maxDist 2) while WINNING on the
-    // 15k-row linkage queries (q_fuzzy_link_best 0.74x) — both keep
-    // their measured setting.
+    // Both row sides are widened before the cap's anti-join (widen only
+    // inspects scan-shaped plans); the two census checkpoints run from a
+    // 2-thread pool so their barriers overlap. `widenInputs = false` is
+    // the caller's escape hatch for inputs it KNOWS are tiny with tiny
+    // blocks: block-join DP work is super-linear in bytes, so no byte
+    // floor can gate it (COVERAGE.md "Execution-policy ledger").
     def side(df: DataFrame, tag: String): DataFrame =
       capped(if (widenInputs) graft.plans.Parallelism.widen(df) else df, tag)
     val aSel = a.select(col(aId).as("id_a"), col(aText).as("text_a"),
@@ -209,30 +185,15 @@ object RecordLinkage {
           throw t
       }
     }
-    // COMPUTE-DENSE EXCHANGE PIN (r17, conditional): the block join
-    // costs O(Σ |block_a|×|block_b|) Levenshtein DP cells but shuffles
-    // only (id, name, key) rows, so its parallelism is at the mercy of
-    // AQE's BYTE-based coalescing. Under the DEFAULT policy
-    // (coalescePartitions.parallelismFirst = true) AQE preserves
-    // parallelism AND may skew-split a heavy partition mid-block — the
-    // r17 sf10p A/B measured the untouched join 16% FASTER than a
-    // forced repartition (464 s vs 554 s, both at 30-32 tasks), so the
-    // default session gets the untouched plan. Under
-    // parallelismFirst = false — the setting Spark's own tuning guide
-    // recommends for production — the same exchange coalesces toward
-    // the 64 MB advisory target (a ~4 MB shuffle → ~1 task carrying
-    // ≈730 G DP cells), so THERE both sides are pinned with an explicit
-    // partition count (user-specified repartitioning is never
-    // coalesced), trading skew-splitting for not running the quadratic
-    // stage on a byte-count's worth of cores. Blocks are atomic under
-    // any partitioning — the cap stays the skew dial either way.
+    // Compute-dense exchange pin, only under
+    // coalescePartitions.parallelismFirst = false, where AQE would
+    // coalesce the block join's small shuffle onto ~1 task (COVERAGE.md
+    // "Execution-policy ledger"); blocks are atomic under any partitioning.
     val pinOn = !java.lang.Boolean.parseBoolean(
       a.sparkSession.sessionState.conf.getConfString(
         "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"))
-    val pinned = math.max(a.sparkSession.sparkContext.defaultParallelism,
-      a.sparkSession.sessionState.conf.numShufflePartitions)
     def pin(df: DataFrame): DataFrame =
-      if (pinOn) df.repartition(pinned, col("__blk")) else df
+      if (pinOn) graft.plans.Parallelism.pin(df, col("__blk")) else df
     // THRESHOLDED Levenshtein (r17): the 3-arg form runs the BANDED DP
     // (O(len × (2·maxDist+1)) cells instead of len², ~2.5× at maxDist 3
     // on ~20-char names) and short-circuits in O(1) when the length gap

@@ -1,36 +1,38 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Storage hygiene for fix-point loops and shared-subtree materialization.
-  * `Dataset.localCheckpoint` persists an internal RDD (MEMORY_AND_DISK)
-  * that `Dataset.unpersist` does NOT release — unpersist only talks to the
-  * cache manager, while the checkpoint blocks hang off the `LogicalRDD`
-  * leaf. Iterative algorithms that checkpoint per iteration must release
-  * the superseded iteration's blocks through that leaf, or executor
-  * storage grows by one table copy per iteration (VERDICT r3 "What's
-  * wrong #2"). One-shot materializations (a signature subtree read by two
-  * consumers of the SAME returned plan) cannot release eagerly — the
-  * blocks back the caller's result — so they register here and the caller
-  * (Bench / Verify / a long-lived session) drains the registry once the
-  * result is consumed (round-4 advice). */
+/** Storage hygiene for graft's one checkpoint primitive,
+  * `GraftBridge.checkpointObserved`: an eager local checkpoint whose
+  * census rides its own job and whose leaf carries the exact rows and
+  * bytes it stores. Its blocks hang off the `LogicalRDD` leaf, which
+  * `Dataset.unpersist` does NOT release (unpersist only talks to the
+  * cache manager), so every checkpoint has one of two lifetimes:
+  *  - a loop round releases the round it supersedes through
+  *    [[unpersistCheckpoint]] once the next round is materialized, or
+  *    executor storage grows by one table copy per round;
+  *  - a subtree that is part of a RETURNED plan (read by two consumers of
+  *    that plan) cannot be released by its operator, since the blocks
+  *    back the caller's result, so [[materialize]] registers it and the
+  *    caller (Bench / Verify / a long-lived session) drains the registry
+  *    with [[releaseAll]] once the result is consumed. */
 object Checkpoints {
 
   private val tracked =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
-  /** Eagerly localCheckpoint `df` and register the blocks for later
-    * [[releaseAll]]. Use for shared subtrees that are part of a RETURNED
-    * plan (alive until the caller finishes consuming the result). */
-  def materialize(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
-    out.queryExecution.logical match {
-      case l: LogicalRDD => tracked.add(l.rdd)
-      case _ => ()
-    }
+  /** `GraftBridge.checkpointObserved(df, aggs*)` with the blocks
+    * registered for [[releaseAll]]: the frame and the row
+    * `(count, aggs…)` computed by the checkpoint's own job. */
+  def materialize(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+    val out = GraftBridge.checkpointObserved(df, aggs: _*)
+    out._1.queryExecution.logical match { case l: LogicalRDD => tracked.add(l.rdd) }
     out
   }
+
+  /** The registered frame alone, for sites that need no census. */
+  def materialize(df: DataFrame): DataFrame = materialize(df, Seq.empty[Column]: _*)._1
 
   /** Release every checkpoint registered by [[materialize]]. Call after
     * the consuming action completes — the truncated-lineage RDDs cannot
@@ -46,8 +48,8 @@ object Checkpoints {
   /** Number of registered-but-unreleased checkpoints (spec hook). */
   def trackedCount: Int = tracked.size()
 
-  /** Release the storage blocks behind a localCheckpoint'd DataFrame and
-    * drop it from the [[materialize]] registry if it was registered there.
+  /** Release the storage blocks behind a checkpointed DataFrame and drop
+    * it from the [[materialize]] registry if it was registered there.
     * No-op (falls back to cache-manager unpersist) when the plan is not a
     * checkpoint leaf. Non-blocking: callers checkpoint the NEXT iteration
     * eagerly before releasing the previous one, so nothing recomputes. */

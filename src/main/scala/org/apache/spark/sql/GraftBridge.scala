@@ -2,15 +2,15 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 
 /** Bridge to Spark 4 internals: the private[sql] Column<->Expression
   * converters (to register custom Catalyst expressions such as
   * graft.expressions.U60Hash as Columns), the `LogicalRDD` leaves behind
-  * the fix-point checkpoint primitive, and private[spark] utilities. */
+  * the one checkpoint primitive, and private[spark] utilities. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -28,32 +28,39 @@ object GraftBridge {
   private val observations = new java.util.concurrent.atomic.AtomicLong()
 
   /** Eager local checkpoint of `df` that also returns aggregates over the
-    * rows it materialized, from the same job — the one checkpoint
-    * primitive of every fix-point round. `count(lit(1))` and `aggs` ride
-    * the plan as a `Dataset.observe` under a name fresh to this call (an
-    * observation name is single-use per plan), so a round learns its
-    * size and convergence figures without a second action over the
-    * checkpoint. Returns the frame and the row `(count, aggs…)`, equal to
+    * rows it materialized, from the same job: the one way graft
+    * materializes a frame (`graft.plans.Checkpoints.materialize` is its
+    * registered form). `count(lit(1))` and `aggs` ride the plan as a
+    * `Dataset.observe` under a name fresh to this call (an observation
+    * name is single-use per plan), so a caller learns the frame's size and
+    * any census over it without a second action over the checkpoint.
+    * Returns the frame and the row `(count, aggs…)`, equal to
     * `df.agg(count(lit(1)), aggs…).head()`.
     *
-    * Not `Dataset.localCheckpoint`: its leaf copies the origin plan's
-    * ESTIMATED Statistics, and in a loop whose round plan joins the
-    * previous checkpoint with itself the copied `sizeInBytes` compounds
-    * (visitJoin multiplies child sizes) until query planning spends
-    * minutes in BigInteger.multiply. This leaf carries exact stats from the
-    * observed count instead, so a shrinking frontier still broadcasts.
-    * Release the blocks with `graft.plans.Checkpoints.unpersistCheckpoint`
-    * exactly like a `localCheckpoint` result. */
+    * The leaf's statistics are what it stores: the exact row count and
+    * the summed `UnsafeRow` bytes of its rows, counted by the same job
+    * (how Spark's `InMemoryRelation` reports a loaded cache). Not
+    * `Dataset.localCheckpoint`, whose leaf copies the origin plan's
+    * ESTIMATE: in a loop whose round joins the previous checkpoint with
+    * itself the copied `sizeInBytes` compounds (visitJoin multiplies child
+    * sizes) until planning spends minutes in BigInteger.multiply, and
+    * `schema.defaultSize` under-reports strings and arrays (a 1 KB text
+    * row stores 1,024 bytes against a default of 28). Release the blocks
+    * with `graft.plans.Checkpoints.unpersistCheckpoint`. */
   def checkpointObserved(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
     val name = s"__graft_checkpoint_${observations.incrementAndGet()}"
     val qe = df.observe(name, functions.count(functions.lit(1)), aggs: _*).queryExecution
     val rdd = qe.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    rdd.count()
+    val fallback = math.max(8L, df.schema.defaultSize.toLong)
+    val bytes = rdd.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) =>
+      rows.foldLeft(0L)((b, r) => b + (r match {
+        case u: UnsafeRow => u.getSizeInBytes.toLong
+        case _ => fallback
+      }))).sum
     val row = qe.observedMetrics(name)
-    val n = BigInt(row.getLong(0))
-    (rddLeaf(df, rdd, Some(Statistics(
-      sizeInBytes = n.max(1) * math.max(8, df.schema.defaultSize), rowCount = Some(n)))), row)
+    (rddLeaf(qe, rdd, Some(Statistics(
+      sizeInBytes = BigInt(bytes).max(1), rowCount = Some(BigInt(row.getLong(0)))))), row)
   }
 
   /** `df` with its plan executed ONCE: AQE runs every upstream query
@@ -63,15 +70,23 @@ object GraftBridge {
     * its partition count. */
   def executedOnce(df: DataFrame): (DataFrame, Int) = {
     val rdd = df.queryExecution.toRdd
-    (rddLeaf(df, rdd, None), rdd.getNumPartitions)
+    (rddLeaf(df.queryExecution, rdd, None), rdd.getNumPartitions)
   }
 
-  /** A frame of `df`'s schema scanning `rdd`, with `stats` on its leaf. */
-  private def rddLeaf(df: DataFrame, rdd: RDD[InternalRow],
+  /** A frame scanning `rdd`, the rows of `qe`'s plan, with `stats` on its
+    * leaf. The leaf also carries the plan's constraints, as
+    * `Dataset.localCheckpoint` does: without them the optimizer re-infers
+    * filters the rows already satisfy (`isnotnull` on a join key) on one
+    * read of the leaf but not another, and exchange reuse no longer sees
+    * the two reads as one subtree. */
+  private def rddLeaf(qe: QueryExecution, rdd: RDD[InternalRow],
                       stats: Option[Statistics]): DataFrame = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    classic.Dataset.ofRows(session,
-      LogicalRDD(DataTypeUtils.toAttributes(df.schema), rdd)(session, stats, None))
+    val out = DataTypeUtils.toAttributes(qe.analyzed.schema)
+    val origin = qe.optimizedPlan
+    val constraints = LogicalRDD.buildOutputAssocForRewrite(origin.output, out)
+      .map(LogicalRDD.rewriteConstraints(origin.constraints, _))
+    classic.Dataset.ofRows(qe.sparkSession,
+      LogicalRDD(out, rdd)(qe.sparkSession, stats, constraints))
   }
 
   /** Register graft's native expressions as SQL functions on a session

@@ -1,13 +1,19 @@
 package graft
 
+import graft.llm.{Dedup, TextOps}
+import graft.ops.RecordLinkage
 import graft.plans.Checkpoints
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** `GraftBridge.checkpointObserved`, the eager checkpoint every fix-point
-  * round goes through: it costs the jobs of a plain eager checkpoint, its
-  * observed row is the aggregate a separate action would return, and its
-  * leaf carries exact statistics that a self-joining loop cannot compound. */
+/** `GraftBridge.checkpointObserved`, the one eager checkpoint (and
+  * `Checkpoints.materialize`, its registered form): it costs the jobs of a
+  * plain eager checkpoint, its observed row is the aggregate a separate
+  * action would return, its leaf carries exact statistics that a
+  * self-joining loop cannot compound and that cover the bytes its rows
+  * store, and the operators whose census reads a fresh checkpoint pay no
+  * job beyond the checkpoint's own. */
 class CheckpointObservedSpec extends SparkSpec {
 
   private def grouped(): DataFrame = spark.range(0, 2000, 1, 4)
@@ -62,5 +68,61 @@ class CheckpointObservedSpec extends SparkSpec {
     }
     assert(leaf.filter(col("up") =!= 0).count() == 0L) // every chain reached the root
     Checkpoints.unpersistCheckpoint(leaf)
+  }
+
+  test("materialize(df, aggs*) returns the agg row and registers one checkpoint for releaseAll") {
+    val aggs = Seq(sum("s"), max("k"), count_if(col("n") > 54))
+    val expected = grouped().agg(count(lit(1)), aggs: _*).head()
+    Checkpoints.releaseAll()
+    val (cp, row) = Checkpoints.materialize(grouped(), aggs: _*)
+    val rdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    assert(row == expected, s"materialize $row, agg $expected")
+    assert(Checkpoints.trackedCount == 1)
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    Checkpoints.releaseAll()
+    assert(Checkpoints.trackedCount == 0)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+  }
+
+  test("the leaf's sizeInBytes covers the bytes its rows store: 1 KB text rows and 32-float arrays") {
+    val ids = spark.range(0, 1000, 1, 4)
+    val inputs = Seq(
+      ("1 KB text", ids.select(col("id"), repeat(lit("x"), 1024).as("t")), 1024L),
+      ("32-float arrays", ids.select(col("id"),
+        array((0 until 32).map(i => (col("id") + i).cast("float")): _*).as("v")), 32L * 4))
+    for ((label, df, payload) <- inputs) {
+      val cp = Checkpoints.materialize(df)
+      try {
+        val stats = cp.queryExecution.optimizedPlan.stats
+        assert(stats.rowCount.contains(BigInt(1000)), s"$label: ${stats.rowCount}")
+        assert(stats.sizeInBytes >= BigInt(1000) * payload, s"$label: ${stats.sizeInBytes}")
+      } finally Checkpoints.unpersistCheckpoint(cp)
+    }
+  }
+
+  test("simhashHammingPairs and a capped fuzzyJoinReleasable run only their checkpoints' jobs") {
+    import spark.implicits._
+    val docs = (1L to 60L).map(i => (i, s"doc ${i % 7} alpha beta gamma ${i % 3}"))
+      .toDF("id", "text")
+    val (leaf, leafJobs) = JobCount(spark)(Checkpoints.materialize(
+      docs.select(col("id"), TextOps.simhash60(col("text")).as("sh"))))
+    Checkpoints.unpersistCheckpoint(leaf)
+    val (_, pairJobs) = JobCount(spark)(Dedup.simhashHammingPairs(docs, "id", "text"))
+    assert(leafJobs > 0)
+    assert(pairJobs == leafJobs, s"simhashHammingPairs ran $pairJobs jobs, its leaf $leafJobs")
+
+    val a = (1L to 30L).map(i => (i, s"name${i % 4}abc")).toDF("id", "t")
+    val b = (101L to 120L).map(i => (i, s"nome${i % 5}abc")).toDF("id", "t")
+    def census(df: DataFrame): DataFrame = df.select(RecordLinkage.suffixBlock(col("t")).as("__blk"))
+      .groupBy("__blk").agg(count(lit(1)).as("__bn"))
+    val (censuses, censusJobs) = JobCount(spark)(Seq(a, b).map(d => Checkpoints.materialize(census(d))))
+    censuses.foreach(Checkpoints.unpersistCheckpoint)
+    val (linked, linkJobs) = JobCount(spark)(RecordLinkage.fuzzyJoinReleasable(
+      a, "id", "t", RecordLinkage.suffixBlock(col("t")),
+      b, "id", "t", RecordLinkage.suffixBlock(col("t")),
+      maxDist = 2, maxBlockSize = Some(5), widenInputs = false))
+    linked.releaseCensus()
+    assert(linked.report("a").droppedBlocks > 0L)
+    assert(linkJobs == censusJobs, s"capped fuzzyJoin ran $linkJobs jobs, its censuses $censusJobs")
   }
 }

@@ -267,6 +267,13 @@ class CurationSpec extends SparkSpec {
     assert(got == Seq((1, "g", "o", 3L)))
   }
 
+  test("Bpe.train releases every word-table checkpoint it made") {
+    val before = graft.plans.Checkpoints.trackedCount
+    val merges = graft.llm.Bpe.train(docs, "text", nMerges = 8).collect()
+    assert(merges.length == 8)
+    assert(graft.plans.Checkpoints.trackedCount == before)
+  }
+
   test("Bpe.tokenCount applies a merge table like the reference fold") {
     val corpus = Seq(
       (1L, "the thin thing"),

@@ -25,7 +25,10 @@ NORMALIZE = [
     (re.compile(r"#\d+"), "#n"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=n]"),
     (re.compile(r"RDD\[\d+\]"), "RDD[n]"),
-    (re.compile(r"(\w+\.scala):\d+"), r"\1:n"),
+    # anchored at a word start: unanchored, `\w+` retries from every
+    # offset of a long literal (a serialized bloom filter) and the scan
+    # goes quadratic
+    (re.compile(r"(?<!\w)(\w+\.scala):\d+"), r"\1:n"),
 ]
 OPERATOR = re.compile(r"^\(\d+\) .+")
 SHOWN = 12
