@@ -16,8 +16,9 @@ import graft.pipeline.PgToc
   * single-session pg_restore uses). TABLE DATA payloads stream straight
   * from the archive file into `COPY ... FROM STDIN` — no Spark pass, no
   * re-encode; gzipped payloads decompress inline on the stream. Within
-  * the data section, tables load through a worker pool in dependency
-  * WAVES (the reference's task queue, `restore.go:755-831`): a table
+  * the data section, tables load through a pool of long-lived psql
+  * sessions in dependency WAVES (the reference's task queue,
+  * `restore.go:755-831`, one connection per worker): a table
   * starts only after every data entry it depends on has finished, and
   * independent tables load concurrently.
   *
@@ -117,8 +118,8 @@ object PgRestore {
     * feed; once the payload is fully written the server-side commit tail
     * is legitimately silent, so the feeder drops the flag and the
     * watchdog stands down (silent statements are covered by the
-    * server-side `lock_timeout` guard instead — see [[exec]]). Returns
-    * the tripped flag. */
+    * server-side `lock_timeout` guard instead — see [[Session]]).
+    * Returns the tripped flag. */
   private def armWatchdog(p: Process,
                           lastActivity: java.util.concurrent.atomic.AtomicLong,
                           watchdogSec: Int,
@@ -146,153 +147,216 @@ object PgRestore {
     tripped
   }
 
-  /** Drain `in` to a string, stamping the activity clock per read. */
-  private def drainStamping(in: java.io.InputStream,
-                            lastActivity: java.util.concurrent.atomic.AtomicLong)
-      : String = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n >= 0) {
-      if (n > 0) { bos.write(buf, 0, n); lastActivity.set(System.nanoTime()) }
-      n = in.read(buf)
-    }
-    bos.toString("UTF-8")
-  }
-
-  private def watchdogSuffix(tripped: java.util.concurrent.atomic.AtomicBoolean,
-                             watchdogSec: Int): String =
-    if (tripped.get()) s" [watchdog: psql idle > ${watchdogSec}s — killed]" else ""
-
-  /** One SQL batch in its own psql session; returns (rc, combined out).
-    *
-    * `watchdogSec > 0` guards SERVER-SIDE via `SET lock_timeout` rather
-    * than a byte-idle kill: DDL (post-data CREATE INDEX, ADD CONSTRAINT)
-    * is legitimately silent for minutes while working, so client-side
-    * byte-silence is not evidence of a hang here. `lock_timeout` cancels
-    * exactly the hang-on-a-lock case the watchdog exists for, the server
-    * reports it ("canceling statement due to lock timeout"), and a
-    * healthy long build is never touched.
-    *
-    * Residual hang class, deliberately NOT guarded: failures the server
-    * cannot time out and the client cannot distinguish from work — a
-    * network partition mid-statement, or a commit blocked on an
-    * unreachable synchronous standby. Guarding those client-side would
-    * reintroduce the false-kill of healthy silent DDL this rework
-    * removed; operators who need cover there should set server-side
-    * `statement_timeout` / TCP keepalives on the conninfo (native
-    * pg_restore hangs identically). */
-  private def exec(psqlArgs: Seq[String], sql: String,
-                   watchdogSec: Int = 0): (Int, String) = {
-    val guard =
-      if (watchdogSec > 0) Seq("-c", s"SET lock_timeout = '${watchdogSec}s'")
-      else Nil
+  /** One SQL batch in its own psql process, for the calls that run
+    * outside a restore's sessions: `--create`'s maintenance-database
+    * statement and the script hooks. Returns (rc, combined out). */
+  private def exec(psqlArgs: Seq[String], sql: String): (Int, String) = {
     val cmd = Seq("/usr/bin/psql", "-X", "-q", "-v", "ON_ERROR_STOP=1") ++
-      psqlArgs ++ guard ++ Seq("-c", sql)
+      psqlArgs ++ Seq("-c", sql)
     val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     p.getOutputStream.close()
     val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
     (p.waitFor(), out)
   }
 
-  /** Run a psql session with `pre` statements (each its own -c) followed
-    * by a COPY FROM STDIN fed from `file` (decompressed inline by
-    * suffix — .gz/.lz4/.zst). The payload's own `\.` terminator ends
-    * the COPY. */
-  private def copyFrom(psqlArgs: Seq[String], pre: Seq[String],
-                       copySql: String, file: java.io.File,
-                       watchdogSec: Int = 0): (Int, String) = {
-    // the same lock_timeout guard as exec(): a COPY blocked on a lock it
-    // can never get (ACCESS EXCLUSIVE held elsewhere) errors out
-    // server-side at the deadline even when the whole payload already
-    // fits in the OS pipe buffer (small tables feed to EOF instantly, so
-    // the byte-idle watchdog below has already stood down)
-    val guard =
-      if (watchdogSec > 0) Seq(s"SET lock_timeout = '${watchdogSec}s'")
-      else Nil
-    val cmd = Seq("/usr/bin/psql", "-X", "-q", "-v", "ON_ERROR_STOP=1") ++
-      psqlArgs ++ (guard ++ pre).flatMap(s => Seq("-c", s)) ++ Seq("-c", copySql)
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val lastActivity = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    // byte-idle kill is armed ONLY while the feed is mid-stream — that is
-    // the one window where silence means a stalled pipe; the post-EOF
-    // server-side commit tail is legitimately silent (ADVICE r14)
-    val feeding = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val tripped = armWatchdog(p, lastActivity, watchdogSec, feeding)
-    val feeder = new Thread(() => {
-      val in: java.io.InputStream = Compress.input(
-        Compress.algoOfFile(file.getName),
-        new java.io.BufferedInputStream(new java.io.FileInputStream(file)))
+  /** Restore steps as psql script text, shared by the `-f` script
+    * ([[toScript]]) and the direct restore's sessions ([[Session]]).
+    * Like native it tracks ONE session's tablespace and access method:
+    * the `SET default_tablespace` / `SET default_table_access_method`
+    * synthesized from an entry's TOC fields (pg_backup_archiver.c
+    * `_selectTablespace` / `_printTableAccessMethod`) is written only on
+    * CHANGE, including the initial `SET default_tablespace = '';` real
+    * pg_dump scripts open tables with; `--no-tablespaces` /
+    * `--no-table-access-method` suppress exactly that synthesis. `feed`
+    * copies a decompressed COPY payload to `out`. `rendered` counts
+    * statements and COPY blocks, not SET lines. */
+  private final class ScriptOut(o: Options, out: java.io.OutputStream,
+      feed: (java.io.InputStream, java.io.OutputStream) => Unit =
+        (in, os) => { in.transferTo(os); () }) {
+    private val w = new java.io.BufferedWriter(
+      new java.io.OutputStreamWriter(out, "UTF-8"))
+    private var currTs: String = null
+    private var currAm: String = null
+    var rendered = 0
+
+    def line(s: String): Unit = { w.write(s); w.write("\n") }
+
+    def stmt(sql: String): Unit = {
+      val s = sql.trim
+      if (s.nonEmpty) { line(if (s.endsWith(";")) s else s + ";"); rendered += 1 }
+    }
+
+    def step(s: Step): Unit = { definition(s); s.owner.foreach(stmt) }
+
+    /** A step without its owner statement: the SETs and the body. */
+    def definition(s: Step): Unit = {
+      if (!o.noTablespaces) s.entry.tablespace.filter(_ != currTs).foreach { want =>
+        line(if (want.isEmpty) "SET default_tablespace = '';"
+             else s"SET default_tablespace = ${PgSource.quoteIdent(want)};")
+        currTs = want
+      }
+      if (!o.noTableAccessMethod)
+        s.entry.tableam.filter(am => am.nonEmpty && am != currAm).foreach { want =>
+          line(s"SET default_table_access_method = ${PgSource.quoteIdent(want)};")
+          currAm = want
+        }
+      s.body.foreach(stmt)
+    }
+
+    /** A TABLE DATA entry: `COPY ... FROM stdin;`, then its payload,
+      * whose own `\.` terminator ends the COPY. */
+    def copy(dir: String, e: PgToc.Entry): Unit = {
+      val (copySql, f) = payload(dir, e)
+      val in = Compress.input(Compress.algoOfFile(f.getName),
+        new java.io.BufferedInputStream(new java.io.FileInputStream(f)))
+      try { line(copySql + ";"); w.flush(); feed(in, out) } finally in.close()
+      rendered += 1
+    }
+
+    /** One large object: (re)create the oid when `create`, then stream
+      * its payload through chunked `lo_put` calls — a multi-GB blob
+      * never lives in one statement. */
+    def largeObject(oid: Long, f: java.io.File, create: Boolean): Unit = {
+      if (create) line(s"SELECT pg_catalog.lo_create($oid);")
+      val in = Compress.input(Compress.algoOfFile(f.getName),
+        new java.io.BufferedInputStream(new java.io.FileInputStream(f)))
       try {
-        val buf = new Array[Byte](64 * 1024)
+        val buf = new Array[Byte](256 * 1024)
+        var off = 0L
         var n = in.read(buf)
-        while (n >= 0) {
-          if (n > 0) {
-            p.getOutputStream.write(buf, 0, n)
-            lastActivity.set(System.nanoTime())
-          }
+        while (n > 0) {
+          val hex = java.util.HexFormat.of().formatHex(buf, 0, n)
+          line(s"SELECT pg_catalog.lo_put($oid, $off, '\\x$hex');")
+          off += n
           n = in.read(buf)
         }
-      }
-      catch { case _: java.io.IOException => () } // psql exited early
-      finally { feeding.set(false)
-                try p.getOutputStream.close() catch { case _: Throwable => () }
-                in.close() }
-    })
-    feeder.setDaemon(true); feeder.start()
-    val out = drainStamping(p.getInputStream, lastActivity)
-    val rc = p.waitFor()
-    feeder.join(10000)
-    (rc, out + watchdogSuffix(tripped, watchdogSec))
+      } finally in.close()
+    }
+
+    def flush(): Unit = w.flush()
+    def close(): Unit = w.close()
   }
 
-  /** Large-object data: for each `blobs.toc` line, (re)create the oid
-    * and stream its payload through chunked `lo_put` calls in a psql -f
-    * script — hex literals stay under the per-argument OS limit and a
-    * multi-GB blob never lives in one statement. */
-  private def restoreBlobs(dir: String, psqlArgs: Seq[String],
-                           createOids: Boolean): Seq[String] = {
+  /** The large objects of a directory archive: each `blobs.toc` line's
+    * oid and payload file. */
+  private def blobFiles(dir: String): Seq[(Long, java.io.File)] = {
     val toc = new java.io.File(dir, "blobs.toc")
-    if (!toc.exists()) return Nil
-    java.nio.file.Files.readAllLines(toc.toPath).toArray(Array[String]())
+    if (!toc.exists()) Nil
+    else java.nio.file.Files.readAllLines(toc.toPath).toArray(Array[String]())
       .toSeq.map(_.trim).filter(_.nonEmpty).map { line =>
         val Array(oidS, name) = line.split("\\s+", 2)
-        val oid = oidS.toLong
-        val f = Compress.probeFile(dir, name.trim).getOrElse(
+        oidS.toLong -> Compress.probeFile(dir, name.trim).getOrElse(
           throw new IllegalArgumentException(
             s"pg-restore: blob payload ${name.trim}(.gz/.lz4/.zst) missing"))
-        val in: java.io.InputStream = Compress.input(
-          Compress.algoOfFile(f.getName), new java.io.FileInputStream(f))
-        val script = java.nio.file.Files.createTempFile("graft_lo", ".sql")
-        val w = java.nio.file.Files.newBufferedWriter(script)
-        try {
-          if (createOids) w.write(s"SELECT pg_catalog.lo_create($oid);\n")
-          val buf = new Array[Byte](256 * 1024)
-          var off = 0L
-          var n = in.read(buf)
-          while (n > 0) {
-            val hex = new java.lang.StringBuilder(n * 2)
-            var i = 0
-            while (i < n) {
-              hex.append("0123456789abcdef".charAt((buf(i) >> 4) & 0xF))
-              hex.append("0123456789abcdef".charAt(buf(i) & 0xF))
-              i += 1
-            }
-            w.write(s"SELECT pg_catalog.lo_put($oid, $off, '\\x$hex');\n")
-            off += n
-            n = in.read(buf)
-          }
-        } finally { w.close(); in.close() }
-        val cmd = Seq("/usr/bin/psql", "-X", "-q", "-v", "ON_ERROR_STOP=1") ++
-          psqlArgs ++ Seq("-o", "/dev/null", "-f", script.toString)
-        val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-        p.getOutputStream.close()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        val rc = p.waitFor()
-        java.nio.file.Files.delete(script)
-        require(rc == 0, s"pg-restore: blob $oid failed: $out")
-        s"blob $oid"
       }
+  }
+
+  /** One long-lived `psql -f -` session of a direct restore. Entries are
+    * written to its stdin as [[ScriptOut]] text, each followed by an
+    * `\echo` of the session's marker, and a drain thread reads its
+    * merged stdout/stderr; query results go to /dev/null. psql runs with
+    * ON_ERROR_STOP=1, so the entry whose marker never arrives is the one
+    * that failed: psql printed its error and exited. It stays on in
+    * continue mode too, where the next entry opens a fresh session —
+    * with it off, a COPY that fails before entering copy mode (missing
+    * table, lock timeout) makes psql run the payload rows as SQL.
+    *
+    * `opening` runs once, as the session starts: the watchdog's
+    * `lock_timeout` and, under `-1`, the integrity SETs and BEGIN.
+    *
+    * `watchdogSec > 0` guards two ways. Statements are guarded
+    * SERVER-SIDE by `SET lock_timeout`, not by a byte-idle kill: DDL
+    * (post-data CREATE INDEX, ADD CONSTRAINT) is legitimately silent for
+    * minutes while working, so client-side byte-silence is no evidence
+    * of a hang. `lock_timeout` cancels exactly the hang-on-a-lock case,
+    * the server reports it ("canceling statement due to lock timeout"),
+    * and a healthy long build is never touched; it also cancels a COPY
+    * blocked on a lock whose whole payload already fits in the OS pipe
+    * buffer. The byte-idle [[armWatchdog]] is armed over each COPY feed,
+    * the one window where silence means a stalled pipe.
+    *
+    * Deliberately NOT guarded, as native pg_restore: what the server
+    * cannot time out and looks like work to the client (a network
+    * partition, a commit waiting on a lost synchronous standby); set
+    * `statement_timeout` / TCP keepalives on the conninfo for those. */
+  private final class Session(psqlArgs: Seq[String], opening: Seq[String],
+                              o: Options, watchdogSec: Int) {
+    private val proc = new ProcessBuilder((Seq("/usr/bin/psql", "-X", "-q",
+      "-v", "ON_ERROR_STOP=1", "-o", "/dev/null") ++ psqlArgs ++ Seq("-f", "-")): _*)
+      .redirectErrorStream(true).start()
+    private val mark = s"graft-restore-${java.util.UUID.randomUUID()}"
+    private val lastActivity = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
+    private var tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // psql's output lines in arrival order; None once it has exited
+    private val lines = new java.util.concurrent.LinkedBlockingQueue[Option[String]]()
+    private val drain = new Thread(() => {
+      val r = new java.io.BufferedReader(
+        new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))
+      try Iterator.continually(r.readLine()).takeWhile(_ != null).foreach { l =>
+        lastActivity.set(System.nanoTime()); lines.put(Some(l))
+      } catch { case _: java.io.IOException => () }
+      finally lines.put(None)
+    }, "graft-pgrestore-drain")
+    drain.setDaemon(true); drain.start()
+    private val script = new ScriptOut(o,
+      new java.io.BufferedOutputStream(proc.getOutputStream, 64 * 1024), feed)
+    opening.foreach(script.line)
+    var alive = true
+
+    /** Stream one COPY payload, stamping the activity clock per chunk,
+      * with the byte-idle watchdog armed until the last byte is out. The
+      * payload's own `\.` line ends the COPY: one that ends without it
+      * (a truncated file) throws, or psql would read the next entry as
+      * rows and wait for more. */
+    private def feed(in: java.io.InputStream, out: java.io.OutputStream): Unit = {
+      val feeding = new java.util.concurrent.atomic.AtomicBoolean(true)
+      lastActivity.set(System.nanoTime())
+      tripped = armWatchdog(proc, lastActivity, watchdogSec, feeding)
+      try {
+        val buf = new Array[Byte](64 * 1024)
+        var tail = "\n"
+        var n = in.read(buf)
+        while (n >= 0) {
+          out.write(buf, 0, n); lastActivity.set(System.nanoTime())
+          val k = math.min(n, 64)
+          tail = (tail + new String(buf, n - k, k, "ISO-8859-1")).takeRight(64)
+          n = in.read(buf)
+        }
+        if (!tail.replaceAll("[\r\n]+$", "").endsWith("\n\\."))
+          throw new java.io.IOException("payload ends without \\.")
+        out.flush()
+      } finally feeding.set(false)
+    }
+
+    /** Write one entry and wait for its marker: None when it ran, else
+      * all psql printed since the previous marker. Any failure while
+      * writing (psql exited, an unreadable payload) kills psql, so a
+      * half-fed COPY never commits; an I/O failure fails the entry, any
+      * other is rethrown. */
+    def run(write: ScriptOut => Unit): Option[String] = {
+      val broken =
+        try { write(script); script.line(s"\\echo $mark"); script.flush(); "" }
+        catch { case e: Throwable =>
+          proc.destroyForcibly()
+          if (!e.isInstanceOf[java.io.IOException]) throw e
+          s"[$e]"
+        }
+      val out = new StringBuilder
+      var l = lines.take()
+      while (l.exists(_ != mark)) { out.append(l.get).append('\n'); l = lines.take() }
+      alive = l.nonEmpty
+      if (alive) None
+      else Some(out.toString + broken + (if (tripped.get())
+        s" [watchdog: psql idle > ${watchdogSec}s — killed]" else ""))
+    }
+
+    /** End the session: psql exits at the end of its input. */
+    def close(): Unit = {
+      try script.close() catch { case _: java.io.IOException => () }
+      proc.waitFor()
+    }
+
+    def rendered: Int = script.rendered
   }
 
   /** `pg_restore -l` analog: one restore-list line per TOC entry in the
@@ -343,7 +407,7 @@ object PgRestore {
     *    maintenance database derived from `psqlArgs` (dbname swapped to
     *    `postgres`), then restore into the target as given.
     *  - `singleTransaction` (`-1`): the whole restore in ONE session and
-    *    ONE transaction (BEGIN/COMMIT around the script); refused with
+    *    ONE transaction (BEGIN/COMMIT around the replay); refused with
     *    `create` — CREATE DATABASE is not transactional.
     *  - `noOwner` (`-O`) / `noPrivileges` (`-x`): no synthesized or
     *    stored `ALTER ... OWNER TO`; no ACL entries.
@@ -540,36 +604,43 @@ object PgRestore {
 
   /** Replay the archive at `dir` into the database `psqlArgs` points at,
     * under the selection `opts` (see [[Options]]). Returns one human line
-    * per restored entry.
+    * per restored entry; under `-1`, the one line
+    * `single transaction: N entries applied`, N counted as [[toScript]].
     *
     * Execution phases pre-data → data waves → SEQUENCE SET/blobs →
-    * post-data. Under `-L` a list that interleaves sections therefore
-    * replays section-phased, not literally as listed (restoring an index
-    * before its table's data is never correct; the phasing preserves
-    * that invariant the same way the native tool's parallel mode does);
-    * within the data section, listed tables keep list order subject to
-    * dependency waves.
+    * post-data, so a `-L` list that interleaves sections replays
+    * section-phased, as native parallel mode does; within the data
+    * section, listed tables keep list order subject to dependency waves.
+    *
+    * Everything replays through long-lived psql [[Session]]s, like the
+    * native tool's one connection plus one per `-j` worker: the drops,
+    * every statement step and the blobs run on session 0, each entry
+    * rendered by the same [[ScriptOut]] as the `-f` script; a wave's
+    * COPYs spread over the pool, and the next wave starts once every
+    * table of this one has finished. `-1` is session 0 wrapped in
+    * BEGIN/COMMIT. Only `--create`'s maintenance statement and the
+    * script hooks run in one-shot psql processes of their own.
     *
     * Executor-only flags:
-    *  - `jobs`: per-table COPY concurrency, like `pg_restore -j`.
+    *  - `jobs`: the session pool size — per-table COPY concurrency, like
+    *    `pg_restore -j`. Sessions open on first use.
     *  - `scripts`: user hooks before/after each section that runs.
     *  - `restoreInOrder`: load tables strictly sequentially in TOC/list
     *    order instead of in dependency waves.
-    *  - `exitOnError` (`-e`): abort on the first failed statement/COPY.
-    *    The API default stays fail-fast (library callers want loud
-    *    breakage); the CLI default matches the native tool — CONTINUE,
-    *    warn per failure, and close with `errors ignored on restore: N`
-    *    (`restorers/table.go:90-102`: a failed table rolls back ITS
-    *    transaction and the wave moves on). A failed `-c` drop follows
-    *    the same rule. Archive corruption (missing payload file) always
-    *    throws.
+    *  - `exitOnError` (`-e`): abort on the first failed entry, `-c`
+    *    drops included (the API default). The CLI default is native's:
+    *    CONTINUE, warn per failure, close with `errors ignored on
+    *    restore: N` (`restorers/table.go:90-102`). A missing payload
+    *    file always throws.
     *  - `disableTriggers`: each COPY runs under
     *    `session_replication_role = replica` (the reference's integrity
     *    control; superuser required); `enableRowSecurity`: COPY into RLS
-    *    tables goes through the connecting role's policies.
+    *    tables goes through the connecting role's policies. Both are a
+    *    SET/RESET pair around each COPY, so a role that may not set them
+    *    fails its loads, not its DDL; under `-1` they open the session.
     *  - `noDataForFailedTables`: a table whose CREATE failed gets no data.
     *  - `verbose`: one stderr line per created object / loaded table.
-    *  - `watchdogSec`: opt-in hang guard (see [[exec]], [[copyFrom]]). */
+    *  - `watchdogSec`: opt-in hang guard (see [[Session]]). */
   def restore(dir: String, psqlArgs: Seq[String],
               opts: Options = Options(),
               jobs: Int = 4,
@@ -582,47 +653,19 @@ object PgRestore {
               verbose: Boolean = false,
               watchdogSec: Int = 0): Seq[String] = {
     val p = plan(dir, opts)
-    val pre =
-      (if (disableTriggers) Seq("SET session_replication_role = replica") else Nil) ++
-        // native --enable-row-security: COPY into RLS tables goes through
-        // the policies of the connecting role instead of failing
-        (if (enableRowSecurity) Seq("SET row_security = on") else Nil)
-    if (opts.singleTransaction) {
-      // native -1: everything in ONE session, ONE transaction — implies
-      // exit-on-error (any failure rolls the whole restore back). Render
-      // the script form and replay it through a single psql -1 session.
-      // Options that cannot survive the script detour fail loudly or
-      // warn instead of being silently dropped: user script hooks have
-      // no script-form equivalent (reject); --no-data-for-failed-tables
-      // is moot in one transaction (a failed CREATE rolls back the
-      // whole restore before any data loads — warn).
+    val oneTx = opts.singleTransaction
+    if (oneTx) {
+      // native -1: ONE session, ONE transaction, exit on the first error.
+      // Hooks would run outside it (reject); --no-data-for-failed-tables
+      // is moot (warn).
       require(scripts.isEmpty,
         "pg-restore: --scripts hooks cannot run under --single-transaction " +
-          "(the restore replays as one SQL script); drop -1 or the scripts")
+          "(each hook runs in its own session, outside the restore's " +
+          "transaction); drop -1 or the scripts")
       if (noDataForFailedTables)
         System.err.println("[pg-restore] warning: --no-data-for-failed-tables " +
           "has no effect with --single-transaction (any failure rolls back " +
           "the entire restore)")
-      val tmp = java.nio.file.Files.createTempFile("graft_restore_1tx", ".sql")
-      try {
-        val os = java.nio.file.Files.newOutputStream(tmp)
-        val n = try {
-          // session-level integrity controls ride at the top of the
-          // script (SET outside the transaction = session scope), same
-          // effect as the per-COPY `pre` statements on the direct path
-          pre.foreach(s => os.write(s"$s;\n".getBytes("UTF-8")))
-          render(dir, p, opts, os)
-        } finally os.close()
-        val cmd = Seq("/usr/bin/psql", "-X", "-q", "-v", "ON_ERROR_STOP=1") ++
-          psqlArgs ++ Seq("-o", "/dev/null", "-f", tmp.toString)
-        val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-        proc.getOutputStream.close()
-        val outText = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-        require(proc.waitFor() == 0,
-          s"pg-restore: single-transaction replay failed (rolled back): " +
-            outText.takeRight(400))
-        return Seq(s"single transaction: $n entries applied")
-      } finally java.nio.file.Files.deleteIfExists(tmp)
     }
     val done = Seq.newBuilder[String]
 
@@ -630,7 +673,8 @@ object PgRestore {
     // warns and counts; the run closes with the native tool's summary
     val ignored = new java.util.concurrent.atomic.AtomicInteger(0)
     def failOrWarn(msg: String): Unit =
-      if (exitOnError) throw new IllegalArgumentException(msg)
+      if (oneTx) throw new IllegalArgumentException(s"$msg (single transaction rolled back)")
+      else if (exitOnError) throw new IllegalArgumentException(msg)
       else {
         ignored.incrementAndGet()
         System.err.println(s"[pg-restore] warning: $msg (continuing)")
@@ -647,67 +691,70 @@ object PgRestore {
       require(rc == 0, s"pg-restore: CREATE DATABASE failed: $out")
       done += name(db)
     }
-    // a drop that fails (object absent) follows the exitOnError rule —
-    // native counts those as ignored errors by default too
-    p.drops.foreach { case (e, sql) =>
-      val (rc, out) = exec(psqlArgs, sql, watchdogSec)
-      if (rc != 0) failOrWarn(s"pg-restore: DROP for ${name(e)} failed: ${out.trim}")
+
+    // the integrity SETs ride with each COPY as a SET/RESET pair (under
+    // -1 they open the session): a role that may not set them fails its
+    // loads, not its DDL
+    val integrity =
+      (if (disableTriggers) Seq("session_replication_role" -> "replica") else Nil) ++
+        // native --enable-row-security: COPY into RLS tables goes through
+        // the policies of the connecting role instead of failing
+        (if (enableRowSecurity) Seq("row_security" -> "on") else Nil)
+    val (sessionSets, copySets) = if (oneTx) (integrity, Nil) else (Nil, integrity)
+    val opening = sessionSets.map { case (k, v) => s"SET $k = $v;" } ++
+      (if (watchdogSec > 0) Seq(s"SET lock_timeout = '${watchdogSec}s';") else Nil) ++
+      (if (oneTx) Seq("BEGIN;") else Nil)
+    val pool = new Array[Session](if (oneTx) 1 else math.max(1, jobs))
+    // one entry on session i; a failed entry warns or throws naming
+    // `what`, and its dead session is replaced on next use
+    def run(i: Int, what: String)(write: ScriptOut => Unit): Boolean = {
+      if (pool(i) == null || !pool(i).alive) {
+        if (pool(i) != null) pool(i).close()
+        pool(i) = new Session(psqlArgs, opening, opts, watchdogSec)
+      }
+      pool(i).run(write).forall { out =>
+        failOrWarn(s"pg-restore: $what failed: ${out.trim}"); false
+      }
     }
 
     // --no-data-for-failed-tables: a TABLE whose CREATE failed (already
-    // exists, usually) must not have the archive's data appended on top
-    // of whatever it holds — the native flag's whole point. Keyed by
-    // (namespace, tag): native tracks the failed ENTRY, so a failed
-    // a.t must not suppress the data load of an unrelated b.t
-    val failedTables = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+    // exists, usually) gets no data on top of what it holds. Keyed by
+    // (namespace, tag), so a failed a.t does not suppress b.t's load
+    val failedTables = scala.collection.mutable.Set[(String, String)]()
     def tableKey(e: PgToc.Entry): Option[(String, String)] =
       e.tag.map(t => (e.namespace.filter(_.nonEmpty).getOrElse(""), t))
 
-    def execStep(s: Step): Unit = s.body.foreach { body =>
+    def execStep(s: Step): Unit = if (s.body.nonEmpty) {
       val e = s.entry
       if (verbose) System.err.println(
         s"[pg-restore] creating ${e.desc.getOrElse("?")} " +
           s"${e.namespace.filter(_.nonEmpty).fold("")(_ + ".")}${e.tag.getOrElse("?")}")
-      // each statement runs in its own psql session, so the entry's
-      // tablespace/AM SETs ride the same -c batch
-      val sql = (tsSets(e, opts) :+ body).mkString("\n")
-      val (rc, out) = exec(psqlArgs, sql, watchdogSec)
-      if (rc != 0) {
-        if (e.desc.contains("TABLE")) tableKey(e).foreach(failedTables.add)
-        failOrWarn(s"pg-restore: ${name(e)} failed: $out")
-      } else {
+      // the owner statement is an entry of its own: a missing role must
+      // not read as a failed CREATE
+      if (run(0, name(e))(_.definition(s))) {
         done += name(e)
-        s.owner.foreach { own =>
-          val (rcO, outO) = exec(psqlArgs, own)
-          if (rcO != 0) failOrWarn(
-            s"pg-restore: ALTER OWNER for ${name(e)} failed: ${outO.trim}")
-        }
-      }
+        s.owner.foreach(own => run(0, s"ALTER OWNER for ${name(e)}")(_.stmt(own)))
+      } else if (e.desc.contains("TABLE")) tableKey(e).foreach(failedTables.add)
     }
 
-    // returns true iff the table's data actually loaded — the caller
-    // logs `TABLE DATA <tag>` only for successes (native prints the
-    // entry header before failing too, but our returned log doubles as
-    // the success record the CLI prints; a failed load must not read
-    // as restored)
-    def loadTable(e: PgToc.Entry): Boolean = {
-      if (noDataForFailedTables && tableKey(e).exists(failedTables.contains)) {
+    // true iff the table's data actually loaded: the returned log is the
+    // success record the CLI prints, so a failed load must not read as
+    // restored. A failed COPY rolled back ITS table's transaction only
+    def loadTable(i: Int, e: PgToc.Entry): Boolean =
+      if (noDataForFailedTables && tableKey(e).exists(failedTables)) {
         System.err.println(s"[pg-restore] table ${e.tag.get} could not be " +
           "created, will not restore its data (--no-data-for-failed-tables)")
-        return false
-      }
-      val (copySql, f) = payload(dir, e)
-      if (verbose) System.err.println(
-        s"[pg-restore] processing data for table " +
-          s"${e.namespace.filter(_.nonEmpty).fold("")(_ + ".")}${e.tag.getOrElse("?")}")
-      val (rc, out) = copyFrom(psqlArgs, pre, copySql, f, watchdogSec)
-      // a failed COPY rolled back ITS table's transaction server-side;
-      // without -e the wave moves on (restorers/table.go:90-102)
-      if (rc != 0) {
-        failOrWarn(s"pg-restore: COPY ${e.tag.getOrElse("?")} failed: ${out.trim}")
         false
-      } else true
-    }
+      } else {
+        if (verbose) System.err.println(
+          s"[pg-restore] processing data for table " +
+            s"${e.namespace.filter(_.nonEmpty).fold("")(_ + ".")}${e.tag.getOrElse("?")}")
+        run(i, s"COPY ${e.tag.getOrElse("?")}") { s =>
+          copySets.foreach { case (k, v) => s.line(s"SET $k = $v;") }
+          s.copy(dir, e)
+          copySets.foreach { case (k, _) => s.line(s"RESET $k;") }
+        }
+      }
 
     // dependency WAVES inside the data section: a data entry whose deps
     // include another data entry waits for it; independents run together
@@ -730,41 +777,51 @@ object PgRestore {
       body
       if (run) done ++= runScripts(psqlArgs, scripts, section, "after")
     }
-    // 1. pre-data statements
-    hooked(p.runPre, "pre-data")(p.pre.foreach(execStep))
-    // 2. data: tables in dependency waves through a worker pool — or,
-    // under the native --restore-in-order flag, strictly sequentially in
-    // TOC/list order (deterministic replay; what the reference's flag
-    // disables parallel reordering for)
-    hooked(p.runData, "data") {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      if (restoreInOrder)
-        p.loads.foreach { e =>
-          if (loadTable(e)) done += name(e)
-        }
-      else {
+    try {
+      // a drop that fails (object absent) follows the exitOnError rule —
+      // native counts those as ignored errors by default too
+      p.drops.foreach { case (e, sql) => run(0, s"DROP for ${name(e)}")(_.stmt(sql)) }
+      // 1. pre-data statements
+      hooked(p.runPre, "pre-data")(p.pre.foreach(execStep))
+      // 2. data: tables in dependency waves, worker i on session i — or,
+      // under the native --restore-in-order flag, one table per wave in
+      // TOC/list order (deterministic replay; what the reference's flag
+      // disables parallel reordering for)
+      hooked(p.runData, "data") {
+        import scala.concurrent.{Await, Future, ExecutionContext}
+        import scala.concurrent.duration.Duration
         val ec = ExecutionContext.fromExecutorService(
-          java.util.concurrent.Executors.newFixedThreadPool(math.max(1, jobs)))
-        try waves(p.loads, Set.empty, Nil).foreach { wave =>
-          // in continue mode a failed COPY returns false — only tables
-          // that actually loaded are reported as restored
-          val oks = wave.map(e => Future(loadTable(e))(ec))
-            .map(Await.result(_, Duration.Inf))
-          wave.zip(oks).foreach { case (e, ok) =>
-            if (ok) done += name(e) }
+          java.util.concurrent.Executors.newFixedThreadPool(pool.length))
+        try (if (restoreInOrder) p.loads.map(Seq(_))
+             else waves(p.loads, Set.empty, Nil)).foreach { wave =>
+          val queue = new java.util.concurrent.ConcurrentLinkedQueue[PgToc.Entry]()
+          wave.foreach(queue.add)
+          val workers = (0 until math.min(wave.size, pool.length)).map(i => Future(
+            Iterator.continually(queue.poll()).takeWhile(_ != null)
+              .filter(loadTable(i, _)).toSet)(ec))
+          // every worker finishes before a -e failure propagates; in
+          // continue mode only tables that loaded are reported restored
+          val loaded = workers.map(Await.ready(_, Duration.Inf))
+            .flatMap(_.value.get.get).toSet
+          wave.filter(loaded).foreach(e => done += name(e))
         } finally ec.shutdown()
+        // remaining data-section statements (SEQUENCE SET) + blobs
+        p.data.foreach(execStep)
+        if (p.blobs) blobFiles(dir).foreach { case (oid, f) =>
+          if (run(0, s"blob $oid")(_.largeObject(oid, f, create = opts.dataOnly)))
+            done += s"blob $oid"
+        }
       }
-      // remaining data-section statements (SEQUENCE SET) + blobs
-      p.data.foreach(execStep)
-      if (p.blobs) done ++= restoreBlobs(dir, psqlArgs, createOids = opts.dataOnly)
-    }
-    // 3. post-data (constraints, indexes, FKs, their comments)
-    hooked(p.runPost, "post-data")(p.post.foreach(execStep))
+      // 3. post-data (constraints, indexes, FKs, their comments)
+      hooked(p.runPost, "post-data")(p.post.foreach(execStep))
+      if (oneTx) run(0, "COMMIT")(_.line("COMMIT;"))
+    } finally pool.filter(_ != null).foreach(_.close())
     // native closing summary (pg_restore prints "errors ignored on
     // restore: N" when it continued past failures)
     if (ignored.get() > 0) done += s"errors ignored on restore: ${ignored.get()}"
-    done.result()
+    // -1 counts the statements and COPYs it sent, as the `-f` script does
+    if (oneTx) Seq(s"single transaction: ${pool(0).rendered} entries applied")
+    else done.result()
   }
 
   /** Session-level descs: skipped in replay, never dropped by -c. */
@@ -779,23 +836,6 @@ object PgRestore {
     * under -e when it doesn't. */
   private def replaySkip(desc: String, create: Boolean): Boolean =
     SessionDescs(desc) || (desc == "DATABASE PROPERTIES" && !create)
-
-  /** Synthesized tablespace / access-method SETs for one entry on the
-    * direct path — native pg_restore derives these from the TOC FIELDS
-    * at restore time (pg_backup_archiver.c `_selectTablespace` /
-    * `_printTableAccessMethod`); `--no-tablespaces` /
-    * `--no-table-access-method` suppress exactly that synthesis. A NULL
-    * field means "emit no SET"; an empty tablespace means the database
-    * default — already every fresh session's state, so the direct path
-    * (one psql session per statement) skips it. The script renderer
-    * tracks one long session instead and emits a SET on change. */
-  private def tsSets(e: PgToc.Entry, o: Options): Seq[String] =
-    (if (o.noTablespaces) None
-     else e.tablespace.filter(_.nonEmpty).map(ts =>
-       s"SET default_tablespace = ${PgSource.quoteIdent(ts)};")).toSeq ++
-      (if (o.noTableAccessMethod) None
-       else e.tableam.filter(_.nonEmpty).map(am =>
-         s"SET default_table_access_method = ${PgSource.quoteIdent(am)};")).toSeq
 
   /** The selection pipeline of [[plan]]: -L list filter (+ --with-deps
     * closure), -t/-i/-P/-T named selection, -n/-N namespace filters, and
@@ -966,70 +1006,28 @@ object PgRestore {
     * are not representable in plain SQL here; their entries are skipped
     * with a warning. Returns the number of entries rendered. */
   def toScript(dir: String, out: java.io.OutputStream,
-               opts: Options = Options()): Int =
-    render(dir, plan(dir, opts), opts, out)
-
-  private def render(dir: String, p: Plan, o: Options,
-                     out: java.io.OutputStream): Int = {
-    val w = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(out, "UTF-8"))
-    var rendered = 0
-    def stmt(sql: String): Unit = {
-      val s = sql.trim
-      if (s.nonEmpty) {
-        w.write(if (s.endsWith(";")) s else s + ";"); w.write("\n")
-        rendered += 1
-      }
-    }
-    w.write(s"-- graft pg-restore script (archive: $dir)\n")
-    if (o.create) {
+               opts: Options = Options()): Int = {
+    val p = plan(dir, opts)
+    val s = new ScriptOut(opts, out)
+    s.line(s"-- graft pg-restore script (archive: $dir)")
+    if (opts.create) {
       val (db, sql) = p.createDatabase
-      stmt(sql)
+      s.stmt(sql)
       // the native script reconnects into the new database
-      db.tag.foreach(t => w.write(s"\\connect ${PgSource.quoteIdent(t)}\n"))
+      db.tag.foreach(t => s.line(s"\\connect ${PgSource.quoteIdent(t)}"))
     }
-    if (o.singleTransaction) w.write("BEGIN;\n")
-    // script form tracks the session's current tablespace/AM like native
-    // (one long session; a SET is emitted only on CHANGE — including the
-    // initial `SET default_tablespace = '';` real pg_dump scripts open
-    // tables with). SET lines don't count as rendered entries.
-    var currTs: String = null
-    var currAm: String = null
-    def emit(s: Step): Unit = {
-      if (!o.noTablespaces) s.entry.tablespace.foreach { want =>
-        if (want != currTs) {
-          w.write(if (want.isEmpty) "SET default_tablespace = '';\n"
-                  else s"SET default_tablespace = ${PgSource.quoteIdent(want)};\n")
-          currTs = want
-        }
-      }
-      if (!o.noTableAccessMethod) s.entry.tableam.filter(_.nonEmpty).foreach { want =>
-        if (want != currAm) {
-          w.write(s"SET default_table_access_method = ${PgSource.quoteIdent(want)};\n")
-          currAm = want
-        }
-      }
-      s.body.foreach(stmt)
-      s.owner.foreach(stmt)
-    }
-    p.drops.foreach { case (_, sql) => stmt(sql) }
-    p.pre.foreach(emit)
-    p.loads.foreach { e =>
-      val (copySql, f) = payload(dir, e)
-      w.write(copySql); w.write(";\n"); w.flush()
-      val in = Compress.input(Compress.algoOfFile(f.getName),
-        new java.io.BufferedInputStream(new java.io.FileInputStream(f)))
-      try in.transferTo(out) finally in.close()
-      rendered += 1
-    }
-    p.data.foreach(emit)
+    if (opts.singleTransaction) s.line("BEGIN;")
+    p.drops.foreach { case (_, sql) => s.stmt(sql) }
+    p.pre.foreach(s.step)
+    p.loads.foreach(s.copy(dir, _))
+    p.data.foreach(s.step)
     if (p.blobs)
       System.err.println("[pg-restore] warning: large objects are not " +
         "representable in script output — use the direct restore path")
-    p.post.foreach(emit)
-    if (o.singleTransaction) w.write("COMMIT;\n")
-    w.flush()
-    rendered
+    p.post.foreach(s.step)
+    if (opts.singleTransaction) s.line("COMMIT;")
+    s.flush()
+    s.rendered
   }
 
   /** `--if-exists` rewrite: native pg_restore injects IF EXISTS into the

@@ -63,15 +63,24 @@ class PgInteropSpec extends SparkSpec {
           asPg(s"""$pgBin/pg_ctl -D $dataDir -o "-k $sockDir -c listen_addresses=" -l $base/pg.log -w start""")
         else (rc1, out1)
       clusterUp = rc2 == 0
-      if (!clusterUp)
+      if (clusterUp) Runtime.getRuntime.addShutdownHook(stopHook)
+      else
         info(s"postgres cluster unavailable (skipping live tests): ${out1.takeRight(200)} ${out2.takeRight(200)}")
     }
   }
 
   override def afterAll(): Unit = {
-    if (clusterUp) asPg(s"$pgBin/pg_ctl -D $dataDir -m immediate stop")
+    if (clusterUp) {
+      Runtime.getRuntime.removeShutdownHook(stopHook)
+      stopCluster()
+    }
     super.afterAll()
   }
+
+  private def stopCluster(): Unit = asPg(s"$pgBin/pg_ctl -D $dataDir -m immediate stop")
+  // a test JVM that is stopped mid-suite never reaches afterAll: the
+  // hook stops the cluster then, so no postgres is left without an owner
+  private val stopHook = new Thread(() => stopCluster(), "graft-pg-stop")
 
   private def live(): Unit =
     assume(haveBinaries && clusterUp, "live postgres cluster not available")
@@ -852,6 +861,23 @@ class PgInteropSpec extends SparkSpec {
     assert(ok.exists(_.startsWith("single transaction:")), ok)
     assert(psql("scr3", "SELECT count(*) FROM sgood")._2.trim == "30")
     assert(psql("scr3", "SELECT count(*) FROM sbad")._2.trim == "2")
+    // continue mode + --disable-triggers as a role that may not set
+    // session_replication_role: the SET rides with each COPY, so the
+    // schema is created and only the two loads fail
+    psql("postgres", "CREATE ROLE scr_nosu LOGIN")
+    psql("postgres", "CREATE DATABASE scr4 OWNER scr_nosu")
+    val nosu = graft.sources.PgRestore.restore(arch,
+      Seq("-d", s"host=$sockDir dbname=scr4 user=scr_nosu"), Options(noOwner = true),
+      exitOnError = false, disableTriggers = true)
+    assert(nosu.toSet == Set("TABLE sgood", "TABLE sbad", "errors ignored on restore: 2") &&
+      nosu.last == "errors ignored on restore: 2", nosu)
+    assert(psql("scr4", "SELECT count(*) FROM sgood")._2.trim == "0")
+    // -1 reports the statements and COPYs it sent, as the -f script counts them
+    psql("postgres", "CREATE DATABASE scr5")
+    val nScript = graft.sources.PgRestore.toScript(arch, new java.io.ByteArrayOutputStream())
+    val one = graft.sources.PgRestore.restore(arch,
+      Seq("-d", s"host=$sockDir dbname=scr5 user=graft"), Options(singleTransaction = true))
+    assert(one == Seq(s"single transaction: $nScript entries applied"), one)
     // -C inside -1 is refused (CREATE DATABASE is not transactional)
     intercept[IllegalArgumentException] {
       graft.sources.PgRestore.restore(arch,
@@ -1150,6 +1176,42 @@ class PgInteropSpec extends SparkSpec {
     assert(psql("nstgt", "SELECT count(*) FROM b.t")._2.trim == "5",
       "b.t shares only the NAME with the failed a.t — its data must load")
 
+    // a failure inside a shared session lands on ITS entry: the 2nd of 3
+    // CREATEs fails (the table exists, holding its own row); the other
+    // two are created and loaded, and only the failed table's data is
+    // skipped; under -e the exception names the same entry
+    val trio = s"$base/ndf_trio_arch"
+    PgToc.dumpArchive(Seq("tr1" -> good, "tr2" -> good, "tr3" -> good), trio,
+      "triotgt", includeSchema = true)
+    def poisoned(db: String): Seq[String] = {
+      psql("postgres", s"CREATE DATABASE $db")
+      psql(db, "CREATE TABLE tr2(k bigint, v text)")
+      psql(db, "INSERT INTO tr2 VALUES (99, 'mine')")
+      Seq("-d", s"host=$sockDir dbname=$db user=graft")
+    }
+    val trioErr = new java.io.ByteArrayOutputStream()
+    val stderr0 = System.err
+    System.setErr(new java.io.PrintStream(trioErr, true, "UTF-8"))
+    val trioLines = try graft.sources.PgRestore.restore(trio, poisoned("triotgt"),
+      exitOnError = false, noDataForFailedTables = true)
+    finally System.setErr(stderr0)
+    val warned = trioErr.toString("UTF-8").linesIterator
+      .filter(_.contains("warning:")).toSeq
+    assert(warned.size == 1 && warned.head.contains("TABLE tr2 failed") &&
+      warned.head.contains("already exists"), warned)
+    assert(trioLines.last == "errors ignored on restore: 1", trioLines)
+    assert(Seq("TABLE tr1", "TABLE DATA tr1", "TABLE tr3", "TABLE DATA tr3")
+      .forall(trioLines.contains) && !trioLines.exists(_.endsWith("tr2")), trioLines)
+    assert(psql("triotgt", "SELECT (SELECT count(*) FROM tr1) || ',' || " +
+      "(SELECT count(*) FROM tr3) || ',' || (SELECT min(v) || count(*) FROM tr2)")
+      ._2.trim == "10,10,mine1")
+    val eTrio = intercept[IllegalArgumentException](graft.sources.PgRestore.restore(
+      trio, poisoned("triotgt_e"), exitOnError = true))
+    assert(eTrio.getMessage.contains("TABLE tr2 failed") &&
+      eTrio.getMessage.contains("already exists"), eTrio.getMessage)
+    assert(psql("triotgt_e", "SELECT to_regclass('tr1') IS NOT NULL, " +
+      "to_regclass('tr3') IS NULL")._2.trim == "t|t", "-e stops at the failed entry")
+
     // the CLI -f script path forwards the FULL flag set: -n must filter
     // the rendered script exactly as it filters a direct restore
     val cliScript = java.nio.file.Files.createTempFile("graft_cli_f", ".sql")
@@ -1395,6 +1457,41 @@ class PgInteropSpec extends SparkSpec {
     psql("postgres", "CREATE DATABASE mp_native")
     val (rcN, outN) = sh(s"PGHOST=$sockDir PGUSER=graft /usr/bin/pg_restore -1 -d mp_native $arch")
     assert(rcN != 0 && outN.contains("could not open input file"), outN)
+    // a TRUNCATED payload fails its COPY in continue mode and commits no
+    // prefix of the table (the feed breaks mid-COPY, so psql is killed)
+    val cut = s"$base/mp_cut_arch"
+    val (rcC, outC) = asPg(s"PGHOST=$sockDir PGUSER=graft " +
+      s"/usr/bin/pg_dump -Fd -d mp_src -f $cut")
+    assert(rcC == 0, outC)
+    sh(s"chmod -R a+rwX $cut")
+    val gz = graft.sources.Compress.probeFile(cut, data.fileName.get).get.toPath
+    val bytes = java.nio.file.Files.readAllBytes(gz)
+    java.nio.file.Files.write(gz, bytes.take(bytes.length / 2))
+    psql("postgres", "CREATE DATABASE mp_cut")
+    val cutLines = PgRestore.restore(cut,
+      Seq("-d", s"host=$sockDir dbname=mp_cut user=graft"), exitOnError = false)
+    assert(cutLines.last == "errors ignored on restore: 1" &&
+      !cutLines.contains("TABLE DATA t"), cutLines)
+    assert(psql("mp_cut", "SELECT count(*) FROM t")._2.trim == "0")
+    // an uncompressed payload cut at a row boundary lacks its `\.` line:
+    // the COPY fails instead of waiting for rows that never come
+    val raw = s"$base/mp_raw_arch"
+    val (rcR, outR) = asPg(s"PGHOST=$sockDir PGUSER=graft " +
+      s"/usr/bin/pg_dump -Fd --compress=0 -d mp_src -f $raw")
+    assert(rcR == 0, outR)
+    sh(s"chmod -R a+rwX $raw")
+    val dat = graft.sources.Compress.probeFile(raw, data.fileName.get).get.toPath
+    val rows = java.nio.file.Files.readAllBytes(dat)
+    java.nio.file.Files.write(dat, rows.take(rows.indexOf('\n'.toByte, rows.length / 2) + 1))
+    psql("postgres", "CREATE DATABASE mp_raw")
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val rawLines = Await.result(Future(PgRestore.restore(raw,
+      Seq("-d", s"host=$sockDir dbname=mp_raw user=graft"), exitOnError = false))(
+      ExecutionContext.global), 60.seconds)
+    assert(rawLines.last == "errors ignored on restore: 1" &&
+      !rawLines.contains("TABLE DATA t"), rawLines)
+    assert(psql("mp_raw", "SELECT count(*) FROM t")._2.trim == "0")
   }
 
   test("restore wave pool: poisoned-wave semantics, exact error count, idle watchdog") {
@@ -1501,6 +1598,41 @@ class PgInteropSpec extends SparkSpec {
       Seq("-d", slowConn), exitOnError = true, watchdogSec = 2)
     assert(slowLines.exists(_.contains("slow_fn")), slowLines)
     assert(psql("slowddl", "SELECT count(*) FROM slowt")._2.trim == "1")
+  }
+
+  test("pg-restore replays a 3-table FK chain through one psql session") {
+    live()
+    import spark.implicits._
+    val root = (1L to 6L).map(i => (i, s"r$i")).toDF("k", "v")
+    val mid = (1L to 12L).map(i => (i, 1 + i % 6)).toDF("k", "root_k")
+    val leaf = (1L to 24L).map(i => (i, 1 + i % 12)).toDF("k", "mid_k")
+    val arch = s"$base/chain_arch"
+    PgToc.dumpArchive(Seq("ch_root" -> root, "ch_mid" -> mid, "ch_leaf" -> leaf),
+      arch, "chaintgt", includeSchema = true,
+      deps = Map("ch_mid" -> Seq("ch_root"), "ch_leaf" -> Seq("ch_mid")))
+    psql("postgres", "CREATE DATABASE chaintgt")
+    // sessions the target has seen, read from another database once the
+    // restore's backends have exited and flushed their counts: a backend
+    // counts its session at connect and reports it when it flushes, at
+    // exit for a short one, so the count is read until it holds still
+    def sessions(): Long = {
+      def read() = psql("postgres", "SELECT sessions FROM pg_stat_database " +
+        "WHERE datname = 'chaintgt'")._2.trim.toLong
+      Iterator.iterate((-1L, read())) { case (_, cur) => Thread.sleep(300); (cur, read()) }
+        .take(20).find { case (last, cur) => last == cur }.get._2
+    }
+    val before = sessions()
+    val lines = graft.sources.PgRestore.restore(arch,
+      Seq("-d", s"host=$sockDir dbname=chaintgt user=graft"), jobs = 4)
+    // three CREATE TABLEs, three ALTER OWNERs and three one-table waves:
+    // every step rides session 0 (read before this spec's own check
+    // below connects to the target)
+    assert(sessions() - before == 1, "the restore must open exactly one session")
+    assert(Seq("ch_root", "ch_mid", "ch_leaf").forall(t =>
+      lines.contains(s"TABLE $t") && lines.contains(s"TABLE DATA $t")), lines)
+    assert(psql("chaintgt", "SELECT (SELECT count(*) FROM ch_root) || ',' || " +
+      "(SELECT count(*) FROM ch_mid) || ',' || (SELECT count(*) FROM ch_leaf)")
+      ._2.trim == "6,12,24")
   }
 
   test("killed-mid-stream INSERT replay re-runs to fingerprint parity with ON CONFLICT DO NOTHING") {

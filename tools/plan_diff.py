@@ -7,7 +7,10 @@ DumpPlans writes one `<query>_<tag>.txt` per query (the tag carries no
 underscore), so the two dirs may use different tags ("before"/"after").
 Before comparing, every plan is normalized for the ids Spark hands out
 per session: `#<n>` expression ids, `[plan_id=<n>]`, RDD ids
-(`MapPartitionsRDD[<n>]`) and `<File>.scala:<line>` call sites.
+(`MapPartitionsRDD[<n>]`), `<File>.scala:<line>` call sites, lambda
+variable names (`lambda x_<n>`, numbered per JVM) and the seeds of
+`rand(<seed>)` / `randn(<seed>)`, which are drawn per plan when no seed
+is given.
 
 Prints one line per query: SAME, DIFF (followed by the first differing
 lines of a unified diff), or MISSING when only one dir has the query.
@@ -29,6 +32,8 @@ NORMALIZE = [
     # offset of a long literal (a serialized bloom filter) and the scan
     # goes quadratic
     (re.compile(r"(?<!\w)(\w+\.scala):\d+"), r"\1:n"),
+    (re.compile(r"\blambda (\w+?)_\d+"), r"lambda \1_n"),
+    (re.compile(r"(?<!\w)(randn?)\(-?\d+L?\)"), r"\1(n)"),
 ]
 OPERATOR = re.compile(r"^\(\d+\) .+")
 SHOWN = 12
