@@ -1,11 +1,14 @@
 package graft.subset
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.GraftBridge.checkpointObserved
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.EqualTo
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.pipeline.FkRef
+import graft.plans.Checkpoints
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Subset/reachability planner — the Spark rebuild of
   * `internal/db/postgres/subset/` (~2,000 LoC of generated SQL in the
@@ -20,7 +23,8 @@ import scala.collection.mutable
   * into broadcast or shuffled hash joins as sizes dictate; cyclic SCCs run
   * a semi-naïve fix-point on PK projections with an eager checkpoint per
   * round (no recursive CTE in Catalyst; SURVEY §7.4 scale note: iterate
-  * on keys only, join back at the end).
+  * on keys only, join back at the end), and a small self-FK state closes
+  * on the driver in one pass (see [[SubsetPlanner]]).
   */
 object SubsetGraph {
 
@@ -92,6 +96,16 @@ object SubsetGraph {
       edges.exists(e => e.childTable == component.head && e.parentTable == component.head)
 }
 
+/** The subset closure over DataFrames. Acyclic components are semi-join
+  * plans; cyclic components run a delta fix-point with one checkpoint per
+  * round. A pure self-FK component runs path doubling instead, on one of
+  * two paths picked by the seeded state's stored bytes against the
+  * session's `spark.sql.autoBroadcastJoinThreshold`: at or below it the
+  * rounds run over driver arrays after one collect, above it each round
+  * is a distributed self-join with its own checkpoint (see
+  * [[selfFkClosure]]). Checkpoints that back a returned plan are
+  * registered with `graft.plans.Checkpoints`; the caller releases them
+  * with `releaseAll` once the result is consumed. */
 object SubsetPlanner {
   import SubsetGraph._
 
@@ -224,11 +238,15 @@ object SubsetPlanner {
         // deletions equals the rewritten table by induction. Requires a
         // declared PK on every component table (the subtraction key);
         // falls back to rewrite mode otherwise.
-        // Every checkpoint below goes through checkpointObserved: a
-        // frontier's size comes from the job that materializes it.
+        // Every checkpoint below goes through Checkpoints.materialize: a
+        // frontier's size comes from the job that materializes it, and
+        // the leaves the returned views read stay registered for
+        // `releaseAll` (each superseded one leaves the registry as it is
+        // released).
         val tombstoneMode = comp.forall(t => pks.get(t).exists(_.nonEmpty))
         def runFixPoint(): Unit = {
-          import graft.plans.Checkpoints.unpersistCheckpoint
+          import Checkpoints.{materialize, unpersistCheckpoint}
+          def counted(df: DataFrame): (DataFrame, Row) = materialize(df, Seq.empty[Column]: _*)
           // round 1 below is a full Jacobi pass, so a zero budget must
           // refuse up front — the pre-delta loop's contract
           if (maxIter < 1) throw new IllegalStateException(
@@ -238,7 +256,7 @@ object SubsetPlanner {
           var current: Map[String, DataFrame] = comp.map { t =>
             val seeded = external.filter(_.childTable == t)
               .foldLeft(baseFiltered(t))((d, e) => edgeRows(d, e, surviving(e.parentTable)))
-            t -> checkpointObserved(seeded)._1
+            t -> materialize(seeded)
           }.toMap
           val byChild = internal.groupBy(_.childTable)
           // round 1 — full Jacobi refilter; per-edge victims seed the frontier
@@ -252,7 +270,7 @@ object SubsetPlanner {
                 val victims = es.map(e =>
                   edgeRows(current(t), e, current(e.parentTable), passing = false))
                   .reduce(_ unionByName _)
-                t -> (checkpointObserved(survivors)._1, checkpointObserved(victims))
+                t -> (materialize(survivors), counted(victims))
               }
             }.toMap
             removed = stepped.map { case (t, (_, (v, _))) => t -> v }
@@ -291,7 +309,7 @@ object SubsetPlanner {
             // checkpoints), then the shrunken tables / grown tombstones,
             // then release the superseded round's blocks (VERDICT r3
             // "What's wrong #2")
-            val observed = stepped.map { case (t, (_, v)) => t -> checkpointObserved(v) }
+            val observed = stepped.map { case (t, (_, v)) => t -> counted(v) }
             val newRemoved = observed.map { case (t, (v, _)) => t -> v }
             val newCounts = observed.map { case (t, (_, n)) => t -> n.getLong(0) }
             if (tombstoneMode) {
@@ -299,7 +317,7 @@ object SubsetPlanner {
               // the existing tombstone — the union never needs a distinct
               val grown = newRemoved.collect { case (t, v) if newCounts(t) > 0L =>
                 val add = v.select(pks(t).map(col): _*)
-                t -> checkpointObserved(tomb.get(t).fold(add)(_ unionByName add))._1
+                t -> materialize(tomb.get(t).fold(add)(_ unionByName add))
               }
               removed.values.foreach(unpersistCheckpoint)
               grown.keys.foreach(t => tomb.get(t).foreach(unpersistCheckpoint))
@@ -309,7 +327,7 @@ object SubsetPlanner {
               tomb = tomb ++ grown
             } else {
               val changed = stepped.collect { case (t, (d, _)) if newCounts(t) > 0L =>
-                t -> checkpointObserved(d)._1
+                t -> materialize(d)
               }
               removed.values.foreach(unpersistCheckpoint)
               changed.keys.foreach(t => unpersistCheckpoint(current(t)))
@@ -369,8 +387,21 @@ object SubsetPlanner {
     *
     * State per row: `(__id, __anc, __bad)` where `__anc` is the 2^k-th
     * ancestor after k rounds and `__bad` accumulates "some ancestor within
-    * the covered window fails". Each round doubles the window with ONE
-    * equi-join of the state against itself.
+    * the covered window fails". Each round doubles the window: `__anc`
+    * becomes the ancestor's `__anc` and `__bad` takes the ancestor's.
+    * Both keys enter the state at the type the join compares them at.
+    *
+    * The state is materialized once (the seed checkpoint), and the rounds
+    * then run on one of two paths, picked by the checkpoint's stored bytes:
+    *  - at or below the session's `spark.sql.autoBroadcastJoinThreshold`
+    *    (Spark's bound for a relation one task holds whole; ≤ 0 disables),
+    *    the driver collects the state and runs the rounds over two arrays,
+    *    ancestor slot and bad flag, and the survivors return as a local
+    *    relation. The seed checkpoint's job and the collect are the whole
+    *    cost. Only key types whose JVM equality is the join's equality take
+    *    this path, and only when no two rows share a key;
+    *  - above it, each round is ONE equi-join of the state against itself,
+    *    materialized by a checkpoint whose census rides the round's job.
     *
     * The loop stops at the first round in which no `__bad` flips (the
     * semi-naive empty-delta stop the reference's recursive CTE makes).
@@ -383,10 +414,9 @@ object SubsetPlanner {
     * ⌈log2(max D + 1)⌉ + 1 rounds. The no-live-row stop and the
     * ceil(log2(n))+1 cap stay as backstops. */
   private def selfFkClosure(base: DataFrame, seeded: DataFrame, e: FkRef): DataFrame = {
-    import graft.plans.Checkpoints
     val pk = e.parentCols.head
     val fk = e.childCols.head
-    val ancType = base.schema(fk).dataType
+    val keyType = joinKeyType(base, pk, fk)
     // every base row stays in the state — excluded rows carry __bad=true so
     // descendants chaining through them see the failure
     val okMark = seeded.select(col(pk).as("__p"), lit(1).as("__ok"))
@@ -396,38 +426,89 @@ object SubsetPlanner {
     // false -> true, so flips = the bad delta) and live rows (an
     // unresolved ancestor, not yet bad)
     val census = Seq(count_if(col("__bad")), count_if(col("__anc").isNotNull && !col("__bad")))
-    val (seededState, counts) = checkpointObserved(
-      base.select(col(pk).as("__id"), col(fk).as("__anc"))
+    val (seededState, counts) = Checkpoints.materialize(
+      base.select(col(pk).cast(keyType).as("__id"), col(fk).cast(keyType).as("__anc"))
         .join(okMark, col("__id") === col("__p"), "left_outer")
         .select(col("__id"), col("__anc"), bad0.as("__bad")), census: _*)
-    var state = seededState
     val cap = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, counts.getLong(0))).toInt + 1
-    var iter = 0
-    var bad = counts.getLong(1)
-    var live = counts.getLong(2)
-    var flips = 1L // no round has run yet
-    while (iter < cap && live > 0L && flips > 0L) {
-      val anc = state.select(col("__id").as("__aid"), col("__anc").as("__anc2"),
-        col("__bad").as("__abad"))
-      val (next, nextCounts) = checkpointObserved(
-        state.join(anc, col("__anc") === col("__aid"), "left_outer")
-          .select(col("__id"),
-            when(col("__anc").isNull || col("__aid").isNull, lit(null).cast(ancType))
-              .otherwise(col("__anc2")).as("__anc"),
-            (col("__bad") ||
-              when(col("__anc").isNull, lit(false))
-                // non-NULL fk with no matching pk row: dangling ref, dead end
-                .when(col("__aid").isNull, lit(true))
-                .otherwise(col("__abad"))).as("__bad")), census: _*)
-      Checkpoints.unpersistCheckpoint(state)
-      state = next
-      iter += 1
-      flips = nextCounts.getLong(1) - bad
-      bad = nextCounts.getLong(1)
-      live = nextCounts.getLong(2)
+
+    /** Runs doubling rounds until one flips no `__bad`, no row is live or
+      * the cap is reached; `round` runs one and returns its (bad, live)
+      * census. Returns the number of rounds run. */
+    def doubling(round: () => (Long, Long)): Int = {
+      var (iter, bad, live, flips) = (0, counts.getLong(1), counts.getLong(2), 1L)
+      while (iter < cap && live > 0L && flips > 0L) {
+        val (b, l) = round()
+        iter += 1
+        flips = b - bad
+        bad = b
+        live = l
+      }
+      iter
     }
-    graft.plans.FixpointStats.record("selfFkClosure", iter)
-    val good = state.filter(!col("__bad")).select(col("__id").as("__gid"))
+
+    val threshold = base.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val fits = threshold > 0 && joinsByJvmEquality(keyType) &&
+      seededState.queryExecution.analyzed.stats.sizeInBytes <= threshold
+    val rows = if (fits) seededState.collect() else Array.empty[Row]
+    val slot = mutable.HashMap.empty[Any, Int] // key -> its row
+    val onDriver = fits &&
+      rows.indices.forall(i => rows(i).isNullAt(0) || slot.put(rows(i).get(0), i).isEmpty)
+    val (good, rounds) = if (onDriver) {
+      Checkpoints.unpersistCheckpoint(seededState)
+      // ancestor slot per row: a row index, noAnc (NULL fk, or the chain
+      // ended), or dangling (a non-NULL key with no row: a dead end)
+      val (noAnc, dangling) = (-1, -2)
+      var anc = rows.map(r => if (r.isNullAt(1)) noAnc else slot.getOrElse(r.get(1), dangling))
+      var bad = rows.map(_.getBoolean(2))
+      val rounds = doubling { () =>
+        val (a, b) = (anc, bad)
+        anc = a.map(x => if (x < 0) noAnc else a(x))
+        bad = Array.tabulate(rows.length)(i => b(i) || a(i) == dangling || (a(i) >= 0 && b(a(i))))
+        (bad.count(identity).toLong, anc.indices.count(i => anc(i) != noAnc && !bad(i)).toLong)
+      }
+      val keys = rows.indices.collect { case i if !bad(i) && !rows(i).isNullAt(0) => Row(rows(i).get(0)) }
+      (base.sparkSession.createDataFrame(keys.asJava,
+        StructType(Seq(StructField("__gid", keyType)))), rounds)
+    } else {
+      var state = seededState
+      val rounds = doubling { () =>
+        val anc = state.select(col("__id").as("__aid"), col("__anc").as("__anc2"),
+          col("__bad").as("__abad"))
+        val (next, c) = Checkpoints.materialize(
+          state.join(anc, col("__anc") === col("__aid"), "left_outer")
+            .select(col("__id"),
+              when(col("__anc").isNull || col("__aid").isNull, lit(null).cast(keyType))
+                .otherwise(col("__anc2")).as("__anc"),
+              (col("__bad") ||
+                when(col("__anc").isNull, lit(false))
+                  // non-NULL fk with no matching pk row: dangling ref, dead end
+                  .when(col("__aid").isNull, lit(true))
+                  .otherwise(col("__abad"))).as("__bad")), census: _*)
+        Checkpoints.unpersistCheckpoint(state)
+        state = next
+        (c.getLong(1), c.getLong(2))
+      }
+      // the final state backs the returned plan: it stays registered
+      (state.filter(!col("__bad")).select(col("__id").as("__gid")), rounds)
+    }
+    graft.plans.FixpointStats.record("selfFkClosure", rounds)
     base.join(good, col(pk) === col("__gid"), "left_semi")
+  }
+
+  /** The type Spark's equi-join compares columns `a` and `b` of `df` at:
+    * the analyzer's coercion of `a = b`. */
+  private def joinKeyType(df: DataFrame, a: String, b: String): DataType =
+    df.select(col(a) === col(b)).queryExecution.analyzed.expressions
+      .flatMap(_.collectFirst { case EqualTo(l, _) => l.dataType }).head
+
+  /** Key types whose collected JVM values are equal exactly when the join
+    * matches them. Not floats (the join normalizes -0.0 and NaN), binary
+    * (arrays compare by identity) or non-binary collations. */
+  private def joinsByJvmEquality(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | _: DecimalType |
+         DateType | TimestampType | TimestampNTZType => true
+    case s: StringType => s.collationId == StringType.collationId // UTF8_BINARY
+    case _ => false
   }
 }

@@ -51,16 +51,14 @@ class ScaleOpsSpec extends SparkSpec {
     Skew.writeBucketed(right, "bkt_right", "k", 8)
     // disable broadcast so the join exercises the bucketed (co-located
     // sort-merge) path — the 100 TB shape where neither side broadcasts
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withBroadcastOff {
       val joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
         s"bucketed join should be shuffle-free:\n$plan")
       assert(plan.contains("Bucketed: true"), s"scan should use buckets:\n$plan")
       assert(joined.count() == 1000)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("int8 quantization: bounds, sign symmetry, zero vectors, reconstruction") {

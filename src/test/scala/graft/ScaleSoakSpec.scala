@@ -48,13 +48,11 @@ class ScaleSoakSpec extends SparkSpec {
     def chain(n: Long): DataFrame = spark.range(0, n).select(
       col("id"),
       when(col("id") === 0, lit(null)).otherwise((col("id") / 2).cast("long")).as("parent_id"))
+    // on both closure paths, which must agree on rows and rounds
     def run(n: Long): (Long, Int, Int) = {
-      val surviving = SubsetPlanner.plan(Map("t" -> chain(n)), Map("t" -> Seq("id")),
-        Seq(FkRef("t", Seq("parent_id"), "t", Seq("id"), nullable = true)),
-        Map("t" -> Seq("id % 10 <> 3")))
-      val rows = surviving("t").count()
-      val iters = FixpointStats.last("selfFkClosure").get
-      Checkpoints.releaseAll()
+      val (rows, iters) = onBothSelfFkPaths(SubsetPlanner.plan(Map("t" -> chain(n)),
+        Map("t" -> Seq("id")), Seq(FkRef("t", Seq("parent_id"), "t", Seq("id"), nullable = true)),
+        Map("t" -> Seq("id % 10 <> 3")))("t").count())
       (rows, iters, spark.sparkContext.getRDDStorageInfo.length)
     }
     val (r1, i1, b1) = run(2000)
@@ -72,14 +70,13 @@ class ScaleSoakSpec extends SparkSpec {
     // 3 and round 4 flips nothing; the log2(n)+1 cap would allow 10
     val chain = spark.range(0, 300).select(
       col("id").as("c_custkey"), (col("id") / 2).cast("long").as("c_parent"))
-    val surviving = SubsetPlanner.plan(Map("customer" -> chain),
+    // on both closure paths, which must agree on rows and rounds
+    val (kept, rounds) = onBothSelfFkPaths(SubsetPlanner.plan(Map("customer" -> chain),
       Map("customer" -> Seq("c_custkey")),
       Seq(FkRef("customer", Seq("c_parent"), "customer", Seq("c_custkey"))),
       Map("customer" -> Seq(
-        "c_custkey <> 16 AND (c_custkey < 16 OR pmod(xxhash64(c_custkey, 7L), 10) <> 0)")))
-    val kept = surviving("customer").count()
-    val rounds = FixpointStats.last("selfFkClosure").get
-    Checkpoints.releaseAll()
+        "c_custkey <> 16 AND (c_custkey < 16 OR pmod(xxhash64(c_custkey, 7L), 10) <> 0)")))(
+      "customer").count())
     assert(kept > 16 && kept < 300 - 16) // the closure dropped rows and kept rows
     assert(rounds <= 4, s"closure ran $rounds rounds past its zero-flip round")
   }
