@@ -85,7 +85,7 @@ object Bench {
     tables.foreach { t =>
       val src = s"$sfDir/$t.parquet"
       if (new java.io.File(src).exists())
-        spark.read.parquet(src).repartition(cpus)
+        graft.pipeline.Catalog.read(spark, src).repartition(cpus)
           .write.mode("overwrite").parquet(s"$stageDir/$t.parquet")
     }
     stageDir
@@ -394,7 +394,7 @@ object Bench {
 
     // untimed warmup: JIT the scan/codegen/noop-write paths once so the
     // first timed query measures the query, not JVM cold start
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
+    try graft.pipeline.Catalog.load(spark, sfDir, "lineitem").limit(1000)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.pipeline.FkRef
+import graft.pipeline.{Catalog, FkRef}
 import graft.subset.SubsetPlanner
 
 /** Wall-clock scaling soak for the DRIVER-LOOP fix-point operators —
@@ -83,8 +83,8 @@ object FixpointSoak {
       df.write.format("noop").mode("overwrite").save()
 
     def runCycle(dirs: (String, String)): Unit = {
-      val dfs = Map("a" -> spark.read.parquet(dirs._1),
-        "b" -> spark.read.parquet(dirs._2))
+      val dfs = Map("a" -> Catalog.read(spark, dirs._1),
+        "b" -> Catalog.read(spark, dirs._2))
       val edges = Seq(
         FkRef("a", Seq("b_ref"), "b", Seq("id")),
         FkRef("b", Seq("a_ref"), "a", Seq("id")))
@@ -97,7 +97,7 @@ object FixpointSoak {
     }
     def runEntity(dirs: (String, String)): Unit =
       noop(graft.ops.RecordLinkage.entityClusters(
-        spark.read.parquet(dirs._1), "id", spark.read.parquet(dirs._2)))
+        Catalog.read(spark, dirs._1), "id", Catalog.read(spark, dirs._2)))
 
     // optional 3rd arg: run only the named op ("cyclic_subset" /
     // "entity_clusters") — A/B runs of one operator shouldn't pay for

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.pipeline.Catalog
 
 /** One-order-of-magnitude interop soak: the full dump → directory
   * archive → load cycle over an ~sf1-equivalent lineitem (sf0.1 rows
@@ -27,7 +28,7 @@ object InteropSoak {
     // ---- untimed staging: materialize the mult× table once as a
     // 32-file parquet source (the shape a real lake table has)
     val stage = s"/tmp/graft_soak_lineitem_x$mult"
-    val base = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val base = Catalog.load(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
         col("l_quantity").cast("int").as("l_quantity"),
         col("l_returnflag"), col("l_linestatus"))
@@ -37,9 +38,9 @@ object InteropSoak {
       .drop("rep")
       .repartition(cpus)
       .write.mode("overwrite").parquet(stage)
-    val src = spark.read.parquet(stage)
+    val src = Catalog.read(spark, stage)
     val expectRows = rows0 * mult
-    val expectQty = spark.read.parquet(stage)
+    val expectQty = Catalog.read(spark, stage)
       .agg(sum(col("l_quantity").cast("long"))).head().getLong(0)
 
     def timed[T](f: => T): (T, Double) = {

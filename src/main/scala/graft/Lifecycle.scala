@@ -420,7 +420,7 @@ object Lifecycle {
     val all = Manifest(Manifest.readEntries(manifestPath))
     val keep = tables.fold(all)(ts => all.filtered(ts))
     keep.restoreBatches.flatten.map { e =>
-      val df = spark.read.parquet(e.path)
+      val df = Catalog.read(spark, e.path)
       Manifest.schemaOf(e).foreach { stored =>
         val drift = Validator.schemaDiff(stored, df.schema)
         drift.foreach(d => System.err.println(s"[schema-diff] ${e.table}: $d"))
@@ -867,7 +867,7 @@ object Lifecycle {
         val rules = graft.pipeline.Expectations.parse(
           Files.readString(Paths.get(rulesPath)))
         val report = graft.pipeline.Expectations.check(
-          spark.read.parquet(s"$sfDir/$table.parquet"), rules).collect()
+          Catalog.load(spark, sfDir, table), rules).collect()
         report.foreach { r =>
           println(s"[expect] ${if (r.getBoolean(3)) "PASS" else "FAIL"} " +
             s"rule=${r.getInt(0)} ${r.getString(1)}/${r.getString(2)} " +

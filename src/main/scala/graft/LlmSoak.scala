@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.pipeline.Catalog
 
 /** Wall-clock scaling soak for the heaviest LLM-pipeline operator
   * families: transitive MinHash-LSH dedup clustering, IVF ANN top-k,
@@ -30,7 +31,7 @@ object LlmSoak {
     // ---- staging (untimed): 1x and mult× copies as 32-file parquet
     def stageDocs(m: Int): String = {
       val out = s"/tmp/graft_llmsoak_docs_x$m"
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
+      val base = Catalog.load(spark, sfDir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       base.withColumn("rep", explode(sequence(lit(0), lit(m - 1))))
         .withColumn("doc_id", col("doc_id") * m + col("rep")).drop("rep")
@@ -39,7 +40,7 @@ object LlmSoak {
     }
     def stageEmb(m: Int): String = {
       val out = s"/tmp/graft_llmsoak_emb_x$m"
-      val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val base = Catalog.load(spark, sfDir, "embeddings")
         .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       base.withColumn("rep", explode(sequence(lit(0), lit(m - 1))))
         .withColumn("vec_id", col("vec_id") * m + col("rep")).drop("rep")
@@ -62,14 +63,14 @@ object LlmSoak {
     val ops: Seq[(String, String => Unit)] = Seq(
       "dedup_cluster" -> { dir: String =>
         noop(graft.llm.Dedup.minhashLshClusters(
-          spark.read.parquet(dir), "doc_id", "text"))
+          Catalog.read(spark, dir), "doc_id", "text"))
       },
       "bigram_xent" -> { dir: String =>
         noop(graft.llm.Curation.bigramCrossEntropy(
-          spark.read.parquet(dir), "doc_id", "text"))
+          Catalog.read(spark, dir), "doc_id", "text"))
       },
       "ivf_topk" -> { dir: String =>
-        val df = spark.read.parquet(dir)
+        val df = Catalog.read(spark, dir)
         val cents = graft.llm.Similarity.ivfCentroids(df, "vec_id", "embedding", 8)
         noop(graft.llm.Similarity.ivfTopK(df, "vec_id", "embedding",
           graft.llm.Similarity.testQuery(64), 20, cents, nProbe = 2))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Catalog
 
 /** LSH candidate-volume instrument (VERDICT r14 #1): the dedup family's
   * 100 TB risk is not correctness — it's banding SELECTIVITY. Candidate
@@ -55,7 +56,7 @@ object LshStats {
     * ScaleFixture computed it — next power of 10 above the SOURCE max. */
   private def plantedPairs(spark: SparkSession, srcDir: String,
                            fixtureDocs: DataFrame): DataFrame = {
-    val srcMax = spark.read.parquet(s"$srcDir/documents.parquet")
+    val srcMax = Catalog.load(spark, srcDir, "documents")
       .agg(max(col("doc_id").cast("long"))).head.getLong(0)
     // the fixture's own unit rule — shared, so this can't drift
     val unit = ScaleFixture.pow10Above(srcMax)
@@ -86,7 +87,7 @@ object LshStats {
                 plantedSrc: Option[String] = None,
                 collapsed: Boolean = false): String = {
     import graft.llm.{Dedup, TextOps}
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
+    val raw = Catalog.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     // --collapsed: census over DISTINCT contents (rep = min doc_id per
     // identical text) — the candidate volume the collapse-rewritten

@@ -111,7 +111,7 @@ object ScaleFixture {
                 replicas: Int, files: Int = 32,
                 perturb: Boolean = false,
                 tables: Option[Set[String]] = None): Unit = {
-    def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = graft.pipeline.Catalog.load(spark, src, t)
     val wanted: String => Boolean = t => tables.forall(_.contains(t))
     tables.foreach { ts =>
       val known = (ShiftedKeys.keySet ++ FixedDims).toSet

@@ -20,7 +20,7 @@ import graft.ops.Pipe
 object SparkEntry {
 
   private def rd(s: SparkSession, dir: String, t: String): DataFrame =
-    s.read.parquet(s"$dir/$t.parquet")
+    Catalog.load(s, dir, t)
 
   /** Output dir `name` of a query that writes files, under one scratch
     * root per process (two processes on one sf dir never share a path),
@@ -2567,7 +2567,7 @@ object SparkEntry {
   /** Flagship: the t1 end-to-end slice — config -> plan -> masked customer
     * (sf0.001); driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
-    val df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val df = Catalog.load(spark, "/root/testdata/sf0.001", "customer")
     Planner.plan(df, TableConfig("customer",
       when = Some("c_custkey >= 0"),
       transforms = Seq(

@@ -185,7 +185,7 @@ object CuratePipeline {
   def main(spark: SparkSession, configJson: String, sfDir: String,
            outDir: String): Unit = {
     val cfg = parse(configJson)
-    def resolve(t: String): DataFrame = spark.read.parquet(s"$sfDir/$t.parquet")
+    def resolve(t: String): DataFrame = graft.pipeline.Catalog.load(spark, sfDir, t)
     val (out, stats) = run(cfg, resolve)
     out.write.mode("overwrite").parquet(s"$outDir/curated.parquet")
     val report = stats.map { case (k, v) => s"""{"step":"$k","rows":$v}""" }

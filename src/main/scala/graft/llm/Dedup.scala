@@ -223,11 +223,13 @@ object Dedup {
       .select(col("id"),
         TextOps.minhashSignatureFromText(col("__text"), shingleN,
           TextOps.minhashDigests(bands, rowsPerBand)).as("__mh"))
-    // every checkpoint goes through checkpointObserved: exact leaf stats
-    // (the pointer jump joins a checkpoint with itself) and the
-    // convergence sum from the job that materializes the round
-    val bridge = org.apache.spark.sql.GraftBridge
-    val (allEdges, _) = bridge.checkpointObserved(withMh.select(col("id"),
+    // every checkpoint goes through Checkpoints.materialize: exact leaf
+    // stats (the pointer jump joins a checkpoint with itself), the
+    // convergence sum from the job that materializes the round, and the
+    // final labels, which the returned plan reads, left registered for
+    // `releaseAll`; each superseded round is released as it goes
+    import graft.plans.Checkpoints.{materialize, unpersistCheckpoint}
+    val allEdges = materialize(withMh.select(col("id"),
         explode_outer(TextOps.minhashBands(col("__mh"), bands, rowsPerBand)).as("band"))
       .filter(col("band").isNotNull))
     // Prune to the ACTIVE subgraph and seed iteration 0 in ONE aggregate:
@@ -246,8 +248,8 @@ object Dedup {
       .agg(min("id").as("band_rep"), count(lit(1)).as("__n"))
       .filter(col("__n") >= 2)
       .select("band", "band_rep")
-    val (pruned, _) = bridge.checkpointObserved(allEdges.join(bandAgg, "band"))
-    graft.plans.Checkpoints.unpersistCheckpoint(allEdges)
+    val pruned = materialize(allEdges.join(bandAgg, "band"))
+    unpersistCheckpoint(allEdges)
     // projection over the checkpoint — no recompute, no extra pass
     val edges = pruned.select("id", "band")
     // Convergence check WITHOUT a labels×next join: min-propagation is
@@ -257,7 +259,7 @@ object Dedup {
     // replaces the old-vs-new equi-join per iteration (decimal(38), not
     // long: a corpus-scale sum of 64-bit ids overflows long).
     val repTotal = sum(col("rep").cast("decimal(38,0)"))
-    val (seedLabels, seedCensus) = bridge.checkpointObserved(
+    val (seedLabels, seedCensus) = materialize(
       pruned.groupBy("id").agg(min("band_rep").as("rep")), repTotal)
     var labels = seedLabels
     var prevSum = seedCensus.getDecimal(1)
@@ -281,7 +283,7 @@ object Dedup {
       // (sum unchanged over two monotone rounds ⇒ both were no-ops). The
       // jump phase keeps single rounds: the self-join needs its input
       // materialized or it would run twice.
-      val (propagated, propagatedCensus) = bridge.checkpointObserved(
+      val (propagated, propagatedCensus) = materialize(
         if (iter < 4 && iter + 1 < maxIter) { iter += 1; propagate(propagate(labels)) }
         else propagate(labels), repTotal)
       // POINTER JUMPING from iteration 4 on: band propagation moves a
@@ -299,17 +301,17 @@ object Dedup {
       val (next, nextCensus) =
         if (iter < 4) (propagated, propagatedCensus)
         else {
-          val jumped = bridge.checkpointObserved(propagated.as("x")
+          val jumped = materialize(propagated.as("x")
             .join(propagated.as("y"), col("x.rep") === col("y.id"))
             .select(col("x.id").as("id"), col("y.rep").as("rep")), repTotal)
-          graft.plans.Checkpoints.unpersistCheckpoint(propagated)
+          unpersistCheckpoint(propagated)
           jumped
         }
       val newSum = nextCensus.getDecimal(1)
       // `next` is materialized (eager checkpoint) — the superseded
       // checkpoint's blocks can go, keeping storage bounded across
       // iterations
-      graft.plans.Checkpoints.unpersistCheckpoint(labels)
+      unpersistCheckpoint(labels)
       labels = next
       converged = java.util.Objects.equals(newSum, prevSum)
       prevSum = newSum
@@ -319,8 +321,8 @@ object Dedup {
     // maxIter hops would disagree with exact reachability) — fail loudly,
     // mirroring the cyclic-subset fix-point.
     if (!converged) {
-      graft.plans.Checkpoints.unpersistCheckpoint(labels)
-      graft.plans.Checkpoints.unpersistCheckpoint(pruned)
+      unpersistCheckpoint(labels)
+      unpersistCheckpoint(pruned)
       throw new IllegalStateException(
         s"minhashLshClusters: label propagation did not converge after $maxIter " +
           "iterations — raise maxIter")
@@ -330,7 +332,7 @@ object Dedup {
       .select(col("id").as(idCol), coalesce(col("rep"), col("id")).as("cluster_rep"))
     // band edges are not part of the returned plan (labels are
     // checkpointed) — release them now
-    graft.plans.Checkpoints.unpersistCheckpoint(pruned)
+    unpersistCheckpoint(pruned)
     out
   }
 

@@ -273,20 +273,22 @@ object RecordLinkage {
                      maxIter: Int = 30): DataFrame = {
     val fwd = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
-    // Every checkpoint goes through checkpointObserved, NOT
+    // Every checkpoint goes through Checkpoints.materialize, NOT
     // Dataset.localCheckpoint: the propagated origin Statistics would
     // compound multiplicatively round over round (labels rides both
     // sides of each round's joins) until the driver grinds in BigInteger
     // arithmetic inside the stats visitor — see the GraftBridge scaladoc
     // for the live pathology. The exact observed stats also let the
-    // (shrinking) frontier broadcast into both per-round joins.
-    val bridge = org.apache.spark.sql.GraftBridge
-    val (edges, _) = bridge.checkpointObserved(fwd.unionByName(
+    // (shrinking) frontier broadcast into both per-round joins. Each
+    // superseded round is released as it goes; the final labels, which
+    // the returned plan reads, stay registered for `releaseAll`.
+    import graft.plans.Checkpoints.{materialize, unpersistCheckpoint}
+    val edges = materialize(fwd.unionByName(
         fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
     // seed: rep_0(id) = min over {id} ∪ direct neighbors — one aggregate.
     // Every labeled node starts in the frontier (all labels are "new").
-    var (labels, _) = bridge.checkpointObserved(edges
+    var labels = materialize(edges
       .groupBy(col("src").as("id"))
       .agg(min(least(col("src"), col("dst"))).as("rep")))
     var frontier = labels
@@ -296,10 +298,10 @@ object RecordLinkage {
       // push the frontier's labels one hop; keep only genuine improvements
       val viaNb = edges.join(frontier.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min("rep").as("cand"))
-      val (hopImproved, hopCensus) = bridge.checkpointObserved(
+      val (hopImproved, hopCensus) = materialize(
         viaNb.join(labels, "id")
           .filter(col("cand") < col("rep"))
-          .select(col("id"), col("cand").as("rep")))
+          .select(col("id"), col("cand").as("rep")), Seq.empty[Column]: _*)
       val nHop = hopCensus.getLong(0)
       // FRONTIER-SCOPED POINTER JUMP: a hop-improved node's new rep may
       // itself carry an older label than ITS rep's current one — chasing
@@ -312,20 +314,20 @@ object RecordLinkage {
       // lands on is the min of ids reachable from the component.
       val improved =
         if (nHop == 0) hopImproved
-        else bridge.checkpointObserved(
+        else materialize(
           hopImproved.join(labels.select(col("id").as("rep"),
               col("rep").as("__chased")), Seq("rep"), "left_outer")
             .select(col("id"),
-              least(col("rep"), coalesce(col("__chased"), col("rep"))).as("rep")))._1
+              least(col("rep"), coalesce(col("__chased"), col("rep"))).as("rep")))
       if (improved ne hopImproved) {
-        graft.plans.Checkpoints.unpersistCheckpoint(hopImproved)
+        unpersistCheckpoint(hopImproved)
       }
-      val (next, _) = bridge.checkpointObserved(
+      val next = materialize(
         labels.join(improved.withColumnRenamed("rep", "better"),
             Seq("id"), "left_outer")
           .select(col("id"), coalesce(col("better"), col("rep")).as("rep")))
-      graft.plans.Checkpoints.unpersistCheckpoint(labels)
-      if (frontier ne labels) graft.plans.Checkpoints.unpersistCheckpoint(frontier)
+      unpersistCheckpoint(labels)
+      if (frontier ne labels) unpersistCheckpoint(frontier)
       labels = next
       frontier = improved
       // the chase join is row-preserving (left_outer + select over
@@ -334,9 +336,9 @@ object RecordLinkage {
       iter += 1
     }
     if (frontierSize > 0) {
-      graft.plans.Checkpoints.unpersistCheckpoint(labels)
-      graft.plans.Checkpoints.unpersistCheckpoint(frontier)
-      graft.plans.Checkpoints.unpersistCheckpoint(edges)
+      unpersistCheckpoint(labels)
+      unpersistCheckpoint(frontier)
+      unpersistCheckpoint(edges)
       throw new IllegalStateException(
         s"entityClusters: label propagation did not converge after $iter " +
           "propagation rounds — raise maxIter")
@@ -344,11 +346,11 @@ object RecordLinkage {
     graft.plans.FixpointStats.record("entityClusters", iter)
     // the final (empty) frontier checkpoint is not part of the returned
     // plan — without this it leaks one persisted RDD per call
-    if (frontier ne labels) graft.plans.Checkpoints.unpersistCheckpoint(frontier)
+    if (frontier ne labels) unpersistCheckpoint(frontier)
     val out = records.select(col(idCol).cast("long").as("id"))
       .join(labels, Seq("id"), "left_outer")
       .select(col("id").as(idCol), coalesce(col("rep"), col("id")).as("entity_rep"))
-    graft.plans.Checkpoints.unpersistCheckpoint(edges)
+    unpersistCheckpoint(edges)
     out
   }
 

@@ -1,7 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.transformers._
 
 /** Catalog metadata Spark doesn't model: PK/FK, the driver-side analog of
@@ -111,8 +118,60 @@ object Catalog {
   /** The testdata schema's keys: the catalog value of every parquet dump. */
   val fixture: CatalogKeys = CatalogKeys(tables, fkRefs)
 
-  def load(spark: org.apache.spark.sql.SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+  /** Table `table` of the parquet dump under `sfDir`: [[read]] of its
+    * directory. */
+  def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    read(spark, s"$sfDir/$table.parquet")
+
+  /** The parquet files at `path`, as Spark's parquet reader reads them
+    * but without its schema-inference job: the schema comes from
+    * [[footerSchema]] on the driver, the way the reference learns each
+    * table's shape from the catalog before it streams a row
+    * (`context/pg_catalog.go:37-120`). Partition columns still come from
+    * Spark's path inference. A path with no footer to read (missing, an
+    * empty directory, a glob) goes to Spark's own inference, and so keeps
+    * Spark's error. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+
+  /** The data schema Spark's non-merging parquet inference
+    * (`ParquetUtils.inferSchema`) gives `path`, from the same footer:
+    * `_common_metadata`, else `_metadata`, else the first data file in
+    * path order. Leaves are listed as Spark's file index lists them,
+    * skipping the names Spark skips. The footer is read without its row
+    * groups (Spark's `ParquetFooterReader`, over parquet's
+    * `ParquetFileReader`) and converted under the session's parquet
+    * settings. None when there is no footer to read, and under
+    * `spark.sql.parquet.mergeSchema`, where Spark's own parallel merge
+    * of every footer runs. */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sql = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => GraftBridge.hiddenPathName(c.getPath.getName)).flatMap(leaves)
+    val top =
+      if (sql.isParquetSchemaMergingEnabled) None
+      else if (path.exists("{}[]*?\\".contains(_))) None // a glob: Spark expands it
+      else try Some(fs.getFileStatus(root)) catch { case _: java.io.FileNotFoundException => None }
+    val files = top.toSeq.flatMap(leaves).sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val data = files.filterNot(f => Set("_common_metadata", "_metadata")(f.getPath.getName))
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sql.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+      nanosAsLong = sql.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+    named("_common_metadata").orElse(named("_metadata")).orElse(data.headOption).map { f =>
+      val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+    }
+  }
 
   /** Partitioned JDBC scan — the Spark analog of the reference's N-worker
     * parallel dump (`dump.go:592-686`: one COPY stream per worker pinned

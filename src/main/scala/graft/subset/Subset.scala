@@ -355,8 +355,13 @@ object SubsetPlanner {
 
         selfFk match {
           case Some((t, e)) =>
-            val seeded = external.filter(_.childTable == t)
-              .foldLeft(baseFiltered(t))((d, x) => edgeRows(d, x, surviving(x.parentTable)))
+            // with no external edge the seed is `t` under its own conds,
+            // which the closure's seed scan evaluates in place
+            val feeds = external.filter(_.childTable == t)
+            val seeded =
+              if (feeds.isEmpty) Left(conds.getOrElse(t, Nil).map(expr).foldLeft(lit(true))(_ && _))
+              else Right(feeds.foldLeft(baseFiltered(t))((d, x) =>
+                edgeRows(d, x, surviving(x.parentTable))))
             surviving(t) = selfFkClosure(dfs(t), seeded, e)
           case None => runFixPoint()
         }
@@ -390,6 +395,10 @@ object SubsetPlanner {
     * the covered window fails". Each round doubles the window: `__anc`
     * becomes the ancestor's `__anc` and `__bad` takes the ancestor's.
     * Both keys enter the state at the type the join compares them at.
+    * `seeded` is either the conjunction of the table's own conds, which
+    * the seed scan evaluates in place (a row whose conds are not true
+    * starts bad), or, when external edges feed the table, the seeded
+    * frame, whose rows the seed scan marks by a join on the key.
     *
     * The state is materialized once (the seed checkpoint), and the rounds
     * then run on one of two paths, picked by the checkpoint's stored bytes:
@@ -413,23 +422,28 @@ object SubsetPlanner {
     * proves the fixed point, on chains and cycles alike, after at most
     * ⌈log2(max D + 1)⌉ + 1 rounds. The no-live-row stop and the
     * ceil(log2(n))+1 cap stay as backstops. */
-  private def selfFkClosure(base: DataFrame, seeded: DataFrame, e: FkRef): DataFrame = {
+  private def selfFkClosure(base: DataFrame, seeded: Either[Column, DataFrame],
+                            e: FkRef): DataFrame = {
     val pk = e.parentCols.head
     val fk = e.childCols.head
     val keyType = joinKeyType(base, pk, fk)
     // every base row stays in the state — excluded rows carry __bad=true so
     // descendants chaining through them see the failure
-    val okMark = seeded.select(col(pk).as("__p"), lit(1).as("__ok"))
-    val bad0 = col("__ok").isNull ||
+    def keys(ok: Column*) =
+      base.select(Seq(col(pk).cast(keyType).as("__id"), col(fk).cast(keyType).as("__anc")) ++ ok: _*)
+    val marked = seeded match {
+      case Left(conds) => keys(conds.as("__ok"))
+      case Right(d) => keys().join(d.select(col(pk).as("__p"), lit(true).as("__ok")),
+        col("__id") === col("__p"), "left_outer")
+    }
+    val bad0 = !coalesce(col("__ok"), lit(false)) ||
       (if (e.nullable) lit(false) else col("__anc").isNull)
     // each checkpoint observes its rows, bad rows (`__bad` only goes
     // false -> true, so flips = the bad delta) and live rows (an
     // unresolved ancestor, not yet bad)
     val census = Seq(count_if(col("__bad")), count_if(col("__anc").isNotNull && !col("__bad")))
     val (seededState, counts) = Checkpoints.materialize(
-      base.select(col(pk).cast(keyType).as("__id"), col(fk).cast(keyType).as("__anc"))
-        .join(okMark, col("__id") === col("__p"), "left_outer")
-        .select(col("__id"), col("__anc"), bad0.as("__bad")), census: _*)
+      marked.select(col("__id"), col("__anc"), bad0.as("__bad")), census: _*)
     val cap = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, counts.getLong(0))).toInt + 1
 
     /** Runs doubling rounds until one flips no `__bad`, no row is live or

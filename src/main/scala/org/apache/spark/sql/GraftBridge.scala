@@ -25,6 +25,12 @@ object GraftBridge {
   def tempDirUntilExit(prefix: String): java.io.File =
     org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 
+  /** Whether Spark's file listing skips a file or directory named `name`
+    * (`_`- and `.`-prefixed names other than the parquet summaries;
+    * `HadoopFSUtils` is private[spark]). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   private val observations = new java.util.concurrent.atomic.AtomicLong()
 
   /** Eager local checkpoint of `df` that also returns aggregates over the

@@ -125,4 +125,28 @@ class CheckpointObservedSpec extends SparkSpec {
     assert(linked.report("a").droppedBlocks > 0L)
     assert(linkJobs == censusJobs, s"capped fuzzyJoin ran $linkJobs jobs, its censuses $censusJobs")
   }
+
+  test("minhashLshClusters and entityClusters leave no checkpoint in storage after releaseAll") {
+    import spark.implicits._
+    // ids, not a count: the context cleaner may drop an earlier test's
+    // unreferenced RDD meanwhile and hide a new one in the count
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val core = (1 to 19).map(i => s"w$i").mkString(" ")
+    val docs = Seq((10L, s"$core endx"), (11L, s"$core endy"),
+      (12L, s"starty ${core.split(" ").drop(1).mkString(" ")} endy"), (13L, "lone doc")).toDF("doc_id", "text")
+    val pairs = (1L until 12L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    val records = (1L to 13L).toDF("rec_id")
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "minhashLshClusters" -> (() => Dedup.minhashLshClusters(docs, "doc_id", "text")),
+      "entityClusters" -> (() => RecordLinkage.entityClusters(records, "rec_id", pairs)))
+    for ((name, call) <- calls) {
+      Checkpoints.releaseAll()
+      val before = stored
+      val reps = call().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(reps.values.toSet.size == 2, s"$name: $reps")
+      assert((stored -- before).nonEmpty, s"$name: its labels back the result until released")
+      Checkpoints.releaseAll()
+      assert((stored -- before).isEmpty, s"$name: RDDs ${stored -- before} left after releaseAll")
+    }
+  }
 }

@@ -155,8 +155,9 @@ class SubsetSpec extends SparkSpec {
   test("self-FK closure: each round's census rides its checkpoint job") {
     // the product path's self-FK shape (see ScaleSoakSpec's zero-flip
     // case): 4 doubling rounds after the seed checkpoint. In memory, the
-    // seed's broadcast, its checkpoint and one collect are all (the
-    // distributed loop at this threshold ran 10). Distributed, with
+    // seed's checkpoint, whose scan evaluates the table's conds, and one
+    // collect are all (a join against the filtered seed added a broadcast;
+    // the distributed loop at this threshold ran 10). Distributed, with
     // broadcast off, each checkpoint is its job plus one shuffle-map job
     // per join side; a separate census action per checkpoint would add
     // one more each (it took the broadcast form from 10 jobs to 26)
@@ -177,7 +178,7 @@ class SubsetSpec extends SparkSpec {
     val (dKept, dRounds, dJobs) = withBroadcastOff(run())
     assert(rounds == 4 && kept > 16 && kept < 300 - 16)
     assert((dKept, dRounds) == ((kept, rounds)), s"distributed path kept $dKept in $dRounds rounds")
-    assert(jobs <= 3, s"in-memory path ran $jobs jobs")
+    assert(jobs <= 2, s"in-memory path ran $jobs jobs")
     assert(dJobs <= 3 * (dRounds + 1), s"plan ran $dJobs jobs over $dRounds rounds + seed")
   }
 
@@ -228,6 +229,38 @@ class SubsetSpec extends SparkSpec {
         .select("id").as[String].collect().toSet)
       assert(kept == expected, s"nullable=$nullable killed=$killed")
     }
+  }
+
+  test("self-FK closure: an external edge's survivors seed the closure on both paths") {
+    // emp -> dept beside emp -> emp: dept 2 fails its cond, so employee 3
+    // fails with it, and 6 fails its own cond; each takes its reports down
+    val dept = Seq((1, "keep"), (2, "drop")).toDF("d_id", "tag")
+    val rows = Seq[(Int, Option[Int], Int)]((1, None, 1), (2, Some(1), 1), (3, Some(2), 2),
+      (4, Some(3), 1), (5, Some(1), 1), (6, Some(5), 1), (7, Some(6), 1), (8, Some(9), 1))
+    val expected = selfFkBrute(rows.map(r => (r._1, r._2)), Set(3, 6), nullable = true)
+    assert(expected == Set(1, 2, 5))
+    val (kept, _) = onBothSelfFkPaths(SubsetPlanner.plan(
+      Map("dept" -> dept, "emp" -> rows.toDF("id", "mgr", "dept")),
+      Map("dept" -> Seq("d_id"), "emp" -> Seq("id")),
+      Seq(edge("emp", "emp", "mgr", "id", nullable = true), edge("emp", "dept", "dept", "d_id")),
+      Map("dept" -> Seq("tag = 'keep'"), "emp" -> Seq("id <> 6")))("emp")
+      .select("id").as[Int].collect().toSet)
+    assert(kept == expected)
+  }
+
+  test("self-FK closure: an IN-subquery cond seeds the closure on both paths") {
+    // with no external edge the seed scan evaluates the conds in its
+    // projection, not in a filter: a predicate subquery must hold there too
+    Seq(3, 6).toDF("x").createOrReplaceTempView("graft_subset_killed")
+    val rows = Seq[(Int, Option[Int])]((1, None), (2, Some(1)), (3, Some(2)), (4, Some(3)),
+      (5, Some(1)), (6, Some(5)), (7, Some(6)), (8, Some(2)))
+    val expected = selfFkBrute(rows, Set(3, 6), nullable = true)
+    assert(expected == Set(1, 2, 5, 8))
+    val (kept, _) = onBothSelfFkPaths(SubsetPlanner.plan(Map("t" -> rows.toDF("id", "fk")),
+      Map("t" -> Seq("id")), Seq(edge("t", "t", "fk", "id", nullable = true)),
+      Map("t" -> Seq("id NOT IN (SELECT x FROM graft_subset_killed)")))("t")
+      .select("id").as[Int].collect().toSet)
+    assert(kept == expected)
   }
 
   test("self-FK closure: a key two rows share closes as the distributed join does") {

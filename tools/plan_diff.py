@@ -8,9 +8,11 @@ underscore), so the two dirs may use different tags ("before"/"after").
 Before comparing, every plan is normalized for the ids Spark hands out
 per session: `#<n>` expression ids, `[plan_id=<n>]`, RDD ids
 (`MapPartitionsRDD[<n>]`), `<File>.scala:<line>` call sites, lambda
-variable names (`lambda x_<n>`, numbered per JVM) and the seeds of
+variable names (`lambda x_<n>`, numbered per JVM), the seeds of
 `rand(<seed>)` / `randn(<seed>)`, which are drawn per plan when no seed
-is given.
+is given, JVM lambda class names with their identity hashes
+(`$$Lambda$<n>/0x<addr>@<hash>`) and UUIDs, which name the per-session
+scratch directories.
 
 Prints one line per query: SAME, DIFF (followed by the first differing
 lines of a unified diff), or MISSING when only one dir has the query.
@@ -34,6 +36,8 @@ NORMALIZE = [
     (re.compile(r"(?<!\w)(\w+\.scala):\d+"), r"\1:n"),
     (re.compile(r"\blambda (\w+?)_\d+"), r"lambda \1_n"),
     (re.compile(r"(?<!\w)(randn?)\(-?\d+L?\)"), r"\1(n)"),
+    (re.compile(r"\$\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+"), "$$Lambda$n"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "<uuid>"),
 ]
 OPERATOR = re.compile(r"^\(\d+\) .+")
 SHOWN = 12
